@@ -30,6 +30,8 @@ broadcast, mirroring GlobalUniqValueWritable.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -42,6 +44,7 @@ from ..plans.loopdriver import (
     negotiate_partitions,
 )
 from ..registry import register
+from ..session import scoped_conf
 
 # ---------------------------------------------------------------------------
 # PageRank
@@ -81,40 +84,51 @@ def pagerank(
     # otherwise be recomputed per derivation
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     n = num_partitions or negotiate_partitions(edges)
-    # static side: adjacency + out-degree in ONE exchange — the repartition
-    # provides the hash distribution the degree window needs, so deg comes
-    # from a within-partition sort instead of a groupBy shuffle + join.
-    # Skew: a hot src key costs one task O(f) — linear, and the same row
-    # placement the co-partitioned loop join needs anyway; see
-    # bench/PLANS.md "pagerank degree computation" for the salted-fallback
-    # criterion before trading away the shared exchange.
-    # r14 probe (VERDICT r13 ask #5): a bucketed-scratch pin of this
-    # relation (pin_bucketed) removed the setup exchange (shuffle 17.8 ->
-    # 12.3 MB, stages 133 -> 108, deterministic) but LOST wall decisively
-    # on interleaved A/B (medians 4.7-5.5 s -> 6.0-7.4 s): the parquet
-    # scatter-write + readback costs more than the one in-memory exchange
-    # it replaces at bench scale — REJECTED, see OPTIMIZATION_r14.md §5.
     from pyspark.sql.window import Window
 
-    static = (
-        edges.repartition(n, "src")
-        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # r13: node set in ONE exchange — explode both endpoints, repartition
-    # by node, dedup WITHIN the node-hash partitions (hash(node) already
-    # co-locates equal nodes, so the dropDuplicates adds no second
-    # exchange). The former union+distinct+repartition paid two.
-    nodes = (
-        edges.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-        )
-        .repartition(n, "node")
-        .dropDuplicates(["node"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
     converged_mode = threshold is not None
+    # the converged loop plans without AQE (see iterate()), and its
+    # invariants are cached the same way: a non-adaptive cached plan
+    # reports its hash(src, n) / hash(node, n) layout before it is
+    # materialized, so the first round reads both in place instead of
+    # shuffling them a second time.
+    with (
+        scoped_conf(edges.sparkSession, {"spark.sql.adaptive.enabled": "false"})
+        if converged_mode
+        else contextlib.nullcontext()
+    ):
+        # static side: adjacency + out-degree in ONE exchange — the
+        # repartition provides the hash distribution the degree window
+        # needs, so deg comes from a within-partition sort instead of a
+        # groupBy shuffle + join. Skew: a hot src key costs one task O(f) —
+        # linear, and the same row placement the co-partitioned loop join
+        # needs anyway; see bench/PLANS.md "pagerank degree computation"
+        # for the salted-fallback criterion before trading away the shared
+        # exchange.
+        static = (
+            edges.repartition(n, "src")
+            .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # node set in ONE exchange — explode both endpoints,
+        # repartition by node, dedup WITHIN the node-hash partitions
+        # (hash(node) already co-locates equal nodes, so the dropDuplicates
+        # adds no second exchange). The former union+distinct+repartition
+        # paid two.
+        nodes = (
+            edges.select(
+                F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
+            )
+            .repartition(n, "node")
+            .dropDuplicates(["node"])
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
     if init_state is not None:
+        if converged_mode:
+            # the loop runs at state0's partitioning: bring the prior ranks
+            # to nodes' hash(node, n), which plans to nothing when a
+            # previous loop's state already has it
+            init_state = init_state.repartition(n, "node")
         # warm start: keep prior ranks for surviving nodes, 1.0 for new ones
         state0 = nodes.join(init_state, "node", "left").select(
             "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
@@ -147,7 +161,11 @@ def pagerank(
         # on the row — the delta costs no extra join or shuffle. This step
         # references state twice; iterate()'s observed path truncates
         # lineage every iteration to keep the plan linear.
-        contribs = _mass(state)
+        # iterate() keeps the state hash(node, n) and static is hash(src, n),
+        # so shuffle joins need no exchange but the contributions' one by
+        # dst. Both joins are pinned to that: a broadcast would cost a job
+        # of its own every round.
+        contribs = _mass(state.hint("shuffle_hash")).hint("shuffle_hash")
         prev = state.select("node", F.col("rank").alias("_prev"))
         return prev.join(contribs, prev.node == contribs.dst, "left").select(
             "node",
@@ -356,9 +374,6 @@ def sssp(
     spark = edges.sparkSession
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     n = negotiate_partitions(edges)
-    # r14 probe: pin_bucketed here lost wall 2x on interleaved A/B
-    # (3.9-7.5 -> 17.2 s) despite fewer shuffle bytes — rejected,
-    # OPTIMIZATION_r14.md §5
     static = edges.repartition(n, "src").persist(StorageLevel.MEMORY_AND_DISK)
     state0 = (
         init_state
@@ -410,8 +425,9 @@ def sssp(
         )
 
     if run_to_fixpoint:
+        # iterate() plans the loop at the initial state's partition count
         result = iterate(
-            state0.withColumn("changed", F.lit(1)),
+            state0.withColumn("changed", F.lit(1)).repartition(n, "node"),
             step_observed,
             max_iterations=max_iterations,
             observed_distance=F.sum("changed").cast("double"),
@@ -839,9 +855,6 @@ def spmv(matrix: DataFrame, vector: DataFrame, iterations: int) -> IterationResu
     without bespoke block codecs."""
     matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
     n = negotiate_partitions(matrix)
-    # r14 probe: pin_bucketed here lost wall 2.4x on interleaved A/B
-    # (1.5-1.6 -> 3.7-5.0 s) despite shuffle 5.58 -> 3.17 MB — rejected,
-    # OPTIMIZATION_r14.md §5
     static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
 
     def step(state: DataFrame, i: int) -> DataFrame:
@@ -1449,7 +1462,6 @@ def connected_components(
     # dropDuplicates adds no second exchange); the former
     # union+distinct+repartition paid two |2E| shuffles. Same fusion for
     # the node set below: one node-hash exchange, in-partition dedup.
-    # (r14's pin_bucketed probe of this setup was wall-negative — see §5.)
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -1688,8 +1700,6 @@ def power_iteration(
     normalized state and the per-iteration ∞-norms (eigenvalue estimates)."""
     matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
     n = negotiate_partitions(matrix)
-    # r14 probe: pin_bucketed lost wall here too (2.1-3.2 -> 7.4 s
-    # interleaved) — rejected, OPTIMIZATION_r14.md §5
     static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
     x = x0.persist(StorageLevel.MEMORY_AND_DISK)
     x.count()
@@ -1814,9 +1824,6 @@ def nmf(
     n = negotiate_partitions(ratings)
     # lazy persists: the init-factor / first-iteration jobs materialize each
     # layout on first use — no dedicated warm-up pass per copy.
-    # (r14's pin_bucketed probe of both layouts was wall-negative:
-    # 3.0-3.3 -> 4.5-5.2 s interleaved despite shuffle 7.6 -> 2.8 MB —
-    # rejected, OPTIMIZATION_r14.md §5.)
     v_r = ratings.repartition(n, "r").persist(StorageLevel.MEMORY_AND_DISK)
     v_c = v_r.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
     ks = list(range(rank))
@@ -2383,8 +2390,7 @@ def label_propagation(
     # dedup within the src-hash partitions (hash(src) co-locates equal
     # (src, dst) rows, so dropDuplicates adds no second exchange); the
     # former union+distinct+repartition paid two |2E| shuffles. The node
-    # set dedups within the same partitioning for free. (r14's
-    # pin_bucketed probe of this setup was wall-negative — see §5.)
+    # set dedups within the same partitioning for free.
     sym = (
         edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -2522,8 +2528,7 @@ def label_propagation_converged(
     # dedup within the src-hash partitions (hash(src) co-locates equal
     # (src, dst) rows, so dropDuplicates adds no second exchange); the
     # former union+distinct+repartition paid two |2E| shuffles. The node
-    # set dedups within the same partitioning for free. (r14's
-    # pin_bucketed probe of this setup was wall-negative — see §5.)
+    # set dedups within the same partitioning for free.
     sym = (
         edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

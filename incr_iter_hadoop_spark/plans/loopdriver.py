@@ -12,27 +12,39 @@ lines of driver-side control flow:
 - the *static* (loop-invariant) DataFrame is repartitioned by the join key
   once and persisted by the caller; Spark's block locations give the
   locality the reference's custom scheduler chased;
-- each iteration is a declarative DataFrame transformation; Catalyst reuses
-  the co-partitioned exchange, so the static side never re-shuffles;
-- convergence is one tiny ``agg().collect()`` per iteration (the
-  ``IterativeReducer.distance`` contract, IterativeReducer.java:24-32);
-- ``localCheckpoint`` every k iterations truncates the logical plan, which
-  otherwise grows linearly and overwhelms the optimizer — the analogue of
-  the reference's snapshot interval.
+- each round is a declarative DataFrame transformation of the state;
+- a converged loop whose distance is an aggregate over the new state
+  (``observed_distance``, the ``IterativeReducer.distance`` contract,
+  IterativeReducer.java:24-32) runs each round as ONE Spark job: an eager
+  ``localCheckpoint`` of the new state computes it, stores it, truncates
+  its lineage and fills the round's ``observe()`` metrics (distance, and
+  record count on request) in the same action. The loop is planned
+  without AQE and with ``spark.sql.shuffle.partitions`` equal to the
+  state's partition count, so the state keeps its hash partitioning from
+  round to round: a join against a static side hash-partitioned the same
+  way needs no exchange, and only the step's own aggregation shuffles;
+- the fixed-iteration and ``distance``-callable loops keep the session's
+  planning: persisted states, and a lazy ``localCheckpoint`` every
+  ``checkpoint_interval`` rounds to bound the plan depth, which otherwise
+  grows per round and overwhelms the optimizer — the analogue of the
+  reference's snapshot interval.
 
-Scale: per-iteration state is never collected to the driver (only the scalar
-distance); state stays partitioned by key across iterations, so each loop
-step shuffles only the new contributions.
+Scale: per-round state never leaves the executors (only the scalar
+distance does); state stays partitioned by key across rounds, so each step
+shuffles only the new contributions.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..session import scoped_conf
 
 
 @dataclass
@@ -44,6 +56,10 @@ class IterationResult:
     # per-iteration observed metrics (A9/I11 counters analogue): row count
     # of each iteration's state, captured via df.observe at zero extra jobs
     record_counts: list[int] = field(default_factory=list)
+    # wall time of each round as the caller sees it, seconds. In the
+    # fixed-iteration mode a round that only extends the plan is near zero
+    # and the round that materializes carries the work of the rounds before.
+    round_s: list[float] = field(default_factory=list)
 
 
 def negotiate_partitions(
@@ -56,93 +72,8 @@ def negotiate_partitions(
     iteration while preserving the session default as the ceiling for
     cluster-scale inputs. ``df`` should already be persisted — the count
     doubles as its materialization."""
-    import os
-
     default_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    env = os.environ.get("SPARK_GRAFT_LOOP_PARTS")  # probe hook (r14 A/B)
-    if env:
-        return int(env)
     return max(floor, min(default_n, df.count() // rows_per_partition + 1))
-
-
-def pin_bucketed(
-    df: DataFrame,
-    key: str,
-    n: int,
-    *,
-    max_scatter_files: int = 4096,
-) -> DataFrame:
-    """Pin a loop-invariant relation to ``HashPartitioning(key, n)`` as a
-    bucketed parquet scratch table written INSIDE the query (r14, guide
-    §6/§2.4 — VERDICT r13 ask #5).
-
-    When the input's partition count S keeps the scatter write's file
-    count (S x n) bounded, each input task writes its bucket slices
-    directly — NO Exchange: the loop's one remaining setup shuffle
-    disappears from the plan. The bucketed scan reports
-    ``HashPartitioning(key, n)`` (+ sortBy ordering), so every per-round
-    join/aggregate/window clustered on ``key`` stays exchange-free, and
-    the pinned layout is DURABLE: a persisted repartition re-pays its
-    |2E| shuffle if cached blocks evict mid-loop (memory pressure,
-    executor loss); the scratch table never does. Above the file-count
-    bound (cluster-scale S — e.g. an 80k-task scan x 2k buckets would
-    scatter 160M files, guide §6's small-files trap), the write
-    repartitions first: ONE exchange, the same one the
-    repartition+persist shape paid, still amortized over the loop's
-    rounds and still eviction-proof.
-
-    **Status: measured and REJECTED for the shipped loops (r14).** The
-    deterministic wins are real — pagerank shuffle 17.775 -> 12.347 MB /
-    stages 133 -> 108, spmv 5.576 -> 3.166 MB, nmf 7.600 -> 2.838 MB,
-    lpa_converged 109.633 -> 100.447 MB — but a 3-draw interleaved A/B
-    (sf0.1, local[32], alternating order, same machine hour) showed the
-    parquet scatter-write + readback costs MORE wall than the one
-    in-memory exchange it replaces, on every loop: spmv 1.5-1.6 ->
-    3.7-5.0 s, nmf 3.0-3.3 -> 4.5-5.2 s, pagerank 4.7-5.5 -> 6.0-7.4 s,
-    power 2.1-3.2 -> 7.4 s, sssp 3.9-7.5 -> 17.2 s, lpa 9.0-10.5 ->
-    28.3 s (the gap widens under ambient I/O load — the scratch write
-    contends for the same disk the shuffle would have used, without the
-    shuffle's in-memory fast path). All loops ship the r13
-    repartition+persist shape; this helper and its unit tests remain as
-    the probe's implementation (OPTIMIZATION_r14.md §5), for deployments
-    where eviction-durability of the layout outweighs setup wall.
-
-    The scratch table + tmpdir live until process exit (atexit removal —
-    the operators' standard scratch discipline): table metadata is in the
-    session's in-memory catalog, and dropping the files earlier would
-    break lineage recompute of downstream cached state under eviction.
-    Built inside the timed region on every invocation — never reused
-    across runs."""
-    import tempfile
-    import uuid
-
-    from ..operators.incremental import _cleanup_at_exit
-
-    spark = df.sparkSession
-    # autoBucketedScan silently falls back to file-split reads when the
-    # query above the scan does not itself require the clustering — which
-    # is exactly the loops' cached-bare-scan case (sssp/spmv/power persist
-    # the pinned relation as-is): the cache would then hold file-split
-    # partitions and every round's join would re-exchange the static side.
-    # The pinned layout must ALWAYS be read bucketed; the heuristic is for
-    # tables that are incidentally bucketed, not for scratch relations
-    # that exist only to carry a partitioning.
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-    )
-    if df.rdd.getNumPartitions() * n > max_scatter_files:
-        df = df.repartition(n, key)
-    tbl = f"pinned_{key}_{uuid.uuid4().hex[:12]}"
-    root = tempfile.mkdtemp(prefix="pin_bucketed_")
-    _cleanup_at_exit(root, "")
-    (
-        df.write.format("parquet")
-        .bucketBy(n, key)
-        .sortBy(key)
-        .option("path", f"{root}/t")
-        .saveAsTable(tbl)
-    )
-    return spark.table(tbl)
 
 
 def l1_state_distance(
@@ -171,7 +102,7 @@ def iterate(
     *,
     max_iterations: int = 50,
     distance: Callable[[DataFrame, DataFrame], float] | None = None,
-    observed_distance=None,
+    observed_distance: Column | None = None,
     threshold: float = 0.0,
     checkpoint_interval: int = 5,
     storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
@@ -179,49 +110,62 @@ def iterate(
 ) -> IterationResult:
     """Run ``state ← step(state, i)`` until convergence or max_iterations.
 
-    ``distance(prev, curr) -> float``: when given, iteration stops once the
-    value is ≤ ``threshold`` (the reference's termination contract —
-    JobClient.runIterativeJob, JobClient.java:1366-1381). When None, runs
-    exactly ``max_iterations`` steps (the fixed-iteration mode,
-    JobConf.java:494-500).
-
     ``observed_distance``: an aggregate Column over the NEW state's columns
     (e.g. ``F.sum(F.abs(F.col("delta")))`` when the step carries a delta
-    column). The scalar rides the iteration's own materializing action via
-    ``df.observe`` — ONE Spark job per iteration, with no prev⋈curr join at
-    all (the distance job the ``distance`` callable would pay). Same
-    ``IterativeReducer.distance`` contract (IterativeReducer.java:24-32);
-    mutually exclusive with ``distance``.
+    column). Iteration stops once its value is ≤ ``threshold`` (the
+    reference's termination contract — JobClient.runIterativeJob,
+    JobClient.java:1366-1381). Each round is one action, and one Spark job
+    unless the step's plan broadcasts: the metric is attached with
+    ``df.observe`` and filled by the eager ``localCheckpoint`` that
+    materializes the round's state, so there is no prev⋈curr join and no
+    separate count. The loop runs with AQE off and
+    ``spark.sql.shuffle.partitions`` set to the partition count of the
+    checkpointed initial state, both restored on exit (also on error): a
+    step that keeps the state hash-partitioned by its key, against a
+    static side partitioned the same way, then plans with no exchange but
+    its own aggregation. Give the initial state the static side's
+    partitioning to get that. The conf scope is ``session.scoped_conf``,
+    serialized per process: another thread's scoped operation waits for
+    the loop to finish.
 
-    ``observe_counts``: attach a per-iteration ``df.observe`` counter — the
-    analogue of the reference's per-iteration record stats reported to the
-    master (IterationInfo, JobTracker.java:5516-5583; Counters.java) —
-    piggybacked on the iteration's existing action, zero extra jobs.
+    ``distance(prev, curr) -> float``: the generic form of the same stop
+    rule, one aggregation job per round over both states; mutually
+    exclusive with ``observed_distance``. With neither, runs exactly
+    ``max_iterations`` steps (the fixed-iteration mode,
+    JobConf.java:494-500), materializing every ``checkpoint_interval``
+    rounds and at the end. Both modes plan under the session's confs.
+
+    ``observe_counts``: attach a per-round record count — the analogue of
+    the reference's per-iteration record stats reported to the master
+    (IterationInfo, JobTracker.java:5516-5583; Counters.java) — to the
+    round's existing action, zero extra jobs.
     """
-    from pyspark.sql import Observation
-
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
     if distance is not None and observed_distance is not None:
         raise ValueError("pass distance OR observed_distance, not both")
+    if observed_distance is not None:
+        return _iterate_observed(
+            state,
+            step,
+            observed_distance,
+            max_iterations=max_iterations,
+            threshold=threshold,
+            storage_level=storage_level,
+            observe_counts=observe_counts,
+        )
     state = state.persist(storage_level)
     state.count()  # materialize so each iteration starts from computed state
     distances: list[float] = []
-    record_counts: list[int] = []
+    round_s: list[float] = []
     observations: list[Observation] = []
     pending_unpersist: list[DataFrame] = []
     converged = False
     i = 0
     for i in range(1, max_iterations + 1):
+        t0 = time.perf_counter()
         new_state = step(state, i)
-        if observed_distance is not None:
-            # observed-distance steps carry a delta column, which makes them
-            # reference the previous state TWICE (once through the
-            # contributions, once for the prev value) — the logical plan
-            # would double per iteration. Truncate lineage every iteration;
-            # the lazy checkpoint materializes on this iteration's action.
-            new_state = new_state.localCheckpoint(eager=False)
-        elif i % checkpoint_interval == 0:
+        if i % checkpoint_interval == 0:
             # truncate lineage: plan size otherwise grows per iteration
             new_state = new_state.localCheckpoint(eager=False)
         if observe_counts:
@@ -233,23 +177,6 @@ def iterate(
             obs = Observation()
             new_state = new_state.observe(obs, F.count(F.lit(1)).alias("records"))
             observations.append(obs)
-        if observed_distance is not None:
-            dist_obs = Observation()  # anonymous: see observe_counts note
-            new_state = new_state.observe(
-                dist_obs, observed_distance.alias("distance")
-            )
-            new_state = new_state.persist(storage_level)
-            # the count is the SINGLE job of this iteration: it computes the
-            # step, caches the state, and fills the observation in one pass
-            new_state.count()
-            d = float(dist_obs.get["distance"] or 0.0)
-            distances.append(d)
-            state.unpersist()
-            state = new_state
-            if d <= threshold:
-                converged = True
-                break
-            continue
         new_state = new_state.persist(storage_level)
         if distance is not None:
             # the distance aggregation is the materializing action — the
@@ -259,6 +186,7 @@ def iterate(
             distances.append(d)
             state.unpersist()
             state = new_state
+            round_s.append(time.perf_counter() - t0)
             if d <= threshold:
                 converged = True
                 break
@@ -282,12 +210,71 @@ def iterate(
                 for old in pending_unpersist:
                     old.unpersist()
                 pending_unpersist.clear()
-    for obs in observations:
-        record_counts.append(int(obs.get["records"]))
+            round_s.append(time.perf_counter() - t0)
+    return IterationResult(
+        state=state,
+        iterations=i,
+        converged=converged,
+        distances=distances,
+        record_counts=[int(obs.get["records"]) for obs in observations],
+        round_s=round_s,
+    )
+
+
+def _iterate_observed(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    observed_distance: Column,
+    *,
+    max_iterations: int,
+    threshold: float,
+    storage_level: StorageLevel,
+    observe_counts: bool,
+) -> IterationResult:
+    """The one-job-per-round loop behind ``iterate(observed_distance=...)``."""
+    spark = state.sparkSession
+    metrics = [observed_distance.alias("distance")]
+    if observe_counts:
+        metrics.append(F.count(F.lit(1)).alias("records"))
+    distances: list[float] = []
+    record_counts: list[int] = []
+    round_s: list[float] = []
+    converged = False
+    i = 0
+    # without AQE a checkpoint keeps the hash partitioning of its plan's
+    # output; AQE would coalesce it away and every round would re-exchange
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        state = state.localCheckpoint(eager=True, storageLevel=storage_level)
+        n = state.rdd.getNumPartitions()
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)}):
+            for i in range(1, max_iterations + 1):
+                t0 = time.perf_counter()
+                # anonymous Observation(): a metric name must be unique
+                # across every plan one query may combine, and the states of
+                # two runs can meet in a later join
+                obs = Observation()
+                # the round's single job: computes the step, stores the new
+                # state, fills the observation and truncates lineage. Steps
+                # that carry a delta reference the state twice, so without
+                # the truncation the plan would double every round.
+                state = (
+                    step(state, i)
+                    .observe(obs, *metrics)
+                    .localCheckpoint(eager=True, storageLevel=storage_level)
+                )
+                d = float(obs.get["distance"] or 0.0)
+                distances.append(d)
+                if observe_counts:
+                    record_counts.append(int(obs.get["records"]))
+                round_s.append(time.perf_counter() - t0)
+                if d <= threshold:
+                    converged = True
+                    break
     return IterationResult(
         state=state,
         iterations=i,
         converged=converged,
         distances=distances,
         record_counts=record_counts,
+        round_s=round_s,
     )

@@ -9,9 +9,43 @@ cluster).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
+
+# SQL confs are SESSION-global: two scopes on one session running at once
+# would each save the other's in-flight value as their "prior" and restore
+# them out of order, leaking a mutated conf into the session. Every scope
+# in the process serializes on this lock; re-entrant, so a scope may nest
+# inside another on the same thread. Other processes have their own
+# sessions and are unaffected.
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session SQL confs for the duration of the block and restore the
+    prior values on exit, also when the block raises: an engine operation
+    must not leak plan-changing settings into unrelated queries sharing the
+    session. Only work that *executes* its queries inside the block is
+    governed by it; a DataFrame returned lazily is planned at the caller's
+    action time, under the caller's confs. A key the session had not set
+    is unset again on exit."""
+    with _CONF_LOCK:
+        prior = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, old in prior.items():
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)
 
 
 def get_spark(

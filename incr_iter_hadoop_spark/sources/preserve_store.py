@@ -42,17 +42,16 @@ still benefits from planner-side bucket pruning and min/max range stats.
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import json
 import os
 import re
 import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from . import occ
 
 _META = "meta.json"
@@ -107,53 +106,11 @@ class PreserveStore:
         # None → occ.STAGE_RETENTION_SEC; see Scd2Store.__init__
         self.stage_retention_sec = stage_retention_sec
 
-    # SQL confs are SESSION-global, so two same-session store operations
-    # scoping confs concurrently would corrupt each other's view and could
-    # leak a restored-out-of-order value into the session (each thread
-    # saves the other's in-flight value as its "prior"). Store operations
-    # that scope confs serialize on this per-process lock — they mutate
-    # one store and would mostly lose the OCC race to each other anyway;
-    # cross-process writers have their own sessions and are unaffected.
-    _CONF_LOCK = threading.RLock()
-
-    @classmethod
-    def _conf_lock(cls):
-        return cls._CONF_LOCK
-
-    @contextlib.contextmanager
-    def _scoped_confs(self, confs: dict[str, str]):
-        """Set session SQL confs for the duration of a store operation and
-        restore the originals afterwards — the store must not leak plan-
-        changing settings into unrelated queries sharing the session. Only
-        operations that *execute* their scans inside the scope (refresh,
-        compact — their layer/base writes are the actions) can use this;
-        lazily-returned DataFrames plan at the caller's action time.
-        Serialized per process (``_conf_lock``): concurrent same-session
-        scopes would save each other's in-flight values as their "prior"
-        and restore them out of order, leaking a mutated conf into the
-        session (r9 review)."""
-        with self._conf_lock():
-            prior: dict[str, str | None] = {}
-            for k, v in confs.items():
-                try:
-                    prior[k] = self.spark.conf.get(k)
-                except Exception:
-                    prior[k] = None
-                self.spark.conf.set(k, v)
-            try:
-                yield
-            finally:
-                for k, old in prior.items():
-                    if old is None:
-                        self.spark.conf.unset(k)
-                    else:
-                        self.spark.conf.set(k, old)
-
     # Spark's planner silently falls back to a plain file scan when it judges
     # bucketing "not useful" — which also drops BUCKET PRUNING, the store's
     # whole point-read mechanism (hash(key) selects the bucket files to open,
     # everything else is never touched). refresh()/compact() pin bucketed
-    # scans on for their own internal reads via _scoped_confs.
+    # scans on for their own internal reads via ``scoped_conf``.
     _BUCKETED_SCAN_CONF = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
 
     # -- metadata ----------------------------------------------------------
@@ -518,13 +475,14 @@ class PreserveStore:
             seen = self.meta.get("refresh_tokens", {})
             if token in seen:
                 return int(seen[token])
-        with self._scoped_confs(
+        with scoped_conf(
+            self.spark,
             {
                 self._BUCKETED_SCAN_CONF: "false",
                 "spark.sql.parquet.pushdown.inFilterThreshold": self.spark.conf.get(
                     "spark.sql.parquet.pushdown.inFilterThreshold"
                 ),
-            }
+            },
         ):
             return self._refresh_locked(
                 delta,
@@ -668,7 +626,7 @@ class PreserveStore:
         its files mid-query. ``vacuum()`` is the explicit delete step —
         the same rewrite-then-vacuum split lakehouse table formats use."""
         v0 = self._occ_begin()
-        with self._scoped_confs({self._BUCKETED_SCAN_CONF: "false"}):
+        with scoped_conf(self.spark, {self._BUCKETED_SCAN_CONF: "false"}):
             self._compact_locked(occ_expect=v0)
 
     def _compact_locked(self, *, occ_expect: int | None = None) -> None:

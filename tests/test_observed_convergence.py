@@ -9,10 +9,16 @@ headline query.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from incr_iter_hadoop_spark.operators.iterative import pagerank
-from incr_iter_hadoop_spark.plans.loopdriver import l1_state_distance
+from incr_iter_hadoop_spark.operators.iterative import (
+    label_propagation_converged,
+    pagerank,
+    sssp,
+)
+from incr_iter_hadoop_spark.plans.loopdriver import iterate, l1_state_distance
+from incr_iter_hadoop_spark.session import scoped_conf
 
 
 def _edges(spark):
@@ -24,28 +30,16 @@ def _edges(spark):
     return spark.createDataFrame(rows, "src long, dst long")
 
 
-def test_converged_pagerank_is_one_job_per_iteration(spark):
-    # AQE splits one action into one job per query stage, which would hide
-    # extra ACTIONS behind stage noise — disable it so jobs == actions and
-    # the 1-action-per-iteration contract is pinned directly.
-    # broadcast exchanges also surface as (tiny) extra jobs; disable
-    # auto-broadcast so each iteration's single action is a single job.
+def _assert_one_job_per_iteration(spark, group):
     sc = spark.sparkContext
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     edges = _edges(spark).persist()
     edges.count()
-    tracker = sc.statusTracker()
-    sc.setJobGroup("pr_jobcount", "observed-convergence job count")
+    sc.setJobGroup(group, "observed-convergence job count")
     try:
         res = pagerank(edges, max_iterations=30, threshold=1e-4)
     finally:
         sc.setJobGroup(None, None)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-    jobs = len(tracker.getJobIdsForGroup("pr_jobcount") or [])
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
     iters = res.iterations
     assert res.converged and iters >= 5
     # budget: 1 job/iteration + bounded setup (edge/static/nodes/state0
@@ -57,7 +51,30 @@ def test_converged_pagerank_is_one_job_per_iteration(spark):
     # convergence, ending at/below threshold
     assert res.distances[-1] <= 1e-4
     assert all(d > 0 for d in res.distances[:-1])
+    assert len(res.round_s) == iters and all(t > 0 for t in res.round_s)
     edges.unpersist()
+
+
+def test_converged_pagerank_is_one_job_per_iteration(spark):
+    # AQE splits one action into one job per query stage, which would hide
+    # extra ACTIONS behind stage noise — disable it so jobs == actions and
+    # the 1-action-per-iteration contract is pinned directly.
+    # broadcast exchanges also surface as (tiny) extra jobs; disable
+    # auto-broadcast so each iteration's single action is a single job.
+    with scoped_conf(spark, {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }):
+        _assert_one_job_per_iteration(spark, "pr_jobcount")
+
+
+def test_converged_pagerank_job_budget_under_session_defaults(spark):
+    # the same budget with AQE and auto-broadcast left at the session's own
+    # settings: iterate() must plan its rounds so that each is one job
+    # whatever the caller's session does
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
+    _assert_one_job_per_iteration(spark, "pr_jobcount_defaults")
 
 
 def test_observed_distance_matches_join_based_l1(spark):
@@ -87,10 +104,11 @@ def test_observed_distance_matches_join_based_l1(spark):
 
 
 def test_bounded_pagerank_cadence_is_value_invariant(spark):
-    """r14: bounded mode materializes every round (checkpoint cadence 1 —
-    the interval-5 mega-job re-derived the lazily-persisted invariants,
+    """Bounded mode materializes every round by default (checkpoint cadence
+    1 — the interval-5 mega-job re-derived the lazily-persisted invariants,
     doubling shuffle writes). The cadence is a physical knob: ranks must
-    be bit-identical whatever interval the caller passes."""
+    not depend on the interval the caller passes. The two plan shapes may
+    combine the doubles in a different order, hence the tolerance."""
     edges = _edges(spark)
     base = {
         r["node"]: r["rank"]
@@ -98,7 +116,7 @@ def test_bounded_pagerank_cadence_is_value_invariant(spark):
     }
     wide = pagerank(edges, max_iterations=5, checkpoint_interval=3)
     for row in wide.state.collect():
-        assert base[row["node"]] == row["rank"]
+        assert abs(base[row["node"]] - row["rank"]) < 1e-12
     assert wide.iterations == 5
 
 
@@ -107,3 +125,143 @@ def test_l1_state_distance_counts_one_sided_keys(spark):
     b = spark.createDataFrame([(2, 1.5), (3, 2.0)], "node long, rank double")
     # |1.0-0| + |3.0-1.5| + |0-2.0| = 4.5
     assert abs(l1_state_distance(a, b, "node", "rank") - 4.5) < 1e-9
+
+
+_LOOP_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def test_iterate_restores_session_confs(spark):
+    before = {k: spark.conf.get(k) for k in _LOOP_CONFS}
+    state0 = spark.range(12).repartition(3, "id").select(
+        F.col("id").alias("node"), F.lit(1.0).alias("v")
+    )
+    seen = []
+
+    def halve(state, i):
+        seen.append({k: spark.conf.get(k) for k in _LOOP_CONFS})
+        return state.select("node", (F.col("v") / 2).alias("v"))
+
+    res = iterate(
+        state0, halve, observed_distance=F.sum("v"), threshold=1.0,
+        max_iterations=10,
+    )
+    # 12 × 2^-i ≤ 1 first at i = 4
+    assert res.converged and res.iterations == 4
+    assert len(res.round_s) == 4
+    # inside the loop: no AQE, shuffle width = the state's 3 partitions
+    assert seen[0] == {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "3",
+    }
+    assert {k: spark.conf.get(k) for k in _LOOP_CONFS} == before
+
+    def fail(state, i):
+        raise RuntimeError("step failed")
+
+    with pytest.raises(RuntimeError, match="step failed"):
+        iterate(state0, fail, observed_distance=F.sum("v"), threshold=1.0)
+    assert {k: spark.conf.get(k) for k in _LOOP_CONFS} == before
+
+
+def test_scoped_conf_serializes_threads(spark):
+    # iterate() and the preserve store scope the same session-global confs;
+    # concurrent scopes must not see each other's values inside the block
+    # or leak one into the session after it
+    import sys
+    import threading
+
+    before = {k: spark.conf.get(k) for k in _LOOP_CONFS}
+    errors = []
+
+    def worker(t):
+        try:
+            for _ in range(20):
+                mine = {_LOOP_CONFS[0]: str(t % 2 == 0).lower(),
+                        _LOOP_CONFS[1]: str(100 + t)}
+                with scoped_conf(spark, mine):
+                    got = {k: spark.conf.get(k) for k in _LOOP_CONFS}
+                    if got != mine:
+                        errors.append((t, got))
+        except Exception as e:  # pragma: no cover - surfaced below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    assert {k: spark.conf.get(k) for k in _LOOP_CONFS} == before
+
+
+def _sssp_rounds(edges, source):
+    """Per-round changed counts of the loop's min-plus relaxation."""
+    dist, changed = {source: 0.0}, []
+    while True:
+        cand = {}
+        for s, d, w in edges:
+            if s in dist:
+                cand[d] = min(cand.get(d, float("inf")), dist[s] + w)
+        new = dict(dist)
+        for v, c in cand.items():
+            new[v] = min(new.get(v, float("inf")), c)
+        changed.append(sum(1 for v in new if v not in dist or new[v] < dist[v]))
+        dist = new
+        if changed[-1] == 0:
+            return changed, dist
+
+
+def test_sssp_converged_stops_at_the_reference_round(spark):
+    rows = [(i, (i * i + 1) % 37, float(1 + i % 5)) for i in range(37)] + [
+        (i, (2 * i + 3) % 37, float(1 + i % 3)) for i in range(37)
+    ]
+    edges = spark.createDataFrame(rows, "src long, dst long, w double")
+    res = sssp(edges, source=0, max_iterations=40)
+    changed, dist = _sssp_rounds(rows, 0)
+    assert res.converged and res.iterations == len(changed)
+    assert res.distances == [float(c) for c in changed]
+    assert {r.node: r.dist for r in res.state.collect()} == dist
+
+
+def _lpa_rounds(pairs):
+    """Per-round stop metric min(#label≠p1, #label≠p2) of synchronous LPA
+    (most frequent neighbor label, ties to the smallest)."""
+    nbrs = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    label = {v: v for v in nbrs}
+    p1 = {v: None for v in nbrs}
+    out = []
+    while True:
+        new = {}
+        for v, ns in nbrs.items():
+            cnt = {}
+            for u in ns:
+                cnt[label[u]] = cnt.get(label[u], 0) + 1
+            new[v] = max(cnt, key=lambda lab: (cnt[lab], -lab))
+        p2, p1, label = p1, label, new
+        out.append(min(
+            sum(label[v] != p1[v] for v in nbrs),
+            sum(p2[v] is None or label[v] != p2[v] for v in nbrs),
+        ))
+        if out[-1] == 0:
+            return out, label
+
+
+def test_lpa_converged_stops_at_the_reference_round(spark):
+    pairs = [(i, (i * i + 1) % 37) for i in range(37) if i != (i * i + 1) % 37]
+    pairs += [(100, 200), (101, 201)]  # a matching: period-2 forever
+    edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
+    res = label_propagation_converged(edges, max_iterations=30)
+    rounds, labels = _lpa_rounds(pairs)
+    assert res.converged and res.iterations == len(rounds)
+    assert res.distances == [float(c) for c in rounds]
+    got = {r.node: r.label for r in res.state.select("node", "label").collect()}
+    assert got == labels

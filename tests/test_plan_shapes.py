@@ -71,12 +71,11 @@ def test_preserve_store_refresh_reads_are_bucket_pruned(spark, tmp_path):
     # partitioning). A regression here turns every refresh into a full scan.
     from pyspark.sql import functions as F
 
+    from incr_iter_hadoop_spark.session import scoped_conf
     from incr_iter_hadoop_spark.sources.preserve_store import PreserveStore
 
     rows = [(g, s, float(g * 10 + s)) for g in range(64) for s in range(4)]
-    # r14: pin_bucketed pins autoBucketedScan=false session-wide (the graph
-    # loops' pinned layouts must always read bucketed), so the restore
-    # contract is "back to the pre-scope value", not a literal "true"
+    # the restore contract is "back to the pre-scope value"
     conf_before = spark.conf.get(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     )
@@ -89,8 +88,8 @@ def test_preserve_store_refresh_reads_are_bucket_pruned(spark, tmp_path):
         num_buckets=16,
     )
     # the confs below are exactly what refresh() scopes around its internal
-    # point reads (_scoped_confs) — pin the plan refresh actually executes
-    with store._scoped_confs({store._BUCKETED_SCAN_CONF: "false"}):
+    # point reads (scoped_conf) — pin the plan refresh actually executes
+    with scoped_conf(spark, {store._BUCKETED_SCAN_CONF: "false"}):
         pruned = store._base("contribs").where(F.col("g").isin([3, 7]))
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)

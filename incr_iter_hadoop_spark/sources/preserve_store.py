@@ -32,12 +32,28 @@ Spark-first redesign — no point-lookup server, no in-place mutation:
 
 Scale: at 100 TB the base tables are written once (the shuffle is paid at
 write time and amortized); every later refresh touches only the affected
-groups' buckets/pages. ``refresh()`` sets
-``spark.sql.parquet.pushdown.inFilterThreshold`` on the session before the
-isin fast path so exact in-filters reach the parquet reader for modest key
-lists (capped at ``_PUSHDOWN_IN_MAX`` — parquet-mr's or() chain is evaluated
+groups' buckets/pages, and its Spark work is sized to them:
+
+- **Key list first.** With a single group key and at most ``inline_keys``
+  affected groups, ``refresh()`` first collects the delta's distinct keys
+  (and rejects NULL keys) before it stages anything. The ``affected`` side
+  is written straight from the delta; nothing re-reads it, so nothing is
+  cached for it.
+- **Reconstruction sized to the keys.** The affected groups are read
+  through an ``isin`` filter that selects at most k buckets and reaches the
+  parquet reader. The read is coalesced to ``min(k, num_buckets)``
+  partitions, so the pruned-empty buckets and the per-layer-file splits
+  cost no task in the retraction, the union, the cache and the writes.
+- More keys than ``inline_keys``, or a composite key, take the co-bucketed
+  semi-join path against a cached key frame instead.
+
+``refresh()`` sets ``spark.sql.parquet.pushdown.inFilterThreshold`` for the
+isin path so exact in-filters reach the parquet reader for modest key lists
+(capped at ``_PUSHDOWN_IN_MAX`` — parquet-mr's or() chain is evaluated
 recursively and stack-overflows for huge lists); beyond the cap the scan
 still benefits from planner-side bucket pruning and min/max range stats.
+Every side's schema is recorded in the meta, so no layered read runs a
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -50,6 +66,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import scoped_conf
 from . import occ
@@ -67,6 +84,10 @@ _PUSHDOWN_IN_MAX = 200
 # idempotence tokens retained for this many trailing versions (replays only
 # ever target the most recent uncommitted batch; see refresh)
 _TOKEN_KEEP = 8
+_NULL_KEYS = (
+    "PreserveStore.refresh: delta contains NULL group keys; "
+    "NULL groups cannot be tracked by the layered store"
+)
 
 
 def _schema_ddl(df: DataFrame) -> str:
@@ -82,7 +103,7 @@ class PreserveStore:
     contribution columns (stored in the metadata so a fresh session can
     re-derive results without Python state).
 
-    CONCURRENCY CONTRACT (r8, hardened r9): single writer, many readers —
+    CONCURRENCY CONTRACT: single writer, many readers —
     enforced optimistically at every mutation's atomic meta commit
     (flock-guarded compare + staged-data publish + meta replace,
     ``occ.commit_meta``); of two concurrent writers exactly one wins and
@@ -102,7 +123,7 @@ class PreserveStore:
         self.spark = spark
         self.path = os.path.abspath(path)
         self._meta: dict | None = None
-        # vacuum/sweep retention for in-flight staged artifacts (r10):
+        # vacuum/sweep retention for in-flight staged artifacts:
         # None → occ.STAGE_RETENTION_SEC; see Scd2Store.__init__
         self.stage_retention_sec = stage_retention_sec
 
@@ -129,7 +150,7 @@ class PreserveStore:
         return os.path.join(self.path, _META)
 
     def _occ_begin(self) -> int | None:
-        """Begin a mutation (single-writer OCC, round 8): drop the cached
+        """Begin a mutation (single-writer OCC): drop the cached
         meta so the operation reads the CURRENT committed state, and
         capture the on-disk commit sequence the commit will be validated
         against (``_write_meta(..., expect=...)``). Same contract as
@@ -145,12 +166,12 @@ class PreserveStore:
         op: str = "PreserveStore",
         publish=None,
     ) -> int:
-        """Atomic commit point with the OCC compare step (round 8): of two
+        """Atomic commit point with the OCC compare step: of two
         concurrent writers exactly one wins; the loser raises
         ``ConcurrentWriteError`` instead of silently clobbering the
         winner's version bump. Returns the new commit sequence. The whole
         compare+stamp+replace runs under the store's ``flock`` with a
-        unique per-writer tmp file (``occ.commit_meta``, r9); ``publish``
+        unique per-writer tmp file (``occ.commit_meta``); ``publish``
         renames this mutation's STAGED data directories onto their final
         version names inside the same critical section."""
         seq = occ.commit_meta(
@@ -228,13 +249,12 @@ class PreserveStore:
         results as the version-0 base. One full shuffle — paid exactly
         once.
 
-        Same staged single-commit discipline as every other mutation
-        (r9 — pre-r9 this committed meta FIRST and wrote the bases
-        unstaged afterwards, so a crash between them left a committed
-        store whose lazy table registration would silently serve an
-        empty base): both bases write into one unique staging directory
-        and the rename onto ``base_v0`` happens inside the meta commit's
-        critical section. A crash mid-write leaves ``exists() == False``
+        Same staged single-commit discipline as every other mutation (a
+        meta committed before unstaged base writes would let a crash
+        between them leave a committed store whose lazy table
+        registration silently serves an empty base): both bases write
+        into one unique staging directory and the rename onto
+        ``base_v0`` happens inside the meta commit's critical section. A crash mid-write leaves ``exists() == False``
         with only a ``.stage-*`` orphan; a concurrent initialize loser
         cannot clobber the winner's published base."""
         v0 = self._occ_begin()
@@ -251,6 +271,7 @@ class PreserveStore:
             "schema_ddl": {
                 "contribs": _schema_ddl(contribs),
                 "results": _schema_ddl(results),
+                "affected": _schema_ddl(contribs.select(*group_keys)),
             },
             # era -> layer count of RETIRED (compacted-away) eras still on
             # disk; readers pinned to an old era keep working until vacuum()
@@ -289,11 +310,27 @@ class PreserveStore:
         return os.path.join(self.path, f"layers/b{era}/v{v}", which)
 
     def _reader(self, which: str):
-        """Parquet reader with the stored explicit schema where one exists
-        (contribs/results; r7 — no inference listing, no sampled-file
-        dependence); sides without a recorded DDL (affected) infer."""
+        """Parquet reader with the stored explicit schema (no inference
+        job, no sampled-file dependence). Stores written before the
+        ``affected`` side had a recorded DDL still infer that side."""
         ddl = self.meta["schema_ddl"].get(which)
         return self.spark.read.schema(ddl) if ddl else self.spark.read
+
+    def _affected_keys(self, delta: DataFrame) -> DataFrame:
+        """The delta's distinct group keys, cast to the store's key types
+        where the ``affected`` DDL is recorded: an ``int``-keyed delta
+        then writes ``bigint`` affected files into a ``bigint`` store,
+        matching the DDL every layered read applies."""
+        keys = delta.select(*self.group_keys)
+        ddl = self.meta["schema_ddl"].get("affected")
+        if ddl:
+            keys = keys.select(
+                *[
+                    F.col(f.name).cast(f.dataType)
+                    for f in StructType.fromDDL(ddl).fields
+                ]
+            )
+        return keys.distinct()
 
     def _layer(self, v: int, which: str, era: int | None = None) -> DataFrame:
         return self._reader(which).parquet(self._layer_path(v, which, era))
@@ -302,9 +339,9 @@ class PreserveStore:
         """Layers 1..n as ONE multi-path scan, ``_v`` parsed from the layer
         directory name (``layers/b<era>/v<N>/<which>/part-*``, written by
         ``_layer_path`` so the pattern is store-controlled). One scan node
-        instead of n (r6, VERDICT r5 ask #7 profiling): the per-layer
-        unionByName chain cost one file listing and one plan subtree PER
-        LAYER — driver-side analysis time grew linearly with store depth,
+        instead of n: a per-layer unionByName chain costs one file listing
+        and one plan subtree PER LAYER — driver-side analysis time grows
+        linearly with store depth,
         and on object storage each listing is a round trip. A single
         multi-path scan lists in one parallelized pass, keeps the plan a
         constant size, and still pushes the group-key filter into every
@@ -313,8 +350,8 @@ class PreserveStore:
         # anchored to the data-file position (layers/b<e>/v<N>/<which>/
         # part-*): an unanchored leftmost match would pick up a matching
         # segment from the store root's own path and stamp the wrong _v
-        # on every row with no error (ADVICE r6). Explicit schema from
-        # meta where recorded (r7, see _reader).
+        # on every row with no error. Explicit schema from meta where
+        # recorded (see _reader).
         return self._reader(which).parquet(*paths).withColumn(
             "_v",
             F.regexp_extract(
@@ -452,7 +489,7 @@ class PreserveStore:
 
         ``token``: idempotence handle for at-least-once callers (a retried
         orchestrator task, a replayed ``foreachBatch`` micro-batch; the
-        ``Scd2Store.apply_era`` analogue, r7). Recorded in the SAME meta
+        ``Scd2Store.apply_era`` analogue). Recorded in the SAME meta
         write as the version bump — one atomic commit — so a replayed
         refresh with a seen token is a no-op returning the version it
         committed, never a double-application of the delta. Tokens survive
@@ -469,7 +506,7 @@ class PreserveStore:
         # scope: bucketed scans pinned on for the point reads below; the
         # inFilterThreshold is mutated inside (probe-dependent) and listed
         # here at its current value so the exit restores BOTH to the
-        # session's prior settings (ADVICE r03: no session-global leaks).
+        # session's prior settings (no session-global leaks).
         v0 = self._occ_begin()
         if token is not None:
             seen = self.meta.get("refresh_tokens", {})
@@ -504,84 +541,17 @@ class PreserveStore:
         occ_expect: int | None = None,
     ) -> int:
         gk, sk = self.group_keys, self.source_keys
-        delta = delta.persist()
-        affected = delta.select(*gk).distinct().persist()
         v = self.version + 1
-        # all three layer sides write into ONE unique staging directory
-        # (r9) renamed onto layers/b<B>/v<N> inside the commit's critical
+        # all three layer sides write into ONE unique staging directory,
+        # renamed onto layers/b<B>/v<N> inside the commit's critical
         # section — a loser's write can never land on a committed version
-        # name (see occ.commit_meta)
+        # name (see occ.commit_meta). Staged dirs are invisible until
+        # published at the meta version bump.
         bv = int(self.meta["base_version"])
         stage_parent = os.path.join(
             self.path, f"layers/b{bv}", occ.stage_name(f"v{v}")
         )
-        # write the affected-key layer FIRST: the write materializes the
-        # persisted `affected`, so the strategy probe below is a cache hit
-        # instead of a second shuffle job. Crash-safe: staged dirs are
-        # invisible until published at the meta version bump.
-        affected.write.mode("overwrite").parquet(
-            os.path.join(stage_parent, "affected")
-        )
-
-        # the probe decides the pruning strategy AND yields the key list
-        # (limit(n+1) instead of count()+collect(): one job, not two —
-        # per-refresh overhead matters when the delta is tiny, which is the
-        # whole point of a refresh)
-        keys_filter = None
-        affected_df = None
-        probe = (
-            affected.limit(inline_keys + 1).collect() if len(gk) == 1 else None
-        )
-        if probe is not None and len(probe) <= inline_keys:
-            keys = [r[0] for r in probe]
-            # NULL group keys can neither isin()-match nor equi-join
-            # `touched` in _current — either path would silently drop the
-            # delta row while the affected file still records it. Reject
-            # them loudly (the reference's reduce keys are never null).
-            if any(k is None for k in keys):
-                raise ValueError(
-                    "PreserveStore.refresh: delta contains NULL group keys; "
-                    "NULL groups cannot be tracked by the layered store"
-                )
-            # keep the EXACT in-filter eligible for parquet pushdown for
-            # modest key lists (above the threshold Spark demotes it to a
-            # min/max range filter). Capped: the exact pushdown compiles to
-            # a values-deep or() chain in parquet-mr whose recursive
-            # evaluation stack-overflows around a thousand keys — beyond the
-            # cap the range filter + planner-side bucket pruning still apply.
-            self.spark.conf.set(
-                "spark.sql.parquet.pushdown.inFilterThreshold",
-                str(min(max(len(keys), 10), _PUSHDOWN_IN_MAX)),
-            )
-            keys_filter = F.col(gk[0]).isin(keys)
-        else:
-            if affected.where(
-                " OR ".join(f"`{k}` IS NULL" for k in gk)
-            ).limit(1).count():
-                raise ValueError(
-                    "PreserveStore.refresh: delta contains NULL group keys; "
-                    "NULL groups cannot be tracked by the layered store"
-                )
-            affected_df = affected
-
-        prior = self._current("contribs", keys_filter, affected_df)
-        plus = delta.where(F.col(op_col) == "+").drop(op_col)
-        minus = delta.where(F.col(op_col) == "-").drop(op_col)
-        new_contribs = prior.join(
-            minus.select(*gk, *sk).distinct(), gk + sk, "left_anti"
-        ).unionByName(plus)
-        new_contribs = new_contribs.persist()
-        recomputed = new_contribs.groupBy(*gk).agg(*self._agg_cols())
-
-        new_contribs.write.mode("overwrite").parquet(
-            os.path.join(stage_parent, "contribs")
-        )
-        recomputed.write.mode("overwrite").parquet(
-            os.path.join(stage_parent, "results")
-        )
-        new_contribs.unpersist()
-        affected.unpersist()
-        delta.unpersist()
+        final_parent = os.path.join(self.path, f"layers/b{bv}/v{v}")
         meta = dict(self.meta)
         meta["version"] = v
         if token is not None:
@@ -597,17 +567,93 @@ class PreserveStore:
             }
             tokens[token] = v
             meta["refresh_tokens"] = tokens
-        final_parent = os.path.join(self.path, f"layers/b{bv}/v{v}")
+        delta = delta.persist()
+        cached = [delta]
+        # one try/finally for staging and caching: a refresh that raises
+        # anywhere before its commit (NULL keys, a failed write, a lost
+        # OCC race) leaves neither a staged directory nor a cached frame.
+        # After a successful publish the staged name no longer exists.
         try:
+            keys_df = self._affected_keys(delta)
+            # the probe decides the pruning strategy AND yields the key
+            # list, before anything is staged (limit(n+1) instead of
+            # count()+collect(): one action, not two)
+            probe = (
+                keys_df.limit(inline_keys + 1).collect()
+                if len(gk) == 1
+                else None
+            )
+            if probe is not None and len(probe) <= inline_keys:
+                keys = [r[0] for r in probe]
+                # NULL group keys can neither isin()-match nor equi-join
+                # `touched` in _current — either path would silently drop
+                # the delta row while the affected file still records it.
+                # Reject them loudly (the reference's reduce keys are
+                # never null).
+                if any(k is None for k in keys):
+                    raise ValueError(_NULL_KEYS)
+                # nothing reads the affected keys again on this path, so
+                # they are written straight from the delta, uncached
+                keys_df.write.mode("overwrite").parquet(
+                    os.path.join(stage_parent, "affected")
+                )
+                # keep the EXACT in-filter eligible for parquet pushdown
+                # for modest key lists (above the threshold Spark demotes
+                # it to a min/max range filter). Capped: the exact pushdown
+                # compiles to a values-deep or() chain in parquet-mr whose
+                # recursive evaluation stack-overflows around a thousand
+                # keys — beyond the cap the range filter + planner-side
+                # bucket pruning still apply.
+                self.spark.conf.set(
+                    "spark.sql.parquet.pushdown.inFilterThreshold",
+                    str(min(max(len(keys), 10), _PUSHDOWN_IN_MAX)),
+                )
+                # k keys select at most k buckets; coalescing to that many
+                # partitions stops the pruned-empty buckets and the
+                # per-layer-file splits from costing one task each in
+                # every later stage
+                prior = self._current(
+                    "contribs", F.col(gk[0]).isin(keys)
+                ).coalesce(
+                    max(1, min(len(keys), int(self.meta["num_buckets"])))
+                )
+            else:
+                affected = keys_df.persist()
+                cached.append(affected)
+                if affected.where(
+                    " OR ".join(f"`{k}` IS NULL" for k in gk)
+                ).limit(1).count():
+                    raise ValueError(_NULL_KEYS)
+                affected.write.mode("overwrite").parquet(
+                    os.path.join(stage_parent, "affected")
+                )
+                prior = self._current("contribs", affected=affected)
+
+            plus = delta.where(F.col(op_col) == "+").drop(op_col)
+            minus = delta.where(F.col(op_col) == "-").drop(op_col)
+            new_contribs = prior.join(
+                minus.select(*gk, *sk).distinct(), gk + sk, "left_anti"
+            ).unionByName(plus)
+            new_contribs = new_contribs.persist()
+            cached.append(new_contribs)
+            recomputed = new_contribs.groupBy(*gk).agg(*self._agg_cols())
+
+            new_contribs.write.mode("overwrite").parquet(
+                os.path.join(stage_parent, "contribs")
+            )
+            recomputed.write.mode("overwrite").parquet(
+                os.path.join(stage_parent, "results")
+            )
             self._write_meta(
                 meta,
                 expect=occ_expect,
                 op="PreserveStore.refresh",
                 publish=lambda: occ.publish_dir(stage_parent, final_parent),
             )
-        except BaseException:
+        finally:
+            for df in reversed(cached):
+                df.unpersist()
             shutil.rmtree(stage_parent, ignore_errors=True)
-            raise
         if max_layers is not None and v >= max_layers:
             self.compact()
         return self.version
@@ -641,8 +687,8 @@ class PreserveStore:
         retired = dict(meta.get("retired", {}))
         retired[str(old_base_version)] = old_version
         meta["retired"] = retired
-        # stage the NEW base under a unique directory before flipping meta
-        # (r9): a crash leaves the old base intact and only a .stage
+        # stage the NEW base under a unique directory before flipping meta:
+        # a crash leaves the old base intact and only a .stage
         # orphan; the rename onto base_v<n+1> happens inside the commit's
         # critical section, so a losing compact can never clobber a
         # committed base of the same number
@@ -679,7 +725,7 @@ class PreserveStore:
     def _stage_base(
         self, which: str, df: DataFrame, stage_root: str
     ) -> str:
-        """Bucketed base write into a staging subdirectory (r9):
+        """Bucketed base write into a staging subdirectory:
         ``bucketBy`` requires ``saveAsTable``, so the write goes through a
         throwaway catalog name pointed at the staging path (dropped
         immediately — the final location is lazily re-registered from
@@ -705,14 +751,14 @@ class PreserveStore:
         versions — retired eras are a full state snapshot each, so leaving
         them forever leaks O(|state|) disk per compaction.
 
-        COMMIT FIRST, DELETE AFTER (r8): the OCC compare must precede the
+        COMMIT FIRST, DELETE AFTER: the OCC compare must precede the
         irreversible deletes — a vacuum losing the race to a concurrent
         refresh/compact fails with NOTHING deleted. The delete phase is a
         disk-scan sweep of every era directory the committed meta no
-        longer references (``_sweep_orphans``, r9), so a crash between
+        longer references (``_sweep_orphans``), so a crash between
         the commit and the deletes is healed by the next ``vacuum()``
         instead of leaking disk forever. Same ordering and sweep contract
-        as ``Scd2Store.vacuum``; ``retain_sec`` (r10) is the Delta
+        as ``Scd2Store.vacuum``; ``retain_sec`` is the Delta
         ``VACUUM ... RETAIN`` discipline — unreferenced era artifacts
         stay on disk until ``retain_sec`` has elapsed since a retaining
         sweep FIRST saw them unreferenced (``occ.retention_clock``; age
@@ -728,7 +774,7 @@ class PreserveStore:
 
     def _sweep_orphans(self, retain_sec: float = 0.0) -> None:
         """Reclaim every era directory the COMMITTED meta does not
-        reference (r9): ``base_v<e>`` / ``layers/b<e>`` where ``e`` is
+        reference: ``base_v<e>`` / ``layers/b<e>`` where ``e`` is
         neither the live base version nor a retired-but-still-readable
         era. Covers both the crashed-vacuum residue (retired cleared in
         meta, directories still on disk) and a crashed ``compact()``'s
@@ -746,7 +792,7 @@ class PreserveStore:
         unreferenced ``base_v<e>`` / ``layers/b<e>`` may be a concurrent
         refresh/compact's just-published data whose meta replace hasn't
         landed, and sweeping it would make that writer's commit land on
-        deleted files (ADVICE r9)."""
+        deleted files."""
         ret = self.stage_retention_sec
 
         def _sweep_stage(p: str) -> None:
@@ -773,7 +819,7 @@ class PreserveStore:
                     os.path.join(self.path, d), retain_sec
                 ):
                     continue  # VACUUM RETAIN: in-flight readers (clock
-                    # runs from first-sight-as-unreferenced — r10 review)
+                    # runs from first-sight-as-unreferenced)
                 era = int(m.group(1))
                 for which in ("contribs", "results"):
                     self.spark.sql(

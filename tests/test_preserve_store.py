@@ -120,6 +120,142 @@ def test_null_group_key_rejected(spark, tmp_path):
         store.refresh(bad, inline_keys=0)  # semi-join path rejects too
 
 
+def _stage_dirs(root):
+    return [
+        os.path.join(d, n)
+        for d, dirs, _ in os.walk(root)
+        for n in dirs
+        if n.startswith(".stage-")
+    ]
+
+
+@pytest.mark.parametrize("inline_keys", [5000, 0], ids=["isin", "semi_join"])
+def test_failed_refresh_leaves_no_staging_or_cache(spark, tmp_path, inline_keys):
+    """A refresh that raises before its commit removes its staged layer
+    directory and unpersists every frame it cached; so does a successful
+    one (its staging is published, its caches dropped)."""
+    store = _fresh_store(spark, tmp_path, BASE_ROWS)
+    jsc = spark.sparkContext._jsc
+    n_cached = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="NULL group keys"):
+        store.refresh(
+            _delta(spark, [(None, 50, 1.0, "+"), (1, 51, 1.0, "+")]),
+            inline_keys=inline_keys,
+        )
+    assert _stage_dirs(store.path) == []
+    assert jsc.getPersistentRDDs().size() == n_cached
+    # an unknown op column fails after the affected side is staged
+    with pytest.raises(Exception, match="no_such_op"):
+        store.refresh(
+            _delta(spark, [(1, 12, 10.0, "+")]),
+            op_col="no_such_op",
+            inline_keys=inline_keys,
+        )
+    assert _stage_dirs(store.path) == []
+    assert jsc.getPersistentRDDs().size() == n_cached
+    assert store.version == 0
+    assert store.refresh(
+        _delta(spark, [(1, 12, 10.0, "+")]), inline_keys=inline_keys
+    ) == 1
+    assert _stage_dirs(store.path) == []
+    assert jsc.getPersistentRDDs().size() == n_cached
+    assert _results_dict(store)[1] == (13.0, 3, 10.0)
+
+
+def test_inline_refresh_tasks_scale_with_affected_groups(spark, tmp_path):
+    """An inline refresh of k groups runs no stage wider than the k
+    buckets it reads plus the delta's own partitions: the pruned-empty
+    buckets, the per-layer-file splits and the shuffle partitions of the
+    affected-key frame cost no tasks."""
+    rows = [(g, s, float(g * 10 + s)) for g in range(64) for s in range(4)]
+    store = _fresh_store(spark, tmp_path, rows, num_buckets=16)
+    # two earlier layers, so the read folds base + layer files
+    store.refresh(_delta(spark, [(3, 100, 1.0, "+"), (40, 0, 0.0, "-")]))
+    store.refresh(_delta(spark, [(7, 101, 2.0, "+"), (3, 1, 0.0, "-")]))
+    delta = _delta(
+        spark,
+        [(3, 102, 4.0, "+"), (3, 2, 0.0, "-"), (9, 103, 8.0, "+"), (9, 0, 0.0, "-")],
+    )
+    bound = 2 + delta.rdd.getNumPartitions()
+    sc = spark.sparkContext
+    group = f"inline-refresh-tasks-{id(store)}"
+    sc.setJobGroup(group, "inline refresh task count")
+    try:
+        store.refresh(delta)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    tasks = {
+        sid: tracker.getStageInfo(sid).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+        if tracker.getStageInfo(sid) is not None
+    }
+    assert tasks, "the tracker saw no stages"
+    assert max(tasks.values()) <= bound, (bound, tasks)
+    res = _results_dict(store)
+    assert res[3] == (30.0 + 33.0 + 1.0 + 4.0, 4, 33.0)  # s 0, 3, 100, 102
+    assert res[9] == (91.0 + 92.0 + 93.0 + 8.0, 4, 93.0)
+    assert res[7] == (70.0 + 71.0 + 72.0 + 73.0 + 2.0, 5, 73.0)
+    assert 40 in res and res[40][1] == 3
+
+
+def test_int_keyed_delta_into_bigint_store(spark, tmp_path):
+    """A delta whose group key is ``int`` refreshes a ``bigint`` store:
+    the affected files carry the store's key type, and the current and
+    historical answers stay exact."""
+    store = _fresh_store(spark, tmp_path, BASE_ROWS)
+    deltas = [
+        [(1, 12, 10.0, "+"), (2, 20, 0.0, "-")],
+        [(9, 90, 4.0, "+"), (3, 30, 0.0, "-"), (1, 10, 0.0, "-")],
+        [(2, 22, 1.5, "+"), (9, 91, 6.0, "+")],
+    ]
+    want = [_results_dict(store)]
+    for i, rows in enumerate(deltas, start=1):
+        d = spark.createDataFrame(rows, "g int, s bigint, v double, op string")
+        assert store.refresh(d) == i
+        want.append(_results_dict(store))
+        affected = spark.read.parquet(store._layer_path(i, "affected"))
+        assert affected.schema["g"].dataType.simpleString() == "bigint"
+    assert want[-1] == {
+        1: (12.0, 2, 10.0),
+        2: (8.5, 2, 7.0),
+        9: (10.0, 2, 6.0),
+    }
+    for version, expect in enumerate(want):
+        assert _asof_dict(store, version) == expect
+
+
+def test_store_without_affected_ddl_still_refreshes(spark, tmp_path):
+    """A meta written before the ``affected`` DDL was recorded: reads of
+    the affected side infer their schema, and refresh, time travel and
+    compact still answer exactly."""
+    import json
+
+    store = _fresh_store(spark, tmp_path, BASE_ROWS)
+    meta_path = os.path.join(store.path, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["schema_ddl"]["affected"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    old = PreserveStore(spark, store.path)
+    old.refresh(_delta(spark, [(9, 90, 4.0, "+"), (3, 30, 0.0, "-")]))
+    old.refresh(_delta(spark, [(9, 91, 6.0, "+"), (1, 12, 3.0, "+")]))
+    expect = {1: (6.0, 3, 3.0), 2: (12.0, 2, 7.0), 9: (10.0, 2, 6.0)}
+    assert _results_dict(old) == expect
+    assert _asof_dict(old, 1) == {
+        1: (3.0, 2, 2.0),
+        2: (12.0, 2, 7.0),
+        9: (4.0, 1, 4.0),
+    }
+    old.compact()
+    assert "affected" not in old.meta["schema_ddl"]
+    assert _results_dict(old) == expect
+    old.refresh(_delta(spark, [(2, 21, 0.0, "-")]), inline_keys=0)
+    assert _results_dict(old)[2] == (5.0, 1, 5.0)
+
+
 @pytest.mark.slow  # r14: driver verify window (ask #6)
 def test_compact_retires_era_and_vacuum_reclaims_space(spark, tmp_path):
     store = _fresh_store(spark, tmp_path, BASE_ROWS)

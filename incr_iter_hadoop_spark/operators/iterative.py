@@ -40,6 +40,7 @@ from ..catalog import load_table, spread_scan
 from ..functions.vector import cosine
 from ..plans.loopdriver import (
     IterationResult,
+    clamp_partitions,
     iterate,
     negotiate_partitions,
 )
@@ -68,7 +69,13 @@ def pagerank(
 
     ``init_state`` (node, rank) warm-starts the loop — the incremental
     iterative mode (SURVEY §3.3): after a graph delta, re-converging from
-    the previous fixpoint takes far fewer iterations than from scratch.
+    the previous fixpoint takes far fewer iterations than from scratch. A
+    converged warm start inherits the partitioning of the state it resumes
+    from, clamped to the range ``negotiate_partitions`` uses, and counts
+    nothing: the earlier run already fixed the partitioning, as the
+    reference's incremental run reads its preserved state per reduce
+    partition (ReduceTask.java:3359-3372). ``num_partitions`` overrides
+    it. Otherwise the count is negotiated from the edge count.
 
     One job per iteration: the state carries a ``delta`` column
     (rankᵢ − rankᵢ₋₁, computed inside the step at zero extra shuffles since
@@ -77,139 +84,164 @@ def pagerank(
     action via ``df.observe`` — no prev⋈curr full-outer join, no separate
     distance job (the ``IterativeReducer.distance`` contract,
     IterativeReducer.java:24-32, summed master-side like
-    JobTracker.java:5586-5595)."""
-    # materialize the edge relation once: deg, static and nodes each derive
-    # from it, and callers often pass an expensive pipeline (e.g. the
-    # delta-applied graph — anti-join over two distincts) that would
-    # otherwise be recomputed per derivation
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = num_partitions or negotiate_partitions(edges)
+    JobTracker.java:5586-5595). In converged mode the loop invariants are
+    built by the loop's first action, the checkpoint of the initial state.
+    """
+    if max_iterations < 1:
+        raise ValueError("max_iterations must be >= 1")
     from pyspark.sql.window import Window
 
+    spark = edges.sparkSession
     converged_mode = threshold is not None
-    # the converged loop plans without AQE (see iterate()), and its
-    # invariants are cached the same way: a non-adaptive cached plan
-    # reports its hash(src, n) / hash(node, n) layout before it is
-    # materialized, so the first round reads both in place instead of
-    # shuffling them a second time.
-    with (
-        scoped_conf(edges.sparkSession, {"spark.sql.adaptive.enabled": "false"})
-        if converged_mode
-        else contextlib.nullcontext()
-    ):
-        # static side: adjacency + out-degree in ONE exchange — the
-        # repartition provides the hash distribution the degree window
-        # needs, so deg comes from a within-partition sort instead of a
-        # groupBy shuffle + join. Skew: a hot src key costs one task O(f) —
-        # linear, and the same row placement the co-partitioned loop join
-        # needs anyway; see bench/PLANS.md "pagerank degree computation"
-        # for the salted-fallback criterion before trading away the shared
-        # exchange.
-        static = (
-            edges.repartition(n, "src")
-            .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # node set in ONE exchange — explode both endpoints,
-        # repartition by node, dedup WITHIN the node-hash partitions
-        # (hash(node) already co-locates equal nodes, so the dropDuplicates
-        # adds no second exchange). The former union+distinct+repartition
-        # paid two.
-        nodes = (
-            edges.select(
-                F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
+    # the edges are cached only when they are counted, so that static is
+    # built from the cache instead of recomputing the caller's pipeline
+    edge_cache = static = nodes = None
+    try:
+        # the converged loop plans without AQE (see iterate()), and so does
+        # its setup: non-adaptive cached plans report their hash(src, n) /
+        # hash(node, n) layout before they are materialized, so the state0
+        # checkpoint computes the edge pipeline and both invariants in one
+        # job and round 1 reads them in place
+        with (
+            scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"})
+            if converged_mode
+            else contextlib.nullcontext()
+        ):
+            if num_partitions is not None:
+                n = num_partitions
+            elif converged_mode and init_state is not None:
+                # a planning call, no job
+                n = clamp_partitions(spark, init_state.rdd.getNumPartitions())
+            else:
+                edge_cache = edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+                n = negotiate_partitions(edges)
+            # static side: adjacency + out-degree in ONE exchange — the
+            # repartition provides the hash distribution the degree window
+            # needs, so deg comes from a within-partition sort instead of a
+            # groupBy shuffle + join. Skew: a hot src key costs one task
+            # O(f) — linear, and the same row placement the co-partitioned
+            # loop join needs anyway; see bench/PLANS.md "pagerank degree
+            # computation" for the salted-fallback criterion before trading
+            # away the shared exchange.
+            static = (
+                edges.repartition(n, "src")
+                .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            .repartition(n, "node")
-            .dropDuplicates(["node"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    if init_state is not None:
+            # node set in ONE exchange — explode both endpoints of static,
+            # repartition by node, dedup WITHIN the node-hash partitions
+            # (hash(node) already co-locates equal nodes, so the
+            # dropDuplicates adds no second exchange)
+            nodes = (
+                static.select(
+                    F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
+                )
+                .repartition(n, "node")
+                .dropDuplicates(["node"])
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            if init_state is not None:
+                if converged_mode:
+                    # the loop runs at state0's partitioning: bring the prior
+                    # ranks to nodes' hash(node, n), which plans to nothing
+                    # when a previous loop's state already has it; the hint
+                    # keeps a small prior state from being broadcast (a job
+                    # of its own)
+                    init_state = init_state.repartition(n, "node").hint(
+                        "shuffle_hash"
+                    )
+                # warm start: keep prior ranks for surviving nodes, 1.0 for
+                # new ones
+                state0 = nodes.join(init_state, "node", "left").select(
+                    "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
+                )
+            else:
+                state0 = nodes.select("node", F.lit(1.0).alias("rank"))
+
+        # the round-invariant pieces of both steps, built once per call:
+        # each Column or DataFrame built costs the driver a Py4J round trip
+        src_is_node = F.col("src") == F.col("node")
+        node_is_dst = F.col("node") == F.col("dst")
+        contrib = (F.col("rank") / F.col("deg")).alias("contrib")
+        mass = F.sum("contrib").alias("mass")
+        new_rank = F.lit(retain) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
+
+        def _mass(static_side: DataFrame, state: DataFrame) -> DataFrame:
+            return (
+                static_side.join(state, src_is_node)
+                .select("dst", contrib)
+                .groupBy("dst")
+                .agg(mass)
+            )
+
         if converged_mode:
-            # the loop runs at state0's partitioning: bring the prior ranks
-            # to nodes' hash(node, n), which plans to nothing when a
-            # previous loop's state already has it
-            init_state = init_state.repartition(n, "node")
-        # warm start: keep prior ranks for surviving nodes, 1.0 for new ones
-        state0 = nodes.join(init_state, "node", "left").select(
-            "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
-        )
-    else:
-        state0 = nodes.select("node", F.lit(1.0).alias("rank"))
-    if converged_mode:
-        state0 = state0.withColumn("delta", F.lit(0.0))
+            # iterate() keeps the state hash(node, n) and static is
+            # hash(src, n), so shuffle joins need no exchange but the
+            # contributions' one by dst. Both joins are pinned to that: a
+            # broadcast would cost a job of its own every round.
+            static_hinted = static.hint("shuffle_hash")
+            out = (
+                "node",
+                new_rank.alias("rank"),
+                (new_rank - F.col("rank")).alias("delta"),
+            )
 
-    def _mass(state: DataFrame):
-        return (
-            static.join(state, static.src == state.node)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("mass"))
-        )
+            def step_observed(state: DataFrame, i: int) -> DataFrame:
+                # the state invariantly holds every node, so joining it
+                # instead of `nodes` keeps the previous rank on the row —
+                # the delta costs no extra join or shuffle. The state is
+                # referenced twice; iterate()'s observed path truncates
+                # lineage every round to keep the plan linear.
+                contribs = _mass(static_hinted, state).hint("shuffle_hash")
+                return state.join(contribs, node_is_dst, "left").select(*out)
 
-    new_rank = F.lit(retain) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
+            result = iterate(
+                state0.withColumn("delta", F.lit(0.0)),
+                step_observed,
+                max_iterations=max_iterations,
+                observed_distance=F.sum(F.abs(F.col("delta"))),
+                threshold=threshold,
+                observe_counts=observe_counts,
+            )
+        else:
 
-    def step_bounded(state: DataFrame, i: int) -> DataFrame:
-        # single state reference → linear plan growth between checkpoints
-        contribs = _mass(state)
-        return nodes.join(contribs, nodes.node == contribs.dst, "left").select(
-            "node", new_rank.alias("rank")
-        )
+            def step_bounded(state: DataFrame, i: int) -> DataFrame:
+                # single state reference → linear plan growth between
+                # checkpoints
+                contribs = _mass(static, state)
+                return nodes.join(contribs, node_is_dst, "left").select(
+                    "node", new_rank.alias("rank")
+                )
 
-    def step_observed(state: DataFrame, i: int) -> DataFrame:
-        # the state invariantly holds every node, so joining the (persisted,
-        # node-partitioned) state instead of `nodes` keeps the previous rank
-        # on the row — the delta costs no extra join or shuffle. This step
-        # references state twice; iterate()'s observed path truncates
-        # lineage every iteration to keep the plan linear.
-        # iterate() keeps the state hash(node, n) and static is hash(src, n),
-        # so shuffle joins need no exchange but the contributions' one by
-        # dst. Both joins are pinned to that: a broadcast would cost a job
-        # of its own every round.
-        contribs = _mass(state.hint("shuffle_hash")).hint("shuffle_hash")
-        prev = state.select("node", F.col("rank").alias("_prev"))
-        return prev.join(contribs, prev.node == contribs.dst, "left").select(
-            "node",
-            new_rank.alias("rank"),
-            (new_rank - F.col("_prev")).alias("delta"),
-        )
-
-    # r14 (guide §2.4, measured): bounded mode defaults to materializing
-    # EVERY round. The interval-5 mega-job re-derived the lazily-persisted
-    # invariants (nodes/static are referenced by all 5 chained rounds
-    # before any action caches them), writing DOUBLE the shuffle —
-    # interleaved A/B at sf0.1: pagerank_bounded5 33.386 -> 17.549 MB,
-    # incr_pagerank_delta5 35.813 -> 20.375 MB (deterministic, reproduced
-    # cold and warm), wall flat (3.75 -> 3.68 / 3.55 -> 3.52 s medians).
-    # This is pagerank-specific: the same A/B showed the mega-job's
-    # exchange reuse WINNING for lpa_bounded3 (15.9 vs 45.2 MB warm) and
-    # spmv, so iterate()'s own cadence default is untouched. Converged
-    # mode checkpoints per round regardless (observed-distance path);
-    # an explicit caller interval is honored either way.
-    result = iterate(
-        state0,
-        step_observed if converged_mode else step_bounded,
-        max_iterations=max_iterations,
-        observed_distance=(
-            F.sum(F.abs(F.col("delta"))) if converged_mode else None
-        ),
-        threshold=threshold if threshold is not None else 0.0,
-        checkpoint_interval=(
-            checkpoint_interval if checkpoint_interval is not None else 1
-        ),
-        observe_counts=observe_counts,
-    )
-    static.unpersist()
-    edges.unpersist()
-    nodes.unpersist()  # final state is already materialized by iterate()
+            # bounded mode materializes every round unless the caller asks
+            # otherwise: a chained multi-round job references the lazily
+            # persisted invariants from every round before any action has
+            # cached them, so it re-derives them and writes about twice the
+            # shuffle. iterate()'s own default suits lpa and spmv, whose
+            # chained rounds reuse their exchanges.
+            result = iterate(
+                state0,
+                step_bounded,
+                max_iterations=max_iterations,
+                checkpoint_interval=(
+                    checkpoint_interval if checkpoint_interval is not None else 1
+                ),
+                observe_counts=observe_counts,
+            )
+    finally:
+        # the final state is already materialized by iterate()
+        for cached in (static, nodes, edge_cache):
+            if cached is not None:
+                cached.unpersist()
     return result
 
 
 def _lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic graph derived from the driver tables: part→supplier.
 
-    r13 (guide §2.5 input skew): the sf lineitem lands as ONE row group, so
-    the distinct's partial aggregate ran single-task over every row no
-    matter the session cores. ``spread_scan`` on the projected edge rows
+    The sf lineitem file is ONE row group, so a plain scan would run the
+    distinct's partial aggregate as a single task over every row whatever
+    the session's cores. ``spread_scan`` on the projected edge rows
     hash-spreads them by src first — and because hash(src) clusters every
     (src, dst) group, the distinct then completes WITHIN partitions with no
     second exchange (same subset-clustering rule the sym build relies on).

@@ -40,7 +40,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -62,8 +62,23 @@ class IterationResult:
     round_s: list[float] = field(default_factory=list)
 
 
+PARTITION_FLOOR = 8
+
+
+def clamp_partitions(
+    spark: SparkSession, n: int, *, floor: int = PARTITION_FLOOR
+) -> int:
+    """``n`` clamped to the loop partition range: at least ``floor``, at
+    most the session's ``spark.sql.shuffle.partitions``."""
+    default_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(floor, min(default_n, n))
+
+
 def negotiate_partitions(
-    df: DataFrame, *, rows_per_partition: int = 100_000, floor: int = 8
+    df: DataFrame,
+    *,
+    rows_per_partition: int = 100_000,
+    floor: int = PARTITION_FLOOR,
 ) -> int:
     """Partition-count negotiation for loop relations — the reference does
     this at submit time (JobClient.java:913-957: block-size-driven counts,
@@ -72,8 +87,9 @@ def negotiate_partitions(
     iteration while preserving the session default as the ceiling for
     cluster-scale inputs. ``df`` should already be persisted — the count
     doubles as its materialization."""
-    default_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return max(floor, min(default_n, df.count() // rows_per_partition + 1))
+    return clamp_partitions(
+        df.sparkSession, df.count() // rows_per_partition + 1, floor=floor
+    )
 
 
 def l1_state_distance(

@@ -1,10 +1,11 @@
-"""One-job-per-iteration convergence (VERDICT r03 task 2).
+"""One-job-per-iteration convergence.
 
 The converged PageRank loop must read its L1 distance from a ``df.observe``
 metric riding the iteration's own materializing action — never a separate
 prev⋈curr distance job. A regression doubles the per-iteration job count
 (and re-introduces a full-outer join over the state) on the most expensive
-headline query.
+headline query. Its setup is budgeted too: a warm start counts nothing and
+builds its invariants inside the loop's first checkpoint.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from incr_iter_hadoop_spark.operators.incremental import apply_edge_delta
 from incr_iter_hadoop_spark.operators.iterative import (
     label_propagation_converged,
     pagerank,
@@ -21,38 +23,66 @@ from incr_iter_hadoop_spark.plans.loopdriver import iterate, l1_state_distance
 from incr_iter_hadoop_spark.session import scoped_conf
 
 
+# irregular in-degrees (the squaring map is many-to-one mod 37), so the
+# rank vector genuinely moves for several iterations
+_EDGE_ROWS = [(i, (i * i + 1) % 37) for i in range(37)] + [
+    (i, (2 * i + 3) % 37) for i in range(37)
+]
+# retracts two edges, adds one between old nodes and one to a new node 40
+_DELTA_ROWS = [(0, 1, "-"), (5, 26, "-"), (3, 7, "+"), (40, 2, "+")]
+
+
 def _edges(spark):
-    # irregular in-degrees (the squaring map is many-to-one mod 37), so the
-    # rank vector genuinely moves for several iterations
-    rows = [(i, (i * i + 1) % 37) for i in range(37)] + [
-        (i, (2 * i + 3) % 37) for i in range(37)
-    ]
-    return spark.createDataFrame(rows, "src long, dst long")
+    return spark.createDataFrame(_EDGE_ROWS, "src long, dst long")
 
 
-def _assert_one_job_per_iteration(spark, group):
+def _delta_edges(spark):
+    delta = spark.createDataFrame(_DELTA_ROWS, "src long, dst long, op string")
+    return apply_edge_delta(_edges(spark), delta)
+
+
+def _prior_ranks(spark):
+    """The converged ranks of the graph before the delta, as a later run
+    would resume from them."""
+    res = pagerank(_edges(spark), max_iterations=60, threshold=1e-4)
+    return res.state.select("node", "rank")
+
+
+def _assert_job_budget(spark, group):
+    cached = _edges(spark).persist()
+    cached.count()
+    delta_edges = _delta_edges(spark)
+    prior = _prior_ranks(spark)
+    # budget: 1 job per round plus the setup. A warm start counts nothing,
+    # so its state0 checkpoint is the only setup job; a cold start adds the
+    # edge count. The old distance-callable path paid an extra full-outer
+    # join distance job per round and would blow these bounds.
+    cases = (
+        ("cold_cached", cached, None, 2),
+        ("cold_delta", delta_edges, None, 2),
+        ("warm_delta", delta_edges, prior, 1),
+    )
     sc = spark.sparkContext
-    edges = _edges(spark).persist()
-    edges.count()
-    sc.setJobGroup(group, "observed-convergence job count")
-    try:
-        res = pagerank(edges, max_iterations=30, threshold=1e-4)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
-    iters = res.iterations
-    assert res.converged and iters >= 5
-    # budget: 1 job/iteration + bounded setup (edge/static/nodes/state0
-    # materializations). The old distance-callable path paid an extra
-    # full-outer-join distance job per iteration and would blow this bound.
-    assert jobs <= iters + 6, f"{jobs} jobs for {iters} iterations"
-    assert jobs >= iters  # sanity: the tracker actually saw the loop
-    # distance sequence is the observed Σ|delta| — strictly positive until
-    # convergence, ending at/below threshold
-    assert res.distances[-1] <= 1e-4
-    assert all(d > 0 for d in res.distances[:-1])
-    assert len(res.round_s) == iters and all(t > 0 for t in res.round_s)
-    edges.unpersist()
+    for label, edges, init_state, setup_jobs in cases:
+        job_group = f"{group}_{label}"
+        sc.setJobGroup(job_group, "pagerank job budget")
+        try:
+            res = pagerank(
+                edges, max_iterations=60, threshold=1e-4, init_state=init_state
+            )
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(job_group) or [])
+        iters = res.iterations
+        assert res.converged and iters >= 5, (label, iters)
+        assert jobs <= iters + setup_jobs, f"{label}: {jobs} jobs, {iters} rounds"
+        assert jobs >= iters  # sanity: the tracker actually saw the loop
+        # distance sequence is the observed Σ|delta| — strictly positive
+        # until convergence, ending at/below threshold
+        assert res.distances[-1] <= 1e-4
+        assert all(d > 0 for d in res.distances[:-1])
+        assert len(res.round_s) == iters and all(t > 0 for t in res.round_s)
+    cached.unpersist()
 
 
 def test_converged_pagerank_is_one_job_per_iteration(spark):
@@ -65,16 +95,107 @@ def test_converged_pagerank_is_one_job_per_iteration(spark):
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }):
-        _assert_one_job_per_iteration(spark, "pr_jobcount")
+        _assert_job_budget(spark, "pr_jobcount")
 
 
 def test_converged_pagerank_job_budget_under_session_defaults(spark):
     # the same budget with AQE and auto-broadcast left at the session's own
-    # settings: iterate() must plan its rounds so that each is one job
-    # whatever the caller's session does
+    # settings: pagerank and iterate() must plan the setup and the rounds
+    # so that each is one job whatever the caller's session does
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
-    _assert_one_job_per_iteration(spark, "pr_jobcount_defaults")
+    _assert_job_budget(spark, "pr_jobcount_defaults")
+
+
+def _ranks(res):
+    return {r["node"]: r["rank"] for r in res.state.select("node", "rank").collect()}
+
+
+def test_warm_pagerank_inherits_the_prior_partitioning(spark):
+    # a warm start loops at the partition count of the state it resumes
+    # from, clamped to [8, spark.sql.shuffle.partitions]; an explicit
+    # num_partitions gives the same ranks
+    edges = _delta_edges(spark)
+    prior = _prior_ranks(spark)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
+        for given, expected in ((1, 8), (16, 16), (64, 32)):
+            init = prior.repartition(given, "node").localCheckpoint(eager=True)
+            assert init.rdd.getNumPartitions() == given
+            warm = pagerank(edges, max_iterations=60, threshold=1e-4, init_state=init)
+            assert warm.state.rdd.getNumPartitions() == expected, given
+            pinned = pagerank(
+                edges, max_iterations=60, threshold=1e-4, init_state=init,
+                num_partitions=expected,
+            )
+            assert warm.iterations == pinned.iterations
+            got, want = _ranks(warm), _ranks(pinned)
+            assert got.keys() == want.keys()
+            assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+
+
+def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
+    from incr_iter_hadoop_spark.operators import iterative
+
+    jsc = spark.sparkContext._jsc
+    edges = _delta_edges(spark)
+    prior = _prior_ranks(spark)
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="max_iterations"):
+        pagerank(edges, max_iterations=0, threshold=1e-4)
+    assert jsc.getPersistentRDDs().size() == before
+
+    inside = []
+
+    def failing_iterate(state, step, **kwargs):
+        state.count()  # materializes every cache the setup made
+        inside.append(jsc.getPersistentRDDs().size())
+        raise RuntimeError("loop failed")
+
+    monkeypatch.setattr(iterative, "iterate", failing_iterate)
+    for kwargs in (
+        {"threshold": 1e-4},  # cold: edge cache, static, nodes
+        {"threshold": 1e-4, "init_state": prior},  # warm: static, nodes
+        {},  # bounded
+    ):
+        with pytest.raises(RuntimeError, match="loop failed"):
+            pagerank(edges, max_iterations=5, **kwargs)
+        assert inside[-1] > before, kwargs
+        assert jsc.getPersistentRDDs().size() == before, kwargs
+
+
+def _fixpoint(rows, damping=0.8, retain=0.2):
+    """The PageRank fixpoint of an edge list by power iteration to 1e-13."""
+    nodes = {v for e in rows for v in e[:2]}
+    deg = {}
+    for s, _d in rows:
+        deg[s] = deg.get(s, 0) + 1
+    rank = dict.fromkeys(nodes, 1.0)
+    while True:
+        mass = dict.fromkeys(nodes, 0.0)
+        for s, d in rows:
+            mass[d] += rank[s] / deg[s]
+        new = {v: retain + damping * mass[v] for v in nodes}
+        if sum(abs(new[v] - rank[v]) for v in nodes) < 1e-13:
+            return new
+        rank = new
+
+
+def test_warm_pagerank_reaches_the_delta_graph_fixpoint(spark):
+    # a round that moves the ranks by <= θ in L1 leaves them within
+    # θ·c/(1−c) of the fixpoint, c = damping = the L1 contraction rate
+    theta, c = 1e-4, 0.8
+    removed = {(s, d) for s, d, op in _DELTA_ROWS if op == "-"}
+    rows = [e for e in _EDGE_ROWS if e not in removed] + [
+        (s, d) for s, d, op in _DELTA_ROWS if op == "+"
+    ]
+    exact = _fixpoint(rows)
+    warm = pagerank(
+        _delta_edges(spark), max_iterations=60, threshold=theta,
+        init_state=_prior_ranks(spark),
+    )
+    got = _ranks(warm)
+    assert warm.converged and got.keys() == exact.keys()
+    assert sum(abs(got[v] - exact[v]) for v in exact) <= theta * c / (1 - c)
 
 
 def test_observed_distance_matches_join_based_l1(spark):

@@ -305,7 +305,7 @@ def incr_refresh_orders_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     slug = re.sub(
         r"[^0-9a-zA-Z]+", "_", os.path.abspath(sf_dir)
     ).strip("_").lower()
-    # PID-scoped path (ADVICE r03): two concurrent driver/bench processes
+    # PID-scoped path: two concurrent driver/bench processes
     # against the same dataset get disjoint stores instead of clobbering
     # each other's meta/layers mid-refresh; within one process the path is
     # stable and initialize() below overwrites it (idempotent re-runs).
@@ -686,8 +686,9 @@ def streaming_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
     tmp = tempfile.mkdtemp(prefix="stream_refresh_orders_")
-    # the final state's DataFrame reads these files lazily — removable only
-    # once the caller has collected, i.e. at process exit (ADVICE r03 leak)
+    # the final state's DataFrame reads these files lazily, so they can go
+    # only once the caller has collected: remove them at process exit
+    # rather than leak them
     _cleanup_at_exit(tmp, "")
     delta_dir = os.path.join(tmp, "delta")
     # two delta files -> two micro-batches (one refresh each); the '+' and
@@ -749,128 +750,8 @@ def streaming_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rank DELTAS: mass_i(v) = mass_{i-1}(v) + sum over changed in-neighbors of
 # delta(u)/deg(u) — per-iteration work is O(|frontier| x avg-degree), not
 # O(|E|), and the frontier shrinks as the loop approaches the fixpoint.
-
-
-def pagerank_pruned(
-    edges: DataFrame,
-    warm: DataFrame,
-    *,
-    theta: float,
-    iterations: int,
-    damping: float = 0.8,
-    retain: float = 0.2,
-    run_to_empty: bool = False,
-) -> tuple[DataFrame, list[int]]:
-    """Pruned PageRank iterations from a warm state on the updated graph.
-
-    ``warm``: (node, rank) — typically the preserved converged (or bounded)
-    base ranks; nodes absent from it start at 1.0 (the reference's initial
-    value for vertices introduced by the delta). One full-width refresh step
-    absorbs the structural change (every delta-touched edge alters its
-    endpoints' masses — the one-pass refresh of IncrPageRank.java:176-212),
-    then each pruned iteration propagates only the deltas of nodes whose
-    rank moved >= theta (I9). Sub-theta residuals are dropped, exactly like
-    the reference's filter — the loop trades bounded error for a frontier
-    that empties.
-
-    Returns (state, per-iteration frontier sizes). State never visits the
-    driver; the frontier count rides the persisted frontier DataFrame."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.loopdriver import negotiate_partitions
-
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(edges)
-    # adjacency + out-degree in one exchange (degree window rides the same
-    # src hash distribution — see pagerank())
-    from pyspark.sql.window import Window
-
-    static = (
-        edges.repartition(n, "src")
-        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n, "node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    warm_full = nodes.join(warm, "node", "left").select(
-        "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
-    )
-    # full-width refresh step (structural deltas reach every affected mass)
-    m0 = (
-        static.join(warm_full, static.src == warm_full.node)
-        .select("dst", (F.col("rank") / F.col("deg")).alias("contrib"))
-        .groupBy("dst")
-        .agg(F.sum("contrib").alias("mass"))
-    )
-    state = (
-        nodes.join(m0, nodes.node == m0.dst, "left")
-        .join(warm_full.withColumnRenamed("rank", "_warm"), "node")
-        .select(
-            "node",
-            F.coalesce("mass", F.lit(0.0)).alias("mass"),
-            (
-                F.lit(retain)
-                + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-            ).alias("rank"),
-            (
-                F.lit(retain)
-                + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-                - F.col("_warm")
-            ).alias("delta"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    state.count()
-    frontier_sizes: list[int] = []
-    for _i in range(1, iterations + 1):
-        # I9 propagation filter: same contract as changed_groups(), applied
-        # per-iteration inside the loop
-        frontier = state.where(F.abs("delta") >= theta).select(
-            "node", "delta"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        frontier_sizes.append(frontier.count())
-        if run_to_empty and frontier_sizes[-1] == 0:
-            # I4 termination, reference-style: an empty frontier IS the
-            # convergence signal (every remaining delta < theta) — no
-            # separate distance job needed
-            frontier.unpersist()
-            break
-        prop = (
-            static.join(frontier, static.src == frontier.node)
-            .select("dst", (F.col("delta") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("corr"))
-        )
-        new_state = (
-            state.join(prop, state.node == prop.dst, "left")
-            .select(
-                "node",
-                (F.col("mass") + F.coalesce("corr", F.lit(0.0))).alias("mass"),
-                (
-                    F.lit(retain)
-                    + F.lit(damping)
-                    * (F.col("mass") + F.coalesce("corr", F.lit(0.0)))
-                ).alias("rank"),
-                (F.lit(damping) * F.coalesce("corr", F.lit(0.0))).alias(
-                    "delta"
-                ),
-            )
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        new_state.count()
-        state.unpersist()
-        frontier.unpersist()
-        state = new_state
-    static.unpersist()
-    edges.unpersist()
-    nodes.unpersist()
-    return state, frontier_sizes
+# ``pagerank(prune_below=theta)`` runs it: round 1 is the full refresh step
+# from the warm ranks, every later round one pruned iteration.
 
 
 _PRUNED_THETA = 0.01
@@ -966,10 +847,13 @@ def incr_pagerank_pruned4(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, delta = _pagerank_delta_edges(spark, sf_dir)
     warm = pagerank(base, max_iterations=_PRUNED_WARM_ITERS)
     updated = apply_edge_delta(base, delta)
-    state, _sizes = pagerank_pruned(
-        updated, warm.state, theta=_PRUNED_THETA, iterations=_PRUNED_ITERS
+    res = pagerank(
+        updated,
+        init_state=warm.state,
+        prune_below=_PRUNED_THETA,
+        max_iterations=_PRUNED_ITERS + 1,
     )
-    return state.select("node", F.round("rank", 6).alias("rank"))
+    return res.state.select("node", F.round("rank", 6).alias("rank"))
 
 
 def _patch_pruned_oracle() -> None:
@@ -992,8 +876,8 @@ _patch_pruned_oracle()
 def _dataset_fingerprint(sf_dir: str, table: str) -> str:
     """Content fingerprint of a dataset table: md5 over the sorted
     (name, size, mtime_ns) of its parquet files. Keys cross-run snapshot
-    caches so a REGENERATED dataset at the same path invalidates them
-    (ADVICE r03: a path-only key silently warm-starts from stale state)."""
+    caches so a REGENERATED dataset at the same path invalidates them (a
+    path-only key would silently warm-start from stale state)."""
     import hashlib
 
     root = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
@@ -1041,8 +925,8 @@ def _converged_base_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Write to a PID-unique staging dir, then atomically rename into
         # place: two concurrent processes racing on a cold cache each write
         # their own staging dir, one rename wins, and no reader ever sees a
-        # half-written snapshot (the shared-path overwrite race ADVICE r03
-        # flagged for the preserve store applies here too).
+        # half-written snapshot (the preserve store's shared-path overwrite
+        # race applies here too).
         tmp = f"{path}.tmp.{os.getpid()}"
         converged.state.select("node", "rank").write.mode("overwrite").parquet(
             tmp
@@ -1209,17 +1093,15 @@ WHERE a.rnd = COALESCE(ps.rnd, {pruned_rounds + 1}) - 1"""
     "is too short.",
 )
 def incr_pagerank_reconverge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .iterative import pagerank
+
     base, delta = _pagerank_delta_edges(spark, sf_dir)
     converged_state = _converged_base_ranks(spark, sf_dir)
     updated = apply_edge_delta(base, delta)
-    state, _sizes = pagerank_pruned(
-        updated,
-        converged_state,
-        theta=1e-3,
-        iterations=60,
-        run_to_empty=True,
+    res = pagerank(
+        updated, init_state=converged_state, prune_below=1e-3, max_iterations=61
     )
-    return state.select("node", F.round("rank", 6).alias("rank"))
+    return res.state.select("node", F.round("rank", 6).alias("rank"))
 
 
 # ---------------------------------------------------------------------------

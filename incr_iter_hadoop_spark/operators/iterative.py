@@ -15,7 +15,7 @@ over DataFrames:
 Oracle strategy: the *bounded* variants run a fixed iteration count that a
 DuckDB CTE chain reproduces exactly; the *converged* variants exercise the
 reference's distance-threshold termination (JobTracker.java:5586-5595) and
-since round 5 ALSO carry exact DuckDB oracles — the CTE unrolls past the
+also carry exact DuckDB oracles — the CTE unrolls past the
 worst-case round count, selects the stop round by the loop's own
 termination rule in SQL, and poisons the result on insufficient unroll
 (see ``pagerank_converged`` / ``kmeans_converged`` registrations) — plus
@@ -61,6 +61,7 @@ def pagerank(
     checkpoint_interval: int | None = None,
     num_partitions: int | None = None,
     init_state: DataFrame | None = None,
+    prune_below: float | None = None,
     observe_counts: bool = False,
 ) -> IterationResult:
     """Reference-semantics PageRank: rank₀=1.0; rankᵢ₊₁(v) = retain +
@@ -86,13 +87,28 @@ def pagerank(
     IterativeReducer.java:24-32, summed master-side like
     JobTracker.java:5586-5595). In converged mode the loop invariants are
     built by the loop's first action, the checkpoint of the initial state.
+
+    ``prune_below`` θ: the change-propagation-pruned incremental loop (I9,
+    the reference's filter threshold, ReduceTask.java:3399-3428). Round 1
+    is one full step from the initial (typically warm) ranks, which
+    absorbs a structural delta; every later round propagates only the rank
+    deltas of nodes that moved by at least θ. PageRank's aggregate is
+    linear, so mass += Σ delta/deg over the frontier, rank = retain +
+    damping·mass and delta = damping·Σ: per-round work tracks the frontier,
+    not |E|, and sub-θ residuals are dropped like the reference drops them.
+    The observed distance is the frontier size, the count of nodes with
+    |delta| ≥ θ in the new state; the loop stops at the first empty
+    frontier, which would propagate nothing, or at ``max_iterations``.
+    Mutually exclusive with ``threshold``.
     """
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
+    if threshold is not None and prune_below is not None:
+        raise ValueError("pass threshold OR prune_below, not both")
     from pyspark.sql.window import Window
 
     spark = edges.sparkSession
-    converged_mode = threshold is not None
+    converged_mode = threshold is not None or prune_below is not None
     # the edges are cached only when they are counted, so that static is
     # built from the cache instead of recomputing the caller's pipeline
     edge_cache = static = nodes = None
@@ -186,21 +202,56 @@ def pagerank(
                 (new_rank - F.col("rank")).alias("delta"),
             )
 
-            def step_observed(state: DataFrame, i: int) -> DataFrame:
+            def full_step(state: DataFrame, cols: tuple) -> DataFrame:
                 # the state invariantly holds every node, so joining it
                 # instead of `nodes` keeps the previous rank on the row —
                 # the delta costs no extra join or shuffle. The state is
                 # referenced twice; iterate()'s observed path truncates
                 # lineage every round to keep the plan linear.
                 contribs = _mass(static_hinted, state).hint("shuffle_hash")
-                return state.join(contribs, node_is_dst, "left").select(*out)
+                return state.join(contribs, node_is_dst, "left").select(*cols)
 
+            def step_observed(state: DataFrame, i: int) -> DataFrame:
+                return full_step(state, out)
+
+            step, distance = step_observed, F.sum(F.abs(F.col("delta")))
+            if prune_below is not None:
+                refresh_out = (*out, F.coalesce("mass", F.lit(0.0)).alias("mass"))
+                corr = F.coalesce("corr", F.lit(0.0))
+                mass_after = F.col("mass") + corr
+                pruned_out = (
+                    "node",
+                    mass_after.alias("mass"),
+                    (F.lit(retain) + F.lit(damping) * mass_after).alias("rank"),
+                    (F.lit(damping) * corr).alias("delta"),
+                )
+                in_frontier = F.abs(F.col("delta")) >= prune_below
+
+                def step_pruned(state: DataFrame, i: int) -> DataFrame:
+                    if i == 1:
+                        # the full refresh step: every edge the delta
+                        # touched alters its endpoints' masses
+                        return full_step(state, refresh_out)
+                    # the frontier keeps the state's hash(node, n), so it
+                    # joins static in place; hashing the frontier, not the
+                    # adjacency, makes the build side shrink with it
+                    frontier = state.where(in_frontier).hint("shuffle_hash")
+                    props = (
+                        static.join(frontier, src_is_node)
+                        .select("dst", (F.col("delta") / F.col("deg")).alias("c"))
+                        .groupBy("dst")
+                        .agg(F.sum("c").alias("corr"))
+                        .hint("shuffle_hash")
+                    )
+                    return state.join(props, node_is_dst, "left").select(*pruned_out)
+
+                step, distance = step_pruned, F.count_if(in_frontier)
             result = iterate(
                 state0.withColumn("delta", F.lit(0.0)),
-                step_observed,
+                step,
                 max_iterations=max_iterations,
-                observed_distance=F.sum(F.abs(F.col("delta"))),
-                threshold=threshold,
+                observed_distance=distance,
+                threshold=threshold if prune_below is None else 0.0,
                 observe_counts=observe_counts,
             )
         else:

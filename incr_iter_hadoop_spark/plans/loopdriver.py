@@ -13,18 +13,18 @@ lines of driver-side control flow:
   once and persisted by the caller; Spark's block locations give the
   locality the reference's custom scheduler chased;
 - each round is a declarative DataFrame transformation of the state;
-- a converged loop whose distance is an aggregate over the new state
-  (``observed_distance``, the ``IterativeReducer.distance`` contract,
-  IterativeReducer.java:24-32) runs each round as ONE Spark job: an eager
-  ``localCheckpoint`` of the new state computes it, stores it, truncates
-  its lineage and fills the round's ``observe()`` metrics (distance, and
-  record count on request) in the same action. The loop is planned
-  without AQE and with ``spark.sql.shuffle.partitions`` equal to the
-  state's partition count, so the state keeps its hash partitioning from
-  round to round: a join against a static side hash-partitioned the same
-  way needs no exchange, and only the step's own aggregation shuffles;
-- the fixed-iteration and ``distance``-callable loops keep the session's
-  planning: persisted states, and a lazy ``localCheckpoint`` every
+- two modes. A *converged* loop, whose distance is an aggregate over the
+  new state (``observed_distance``, the ``IterativeReducer.distance``
+  contract, IterativeReducer.java:24-32), runs each round as ONE Spark
+  job: an eager ``localCheckpoint`` of the new state computes it, stores
+  it, truncates its lineage and fills the round's ``observe()`` metrics
+  (distance, and record count on request) in the same action. It is
+  planned without AQE and with ``spark.sql.shuffle.partitions`` equal to
+  the state's partition count, so the state keeps its hash partitioning
+  from round to round: a join against a static side hash-partitioned the
+  same way needs no exchange, and only the step's own aggregation
+  shuffles. A *fixed-iteration* loop keeps the session's planning:
+  persisted states, and a lazy ``localCheckpoint`` every
   ``checkpoint_interval`` rounds to bound the plan depth, which otherwise
   grows per round and overwhelms the optimizer — the analogue of the
   reference's snapshot interval.
@@ -117,7 +117,6 @@ def iterate(
     step: Callable[[DataFrame, int], DataFrame],
     *,
     max_iterations: int = 50,
-    distance: Callable[[DataFrame, DataFrame], float] | None = None,
     observed_distance: Column | None = None,
     threshold: float = 0.0,
     checkpoint_interval: int = 5,
@@ -144,12 +143,10 @@ def iterate(
     serialized per process: another thread's scoped operation waits for
     the loop to finish.
 
-    ``distance(prev, curr) -> float``: the generic form of the same stop
-    rule, one aggregation job per round over both states; mutually
-    exclusive with ``observed_distance``. With neither, runs exactly
-    ``max_iterations`` steps (the fixed-iteration mode,
-    JobConf.java:494-500), materializing every ``checkpoint_interval``
-    rounds and at the end. Both modes plan under the session's confs.
+    Without ``observed_distance``, runs exactly ``max_iterations`` steps
+    (the fixed-iteration mode, JobConf.java:494-500), materializing every
+    ``checkpoint_interval`` rounds and at the end, planned under the
+    session's confs.
 
     ``observe_counts``: attach a per-round record count — the analogue of
     the reference's per-iteration record stats reported to the master
@@ -158,8 +155,6 @@ def iterate(
     """
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
-    if distance is not None and observed_distance is not None:
-        raise ValueError("pass distance OR observed_distance, not both")
     if observed_distance is not None:
         return _iterate_observed(
             state,
@@ -172,12 +167,9 @@ def iterate(
         )
     state = state.persist(storage_level)
     state.count()  # materialize so each iteration starts from computed state
-    distances: list[float] = []
     round_s: list[float] = []
     observations: list[Observation] = []
     pending_unpersist: list[DataFrame] = []
-    converged = False
-    i = 0
     for i in range(1, max_iterations + 1):
         t0 = time.perf_counter()
         new_state = step(state, i)
@@ -194,44 +186,29 @@ def iterate(
             new_state = new_state.observe(obs, F.count(F.lit(1)).alias("records"))
             observations.append(obs)
         new_state = new_state.persist(storage_level)
-        if distance is not None:
-            # the distance aggregation is the materializing action — the
-            # persisted new_state is computed (and cached) by this one job,
-            # so each iteration runs a single Spark job, not two
-            d = distance(state, new_state)
-            distances.append(d)
-            state.unpersist()
-            state = new_state
-            round_s.append(time.perf_counter() - t0)
-            if d <= threshold:
-                converged = True
-                break
-        else:
-            # fixed-iteration mode: materialize at the checkpoint cadence and
-            # at the end, not every iteration — persist() markers make a
-            # multiply-referenced state compute once within the one job that
-            # eventually runs, so the intermediate counts were pure job
-            # overhead; the interval-count still bounds the optimizer's plan
-            # depth (the lazy localCheckpoint above truncates when it
-            # materializes). Intermediate states must KEEP their persist
-            # markers until that job runs: unpersisting an unmaterialized
-            # state removes the marker, and a step that references state
-            # twice (e.g. SSSP's full-outer join) would then double the
-            # plan per un-checkpointed iteration. Defer the unpersist to
-            # after the next materialization.
-            pending_unpersist.append(state)
-            state = new_state
-            if i % checkpoint_interval == 0 or i == max_iterations:
-                new_state.count()
-                for old in pending_unpersist:
-                    old.unpersist()
-                pending_unpersist.clear()
-            round_s.append(time.perf_counter() - t0)
+        # materialize at the checkpoint cadence and at the end, not every
+        # iteration — persist() markers make a multiply-referenced state
+        # compute once within the one job that eventually runs, so
+        # intermediate counts would be pure job overhead; the interval-count
+        # still bounds the optimizer's plan depth (the lazy localCheckpoint
+        # above truncates when it materializes). Intermediate states must
+        # KEEP their persist markers until that job runs: unpersisting an
+        # unmaterialized state removes the marker, and a step that references
+        # state twice (e.g. SSSP's full-outer join) would then double the
+        # plan per un-checkpointed iteration. Defer the unpersist to after
+        # the next materialization.
+        pending_unpersist.append(state)
+        state = new_state
+        if i % checkpoint_interval == 0 or i == max_iterations:
+            new_state.count()
+            for old in pending_unpersist:
+                old.unpersist()
+            pending_unpersist.clear()
+        round_s.append(time.perf_counter() - t0)
     return IterationResult(
         state=state,
         iterations=i,
-        converged=converged,
-        distances=distances,
+        converged=False,
         record_counts=[int(obs.get["records"]) for obs in observations],
         round_s=round_s,
     )

@@ -454,18 +454,6 @@ def test_iterate_observe_counts(spark):
     res = iterate(state0, step, max_iterations=3, observe_counts=True)
     assert res.record_counts == [100, 100, 100]
 
-    # and with a distance-terminated loop — the distance callable is the
-    # materializing action per the iterate() contract, so it must touch curr
-    res2 = iterate(
-        state0,
-        step,
-        max_iterations=5,
-        distance=lambda p, c: float(c.count()),
-        threshold=-1.0,
-        observe_counts=True,
-    )
-    assert res2.record_counts == [100] * res2.iterations
-
 
 def test_one2one_join_strict_validation(spark):
     """The reference's ONE2ONE merge join errors on key mismatch

@@ -55,8 +55,8 @@ def _assert_job_budget(spark, group):
     prior = _prior_ranks(spark)
     # budget: 1 job per round plus the setup. A warm start counts nothing,
     # so its state0 checkpoint is the only setup job; a cold start adds the
-    # edge count. The old distance-callable path paid an extra full-outer
-    # join distance job per round and would blow these bounds.
+    # edge count. A separate distance job per round (a prev⋈curr
+    # full-outer join) would blow these bounds.
     cases = (
         ("cold_cached", cached, None, 2),
         ("cold_delta", delta_edges, None, 2),
@@ -107,8 +107,65 @@ def test_converged_pagerank_job_budget_under_session_defaults(spark):
     _assert_job_budget(spark, "pr_jobcount_defaults")
 
 
+@pytest.mark.parametrize(
+    "confs",
+    [
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+        {},  # the session defaults
+    ],
+    ids=["jobs_are_actions", "session_defaults"],
+)
+def test_warm_pruned_pagerank_job_budget(spark, confs):
+    # the pruned loop runs on iterate()'s observed path too: one job per
+    # round plus the state0 checkpoint, its distance the frontier size
+    edges = _delta_edges(spark)
+    prior = _prior_ranks(spark)
+    prior.count()
+    sc = spark.sparkContext
+    group = f"pruned_jobcount_{len(confs)}"
+    with scoped_conf(spark, confs):
+        sc.setJobGroup(group, "pruned pagerank job budget")
+        try:
+            res = pagerank(edges, init_state=prior, prune_below=1e-3, max_iterations=60)
+        finally:
+            sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    iters = res.iterations
+    assert res.converged and iters >= 5, iters
+    assert iters <= jobs <= iters + 1, f"{jobs} jobs, {iters} rounds"
+    assert res.distances[-1] == 0 and all(d > 0 for d in res.distances[:-1])
+
+
 def _ranks(res):
     return {r["node"]: r["rank"] for r in res.state.select("node", "rank").collect()}
+
+
+def test_pruned_pagerank_stops_at_the_first_empty_frontier(spark):
+    # an empty frontier propagates nothing, so a run that stops there
+    # returns the ranks of a run given more rounds, and of a loop that
+    # keeps going past it for a fixed number of rounds
+    edges = _delta_edges(spark)
+    prior = _prior_ranks(spark)
+    short = pagerank(edges, init_state=prior, prune_below=1e-3, max_iterations=60)
+    assert short.converged and short.iterations < 60
+    longer = pagerank(edges, init_state=prior, prune_below=1e-3, max_iterations=90)
+    assert longer.iterations == short.iterations
+    assert _ranks(longer) == _ranks(short)
+    warm = {r["node"]: r["rank"] for r in prior.collect()}
+    sizes, fixed = _pruned_rounds(_delta_rows(), warm, 1e-3, 90)
+    assert short.distances == [float(n) for n in sizes[: short.iterations]]
+    assert all(n == 0 for n in sizes[short.iterations:])
+    got = _ranks(short)
+    assert got.keys() == fixed.keys()
+    assert all(abs(got[v] - fixed[v]) < 1e-12 for v in fixed)
+
+
+def test_pruned_pagerank_rejects_a_threshold(spark):
+    with pytest.raises(ValueError, match="prune_below"):
+        pagerank(_edges(spark), threshold=1e-4, prune_below=1e-3)
 
 
 def test_warm_pagerank_inherits_the_prior_partitioning(spark):
@@ -137,30 +194,76 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
     from incr_iter_hadoop_spark.operators import iterative
 
     jsc = spark.sparkContext._jsc
+
+    def cached_ids():
+        # by id, not by count: the ContextCleaner may drop the unreferenced
+        # round checkpoints of earlier loops at any time
+        return set(jsc.getPersistentRDDs().keySet())
+
     edges = _delta_edges(spark)
     prior = _prior_ranks(spark)
-    before = jsc.getPersistentRDDs().size()
+    before = cached_ids()
     with pytest.raises(ValueError, match="max_iterations"):
         pagerank(edges, max_iterations=0, threshold=1e-4)
-    assert jsc.getPersistentRDDs().size() == before
+    assert not cached_ids() - before
 
     inside = []
 
     def failing_iterate(state, step, **kwargs):
         state.count()  # materializes every cache the setup made
-        inside.append(jsc.getPersistentRDDs().size())
+        inside.append(cached_ids())
         raise RuntimeError("loop failed")
 
     monkeypatch.setattr(iterative, "iterate", failing_iterate)
     for kwargs in (
         {"threshold": 1e-4},  # cold: edge cache, static, nodes
         {"threshold": 1e-4, "init_state": prior},  # warm: static, nodes
+        {"prune_below": 1e-3, "init_state": prior},  # warm pruned: the same
         {},  # bounded
     ):
+        before = cached_ids()
         with pytest.raises(RuntimeError, match="loop failed"):
             pagerank(edges, max_iterations=5, **kwargs)
-        assert inside[-1] > before, kwargs
-        assert jsc.getPersistentRDDs().size() == before, kwargs
+        assert inside[-1] - before, kwargs
+        assert not cached_ids() - before, kwargs
+
+
+def _delta_rows():
+    """The edge list of ``_delta_edges``, in Python."""
+    removed = {(s, d) for s, d, op in _DELTA_ROWS if op == "-"}
+    return [e for e in _EDGE_ROWS if e not in removed] + [
+        (s, d) for s, d, op in _DELTA_ROWS if op == "+"
+    ]
+
+
+def _pruned_rounds(rows, warm, theta, rounds, damping=0.8, retain=0.2):
+    """A θ-pruned PageRank that runs a fixed number of rounds, past an empty
+    frontier: one full step from ``warm`` (1.0 for new nodes), then rounds
+    that propagate only deltas ≥ θ. Returns each round's frontier size in
+    the new state, and the final ranks."""
+    nodes = {v for e in rows for v in e[:2]}
+    deg = {}
+    for s, _d in rows:
+        deg[s] = deg.get(s, 0) + 1
+    rank = {v: warm.get(v, 1.0) for v in nodes}
+    mass = dict.fromkeys(nodes, 0.0)
+    for s, d in rows:
+        mass[d] += rank[s] / deg[s]
+    new = {v: retain + damping * mass[v] for v in nodes}
+    delta = {v: new[v] - rank[v] for v in nodes}
+    rank, sizes = new, []
+    for _ in range(rounds):
+        frontier = {v for v in nodes if abs(delta[v]) >= theta}
+        sizes.append(len(frontier))
+        corr = dict.fromkeys(nodes, 0.0)
+        for s, d in rows:
+            if s in frontier:
+                corr[d] += delta[s] / deg[s]
+        for v in nodes:
+            mass[v] += corr[v]
+            rank[v] = retain + damping * mass[v]
+            delta[v] = damping * corr[v]
+    return sizes, rank
 
 
 def _fixpoint(rows, damping=0.8, retain=0.2):
@@ -184,11 +287,7 @@ def test_warm_pagerank_reaches_the_delta_graph_fixpoint(spark):
     # a round that moves the ranks by <= θ in L1 leaves them within
     # θ·c/(1−c) of the fixpoint, c = damping = the L1 contraction rate
     theta, c = 1e-4, 0.8
-    removed = {(s, d) for s, d, op in _DELTA_ROWS if op == "-"}
-    rows = [e for e in _EDGE_ROWS if e not in removed] + [
-        (s, d) for s, d, op in _DELTA_ROWS if op == "+"
-    ]
-    exact = _fixpoint(rows)
+    exact = _fixpoint(_delta_rows())
     warm = pagerank(
         _delta_edges(spark), max_iterations=60, threshold=theta,
         init_state=_prior_ranks(spark),

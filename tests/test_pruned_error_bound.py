@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from incr_iter_hadoop_spark.operators.incremental import (
     _pagerank_delta_edges,
     apply_edge_delta,
-    pagerank_pruned,
 )
 from incr_iter_hadoop_spark.operators.iterative import pagerank
 
@@ -45,6 +44,16 @@ def _setup(spark, sf_dir):
     return updated, warm
 
 
+def _pruned(updated, warm, theta, iterations):
+    """The state after the refresh step and ``iterations`` pruned rounds,
+    and whether the loop stopped early at an empty frontier."""
+    res = pagerank(
+        updated, init_state=warm, prune_below=theta,
+        max_iterations=iterations + 1,
+    )
+    return res.state, res.iterations < iterations + 1
+
+
 def _l1(a, b):
     j = (
         a.select("node", F.col("rank").alias("ra"))
@@ -61,14 +70,18 @@ def _l1(a, b):
 @pytest.mark.parametrize("theta", [0.01, 0.05])
 def test_pruned_error_within_dropped_mass_bound(spark, sf_dir, theta):
     updated, warm = _setup(spark, sf_dir)
-    exact, _ = pagerank_pruned(updated, warm, theta=0.0, iterations=K)
-    pruned, _ = pagerank_pruned(updated, warm, theta=theta, iterations=K)
+    exact, _ = _pruned(updated, warm, 0.0, K)
+    pruned, _ = _pruned(updated, warm, theta, K)
     # dropped mass at iteration i+1 = Σ|delta| below θ in the state after i
     # pruned iterations (iteration counts are deterministic, so re-running
-    # the loop at each prefix length reproduces the trajectory exactly)
+    # the loop at each prefix length reproduces the trajectory exactly). A
+    # loop that stopped early at an empty frontier would have carried
+    # all-zero deltas into round i: nothing dropped there.
     dropped_total = 0.0
     for i in range(K):
-        s_i, _ = pagerank_pruned(updated, warm, theta=theta, iterations=i)
+        s_i, stopped = _pruned(updated, warm, theta, i)
+        if stopped:
+            continue
         row = (
             s_i.where(F.abs("delta") < theta)
             .agg(F.sum(F.abs("delta")).alias("m"))
@@ -92,6 +105,6 @@ def test_theta_zero_is_exact_full_pagerank(spark, sf_dir):
     # θ=0 pruned propagation is algebraically the plain warm-started loop:
     # refresh step + K full iterations == K+1 bounded iterations from warm
     updated, warm = _setup(spark, sf_dir)
-    exact, _ = pagerank_pruned(updated, warm, theta=0.0, iterations=K)
+    exact, _ = _pruned(updated, warm, 0.0, K)
     twin = pagerank(updated, max_iterations=K + 1, init_state=warm)
     assert _l1(exact, twin.state) < 1e-9

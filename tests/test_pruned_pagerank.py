@@ -19,7 +19,6 @@ from incr_iter_hadoop_spark.operators.incremental import (
     _PRUNED_WARM_ITERS,
     _pagerank_delta_edges,
     apply_edge_delta,
-    pagerank_pruned,
 )
 from incr_iter_hadoop_spark.operators.iterative import pagerank
 
@@ -28,14 +27,19 @@ def test_frontier_strictly_shrinks(spark, sf_dir):
     base, delta = _pagerank_delta_edges(spark, sf_dir)
     warm = pagerank(base, max_iterations=_PRUNED_WARM_ITERS)
     updated = apply_edge_delta(base, delta)
-    _state, sizes = pagerank_pruned(
-        updated, warm.state, theta=_PRUNED_THETA, iterations=_PRUNED_ITERS
+    res = pagerank(
+        updated,
+        init_state=warm.state,
+        prune_below=_PRUNED_THETA,
+        max_iterations=_PRUNED_ITERS + 1,
     )
+    # the frontier of the refresh step's state, then of each pruned round's
+    sizes = res.distances[:_PRUNED_ITERS]
     assert len(sizes) == _PRUNED_ITERS
     assert all(a > b for a, b in zip(sizes, sizes[1:])), (
         f"frontier sizes must strictly decrease, got {sizes}"
     )
-    n_nodes = _state.count()
+    n_nodes = res.state.count()
     # pruning is real: every frontier is a strict subset of the node set
     assert sizes[0] < n_nodes
 
@@ -47,13 +51,13 @@ def test_theta_zero_equals_full_width_iterations(spark, sf_dir):
     base, delta = _pagerank_delta_edges(spark, sf_dir)
     warm = pagerank(base, max_iterations=3)
     updated = apply_edge_delta(base, delta)
-    pruned_state, _ = pagerank_pruned(
-        updated, warm.state, theta=0.0, iterations=2
+    pruned = pagerank(
+        updated, init_state=warm.state, prune_below=0.0, max_iterations=3
     )
     # full-width: 3 warm-started iterations on the updated graph == the
     # refresh step + 2 pruned iterations
     full = pagerank(updated, max_iterations=3, init_state=warm.state)
-    p = pruned_state.select("node", F.round("rank", 6).alias("rank"))
+    p = pruned.state.select("node", F.round("rank", 6).alias("rank"))
     f = full.state.select("node", F.round("rank", 6).alias("rank"))
     diffs = (
         p.alias("p")

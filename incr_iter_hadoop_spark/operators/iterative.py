@@ -25,19 +25,21 @@ Scale notes: the static side (edges/matrix) is repartitioned by join key and
 persisted once — iterations reuse the exchange; only the transposed
 aggregation (groupBy dst / row) shuffles per step. State never visits the
 driver except the convergence scalar; k-means centers are O(k·dims) and
-broadcast, mirroring GlobalUniqValueWritable.
+replicated to every task, mirroring GlobalUniqValueWritable.
 """
 
 from __future__ import annotations
 
 import contextlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from ..catalog import load_table, spread_scan
-from ..functions.vector import cosine
+from ..functions.vector import cosine, l2_distance
 from ..plans.loopdriver import (
     IterationResult,
     clamp_partitions,
@@ -105,8 +107,6 @@ def pagerank(
         raise ValueError("max_iterations must be >= 1")
     if threshold is not None and prune_below is not None:
         raise ValueError("pass threshold OR prune_below, not both")
-    from pyspark.sql.window import Window
-
     spark = edges.sparkSession
     converged_mode = threshold is not None or prune_below is not None
     # the edges are cached only when they are counted, so that static is
@@ -1001,7 +1001,7 @@ def spmv_bounded2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# k-means (ONE2ALL: small global state broadcast per iteration)
+# k-means (ONE2ALL: small global state replicated to every task per round)
 
 
 def kmeans(
@@ -1014,82 +1014,109 @@ def kmeans(
     vec_col: str = "vec",
 ) -> tuple[DataFrame, int]:
     """Lloyd iterations with cosine assignment (IterKmeans.java:295-310) and
-    Euclidean center-movement convergence (:460-483). Centers are the
-    ONE2ALL global value: O(k·dims), broadcast-joined to every point; the
-    heavy recompute (posexplode → per-dimension mean) stays distributed.
+    Euclidean center-movement convergence (:460-483), run by ``lloyd``.
 
-    Returns (assignment DataFrame ``id, cluster``, iterations run).
-    Initial centers = first k points by id (deterministic)."""
-    spark = points.sparkSession
+    Returns (assignment DataFrame ``id, cluster`` under the final centers,
+    iterations run). Initial centers = first k points by id
+    (deterministic)."""
     pts = points.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     centers = (
         pts.orderBy("id")
         .limit(k)
-        .select((F.row_number().over(_id_window()) - 1).alias("cid"), "vec")
-        .select("cid", F.col("vec").alias("cvec"))
+        .select(
+            (F.row_number().over(Window.orderBy("id")) - 1).alias("cid"),
+            F.col("vec").alias("cvec"),
+        )
     )
-    iterations = 0
-    for iterations in range(1, max_iterations + 1):
-        assigned = _assign(pts, centers)
-        new_centers = (
-            assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
+    res = lloyd(pts, centers, max_iterations=max_iterations, tol=tol)
+    return _assigner()(pts, res.state).select("id", "cluster"), res.iterations
+
+
+def lloyd(
+    points: DataFrame,
+    centers: DataFrame,
+    *,
+    max_iterations: int,
+    tol: float = float("-inf"),
+) -> IterationResult:
+    """Lloyd rounds on iterate() from ``centers`` (cid, cvec) over ``points``
+    (id, vec array<double>): stop once no center moves farther than ``tol``
+    (Euclidean, IterKmeans.java:460-483), else after ``max_iterations``;
+    the default ``tol`` never stops early.
+
+    The state is the k centers, the ONE2ALL global value. One job per round
+    assigns every point to its nearest center (IterKmeans.java:295-310),
+    recomputes each center as the per-dimension mean (:413-458) and its
+    movement ``mov`` against the old center, whose maximum is the observed
+    distance. Empty clusters drop out, like a SQL mean over an empty group."""
+    # a cache planned without AQE is filled inside the first job that
+    # reads it, the state0 checkpoint; an adaptive one runs jobs of its own
+    with scoped_conf(points.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
+        points = points.persist(StorageLevel.MEMORY_AND_DISK)
+    # the round-invariant Columns, built once: a higher-order expression
+    # costs the driver tens of Py4J round trips
+    assign = _assigner()
+    exploded = F.posexplode("vec").alias("pos", "val")
+    mean = F.avg("val").alias("m")
+    as_vector = F.transform(
+        F.array_sort(F.collect_list(F.struct("pos", "m"))),
+        lambda s: s.getField("m"),
+    ).alias("cvec")
+    moved = l2_distance(F.col("cvec"), F.col("old")).alias("mov")
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        old = state.select("cid", "cvec")
+        new = (
+            assign(points, old)
+            .select("cluster", exploded)
             .groupBy("cluster", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("cvec")
-            )
-            .select(F.col("cluster").alias("cid"), "cvec")
+            .agg(mean)
+            .groupBy(F.col("cluster").alias("cid"))
+            .agg(as_vector)
         )
-        # centers are tiny: materialize driver-side to compare movement
-        old = {r["cid"]: r["cvec"] for r in centers.collect()}
-        new = {r["cid"]: r["cvec"] for r in new_centers.collect()}
-        movement = max(
-            (
-                sum((a - b) ** 2 for a, b in zip(old[cid], new[cid])) ** 0.5
-                for cid in new
-                if cid in old
+        # k rows a side; the hint keeps the old centers from being
+        # broadcast, which would be a job of its own
+        prev = old.withColumnRenamed("cvec", "old").hint("shuffle_hash")
+        return new.join(prev, "cid").select("cid", "cvec", moved)
+
+    try:
+        return iterate(
+            centers,
+            step,
+            max_iterations=max_iterations,
+            observed_distance=F.max("mov"),
+            threshold=tol,
+        )
+    finally:
+        points.unpersist()
+
+
+def _assigner() -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """``assign(points, centers)`` → (id, vec, cluster): the nearest center by
+    cosine, ties → smaller center id (mirrored in the oracle SQL). Each task
+    of a cartesian product reads the centers once, as one array in a one-row
+    relation: the points are never shuffled and no broadcast job runs. The
+    Columns are built once per assigner."""
+    as_array = F.collect_list(F.struct("cid", "cvec")).alias("cs")
+    best = F.array_max(
+        F.transform(
+            "cs",
+            lambda c: F.struct(
+                cosine(F.col("vec"), c.getField("cvec")).alias("sim"),
+                (-c.getField("cid")).alias("ncid"),
             ),
-            default=0.0,
         )
-        centers = new_centers.sparkSession.createDataFrame(
-            [(cid, list(map(float, vec))) for cid, vec in sorted(new.items())],
-            "cid int, cvec array<double>",
-        )
-        if movement <= tol:
-            break
-    final = _assign(pts, centers).select("id", "cluster")
-    pts.unpersist()
-    return final, iterations
-
-
-def _id_window():
-    from pyspark.sql.window import Window
-
-    return Window.orderBy("id")
-
-
-def _assign(pts: DataFrame, centers: DataFrame) -> DataFrame:
-    """Nearest center by cosine similarity; ties → smaller center id
-    (deterministic, mirrored in the oracle SQL)."""
-    sims = pts.crossJoin(F.broadcast(centers)).select(
-        "id",
-        "vec",
-        "cid",
-        cosine(F.col("vec"), F.col("cvec")).alias("sim"),
     )
-    best = sims.groupBy("id", "vec").agg(
-        F.max(F.struct(F.col("sim"), (-F.col("cid")).alias("ncid"))).alias("b")
-    )
-    return best.select(
-        "id", "vec", (-F.col("b.ncid")).cast("int").alias("cluster")
-    )
+    cluster = (-best.getField("ncid")).cast("int").alias("cluster")
+
+    def assign(pts: DataFrame, centers: DataFrame) -> DataFrame:
+        cs = centers.agg(as_array).hint("shuffle_replicate_nl")
+        return pts.crossJoin(cs).select("id", "vec", cluster)
+
+    return assign
 
 
 _KM_CENTERS_SQL = """
@@ -1157,36 +1184,6 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("sim"), 6).alias("avg_sim"),
         )
     )
-
-
-def kmeans_lloyd_bounded(
-    points: DataFrame, centers: DataFrame, rounds: int
-) -> DataFrame:
-    """Exactly ``rounds`` Lloyd iterations with the centers kept as a
-    DataFrame end-to-end (no driver round-trip at all — the bounded twin of
-    ``kmeans()``, whose convergence check is the only reason it collects the
-    O(k·dims) centers). Assignment is the ONE2ALL broadcast cosine step
-    (IterKmeans.java:295-310); recompute is the distributed per-dimension
-    mean (IterKmeans.java:413-458). Empty clusters drop out, exactly like a
-    SQL mean over an empty group.
-
-    ``points``: (id, vec array<double>); ``centers``: (cid, cvec)."""
-    for _ in range(rounds):
-        assigned = _assign(points, centers)
-        centers = (
-            assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("cvec")
-            )
-            .select(F.col("cluster").alias("cid"), "cvec")
-        )
-    return centers
 
 
 _KMEANS2_SQL = """
@@ -1267,7 +1264,7 @@ def kmeans_bounded2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("int").alias("cid"),
         F.transform("embedding", lambda x: x.cast("double")).alias("cvec"),
     )
-    final = kmeans_lloyd_bounded(pts, centers0, rounds=2)
+    final = lloyd(pts, centers0, max_iterations=2).state
     return final.select(
         F.col("cid").cast("int").alias("cluster"),
         F.posexplode("cvec").alias("pos", "c"),
@@ -1280,7 +1277,7 @@ def _kmeans_rounds_sql(pts_cte: str, centers_cte: str, rounds: int, pre: str) ->
     """CTE fragment: ``rounds`` Lloyd iterations over point-set CTE
     ``pts_cte`` (id, pos, val exploded) starting from centers CTE
     ``centers_cte`` (cluster, pos, m). Emits CTEs ``{pre}m{rounds}`` as the
-    final centers. Mirrors kmeans_lloyd_bounded exactly (cosine assignment,
+    final centers. Mirrors ``lloyd`` exactly (cosine assignment,
     ties -> smaller cluster id, per-dimension mean recompute)."""
     parts = []
     prev = centers_cte
@@ -1371,13 +1368,13 @@ def incr_kmeans_delta2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select(F.col("id").cast("int").alias("cid"), F.col("vec").alias("cvec"))
     )
-    warm = kmeans_lloyd_bounded(base, centers0, rounds=2)
+    warm = lloyd(base, centers0, max_iterations=2).state
     # I7 point delta: retract every 11th base point, insert the held-out
     # sevenths (add/remove rows keyed by id — the UpdateKmeansData shape)
     updated = base.where(F.col("id") % 11 != 0).unionByName(
         pts_all.where(F.col("id") % 7 == 0)
     )
-    final = kmeans_lloyd_bounded(updated, warm, rounds=2)
+    final = lloyd(updated, warm, max_iterations=2).state
     return final.select(
         F.col("cid").cast("int").alias("cluster"),
         F.posexplode("cvec").alias("pos", "c"),
@@ -1394,7 +1391,7 @@ def _kmeans_converged_sql(max_rounds: int = 15, k: int = 10, tol: float = 1e-4) 
     which mirrors ``kmeans(max_iterations=max_rounds)`` exactly, so the
     oracle is TOTAL (no poison needed: both sides cap identically). The
     final answer is one extra assignment step under the stop round's
-    centers, matching the loop's post-break ``_assign``. Round 16's a-CTE
+    centers, matching the assignment ``kmeans`` returns. Round 16's a-CTE
     exists only for the stop-at-cap case. Tie margins on the fixtures are
     ≥ 1.7e-2 vs tol=1e-4, and both scales land on an exact-0.0 movement
     round, so float noise cannot flip the stop round.
@@ -1520,12 +1517,13 @@ def connected_components(
     diameter) rounds; dedup-pair graphs are near-cliques so 2-4 rounds
     typical.
 
-    Frontier-pruned (exact — the θ=0 case of the I9 change filter): after
-    the first round only nodes whose label DECREASED propagate, so
-    per-round work tracks the shrinking frontier instead of |E|, and an
-    empty frontier is itself the convergence signal (no separate
-    distance job). Scale: the symmetrized edge list is partitioned by src
-    once and reused every round; the frontier side broadcasts while small.
+    Frontier-pruned (exact — the θ=0 case of the I9 change filter), like
+    ``pagerank(prune_below=…)``: the state is (node, comp, chg), and a round
+    propagates only the labels of the frontier ``state.where(chg)``, the
+    nodes whose label DECREASED in the round before (all nodes in round 1).
+    The observed distance is the new frontier's size, so the loop stops at
+    the first empty one; one job per round. The symmetrized edges are
+    partitioned by src once, and the state keeps hash(node, n).
 
     ``init_labels`` (node, comp) warm-starts from a preserved labeling —
     the incremental mode for edge ADDITIONS (SURVEY §3.3 semantics on the
@@ -1536,101 +1534,79 @@ def connected_components(
     rounds instead of O(diameter). Nodes absent from ``init_labels`` start
     at their own id. Edge deletions would need a recompute (a component
     can split)."""
-    # the symmetrize-union references edges twice; persist first so an
-    # expensive upstream (e.g. a near-dup pair pipeline) evaluates once
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(edges)
-    # r13: symmetrize in ONE exchange — repartition by src, dedup within
-    # the src-hash partitions (equal (src, dst) rows are co-located, so
-    # dropDuplicates adds no second exchange); the former
-    # union+distinct+repartition paid two |2E| shuffles. Same fusion for
-    # the node set below: one node-hash exchange, in-partition dedup.
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(n, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    endpoint_nodes = sym.select(F.col("src").alias("node"))
-    all_nodes = (
-        (
-            endpoint_nodes.union(nodes.select("node"))
-            if nodes is not None
-            else endpoint_nodes
-        )
-        .repartition(n, "node")
-        .dropDuplicates(["node"])
-    )
-    if init_labels is not None:
-        labeled = all_nodes.join(init_labels, "node", "left").select(
-            "node", F.coalesce("comp", F.col("node")).alias("comp")
-        ).repartition(n, "node")
-    else:
-        # all_nodes already carries hash(node, n) through the select
-        labeled = all_nodes.select("node", F.col("node").alias("comp"))
-    state = labeled.persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
-    backing = state  # the persisted DF whose blocks this round reads
-    frontier = state  # round 1: every node announces its own label
-    frontier_counts: list[float] = []
-    converged = False
-    i = 0
-    for i in range(1, max_iterations + 1):
-        prop = (
-            sym.join(frontier, sym.src == frontier.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("comp").alias("cand"))
-        )
-        # ONE job per round: merge carries a `chg` flag, the frontier count
-        # rides the materializing count via df.observe (the same fusion
-        # that took converged PageRank to one job/iteration), and state /
-        # frontier are views over the SAME cached `merged` — no separate
-        # frontier checkpoint job. The lazy localCheckpoint truncates
-        # lineage when the count materializes it — each round's plan must
-        # reference only checkpointed blocks, or recomputation chains back
-        # through every earlier round (measured: quadratic blowup,
-        # 4s -> 15s by round 2 at sf0.1).
-        merged = (
-            state.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "comp", F.coalesce("cand", F.col("comp"))
-                ).alias("comp"),
-                # labels only decrease: strict decreases ARE the frontier
-                (
-                    F.coalesce("cand", F.col("comp")) < F.col("comp")
-                ).alias("chg"),
+    spark = edges.sparkSession
+    edge_cache = sym = None
+    try:
+        # the setup plans without AQE, like the loop: its caches are then
+        # filled inside the jobs that first read them (see pagerank)
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            # the symmetrize-union references edges twice: an expensive
+            # upstream (e.g. a near-dup pair pipeline) evaluates once
+            edge_cache = edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+            n = negotiate_partitions(edges)
+            # symmetrize in ONE exchange: repartition by src, then dedup
+            # within the src-hash partitions, which co-locate equal rows.
+            # The node set below does the same by node.
+            flipped = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            sym = (
+                edges.select("src", "dst")
+                .union(flipped)
+                .repartition(n, "src")
+                .dropDuplicates(["src", "dst"])
+                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            .localCheckpoint(eager=False)
+        endpoint_nodes = sym.select(F.col("src").alias("node"))
+        all_nodes = (
+            (
+                endpoint_nodes.union(nodes.select("node"))
+                if nodes is not None
+                else endpoint_nodes
+            )
+            .repartition(n, "node")
+            .dropDuplicates(["node"])
         )
-        obs = Observation()  # anonymous: names must be globally unique
-        merged = merged.observe(
-            obs, F.sum(F.col("chg").cast("long")).alias("n_changed")
+        if init_labels is not None:
+            labeled = all_nodes.join(init_labels, "node", "left").select(
+                "node", F.coalesce("comp", F.col("node")).alias("comp")
+            ).repartition(n, "node")
+        else:
+            # all_nodes already carries hash(node, n) through the select
+            labeled = all_nodes.select("node", F.col("node").alias("comp"))
+        # round 1: every node announces its own label
+        state0 = labeled.withColumn("chg", F.lit(True))
+        cand = F.coalesce("cand", F.col("comp"))
+        out = (
+            "node",
+            F.least("comp", cand).alias("comp"),
+            # labels only decrease: strict decreases ARE the next frontier
+            (cand < F.col("comp")).alias("chg"),
         )
-        # no Dataset-level persist: localCheckpoint already stores the
-        # round's blocks at MEMORY_AND_DISK when the count materializes it;
-        # a persist() on top would hold a second columnar copy of the same
-        # rows (review finding r4)
-        merged.count()
-        n_changed = int(obs.get["n_changed"] or 0)
-        frontier_counts.append(float(n_changed))
-        backing.unpersist()
-        backing = merged
-        state = merged.select("node", "comp")
-        frontier = merged.where("chg").select("node", "comp")
-        if n_changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    edges.unpersist()
-    return IterationResult(
-        state=state,
-        iterations=i,
-        converged=converged,
-        distances=frontier_counts,
-    )
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            # shuffle joins on the shared partitioning: a broadcast would
+            # cost a job of its own every round
+            frontier = state.where("chg").hint("shuffle_hash")
+            prop = (
+                sym.join(frontier, F.col("src") == F.col("node"))
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("comp").alias("cand"))
+                .hint("shuffle_hash")
+            )
+            return state.join(prop, "node", "left").select(*out)
+
+        res = iterate(
+            state0,
+            step,
+            max_iterations=max_iterations,
+            observed_distance=F.count_if("chg"),
+            threshold=0.0,
+        )
+    finally:
+        for cached in (sym, edge_cache):
+            if cached is not None:
+                cached.unpersist()
+    res.state = res.state.select("node", "comp")
+    return res
 
 
 def connected_components_star(
@@ -1776,40 +1752,57 @@ def power_iteration(
     """Dominant-eigenvector power method: x ← A·x / ‖A·x‖∞. The reference's
     graph generator emits a ``power`` workload type (genGraphReduce.java:52-64)
     consumed by the same blocked-SpMV machinery (MatrixVector.java:152-313);
-    normalization is the ONE2ALL global scalar (one tiny collect per
-    iteration, like GlobalUniqValueWritable at JobTracker.java:5604-5655).
+    the ∞-norm is the ONE2ALL global scalar (GlobalUniqValueWritable,
+    JobTracker.java:5604-5655).
 
-    ``matrix``: coordinate form (r, c, v). ``x0``: (i, x). Returns the
-    normalized state and the per-iteration ∞-norms (eigenvalue estimates)."""
-    matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(matrix)
-    static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
-    x = x0.persist(StorageLevel.MEMORY_AND_DISK)
-    x.count()
-    norms: list[float] = []
-    for _ in range(iterations):
-        y = (
-            static.join(x, static.c == x.i)
-            .select("r", (F.col("v") * F.col("x")).alias("px"))
-            .groupBy("r")
-            .agg(F.sum("px").alias("x"))
-            .select(F.col("r").alias("i"), "x")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    ``matrix``: coordinate form (r, c, v). ``x0``: (i, x), used as given.
+    Returns the normalized state and the per-iteration ∞-norms (eigenvalue
+    estimates).
+
+    One job per round on iterate(), whose observed metric is the ∞-norm of
+    the round's product A·x. The state is that product: the next round, and
+    the returned x, divide it by that norm inside the plan."""
+    matrix_cache = static = None
+    try:
+        # planned without AQE, like the loop: the caches are then filled
+        # inside the jobs that first read them (see pagerank)
+        with scoped_conf(matrix.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
+            matrix_cache = matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
+            n = negotiate_partitions(matrix)
+            static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
+        inf_norm = F.max(F.abs(F.col("x")))
+        # iterate() reports the norms after the loop; a round needs the one
+        # before it now, so the step observes it as well
+        seen: list[Observation] = []
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            x = state
+            if seen:
+                x = state.select("i", (F.col("x") / F.lit(seen[-1].get["m"])).alias("x"))
+            seen.append(Observation())
+            # static is hash(c, n) and the state hash(i, n); the hint keeps
+            # a small vector from being broadcast (a job of its own)
+            return (
+                static.join(x.hint("shuffle_hash"), F.col("c") == F.col("i"))
+                .select("r", (F.col("v") * F.col("x")).alias("px"))
+                .groupBy(F.col("r").alias("i"))
+                .agg(F.sum("px").alias("x"))
+                .observe(seen[-1], inf_norm.alias("m"))
+            )
+
+        res = iterate(
+            x0.repartition(n, "i"),
+            step,
+            max_iterations=iterations,
+            observed_distance=inf_norm,
+            threshold=float("-inf"),
         )
-        # global ∞-norm: the only driver round-trip, a single scalar
-        m = float(y.agg(F.max(F.abs(F.col("x")))).collect()[0][0])
-        norms.append(m)
-        # eager localCheckpoint both materializes and truncates lineage —
-        # the plan would otherwise grow one join+agg layer per iteration
-        new_x = y.select("i", (F.col("x") / F.lit(m)).alias("x")).localCheckpoint(
-            eager=True
-        )
-        y.unpersist()
-        x.unpersist()
-        x = new_x
-    static.unpersist()
-    matrix.unpersist()
-    return x, norms
+    finally:
+        for cached in (static, matrix_cache):
+            if cached is not None:
+                cached.unpersist()
+    x = res.state.select("i", (F.col("x") / F.lit(res.distances[-1])).alias("x"))
+    return x, res.distances
 
 
 def _power_sql(n_iter: int) -> str:
@@ -1834,7 +1827,7 @@ x{i} AS (SELECT i, x / mx AS x FROM y{i}, n{i})"""
     oracle=_power_sql(3),
     doc="three ∞-normalized power-method steps on the coordinate matrix "
     "(generator type `power`, genGraphReduce.java:52-64; SpMV join+agg per "
-    "step, global max collected as the ONE2ALL scalar).",
+    "step, global max observed as the ONE2ALL scalar).",
 )
 def power_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _spmv_matrix(spark, sf_dir)

@@ -1,17 +1,20 @@
-"""Per-query profiling harness (r14; the committed successor of r13's
-/tmp harness that did not survive the round's interruption).
+"""Per-query profiling harness.
 
 For each named registered query: wall seconds over N noop-sink runs
-(guide §1.4), plus deterministic structural metrics from the app status
-store — stage count and shuffle-write bytes, stage-id-keyed (the same
+(guide §1.4), plus deterministic structural metrics — the Spark job count
+of each run, counted by job group, and from the app status store the stage
+count and shuffle-write bytes of the first run, stage-id-keyed (the same
 eviction-safe protocol as bench.py's shuffle lines) — and optionally the
 ``explain("formatted")`` plan dumped to a file. Prints ONE JSON line so an
-interleaving driver can subprocess two checkouts alternately (the round's
-A/B discipline: this sandbox's ambient draw-to-draw swing is ±40%, so
-cross-version wall deltas are only meaningful interleaved).
+interleaving driver can subprocess two checkouts alternately (cross-version
+wall deltas on a shared host are only meaningful interleaved).
+
+``--bare`` profiles in a plain ``local[4]`` session with 8 shuffle
+partitions and none of ``session.get_spark``'s confs, the way an outside
+caller runs the registered queries.
 
 Usage:
-  python scripts/profile_queries.py [--repo PATH] [--reps N]
+  python scripts/profile_queries.py [--repo PATH] [--reps N] [--bare]
       [--plans-dir DIR --tag before|after] QUERY [QUERY ...]
 """
 
@@ -31,6 +34,7 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--tag", default="after")
+    ap.add_argument("--bare", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
@@ -49,7 +53,18 @@ def main() -> None:
     benchmod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(benchmod)
 
-    spark = get_spark(app_name="profile")
+    if args.bare:
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.master("local[4]")
+            .config("spark.sql.shuffle.partitions", "8")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+    else:
+        spark = get_spark(app_name="profile")
+    sc = spark.sparkContext
     specs = all_queries()
     # same warm-up protocol as bench.py: JVM + parquet footers
     for t in ("lineitem", "orders", "customer", "documents", "embeddings"):
@@ -58,23 +73,30 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in args.queries:
         fn = specs[name].fn
-        spark.sparkContext.setJobDescription(f"profile: {name}")
         walls: list[float] = []
+        jobs: list[int] = []
         m0 = benchmod._max_stage_id(spark)
         for rep in range(args.reps):
+            group = f"profile:{name}:{rep}"
+            sc.setJobGroup(group, f"profile: {name}")
             t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            try:
+                fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            finally:
+                sc.setJobGroup(None, None)
             walls.append(round(time.perf_counter() - t0, 3))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group) or []))
             if rep == 0:
                 new = {
                     sid: b
                     for sid, b in benchmod._stage_shuffle_writes(spark).items()
                     if sid > m0
                 }
-        spark.sparkContext.setJobDescription(None)
         rec = {
             "wall_median": round(statistics.median(walls), 3),
             "wall_runs": walls,
+            "jobs": jobs[-1],
+            "jobs_runs": jobs,
             "shuffle_mb": round(sum(new.values()) / 1e6, 3),
             "stages": len(new),
         }

@@ -5,7 +5,9 @@ metric riding the iteration's own materializing action — never a separate
 prev⋈curr distance job. A regression doubles the per-iteration job count
 (and re-introduces a full-outer join over the state) on the most expensive
 headline query. Its setup is budgeted too: a warm start counts nothing and
-builds its invariants inside the loop's first checkpoint.
+builds its invariants inside the loop's first checkpoint. k-means,
+connected components and the power method run on the same observed loop,
+with their own job budgets and stop rules checked against Python loops.
 """
 
 from __future__ import annotations
@@ -15,8 +17,12 @@ from pyspark.sql import functions as F
 
 from incr_iter_hadoop_spark.operators.incremental import apply_edge_delta
 from incr_iter_hadoop_spark.operators.iterative import (
+    connected_components,
+    kmeans,
     label_propagation_converged,
+    lloyd,
     pagerank,
+    power_iteration,
     sssp,
 )
 from incr_iter_hadoop_spark.plans.loopdriver import iterate, l1_state_distance
@@ -226,6 +232,19 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
             pagerank(edges, max_iterations=5, **kwargs)
         assert inside[-1] - before, kwargs
         assert not cached_ids() - before, kwargs
+
+    # the other operators on iterate() release theirs the same way
+    x0, matrix = _power_inputs(spark)
+    for label, run in (
+        ("kmeans", lambda: kmeans(_km_points(spark), k=4)),
+        ("connected_components", lambda: connected_components(edges)),
+        ("power_iteration", lambda: power_iteration(matrix, x0, 3)),
+    ):
+        before = cached_ids()
+        with pytest.raises(RuntimeError, match="loop failed"):
+            run()
+        assert inside[-1] - before, label
+        assert not cached_ids() - before, label
 
 
 def _delta_rows():
@@ -485,3 +504,173 @@ def test_lpa_converged_stops_at_the_reference_round(spark):
     assert res.distances == [float(c) for c in rounds]
     got = {r.node: r.label for r in res.state.select("node", "label").collect()}
     assert got == labels
+
+
+def _jobs_of(spark, group, run):
+    """``run()`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
+# k-means: four noisy direction clusters in 3-D. From the first four points
+# by id, Lloyd's loop moves its centers for five rounds and stops at the
+# sixth, whose movement is exactly 0; the closest cosine tie on the way is
+# 1.7e-4 apart, far beyond float noise.
+_KM_BASES = ((1.0, 0.1, 0.0), (0.1, 1.0, 0.2), (0.0, 0.3, 1.0), (0.7, 0.7, 0.1))
+_KM_ROWS = [
+    (i, [b + (i * 7919 + j * 104729) % 97 / 97 * 1.6
+         for j, b in enumerate(_KM_BASES[i % 4])])
+    for i in range(48)
+]
+
+
+def _km_points(spark):
+    return spark.createDataFrame(_KM_ROWS, "id long, vec array<double>")
+
+
+def _cosine(a, b):
+    """The engine's cosine, summed in the same order: 0.0 at a zero norm."""
+    def dot(u, v):
+        acc = 0.0
+        for x, y in zip(u, v):
+            acc = acc + x * y
+        return acc
+
+    denom = dot(a, a) ** 0.5 * dot(b, b) ** 0.5
+    return dot(a, b) / denom if denom > 0 else 0.0
+
+
+def _lloyd_rounds(rows, k, max_iterations, tol):
+    """Lloyd's loop from the first k points by id: cosine assignment with
+    ties to the smaller center id, per-dimension means, stop at the first
+    round whose largest center movement is <= tol. Returns the rounds run,
+    each round's movement, the final centers and the final assignment."""
+    centers = dict(enumerate(vec for _id, vec in sorted(rows)[:k]))
+
+    def assign(centers):
+        return {
+            pid: -max((_cosine(vec, c), -cid) for cid, c in centers.items())[1]
+            for pid, vec in rows
+        }
+
+    moves = []
+    for _ in range(max_iterations):
+        members, labels = {}, assign(centers)
+        for pid, vec in rows:
+            members.setdefault(labels[pid], []).append(vec)
+        new = {
+            cid: [sum(col) / len(vecs) for col in zip(*vecs)]
+            for cid, vecs in members.items()
+        }
+        moves.append(max(
+            sum((a - b) ** 2 for a, b in zip(new[c], centers[c])) ** 0.5
+            for c in new
+        ))
+        centers = new
+        if moves[-1] <= tol:
+            break
+    return len(moves), moves, centers, assign(centers)
+
+
+def test_kmeans_stops_at_the_reference_round(spark):
+    rounds, moves, centers, assignment = _lloyd_rounds(_KM_ROWS, 4, 20, 1e-4)
+    assert rounds == 6 and moves[-1] == 0.0
+    pts = _km_points(spark)
+    assigned, iterations = kmeans(pts, k=4, max_iterations=20, tol=1e-4)
+    assert iterations == rounds
+    assert {r.id: r.cluster for r in assigned.collect()} == assignment
+    # the same loop from the same initial centers, for the centers
+    init = pts.where("id < 4").select(
+        F.col("id").cast("int").alias("cid"), F.col("vec").alias("cvec")
+    )
+    res = lloyd(pts, init, max_iterations=20, tol=1e-4)
+    assert res.converged and res.iterations == rounds
+    assert all(abs(a - b) < 1e-12 for a, b in zip(res.distances, moves))
+    got = {r.cid: r.cvec for r in res.state.collect()}
+    assert got.keys() == centers.keys()
+    for cid, vec in centers.items():
+        assert all(abs(a - b) < 1e-12 for a, b in zip(got[cid], vec)), cid
+
+
+def test_kmeans_job_budget(spark):
+    # one job per round plus the state0 checkpoint, which also fills the
+    # points cache; a run that hits the cap costs the same per round
+    for label, cap in (("converging", 20), ("capped", 3)):
+        (_assigned, iterations), jobs = _jobs_of(
+            spark, f"kmeans_jobcount_{label}",
+            lambda cap=cap: kmeans(_km_points(spark), k=4, max_iterations=cap),
+        )
+        assert iterations == min(cap, 6), label
+        assert iterations <= jobs <= iterations + 1, f"{label}: {jobs} jobs"
+
+
+def _power_inputs(spark):
+    """A start vector that is not unit-normalized, and a 37×37 matrix."""
+    x0 = spark.createDataFrame(
+        [(i, float(1 + i % 3)) for i in range(37)], "i long, x double"
+    )
+    matrix = _edges(spark).select(
+        F.col("dst").alias("r"), F.col("src").alias("c"),
+        (F.col("src") % 4 + 1).cast("double").alias("v"),
+    )
+    return x0, matrix
+
+
+def test_power_iteration_job_budget_and_norms(spark):
+    # one job per round plus the matrix count and the state0 checkpoint;
+    # x and the norms keep the power method's meaning for any x0
+    x0, matrix = _power_inputs(spark)
+    (x, norms), jobs = _jobs_of(
+        spark, "power_jobcount", lambda: power_iteration(matrix, x0, 4)
+    )
+    assert len(norms) == 4
+    assert 4 <= jobs <= 4 + 2, f"{jobs} jobs"
+    vec, want = {r[0]: r[1] for r in x0.collect()}, []
+    for _ in range(4):
+        y = {}
+        for s, d in _EDGE_ROWS:
+            y[d] = y.get(d, 0.0) + (s % 4 + 1) * vec.get(s, 0.0)
+        want.append(max(abs(v) for v in y.values()))
+        vec = {i: v / want[-1] for i, v in y.items()}
+    assert all(abs(a - b) < 1e-9 * b for a, b in zip(norms, want))
+    got = {r.i: r.x for r in x.collect()}
+    assert got.keys() == vec.keys()
+    assert all(abs(got[i] - vec[i]) < 1e-12 for i in vec)
+
+
+def _cc_rounds(pairs):
+    """Per-round changed counts of frontier-pruned min-label propagation."""
+    nbrs = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    comp, frontier, changed = {v: v for v in nbrs}, set(nbrs), []
+    while True:
+        new = dict(comp)
+        for u in frontier:
+            for v in nbrs[u]:
+                new[v] = min(new[v], comp[u])
+        frontier = {v for v in nbrs if new[v] < comp[v]}
+        comp = new
+        changed.append(len(frontier))
+        if not frontier:
+            return changed, comp
+
+
+def test_connected_components_job_budget(spark):
+    # one job per round plus the edge count and the state0 checkpoint; the
+    # distance is the frontier size, and the loop stops at the first empty
+    # frontier: a path takes one round per hop
+    pairs = [(i, i + 1) for i in range(20, 29)] + [(i, (i * i + 1) % 11) for i in range(11)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    res, jobs = _jobs_of(spark, "cc_jobcount", lambda: connected_components(edges))
+    changed, comp = _cc_rounds(pairs)
+    assert res.converged and res.iterations == len(changed) >= 8
+    assert res.distances == [float(c) for c in changed]
+    assert res.iterations <= jobs <= res.iterations + 2, f"{jobs} jobs"
+    assert {r.node: r.comp for r in res.state.collect()} == comp

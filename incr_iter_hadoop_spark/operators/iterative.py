@@ -30,10 +30,9 @@ replicated to every task, mirroring GlobalUniqValueWritable.
 
 from __future__ import annotations
 
-import contextlib
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
@@ -49,6 +48,25 @@ from ..plans.loopdriver import (
 from ..registry import register
 from ..session import scoped_conf
 
+
+def _cache(df: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+    """``df`` persisted, and the cache this call owns: None when the caller
+    had already persisted it. persist/unpersist are not refcounted, so
+    releasing a cache the caller owns would silently drop theirs and every
+    later use would recompute it."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        return df, None
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return df, df
+
+
+def _release(*cached: DataFrame | None) -> None:
+    for df in cached:
+        if df is not None:
+            df.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # PageRank
 
@@ -60,7 +78,6 @@ def pagerank(
     retain: float = 0.2,
     max_iterations: int = 50,
     threshold: float | None = None,
-    checkpoint_interval: int | None = None,
     num_partitions: int | None = None,
     init_state: DataFrame | None = None,
     prune_below: float | None = None,
@@ -73,7 +90,7 @@ def pagerank(
     ``init_state`` (node, rank) warm-starts the loop — the incremental
     iterative mode (SURVEY §3.3): after a graph delta, re-converging from
     the previous fixpoint takes far fewer iterations than from scratch. A
-    converged warm start inherits the partitioning of the state it resumes
+    warm start inherits the partitioning of the state it resumes
     from, clamped to the range ``negotiate_partitions`` uses, and counts
     nothing: the earlier run already fixed the partitioning, as the
     reference's incremental run reads its preserved state per reduce
@@ -82,13 +99,15 @@ def pagerank(
 
     One job per iteration: the state carries a ``delta`` column
     (rankᵢ − rankᵢ₋₁, computed inside the step at zero extra shuffles since
-    the previous rank is already on the joined state row), and in converged
-    mode the L1 distance Σ|delta| rides the iteration's materializing
-    action via ``df.observe`` — no prev⋈curr full-outer join, no separate
-    distance job (the ``IterativeReducer.distance`` contract,
-    IterativeReducer.java:24-32, summed master-side like
-    JobTracker.java:5586-5595). In converged mode the loop invariants are
-    built by the loop's first action, the checkpoint of the initial state.
+    the previous rank is already on the joined state row). With a
+    ``threshold`` the L1 distance Σ|delta| rides the iteration's
+    materializing action via ``df.observe`` — no prev⋈curr full-outer
+    join, no separate distance job (the ``IterativeReducer.distance``
+    contract, IterativeReducer.java:24-32, summed master-side like
+    JobTracker.java:5586-5595). Without one the loop runs exactly
+    ``max_iterations`` rounds and returns (node, rank). The loop
+    invariants are built by the loop's first action, the checkpoint of the
+    initial state.
 
     ``prune_below`` θ: the change-propagation-pruned incremental loop (I9,
     the reference's filter threshold, ReduceTask.java:3399-3428). Round 1
@@ -108,28 +127,24 @@ def pagerank(
     if threshold is not None and prune_below is not None:
         raise ValueError("pass threshold OR prune_below, not both")
     spark = edges.sparkSession
-    converged_mode = threshold is not None or prune_below is not None
-    # the edges are cached only when they are counted, so that static is
-    # built from the cache instead of recomputing the caller's pipeline
     edge_cache = static = nodes = None
     try:
-        # the converged loop plans without AQE (see iterate()), and so does
-        # its setup: non-adaptive cached plans report their hash(src, n) /
+        # the loop plans without AQE (see iterate()), and so does its
+        # setup: non-adaptive cached plans report their hash(src, n) /
         # hash(node, n) layout before they are materialized, so the state0
         # checkpoint computes the edge pipeline and both invariants in one
         # job and round 1 reads them in place
-        with (
-            scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"})
-            if converged_mode
-            else contextlib.nullcontext()
-        ):
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
             if num_partitions is not None:
                 n = num_partitions
-            elif converged_mode and init_state is not None:
+            elif init_state is not None:
                 # a planning call, no job
                 n = clamp_partitions(spark, init_state.rdd.getNumPartitions())
             else:
-                edge_cache = edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+                # the edges are cached only when they are counted, so that
+                # static is built from the cache instead of recomputing the
+                # caller's pipeline
+                edges, edge_cache = _cache(edges)
                 n = negotiate_partitions(edges)
             # static side: adjacency + out-degree in ONE exchange — the
             # repartition provides the hash distribution the degree window
@@ -157,15 +172,11 @@ def pagerank(
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             if init_state is not None:
-                if converged_mode:
-                    # the loop runs at state0's partitioning: bring the prior
-                    # ranks to nodes' hash(node, n), which plans to nothing
-                    # when a previous loop's state already has it; the hint
-                    # keeps a small prior state from being broadcast (a job
-                    # of its own)
-                    init_state = init_state.repartition(n, "node").hint(
-                        "shuffle_hash"
-                    )
+                # the loop runs at state0's partitioning: bring the prior
+                # ranks to nodes' hash(node, n), which plans to nothing when
+                # a previous loop's state already has it; the hint keeps a
+                # small prior state from being broadcast (a job of its own)
+                init_state = init_state.repartition(n, "node").hint("shuffle_hash")
                 # warm start: keep prior ranks for surviving nodes, 1.0 for
                 # new ones
                 state0 = nodes.join(init_state, "node", "left").select(
@@ -178,112 +189,84 @@ def pagerank(
         # each Column or DataFrame built costs the driver a Py4J round trip
         src_is_node = F.col("src") == F.col("node")
         node_is_dst = F.col("node") == F.col("dst")
+        new_rank = F.lit(retain) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
+        # iterate() keeps the state hash(node, n) and static is hash(src, n),
+        # so shuffle joins need no exchange but the contributions' one by
+        # dst. Both joins are pinned to that: a broadcast would cost a job
+        # of its own every round.
+        static_hinted = static.hint("shuffle_hash")
         contrib = (F.col("rank") / F.col("deg")).alias("contrib")
         mass = F.sum("contrib").alias("mass")
-        new_rank = F.lit(retain) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
+        out = (
+            "node",
+            new_rank.alias("rank"),
+            (new_rank - F.col("rank")).alias("delta"),
+        )
 
-        def _mass(static_side: DataFrame, state: DataFrame) -> DataFrame:
-            return (
-                static_side.join(state, src_is_node)
+        def full_step(state: DataFrame, cols: tuple) -> DataFrame:
+            # the state invariantly holds every node, so joining it instead
+            # of `nodes` keeps the previous rank on the row — the delta
+            # costs no extra join or shuffle. The state is referenced twice;
+            # iterate() truncates lineage every round to keep the plan
+            # linear.
+            contribs = (
+                static_hinted.join(state, src_is_node)
                 .select("dst", contrib)
                 .groupBy("dst")
                 .agg(mass)
+                .hint("shuffle_hash")
             )
+            return state.join(contribs, node_is_dst, "left").select(*cols)
 
-        if converged_mode:
-            # iterate() keeps the state hash(node, n) and static is
-            # hash(src, n), so shuffle joins need no exchange but the
-            # contributions' one by dst. Both joins are pinned to that: a
-            # broadcast would cost a job of its own every round.
-            static_hinted = static.hint("shuffle_hash")
-            out = (
+        def step(state: DataFrame, i: int) -> DataFrame:
+            return full_step(state, out)
+
+        # no threshold: no stop test, exactly max_iterations rounds
+        distance = None if threshold is None else F.sum(F.abs(F.col("delta")))
+        if prune_below is not None:
+            refresh_out = (*out, F.coalesce("mass", F.lit(0.0)).alias("mass"))
+            corr = F.coalesce("corr", F.lit(0.0))
+            mass_after = F.col("mass") + corr
+            pruned_out = (
                 "node",
-                new_rank.alias("rank"),
-                (new_rank - F.col("rank")).alias("delta"),
+                mass_after.alias("mass"),
+                (F.lit(retain) + F.lit(damping) * mass_after).alias("rank"),
+                (F.lit(damping) * corr).alias("delta"),
             )
+            in_frontier = F.abs(F.col("delta")) >= prune_below
 
-            def full_step(state: DataFrame, cols: tuple) -> DataFrame:
-                # the state invariantly holds every node, so joining it
-                # instead of `nodes` keeps the previous rank on the row —
-                # the delta costs no extra join or shuffle. The state is
-                # referenced twice; iterate()'s observed path truncates
-                # lineage every round to keep the plan linear.
-                contribs = _mass(static_hinted, state).hint("shuffle_hash")
-                return state.join(contribs, node_is_dst, "left").select(*cols)
-
-            def step_observed(state: DataFrame, i: int) -> DataFrame:
-                return full_step(state, out)
-
-            step, distance = step_observed, F.sum(F.abs(F.col("delta")))
-            if prune_below is not None:
-                refresh_out = (*out, F.coalesce("mass", F.lit(0.0)).alias("mass"))
-                corr = F.coalesce("corr", F.lit(0.0))
-                mass_after = F.col("mass") + corr
-                pruned_out = (
-                    "node",
-                    mass_after.alias("mass"),
-                    (F.lit(retain) + F.lit(damping) * mass_after).alias("rank"),
-                    (F.lit(damping) * corr).alias("delta"),
+            def step(state: DataFrame, i: int) -> DataFrame:
+                if i == 1:
+                    # the full refresh step: every edge the delta touched
+                    # alters its endpoints' masses
+                    return full_step(state, refresh_out)
+                # the frontier keeps the state's hash(node, n), so it joins
+                # static in place; hashing the frontier, not the adjacency,
+                # makes the build side shrink with it
+                frontier = state.where(in_frontier).hint("shuffle_hash")
+                props = (
+                    static.join(frontier, src_is_node)
+                    .select("dst", (F.col("delta") / F.col("deg")).alias("c"))
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("corr"))
+                    .hint("shuffle_hash")
                 )
-                in_frontier = F.abs(F.col("delta")) >= prune_below
+                return state.join(props, node_is_dst, "left").select(*pruned_out)
 
-                def step_pruned(state: DataFrame, i: int) -> DataFrame:
-                    if i == 1:
-                        # the full refresh step: every edge the delta
-                        # touched alters its endpoints' masses
-                        return full_step(state, refresh_out)
-                    # the frontier keeps the state's hash(node, n), so it
-                    # joins static in place; hashing the frontier, not the
-                    # adjacency, makes the build side shrink with it
-                    frontier = state.where(in_frontier).hint("shuffle_hash")
-                    props = (
-                        static.join(frontier, src_is_node)
-                        .select("dst", (F.col("delta") / F.col("deg")).alias("c"))
-                        .groupBy("dst")
-                        .agg(F.sum("c").alias("corr"))
-                        .hint("shuffle_hash")
-                    )
-                    return state.join(props, node_is_dst, "left").select(*pruned_out)
-
-                step, distance = step_pruned, F.count_if(in_frontier)
-            result = iterate(
-                state0.withColumn("delta", F.lit(0.0)),
-                step,
-                max_iterations=max_iterations,
-                observed_distance=distance,
-                threshold=threshold if prune_below is None else 0.0,
-                observe_counts=observe_counts,
-            )
-        else:
-
-            def step_bounded(state: DataFrame, i: int) -> DataFrame:
-                # single state reference → linear plan growth between
-                # checkpoints
-                contribs = _mass(static, state)
-                return nodes.join(contribs, node_is_dst, "left").select(
-                    "node", new_rank.alias("rank")
-                )
-
-            # bounded mode materializes every round unless the caller asks
-            # otherwise: a chained multi-round job references the lazily
-            # persisted invariants from every round before any action has
-            # cached them, so it re-derives them and writes about twice the
-            # shuffle. iterate()'s own default suits lpa and spmv, whose
-            # chained rounds reuse their exchanges.
-            result = iterate(
-                state0,
-                step_bounded,
-                max_iterations=max_iterations,
-                checkpoint_interval=(
-                    checkpoint_interval if checkpoint_interval is not None else 1
-                ),
-                observe_counts=observe_counts,
-            )
+            distance, threshold = F.count_if(in_frontier), 0.0
+        result = iterate(
+            state0.withColumn("delta", F.lit(0.0)),
+            step,
+            max_iterations=max_iterations,
+            observed_distance=distance,
+            threshold=threshold or 0.0,
+            observe_counts=observe_counts,
+        )
     finally:
         # the final state is already materialized by iterate()
-        for cached in (static, nodes, edge_cache):
-            if cached is not None:
-                cached.unpersist()
+        _release(static, nodes, edge_cache)
+    if distance is None:
+        result.state = result.state.select("node", "rank")
     return result
 
 
@@ -435,7 +418,6 @@ def sssp(
     *,
     max_iterations: int = 50,
     run_to_fixpoint: bool = True,
-    checkpoint_interval: int = 5,
     init_state: DataFrame | None = None,
 ) -> IterationResult:
     """Single-source shortest paths by min-plus relaxation. State holds only
@@ -449,84 +431,69 @@ def sssp(
     insertion), so re-convergence relaxes only paths the new edges
     improve. Edge deletions need ``sssp_invalidate_affected`` first.
 
-    Fixpoint mode runs ONE job per iteration: the step's full-outer join
-    already has the previous distance on the row, so a ``changed`` flag
-    (min-plus only decreases — changed ⇔ new < prev or node is new) is
-    free, and the not-yet-converged count (A8) rides the materializing
-    action via ``df.observe`` instead of a second prev⋈curr join job."""
+    ONE job per iteration: the step's full-outer join already has the
+    previous distance on the row, so a ``changed`` flag (min-plus only
+    decreases — changed ⇔ new < prev or node is new) is free, and the
+    not-yet-converged count (A8) rides the materializing action via
+    ``df.observe`` instead of a second prev⋈curr join job.
+    ``run_to_fixpoint=False`` drops the stop test: exactly
+    ``max_iterations`` rounds."""
     spark = edges.sparkSession
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(edges)
-    static = edges.repartition(n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    state0 = (
-        init_state
-        if init_state is not None
-        else spark.createDataFrame([(source, 0.0)], "node long, dist double")
-    )
-
-    def step_bounded(state: DataFrame, i: int) -> DataFrame:
-        relaxed = (
-            static.join(state, static.src == state.node)
-            .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
-            .groupBy("dst")
-            .agg(F.min("cand").alias("cand"))
+    edge_cache = static = None
+    try:
+        # planned without AQE, like the loop: the caches are then filled
+        # inside the jobs that first read them (see pagerank)
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            edges, edge_cache = _cache(edges)
+            n = negotiate_partitions(edges)
+            static = edges.repartition(n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+        # static is hash(src, n): a shuffle join reads it in place, where a
+        # broadcast would cost a job of its own every round
+        static_hinted = static.hint("shuffle_hash")
+        state0 = (
+            init_state
+            if init_state is not None
+            else spark.createDataFrame([(source, 0.0)], "node long, dist double")
         )
-        return (
-            state.join(relaxed, state.node == relaxed.dst, "full_outer")
-            .select(
-                F.coalesce("node", "dst").alias("node"),
-                F.least(
-                    F.coalesce("dist", F.lit(float("inf"))),
-                    F.coalesce("cand", F.lit(float("inf"))),
-                ).alias("dist"),
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            prev = state.select("node", F.col("dist").alias("_prev"))
+            relaxed = (
+                static_hinted.join(state, F.col("src") == F.col("node"))
+                .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
+                .groupBy("dst")
+                .agg(F.min("cand").alias("cand"))
             )
-        )
-
-    def step_observed(state: DataFrame, i: int) -> DataFrame:
-        prev = state.select("node", F.col("dist").alias("_prev"))
-        relaxed = (
-            static.join(state, static.src == state.node)
-            .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
-            .groupBy("dst")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new_dist = F.least(
-            F.coalesce("_prev", F.lit(float("inf"))),
-            F.coalesce("cand", F.lit(float("inf"))),
-        )
-        return (
-            prev.join(relaxed, prev.node == relaxed.dst, "full_outer")
-            .select(
-                F.coalesce("node", "dst").alias("node"),
-                new_dist.alias("dist"),
-                F.when(
-                    F.col("_prev").isNull() | (new_dist < F.col("_prev")), 1
+            new_dist = F.least(
+                F.coalesce("_prev", F.lit(float("inf"))),
+                F.coalesce("cand", F.lit(float("inf"))),
+            )
+            return (
+                prev.join(relaxed, prev.node == relaxed.dst, "full_outer")
+                .select(
+                    F.coalesce("node", "dst").alias("node"),
+                    new_dist.alias("dist"),
+                    F.when(
+                        F.col("_prev").isNull() | (new_dist < F.col("_prev")), 1
+                    )
+                    .otherwise(0)
+                    .alias("changed"),
                 )
-                .otherwise(0)
-                .alias("changed"),
             )
-        )
 
-    if run_to_fixpoint:
         # iterate() plans the loop at the initial state's partition count
         result = iterate(
             state0.withColumn("changed", F.lit(1)).repartition(n, "node"),
-            step_observed,
+            step,
             max_iterations=max_iterations,
-            observed_distance=F.sum("changed").cast("double"),
+            observed_distance=(
+                F.sum("changed").cast("double") if run_to_fixpoint else None
+            ),
             threshold=0.0,
-            checkpoint_interval=checkpoint_interval,
         )
-        result.state = result.state.drop("changed")
-    else:
-        result = iterate(
-            state0,
-            step_bounded,
-            max_iterations=max_iterations,
-            checkpoint_interval=checkpoint_interval,
-        )
-    static.unpersist()
-    edges.unpersist()
+    finally:
+        _release(static, edge_cache)
+    result.state = result.state.drop("changed")
     return result
 
 
@@ -751,44 +718,53 @@ def sssp_invalidate_affected(
     supports). Over-invalidation is harmless — those nodes just get
     recomputed; under-invalidation would preserve a stale lower bound.
 
-    Returns a (node) DataFrame. Frontier-pruned propagation: per-round work
-    tracks the affected frontier, not |E| (the same shape as the reference's
-    change-propagation filter, ReduceTask.java:3399-3428, at θ=0)."""
+    Returns a (node) DataFrame. Frontier-pruned propagation on iterate():
+    the state is (node, new), a round adds the kept support heads of the
+    ``new`` frontier that are not in the state yet, and the loop stops at
+    the first round that adds none. Per-round work tracks the affected
+    frontier, not |E| (the same shape as the reference's change-propagation
+    filter, ReduceTask.java:3399-3428, at θ=0)."""
     u = state.select(F.col("node").alias("src"), F.col("dist").alias("_du"))
     v = state.select(F.col("node").alias("dst"), F.col("dist").alias("_dv"))
+    supports = (F.col("_du") + F.col("w")) <= F.col("_dv")
     support = (
         kept_edges.join(u, "src")
         .join(v, "dst")
-        .where(F.col("_du") + F.col("w") <= F.col("_dv"))
+        .where(supports)
         .select("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     seeds = (
         deleted_edges.join(u, "src")
         .join(v, "dst")
-        .where(F.col("_du") + F.col("w") <= F.col("_dv"))
-        .select(F.col("dst").alias("node"))
+        .where(supports)
+        .select(F.col("dst").alias("node"), F.lit(True).alias("new"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    affected = seeds
-    frontier = seeds
-    exhausted = True
-    for _ in range(max_rounds):
-        if frontier.count() == 0:
-            exhausted = False
-            break
-        nxt = (
+
+    def step(affected: DataFrame, i: int) -> DataFrame:
+        frontier = affected.where("new")
+        heads = (
             support.join(frontier, support.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(affected, "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        affected = affected.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    support.unpersist()
-    if exhausted and frontier.count() != 0:
+        return affected.select("node", F.lit(False).alias("new")).unionByName(
+            heads.select("node", F.lit(True).alias("new"))
+        )
+
+    try:
+        res = iterate(
+            seeds,
+            step,
+            max_iterations=max_rounds,
+            observed_distance=F.count_if("new"),
+            threshold=0.0,
+        )
+    finally:
+        support.unpersist()
+    if not res.converged:
         # A silently truncated closure would leave stale lower-bound
         # distances — exactly what this pass exists to prevent. Fail loudly;
         # the caller can raise max_rounds (closure depth is bounded by the
@@ -798,7 +774,7 @@ def sssp_invalidate_affected(
             f"non-empty frontier after max_rounds={max_rounds}; raise "
             f"max_rounds (support-chain depth exceeds the cap)"
         )
-    return affected
+    return res.state.select("node")
 
 
 _SSSP_DEL_BASE_ROUNDS = 4
@@ -936,23 +912,24 @@ def spmv(matrix: DataFrame, vector: DataFrame, iterations: int) -> IterationResu
     reference blocks the matrix (ONE2MUL, MatrixVector.java:93-147); in Spark
     coordinate form + hash shuffle on the join key is the same data movement
     without bespoke block codecs."""
-    matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(matrix)
-    static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
+    matrix, matrix_cache = _cache(matrix)
+    static = None
+    try:
+        n = negotiate_partitions(matrix)
+        static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        return (
-            static.join(state, static.c == state.i)
-            .select("r", (F.col("v") * F.col("x")).alias("px"))
-            .groupBy("r")
-            .agg(F.sum("px").alias("x"))
-            .select(F.col("r").alias("i"), "x")
-        )
+        def step(state: DataFrame, i: int) -> DataFrame:
+            return (
+                static.join(state, static.c == state.i)
+                .select("r", (F.col("v") * F.col("x")).alias("px"))
+                .groupBy("r")
+                .agg(F.sum("px").alias("x"))
+                .select(F.col("r").alias("i"), "x")
+            )
 
-    result = iterate(vector, step, max_iterations=iterations)
-    static.unpersist()
-    matrix.unpersist()
-    return result
+        return iterate(vector, step, max_iterations=iterations)
+    finally:
+        _release(static, matrix_cache)
 
 
 _SPMV_MATRIX_SQL = """
@@ -1055,7 +1032,7 @@ def lloyd(
     # a cache planned without AQE is filled inside the first job that
     # reads it, the state0 checkpoint; an adaptive one runs jobs of its own
     with scoped_conf(points.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-        points = points.persist(StorageLevel.MEMORY_AND_DISK)
+        points, points_cache = _cache(points)
     # the round-invariant Columns, built once: a higher-order expression
     # costs the driver tens of Py4J round trips
     assign = _assigner()
@@ -1091,7 +1068,7 @@ def lloyd(
             threshold=tol,
         )
     finally:
-        points.unpersist()
+        _release(points_cache)
 
 
 def _assigner() -> Callable[[DataFrame, DataFrame], DataFrame]:
@@ -1542,7 +1519,7 @@ def connected_components(
         with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
             # the symmetrize-union references edges twice: an expensive
             # upstream (e.g. a near-dup pair pipeline) evaluates once
-            edge_cache = edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+            edges, edge_cache = _cache(edges)
             n = negotiate_partitions(edges)
             # symmetrize in ONE exchange: repartition by src, then dedup
             # within the src-hash partitions, which co-locate equal rows.
@@ -1602,9 +1579,7 @@ def connected_components(
             threshold=0.0,
         )
     finally:
-        for cached in (sym, edge_cache):
-            if cached is not None:
-                cached.unpersist()
+        _release(sym, edge_cache)
     res.state = res.state.select("node", "comp")
     return res
 
@@ -1767,7 +1742,7 @@ def power_iteration(
         # planned without AQE, like the loop: the caches are then filled
         # inside the jobs that first read them (see pagerank)
         with scoped_conf(matrix.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-            matrix_cache = matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
+            matrix, matrix_cache = _cache(matrix)
             n = negotiate_partitions(matrix)
             static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
         inf_norm = F.max(F.abs(F.col("x")))
@@ -1798,9 +1773,7 @@ def power_iteration(
             threshold=float("-inf"),
         )
     finally:
-        for cached in (static, matrix_cache):
-            if cached is not None:
-                cached.unpersist()
+        _release(static, matrix_cache)
     x = res.state.select("i", (F.col("x") / F.lit(res.distances[-1])).alias("x"))
     return x, res.distances
 
@@ -1888,15 +1861,7 @@ def nmf(
     import operator
     from functools import reduce
 
-    # persist/unpersist are not refcounted, so only manage the cache marker
-    # if the CALLER hasn't already persisted ratings — unpersisting a
-    # caller-persisted input would silently drop THEIR cache (the
-    # incr_nmf_delta2 bug class: its source matrix got recomputed per use)
-    own_persist = ratings.storageLevel.useMemory is False and (
-        ratings.storageLevel.useDisk is False
-    )
-    if own_persist:
-        ratings = ratings.persist(StorageLevel.MEMORY_AND_DISK)
+    ratings, ratings_cache = _cache(ratings)
     n = negotiate_partitions(ratings)
     # lazy persists: the init-factor / first-iteration jobs materialize each
     # layout on first use — no dedicated warm-up pass per copy.
@@ -2015,10 +1980,7 @@ def nmf(
         ).localCheckpoint(eager=True)
         w.unpersist()
         w = w_new
-    if own_persist:
-        ratings.unpersist()
-    v_r.unpersist()
-    v_c.unpersist()
+    _release(ratings_cache, v_r, v_c)
     w_long = w.select(
         "r",
         F.explode(
@@ -2435,8 +2397,8 @@ def graph_kcore_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Label propagation (round 12) — synchronous LPA through the iterate()
-# driver: one more workload shape the reference's iterative contract
+# Label propagation — synchronous LPA through the iterate() driver: one
+# more workload shape the reference's iterative contract
 # (IterativeMapper/Reducer + Projector ONE2ONE, IterativeMapper.java:7-16)
 # expresses directly, beyond the shipped sp/pg/km/nmf/power generators.
 
@@ -2452,72 +2414,11 @@ def label_propagation(
     CC (dedup.py's star-CC twin) is the degenerate always-adopt-minimum
     variant.
 
-    Plan per round: one (dst, label) count shuffle + one dst argmax
-    shuffle + the state left-join — argmax via max(struct(cnt, -label)),
-    never a per-node window sort."""
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # r13 (guide §2.4): pin the loop-invariant symmetrized edge list to a
-    # src-hash partitioning ONCE — without it every round's sym⋈state join
-    # re-exchanged all |2E| edge rows (measured: the edge re-shuffle was
-    # most of lpa_converged's 144 MB of shuffle writes at sf0.1); with it
-    # only the small per-round state/label relations move.
-    n = negotiate_partitions(edges)
-    # r13: symmetrize in ONE exchange — repartition by src first, then
-    # dedup within the src-hash partitions (hash(src) co-locates equal
-    # (src, dst) rows, so dropDuplicates adds no second exchange); the
-    # former union+distinct+repartition paid two |2E| shuffles. The node
-    # set dedups within the same partitioning for free.
-    sym = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(n, "src")
-        .dropDuplicates(["src", "dst"])
-    )
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
-    state0 = nodes.select("node", F.col("node").alias("label"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # r13 §8 (guide §2.3/§2.4): ONE aggregation exchange per round.
-        # The natural groupBy(dst,label)→groupBy(dst) pair pays two
-        # exchanges (hash(dst,label) does not satisfy the dst argmax's
-        # clustering). Repartitioning the joined neighbor-labels on dst
-        # FIRST lets both aggregates complete within that one exchange —
-        # HashPartitioning(dst) satisfies ClusteredDistribution(dst,label)
-        # — and in round 1 the (dst,label) pairs are all-distinct anyway,
-        # so the map-side combine the explicit repartition forgoes had
-        # nothing to combine. Integer count/argmax is order-independent:
-        # results are bit-identical (oracle re-proved).
-        # Combine-loss tradeoff (ADVICE r13): from round 2 on labels
-        # converge, so this shape shuffles raw |2E| neighbor-label rows
-        # where a groupBy-first plan would combine them map-side to
-        # (dst,label) pairs before its two exchanges. Measured at sf0.1
-        # across ALL rounds of the converged runs it is still a net win
-        # (128.27→109.63 MB total shuffle, 3 exchanges→1) — but the
-        # balance is scale/convergence-dependent: re-check shuffle bytes
-        # (lpa_converged_shuffle_mb in the bench line) if the converged
-        # workload moves to a larger SF or more max_iterations.
-        nbr = (
-            sym.join(state, sym.src == state.node)
-            .select("dst", "label")
-            .repartition(n, "dst")
-        )
-        counts = nbr.groupBy("dst", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        winners = (
-            counts.groupBy("dst")
-            .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
-            .select("dst", (-F.col("w.nl")).alias("win"))
-        )
-        return state.join(
-            winners, state.node == winners.dst, "left"
-        ).select("node", F.coalesce("win", "label").alias("label"))
-
-    res = iterate(state0, step, max_iterations=max_iterations)
-    sym.unpersist()
-    edges.unpersist()
+    Runs exactly ``max_iterations`` rounds of the loop
+    :func:`label_propagation_converged` stops early, and returns
+    (node, label)."""
+    res = _lpa(edges, max_iterations, None)
+    res.state = res.state.select("node", "label")
     return res
 
 
@@ -2557,12 +2458,12 @@ def _lpa_sql(n_iter: int, edges_sql: str = _PR_EDGES_SQL) -> str:
     "lpa_bounded3",
     oracle=_lpa_sql(3),
     doc="synchronous label propagation, 3 bounded rounds on the "
-    "symmetrized part→supplier graph (round 12 — one more workload the "
-    "reference's ONE2ONE iterative contract expresses directly, beyond "
-    "the shipped generator types): every node adopts its neighbors' most "
-    "frequent label, ties to the smallest, isolated nodes keep their own. "
+    "symmetrized part→supplier graph (one more workload the reference's "
+    "ONE2ONE iterative contract expresses directly, beyond the shipped "
+    "generator types): every node adopts its neighbors' most frequent "
+    "label, ties to the smallest, isolated nodes keep their own. "
     "All-integer state → the unrolled-CTE oracle is hash-exact. Argmax "
-    "is max(struct(cnt, -label)) — two hash-agg shuffles per round, "
+    "is max(struct(cnt, -label)) — one aggregation exchange per round, "
     "never a per-node window sort; the oracle uses the ROW_NUMBER "
     "formulation as the independent cross-check.",
 )
@@ -2578,15 +2479,15 @@ def lpa_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def label_propagation_converged(
     edges: DataFrame, *, max_iterations: int = 30
 ) -> IterationResult:
-    """CONVERGENCE-guarded synchronous LPA (round 13 — VERDICT r12 ask #3):
-    same per-round rule as :func:`label_propagation`, terminating via the
-    reference's I4 contract (converge OR max-iter, JobConf.java:494-500) —
-    but "no change" alone is NOT a sound stop rule for synchronous LPA:
-    on bipartite structure it 2-cycles forever (a matched pair swaps
-    labels every round). Convergence here is OSCILLATION-AWARE: stop at
-    the first round whose state equals the state one round back (a true
-    fixpoint) OR two rounds back (a period-2 limit cycle; the returned
-    state is the cycle phase at the detected round — deterministic).
+    """CONVERGENCE-guarded synchronous LPA: same per-round rule as
+    :func:`label_propagation`, terminating via the reference's I4 contract
+    (converge OR max-iter, JobConf.java:494-500) — but "no change" alone is
+    NOT a sound stop rule for synchronous LPA: on bipartite structure it
+    2-cycles forever (a matched pair swaps labels every round). Convergence
+    here is OSCILLATION-AWARE: stop at the first round whose state equals
+    the state one round back (a true fixpoint) OR two rounds back (a
+    period-2 limit cycle; the returned state is the cycle phase at the
+    detected round — deterministic).
 
     Mechanics: the state carries (node, label, p1, p2) where p1/p2 are
     the labels one/two rounds back, shifted by the step itself — so the
@@ -2595,88 +2496,112 @@ def label_propagation_converged(
     ``df.observe`` (one Spark job per round, no prev⋈curr distance join).
     NULL p2 in round 1 counts as changed, disabling the period-2 test
     until two states exist."""
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # r13: loop-invariant edges pinned to one src-hash partitioning, as in
-    # label_propagation above (guide §2.4 — the per-round edge re-shuffle
-    # dominated this query's shuffle bytes)
-    n = negotiate_partitions(edges)
-    # r13: symmetrize in ONE exchange — repartition by src first, then
-    # dedup within the src-hash partitions (hash(src) co-locates equal
-    # (src, dst) rows, so dropDuplicates adds no second exchange); the
-    # former union+distinct+repartition paid two |2E| shuffles. The node
-    # set dedups within the same partitioning for free.
-    sym = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(n, "src")
-        .dropDuplicates(["src", "dst"])
-    )
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
-    state0 = nodes.select(
-        "node",
-        F.col("node").alias("label"),
-        F.lit(None).cast("bigint").alias("p1"),
-        F.lit(None).cast("bigint").alias("p2"),
-    )
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # r13 §8: one aggregation exchange per round — see the bounded
-        # twin above for the full rationale (repartition on dst, then both
-        # the (dst,label) count and the dst argmax complete within that
-        # single exchange) and for the ADVICE r13 combine-loss tradeoff
-        # note (rounds >= 2 shuffle raw |2E| label rows; measured net win
-        # at sf0.1 over whole converged runs — re-check via the bench's
-        # lpa_converged_shuffle_mb if SF or max_iterations grow);
-        # projecting to (dst,label) first keeps the carried p1/p2 history
-        # columns out of the exchange (guide §2.2).
-        # r14 interleaved A/B (VERDICT ask #3) CONFIRMED this shape: on an
-        # identical setup, the combine-first alternative (groupBy(dst,
-        # label) before the repartition) shuffled MORE over the full
-        # converged run — +31.5 MB / +21 stages / wall 15.5 vs 13.0 s
-        # median — because a dst's neighbors scatter across map
-        # partitions, so (dst,label) pairs stay mostly distinct map-side
-        # even once labels converge; and session-width n=32 lost to the
-        # negotiated n (+3.6 MB / wall 25.6 vs 13.0 s median). Numbers in
-        # OPTIMIZATION_r14.md §3.
-        nbr = (
-            sym.join(state, sym.src == state.node)
-            .select("dst", "label")
-            .repartition(n, "dst")
-        )
-        counts = nbr.groupBy("dst", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        winners = (
-            counts.groupBy("dst")
-            .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
-            .select("dst", (-F.col("w.nl")).alias("win"))
-        )
-        return state.join(
-            winners, state.node == winners.dst, "left"
-        ).select(
-            "node",
-            F.coalesce("win", "label").alias("label"),
-            F.col("label").alias("p1"),
-            F.col("p1").alias("p2"),
-        )
-
     changed_vs = lambda col: F.sum(  # noqa: E731 — tiny local aggregate
         F.when(F.col("label") == F.col(col), F.lit(0)).otherwise(F.lit(1))
     )
-    res = iterate(
-        state0,
-        step,
-        max_iterations=max_iterations,
-        observed_distance=F.least(
-            changed_vs("p1"), changed_vs("p2")
-        ).cast("double"),
-        threshold=0.0,
+    return _lpa(
+        edges,
+        max_iterations,
+        F.least(changed_vs("p1"), changed_vs("p2")).cast("double"),
     )
-    sym.unpersist()
-    edges.unpersist()
-    return res
+
+
+def _lpa(
+    edges: DataFrame, max_iterations: int, observed_distance: Column | None
+) -> IterationResult:
+    """The synchronous LPA loop over state (node, label, p1, p2), stopped by
+    ``observed_distance`` (None: no stop test).
+
+    Plan per round: the sym⋈state join, ONE aggregation exchange for the
+    neighbor-label counts and the argmax, and the state left-join — argmax
+    via max(struct(cnt, -label)), never a per-node window sort."""
+    edges, edge_cache = _cache(edges)
+    sym = None
+    try:
+        # pin the loop-invariant symmetrized edge list to a src-hash
+        # partitioning ONCE — without it every round's sym⋈state join
+        # re-exchanged all |2E| edge rows (measured: the edge re-shuffle was
+        # most of lpa_converged's 144 MB of shuffle writes at sf0.1); with
+        # it only the small per-round state/label relations move.
+        n = negotiate_partitions(edges)
+        # symmetrize in ONE exchange — repartition by src first, then dedup
+        # within the src-hash partitions (hash(src) co-locates equal
+        # (src, dst) rows, so dropDuplicates adds no second exchange); a
+        # union+distinct+repartition pays two |2E| shuffles. The node set
+        # dedups within the same partitioning for free.
+        sym = (
+            edges.union(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+            .repartition(n, "src")
+            .dropDuplicates(["src", "dst"])
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        nodes = sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
+        state0 = nodes.select(
+            "node",
+            F.col("node").alias("label"),
+            F.lit(None).cast("bigint").alias("p1"),
+            F.lit(None).cast("bigint").alias("p2"),
+        )
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            # ONE aggregation exchange per round. The natural
+            # groupBy(dst,label)→groupBy(dst) pair pays two exchanges
+            # (hash(dst,label) does not satisfy the dst argmax's
+            # clustering). Repartitioning the joined neighbor-labels on dst
+            # FIRST lets both aggregates complete within that one exchange
+            # — HashPartitioning(dst) satisfies
+            # ClusteredDistribution(dst,label) — and in round 1 the
+            # (dst,label) pairs are all-distinct anyway, so the map-side
+            # combine the explicit repartition forgoes had nothing to
+            # combine. Integer count/argmax is order-independent: results
+            # are bit-identical. Projecting to (dst,label) first keeps the
+            # carried p1/p2 history columns out of the exchange.
+            # Combine-loss tradeoff: from round 2 on labels converge, so
+            # this shape shuffles raw |2E| neighbor-label rows where a
+            # groupBy-first plan would combine them map-side. An
+            # interleaved A/B on an identical setup measured the
+            # combine-first alternative shuffling MORE over a full
+            # converged run (+31.5 MB, +21 stages, wall 15.5 vs 13.0 s
+            # median), because a dst's neighbors scatter across map
+            # partitions, so (dst,label) pairs stay mostly distinct
+            # map-side even once labels converge; session-width n=32 lost
+            # to the negotiated n (+3.6 MB, wall 25.6 vs 13.0 s median).
+            # Numbers in OPTIMIZATION_r14.md §3. The balance is
+            # scale-dependent: re-check the shuffle bytes if the converged
+            # workload moves to a larger SF or more max_iterations.
+            nbr = (
+                sym.join(state, sym.src == state.node)
+                .select("dst", "label")
+                .repartition(n, "dst")
+            )
+            counts = nbr.groupBy("dst", "label").agg(
+                F.count(F.lit(1)).alias("cnt")
+            )
+            winners = (
+                counts.groupBy("dst")
+                .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
+                .select("dst", (-F.col("w.nl")).alias("win"))
+            )
+            return state.join(
+                winners, state.node == winners.dst, "left"
+            ).select(
+                "node",
+                F.coalesce("win", "label").alias("label"),
+                F.col("label").alias("p1"),
+                F.col("p1").alias("p2"),
+            )
+
+        return iterate(
+            state0,
+            step,
+            max_iterations=max_iterations,
+            observed_distance=observed_distance,
+            threshold=0.0,
+        )
+    finally:
+        _release(sym, edge_cache)
 
 
 # strictly-disjoint union: the natural part→supplier graph PLUS a planted
@@ -2767,8 +2692,8 @@ WHERE a.rnd = COALESCE(s.rnd, {max_rounds})"""
 @register(
     "lpa_converged",
     oracle=_lpa_converged_sql(8),
-    doc="I4 oscillation-guarded LPA termination (round 13 — VERDICT r12 "
-    "ask #3): synchronous label propagation run to an OSCILLATION-AWARE "
+    doc="I4 oscillation-guarded LPA termination: synchronous label "
+    "propagation run to an OSCILLATION-AWARE "
     "stop — the first round whose state equals the state one round back "
     "(fixpoint) or two rounds back (period-2 limit cycle), max-iter "
     "fallback per the reference's converge-or-max-iter contract "

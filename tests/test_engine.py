@@ -62,7 +62,7 @@ def test_incremental_pagerank_matches_cold_recompute(spark, sf_dir):
 @pytest.mark.slow  # r14: driver verify window (ask #6)
 def test_long_loop_stability(spark, sf_dir):
     """SURVEY §7 hard-part 1: 50+ iterations must not blow up the plan —
-    localCheckpoint every checkpoint_interval truncates lineage. A linear
+    every round's localCheckpoint truncates lineage. A linear
     plan-growth bug shows up here as super-linear wall-clock or a stack
     overflow in Catalyst."""
     from incr_iter_hadoop_spark.operators.iterative import (
@@ -70,11 +70,7 @@ def test_long_loop_stability(spark, sf_dir):
         pagerank,
     )
 
-    res = pagerank(
-        _lineitem_edges(spark, sf_dir),
-        max_iterations=55,
-        checkpoint_interval=5,
-    )
+    res = pagerank(_lineitem_edges(spark, sf_dir), max_iterations=55)
     assert res.iterations == 55
     assert res.state.count() > 0
     # plan of the final state must stay bounded (truncated by checkpoints)

@@ -78,6 +78,24 @@ def test_invalidation_spares_independent_branch(spark):
     assert {r["node"] for r in affected.collect()} == {2}
 
 
+def test_invalidation_closure_deeper_than_max_rounds_raises(spark):
+    # a path 0 -> 1 -> ... -> 10: deleting 0->1 invalidates 1 and then one
+    # more node per round, so the closure needs 9 rounds that add a node
+    # and a 10th that adds none. A truncated closure would keep stale
+    # lower bounds, so a cap below that must fail loudly.
+    edges = _df(
+        spark, [(i, i + 1, 1.0) for i in range(10)], "src long, dst long, w double"
+    )
+    base = _df(spark, [(i, float(i)) for i in range(11)], "node long, dist double")
+    deleted = edges.where("src = 0")
+    kept = edges.where("src <> 0")
+    for cap in (3, 9):
+        with pytest.raises(RuntimeError, match=f"max_rounds={cap}"):
+            sssp_invalidate_affected(kept, deleted, base, max_rounds=cap)
+    affected = sssp_invalidate_affected(kept, deleted, base, max_rounds=10)
+    assert {r["node"] for r in affected.collect()} == set(range(1, 11))
+
+
 def test_fixpoint_oracle_unroll_margin(spark, sf_dir):
     # the sssp_converged oracle unrolls 20 Bellman-Ford rounds and poisons
     # non-stable nodes; the Spark loop must therefore reach its fixpoint

@@ -8,6 +8,7 @@ headline query. Its setup is budgeted too: a warm start counts nothing and
 builds its invariants inside the loop's first checkpoint. k-means,
 connected components and the power method run on the same observed loop,
 with their own job budgets and stop rules checked against Python loops.
+A loop with no stop test is the same loop, and is budgeted the same way.
 """
 
 from __future__ import annotations
@@ -19,10 +20,13 @@ from incr_iter_hadoop_spark.operators.incremental import apply_edge_delta
 from incr_iter_hadoop_spark.operators.iterative import (
     connected_components,
     kmeans,
+    label_propagation,
     label_propagation_converged,
     lloyd,
+    nmf,
     pagerank,
     power_iteration,
+    spmv,
     sssp,
 )
 from incr_iter_hadoop_spark.plans.loopdriver import iterate, l1_state_distance
@@ -40,6 +44,16 @@ _DELTA_ROWS = [(0, 1, "-"), (5, 26, "-"), (3, 7, "+"), (40, 2, "+")]
 
 def _edges(spark):
     return spark.createDataFrame(_EDGE_ROWS, "src long, dst long")
+
+
+# the same graph with weights, for sssp
+_WEIGHTED_ROWS = [(i, (i * i + 1) % 37, float(1 + i % 5)) for i in range(37)] + [
+    (i, (2 * i + 3) % 37, float(1 + i % 3)) for i in range(37)
+]
+
+
+def _weighted_edges(spark):
+    return spark.createDataFrame(_WEIGHTED_ROWS, "src long, dst long, w double")
 
 
 def _delta_edges(spark):
@@ -216,7 +230,7 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
     inside = []
 
     def failing_iterate(state, step, **kwargs):
-        state.count()  # materializes every cache the setup made
+        step(state, 1).count()  # materializes every cache the setup made
         inside.append(cached_ids())
         raise RuntimeError("loop failed")
 
@@ -239,6 +253,11 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
         ("kmeans", lambda: kmeans(_km_points(spark), k=4)),
         ("connected_components", lambda: connected_components(edges)),
         ("power_iteration", lambda: power_iteration(matrix, x0, 3)),
+        ("sssp", lambda: sssp(_weighted_edges(spark), 0)),
+        ("sssp_bounded", lambda: sssp(_weighted_edges(spark), 0, run_to_fixpoint=False)),
+        ("spmv", lambda: spmv(matrix, x0, 3)),
+        ("label_propagation", lambda: label_propagation(edges)),
+        ("label_propagation_converged", lambda: label_propagation_converged(edges)),
     ):
         before = cached_ids()
         with pytest.raises(RuntimeError, match="loop failed"):
@@ -342,23 +361,6 @@ def test_observed_distance_matches_join_based_l1(spark):
         assert abs(bounded[row["node"]] - row["rank"]) < 1e-12
 
 
-def test_bounded_pagerank_cadence_is_value_invariant(spark):
-    """Bounded mode materializes every round by default (checkpoint cadence
-    1 — the interval-5 mega-job re-derived the lazily-persisted invariants,
-    doubling shuffle writes). The cadence is a physical knob: ranks must
-    not depend on the interval the caller passes. The two plan shapes may
-    combine the doubles in a different order, hence the tolerance."""
-    edges = _edges(spark)
-    base = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, max_iterations=5).state.collect()
-    }
-    wide = pagerank(edges, max_iterations=5, checkpoint_interval=3)
-    for row in wide.state.collect():
-        assert abs(base[row["node"]] - row["rank"]) < 1e-12
-    assert wide.iterations == 5
-
-
 def test_l1_state_distance_counts_one_sided_keys(spark):
     a = spark.createDataFrame([(1, 1.0), (2, 3.0)], "node long, rank double")
     b = spark.createDataFrame([(2, 1.5), (3, 2.0)], "node long, rank double")
@@ -400,6 +402,93 @@ def test_iterate_restores_session_confs(spark):
     with pytest.raises(RuntimeError, match="step failed"):
         iterate(state0, fail, observed_distance=F.sum("v"), threshold=1.0)
     assert {k: spark.conf.get(k) for k in _LOOP_CONFS} == before
+
+    # with no stop test the loop runs its cap under the same confs
+    seen.clear()
+    res = iterate(state0, halve, max_iterations=6)
+    assert not res.converged and res.iterations == 6 and res.distances == []
+    assert seen == [seen[0]] * 6 and seen[0] == {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "3",
+    }
+    assert {k: spark.conf.get(k) for k in _LOOP_CONFS} == before
+    with pytest.raises(RuntimeError, match="step failed"):
+        iterate(state0, fail, max_iterations=6)
+    assert {k: spark.conf.get(k) for k in _LOOP_CONFS} == before
+
+
+def test_stopless_iterate_is_one_job_per_round(spark):
+    # no stop test: exactly max_iterations rounds, each one job, its
+    # checkpoint, plus the state0 checkpoint; every round's state is
+    # stored, so the plan never grows
+    state0 = spark.range(12).repartition(3, "id").select(
+        F.col("id").alias("node"), F.lit(1.0).alias("v")
+    )
+
+    def halve(state, i):
+        return state.select("node", (F.col("v") / 2).alias("v"))
+
+    res, jobs = _jobs_of(
+        spark, "stopless_iterate",
+        lambda: iterate(state0, halve, max_iterations=7, observe_counts=True),
+    )
+    assert res.iterations == 7 and not res.converged and res.distances == []
+    assert res.record_counts == [12] * 7 and len(res.round_s) == 7
+    assert 7 <= jobs <= 7 + 1, f"{jobs} jobs"
+    assert {r.node: r.v for r in res.state.collect()} == dict.fromkeys(range(12), 2**-7)
+    plan = res.state._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan.splitlines()) == 1, plan
+
+
+@pytest.mark.parametrize("cached_input", [False, True], ids=["cold", "cached"])
+def test_bounded_pagerank_and_sssp_job_budget(spark, cached_input):
+    # a bounded run is the observed loop with no stop test: one job per
+    # round plus the state0 checkpoint and the edge count, under the
+    # session's own confs
+    for label, edges, run, columns in (
+        ("pagerank", _edges(spark), lambda e: pagerank(e, max_iterations=5),
+         ["node", "rank"]),
+        ("sssp", _weighted_edges(spark),
+         lambda e: sssp(e, 0, max_iterations=5, run_to_fixpoint=False),
+         ["node", "dist"]),
+    ):
+        if cached_input:
+            edges = edges.persist()
+            edges.count()
+        res, jobs = _jobs_of(
+            spark, f"bounded_{label}_{cached_input}", lambda: run(edges)
+        )
+        assert res.iterations == 5 and not res.converged, label
+        assert res.state.columns == columns, label
+        assert 5 <= jobs <= 5 + 2, f"{label}: {jobs} jobs"
+        edges.unpersist()
+
+
+def test_operators_keep_a_cache_the_caller_owns(spark):
+    # persist/unpersist are not refcounted: an operator that persists a
+    # cached input again and unpersists it on exit drops the caller's cache,
+    # and every later use of the input recomputes it
+    x0, matrix = _power_inputs(spark)
+    centers = _km_points(spark).where("id < 4").select(
+        F.col("id").cast("int").alias("cid"), F.col("vec").alias("cvec")
+    )
+    for label, make, run in (
+        ("pagerank", _edges, lambda e: pagerank(e, max_iterations=2)),
+        ("sssp", _weighted_edges, lambda e: sssp(e, 0, max_iterations=2)),
+        ("spmv", lambda s: matrix, lambda m: spmv(m, x0, 2)),
+        ("power_iteration", lambda s: matrix, lambda m: power_iteration(m, x0, 2)),
+        ("label_propagation", _edges, lambda e: label_propagation(e, max_iterations=2)),
+        ("label_propagation_converged", _edges,
+         lambda e: label_propagation_converged(e, max_iterations=2)),
+        ("connected_components", _edges, lambda e: connected_components(e)),
+        ("nmf", lambda s: matrix, lambda m: nmf(m, iterations=1)),
+        ("lloyd", _km_points, lambda p: lloyd(p, centers, max_iterations=2)),
+    ):
+        owned = make(spark).persist()
+        owned.count()
+        run(owned)
+        assert owned.storageLevel.useMemory, label
+        owned.unpersist()
 
 
 def test_scoped_conf_serializes_threads(spark):
@@ -457,12 +546,8 @@ def _sssp_rounds(edges, source):
 
 
 def test_sssp_converged_stops_at_the_reference_round(spark):
-    rows = [(i, (i * i + 1) % 37, float(1 + i % 5)) for i in range(37)] + [
-        (i, (2 * i + 3) % 37, float(1 + i % 3)) for i in range(37)
-    ]
-    edges = spark.createDataFrame(rows, "src long, dst long, w double")
-    res = sssp(edges, source=0, max_iterations=40)
-    changed, dist = _sssp_rounds(rows, 0)
+    res = sssp(_weighted_edges(spark), source=0, max_iterations=40)
+    changed, dist = _sssp_rounds(_WEIGHTED_ROWS, 0)
     assert res.converged and res.iterations == len(changed)
     assert res.distances == [float(c) for c in changed]
     assert {r.node: r.dist for r in res.state.collect()} == dist

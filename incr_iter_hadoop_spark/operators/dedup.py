@@ -54,7 +54,7 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N) 
     docs with fewer than n tokens are dropped (both sides of the oracle).
     Built on the ONE guarded n-gram builder (functions/text.token_ngrams,
     r9 consolidation)."""
-    df = spread_scan(df, id_col)  # r13: single-row-group scans tokenize 32-way
+    df = spread_scan(df, id_col)  # single-row-group scans tokenize one wave wide
     return (
         df.select(F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("toks"))
         .where(F.size("toks") >= n)
@@ -592,8 +592,8 @@ _NEW_DOC_MOD = 10  # delta = every 10th doc (held out of the base corpus)
 
 
 def _doc_split(spark: SparkSession, sf_dir: str):
-    # r13: spread the one-row-group scan so the gram/fingerprint map work
-    # downstream runs at session parallelism (catalog.spread_scan)
+    # spread the one-row-group scan so the gram/fingerprint map work
+    # downstream runs one task wave wide (catalog.spread_scan)
     d = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     base = d.where(F.col("doc_id") % _NEW_DOC_MOD != 0)
     new = d.where(F.col("doc_id") % _NEW_DOC_MOD == 0)

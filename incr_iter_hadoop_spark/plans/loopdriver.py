@@ -59,36 +59,35 @@ class IterationResult:
     round_s: list[float] = field(default_factory=list)
 
 
+# a loop's partition count is at least this, but never more than one task
+# wave of the session's cores or its shuffle partitions (clamp_partitions)
 PARTITION_FLOOR = 8
 # the loop's states: spill to disk rather than recompute a round
 _STORAGE = StorageLevel.MEMORY_AND_DISK
 
 
-def clamp_partitions(
-    spark: SparkSession, n: int, *, floor: int = PARTITION_FLOOR
-) -> int:
-    """``n`` clamped to the loop partition range: at least ``floor``, at
-    most the session's ``spark.sql.shuffle.partitions``."""
-    default_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(floor, min(default_n, n))
+def clamp_partitions(spark: SparkSession, n: int) -> int:
+    """``n`` clamped to the loop partition range: at most the session's
+    ``spark.sql.shuffle.partitions``, and at least the smallest of
+    ``PARTITION_FLOOR``, the session's cores
+    (``sparkContext.defaultParallelism``) and that ceiling. A small loop
+    then runs one task wave per stage; hosts with ``PARTITION_FLOOR`` or
+    more cores keep the floor."""
+    ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    floor = min(PARTITION_FLOOR, spark.sparkContext.defaultParallelism, ceiling)
+    return max(floor, min(ceiling, n))
 
 
-def negotiate_partitions(
-    df: DataFrame,
-    *,
-    rows_per_partition: int = 100_000,
-    floor: int = PARTITION_FLOOR,
-) -> int:
+def negotiate_partitions(df: DataFrame, *, rows_per_partition: int = 100_000) -> int:
     """Partition-count negotiation for loop relations — the reference does
     this at submit time (JobClient.java:913-957: block-size-driven counts,
-    ONE2ONE forcing #maps==#reduces). Sizing the static/state partitioning
-    to the data keeps small loops from paying per-task overhead every
-    iteration while preserving the session default as the ceiling for
-    cluster-scale inputs. ``df`` should already be persisted — the count
-    doubles as its materialization."""
-    return clamp_partitions(
-        df.sparkSession, df.count() // rows_per_partition + 1, floor=floor
-    )
+    ONE2ONE forcing #maps==#reduces). One partition per
+    ``rows_per_partition`` rows, clamped by ``clamp_partitions``: small
+    loops run one task wave of the session's cores instead of paying
+    per-task overhead every iteration, and the session default stays the
+    ceiling for cluster-scale inputs. ``df`` should already be persisted —
+    the count doubles as its materialization."""
+    return clamp_partitions(df.sparkSession, df.count() // rows_per_partition + 1)
 
 
 def l1_state_distance(

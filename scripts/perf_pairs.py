@@ -10,14 +10,20 @@ goes. Then prints, per metric, each side's median and quartiles, how many
 pairs the change won (ties count for neither side) and whether the pairs
 support a claimed gain: wins in at least nine tenths of the pairs and a
 median gap, in the better direction, larger than the parent's own
-interquartile range. ``--summarize FILE`` prints the summary of saved runs
-without running anything. Standard library only.
+interquartile range. Each metric that has a ``bound`` in BENCHMARK.json
+also gets a no-regression verdict: ``regress`` when the change's median is
+worse than the parent's by more than the bound (a fraction of the parent's
+median), ``unresolved`` when either side's interquartile range is wider
+than the bound (again relative to its median) and not every change run
+beats every parent run, ``ok`` otherwise. ``--summarize FILE`` prints the
+summary of saved runs without running anything. Standard library only.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import statistics
 import subprocess
 import sys
@@ -33,17 +39,26 @@ def parse_seeds(spec: str) -> list[int]:
     return seeds
 
 
-def directions(checkout: Path) -> dict[str, str]:
-    """metric name -> "lower" or "higher", from the checkout's
-    BENCHMARK.json (empty when it has none)."""
+def _metrics(checkout: Path) -> list[dict]:
+    """The metric entries of the checkout's BENCHMARK.json (empty when it
+    has none)."""
     path = checkout / "BENCHMARK.json"
     if not path.is_file():
-        return {}
+        return []
     spec = json.loads(path.read_text())
-    return {
-        m["name"]: m["better"]
-        for m in spec.get("end_to_end", []) + spec.get("per_layer", [])
-    }
+    return spec.get("end_to_end", []) + spec.get("per_layer", [])
+
+
+def directions(checkout: Path) -> dict[str, str]:
+    """metric name -> "lower" or "higher", from the checkout's
+    BENCHMARK.json."""
+    return {m["name"]: m["better"] for m in _metrics(checkout)}
+
+
+def bounds(checkout: Path) -> dict[str, float]:
+    """metric name -> its regression bound, a fraction of the parent's
+    median, for the metrics of the checkout's BENCHMARK.json that have one."""
+    return {m["name"]: m["bound"] for m in _metrics(checkout) if "bound" in m}
 
 
 def run_one(checkout: Path, workload: str, seed: int, seconds: float, trace: int) -> dict:
@@ -67,10 +82,37 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(records: list[dict], better: dict[str, str]) -> list[dict]:
+def _relative_iqr(q: tuple[float, float, float]) -> float:
+    """Interquartile range over the median."""
+    iqr = q[2] - q[0]
+    return iqr / abs(q[1]) if q[1] else (math.inf if iqr else 0.0)
+
+
+def verdict(pairs: list[tuple[float, float]], bound: float, sign: float) -> str:
+    """"regress", "unresolved" or "ok" for one metric's (parent, change)
+    pairs; ``sign`` is 1 when lower is better, -1 when higher is."""
+    parent = quartiles([p for p, _ in pairs])
+    change = quartiles([c for _, c in pairs])
+    if sign * (change[1] - parent[1]) > bound * abs(parent[1]):
+        return "regress"
+    spread = max(_relative_iqr(parent), _relative_iqr(change))
+    # the spread only hides nothing when every change run beats every
+    # parent run
+    separated = max(sign * c for _, c in pairs) < min(sign * p for p, _ in pairs)
+    if spread > bound and not separated:
+        return "unresolved"
+    return "ok"
+
+
+def summarize(
+    records: list[dict], better: dict[str, str], limits: dict[str, float] | None = None
+) -> list[dict]:
     """One row per metric over the seeds both sides ran. ``records`` are
     the ``{"side", "seed", "result"}`` lines; ``better`` maps a metric to
-    "lower" or "higher" (metrics missing from it count lower as better)."""
+    "lower" or "higher" (metrics missing from it count lower as better);
+    ``limits`` maps a metric to its regression bound, and a row's
+    ``verdict`` is None for a metric without one."""
+    limits = limits or {}
     by_side: dict[str, dict[int, dict]] = {"parent": {}, "change": {}}
     for rec in records:
         by_side[rec["side"]][rec["seed"]] = rec["result"]
@@ -103,6 +145,7 @@ def summarize(records: list[dict], better: dict[str, str]) -> list[dict]:
             "change": change,
             "wins": wins,
             "gain": wins >= 0.9 * len(pairs) and gap > parent[2] - parent[0],
+            "verdict": verdict(pairs, limits[name], sign) if name in limits else None,
         })
     return rows
 
@@ -120,15 +163,18 @@ def runs_summary(records: list[dict]) -> dict[str, dict]:
     return out
 
 
-def print_summary(records: list[dict], better: dict[str, str]) -> None:
+def print_summary(records: list[dict], checkout: Path) -> None:
+    """The summary, with directions and bounds from ``checkout``'s
+    BENCHMARK.json."""
     for side, s in runs_summary(records).items():
         print(f"{side}: {s['runs']} runs, {s['failed']} failed ops, "
               f"{s['incorrect']} not correct")
-    for r in summarize(records, better):
+    for r in summarize(records, directions(checkout), bounds(checkout)):
         p, c = r["parent"], r["change"]
         print(f"{r['metric']:40} parent {p[1]:.4g} [{p[0]:.4g}, {p[2]:.4g}]"
               f"  change {c[1]:.4g} [{c[0]:.4g}, {c[2]:.4g}]"
-              f"  wins {r['wins']}/{r['pairs']}  gain {'yes' if r['gain'] else 'no'}")
+              f"  wins {r['wins']}/{r['pairs']}  gain {'yes' if r['gain'] else 'no'}"
+              + (f"  verdict {r['verdict']}" if r["verdict"] else ""))
 
 
 def read_records(path: Path) -> list[dict]:
@@ -148,7 +194,7 @@ def main(argv: list[str]) -> int:
     args = p.parse_args(argv)
     if args.summarize:
         records = read_records(args.summarize)
-        print_summary(records, directions(args.parent or Path(".")))
+        print_summary(records, args.parent or Path("."))
         return 0
     if not (args.parent and args.change and args.workload and args.seeds and args.out):
         p.error("--parent, --change, --workload, --seeds and --out are required")
@@ -164,7 +210,7 @@ def main(argv: list[str]) -> int:
                 f.write(json.dumps(rec) + "\n")
             print(f"seed {seed} {side}: correct={result.get('correct')} "
                   f"failed={result.get('failed')}", file=sys.stderr, flush=True)
-    print_summary(records, directions(args.parent))
+    print_summary(records, args.parent)
     return 0
 
 

@@ -190,12 +190,13 @@ def test_pruned_pagerank_rejects_a_threshold(spark):
 
 def test_warm_pagerank_inherits_the_prior_partitioning(spark):
     # a warm start loops at the partition count of the state it resumes
-    # from, clamped to [8, spark.sql.shuffle.partitions]; an explicit
-    # num_partitions gives the same ranks
+    # from, clamped to [min(8, cores, 32), 32] under 32 shuffle
+    # partitions; an explicit num_partitions gives the same ranks
     edges = _delta_edges(spark)
     prior = _prior_ranks(spark)
+    floor = min(8, spark.sparkContext.defaultParallelism)
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
-        for given, expected in ((1, 8), (16, 16), (64, 32)):
+        for given, expected in ((1, floor), (16, 16), (64, 32)):
             init = prior.repartition(given, "node").localCheckpoint(eager=True)
             assert init.rdd.getNumPartitions() == given
             warm = pagerank(edges, max_iterations=60, threshold=1e-4, init_state=init)
@@ -208,6 +209,14 @@ def test_warm_pagerank_inherits_the_prior_partitioning(spark):
             got, want = _ranks(warm), _ranks(pinned)
             assert got.keys() == want.keys()
             assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+
+
+def test_pagerank_never_loops_wider_than_the_shuffle_partitions(spark):
+    # the partition floor yields to a session ceiling below it
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "2"}):
+        res = pagerank(_edges(spark), max_iterations=60, threshold=1e-4)
+    assert res.converged
+    assert res.state.rdd.getNumPartitions() == 2
 
 
 def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):

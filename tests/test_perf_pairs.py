@@ -92,3 +92,62 @@ def test_summary_ignores_unpaired_runs_and_counts_failures(tmp_path):
 def test_directions_read_the_benchmark_spec():
     better = perf_pairs.directions(ROOT)
     assert better["op_s_p50"] == "lower" and better["ops_per_min"] == "higher"
+
+
+def test_verdict_flags_regressions_beyond_the_bound():
+    parent_lat = [2.0, 2.02, 1.98, 2.0, 2.01, 1.99, 2.0, 2.02, 1.98, 2.0]
+    parent = [{"op_s_p50": v, "ops_per_min": 60 / v, "flat_s": v} for v in parent_lat]
+    change = [
+        {
+            # median 30% slower: beyond a 0.25 bound
+            "op_s_p50": 1.3 * v,
+            # 20% fewer ops: worse, but inside the bound
+            "ops_per_min": 0.8 * 60 / v,
+            # no bound: no verdict
+            "flat_s": v,
+        }
+        for v in parent_lat
+    ]
+    better = {"op_s_p50": "lower", "ops_per_min": "higher"}
+    limits = {"op_s_p50": 0.25, "ops_per_min": 0.25}
+    rows = {
+        r["metric"]: r
+        for r in perf_pairs.summarize(_records(parent, change), better, limits)
+    }
+    assert rows["op_s_p50"]["verdict"] == "regress"
+    assert rows["ops_per_min"]["verdict"] == "ok"
+    assert rows["flat_s"]["verdict"] is None
+    # the same 30% in the better direction is fine
+    rows = {
+        r["metric"]: r
+        for r in perf_pairs.summarize(_records(change, parent), better, limits)
+    }
+    assert rows["op_s_p50"]["verdict"] == "ok"
+
+
+def test_verdict_is_unresolved_when_the_spread_exceeds_the_bound():
+    # parent runs spread over ±50% around a 2 s median
+    parent = [{"op_s_p50": v} for v in (1.0, 2.0, 3.0, 2.0, 1.0, 3.0, 2.0, 1.0)]
+    limits = {"op_s_p50": 0.25}
+    # medians equal, and the change loses some pairs: cannot tell
+    mixed = [{"op_s_p50": v} for v in (2.0, 2.1, 1.9, 2.0, 2.2, 1.8, 2.0, 2.0)]
+    (row,) = perf_pairs.summarize(_records(parent, mixed), {}, limits)
+    assert row["wins"] < row["pairs"] and row["verdict"] == "unresolved"
+    # winning every pair is not enough while the runs overlap
+    paired = [{"op_s_p50": r["op_s_p50"] - 0.1} for r in parent]
+    (row,) = perf_pairs.summarize(_records(parent, paired), {}, limits)
+    assert row["wins"] == row["pairs"] and row["verdict"] == "unresolved"
+    # every change run beats every parent run: the spread hides nothing
+    below = [{"op_s_p50": 0.9 + 0.01 * k} for k in range(len(parent))]
+    (row,) = perf_pairs.summarize(_records(parent, below), {}, limits)
+    assert row["verdict"] == "ok"
+    # a change worse by more than the bound is a regression, however noisy
+    worse = [{"op_s_p50": r["op_s_p50"] + 1.0} for r in parent]
+    (row,) = perf_pairs.summarize(_records(parent, worse), {}, limits)
+    assert row["verdict"] == "regress"
+
+
+def test_bounds_read_the_benchmark_spec():
+    limits = perf_pairs.bounds(ROOT)
+    assert limits["op_s_p50"] == 0.25 and limits["setup_s"] == 0.25
+    assert "spark.jobs" not in limits

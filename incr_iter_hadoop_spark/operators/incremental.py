@@ -408,10 +408,13 @@ def incr_refresh_orders_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "incr_spmv_delta1",
-    oracle=f"""
-    WITH m AS ({{spmv_sql}}),
+def _spmv_delta_oracle() -> str:
+    # imported here, not at the top: the import registers iterative.py's
+    # queries, and the registry's order is the order of registration
+    from .iterative import _SPMV_MATRIX_SQL
+
+    return f"""
+    WITH m AS ({_SPMV_MATRIX_SQL}),
     x0 AS (SELECT DISTINCT c AS i, CAST(1.0 AS DOUBLE) AS x FROM m),
     p AS (
       SELECT (r * 7 + 3) % 500 AS r, (c * 3 + 1) % 500 AS c,
@@ -424,7 +427,12 @@ def incr_refresh_orders_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT m2.r AS i, ROUND(SUM(m2.v * x.x), 6) AS x
     FROM m2 JOIN x0 x ON m2.c = x.i GROUP BY m2.r
-    """,
+    """
+
+
+@register(
+    "incr_spmv_delta1",
+    oracle=_spmv_delta_oracle(),
     doc="incremental SpMV — the delta-propagation identity for a LINEAR "
     "operator (A−D+P)·x = A·x + (P−D)·x: the preserved product y = A·x is "
     "updated from the matrix delta ALONE (O(|Δ|) work, no re-read of A "
@@ -491,22 +499,6 @@ def incr_spmv_delta1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("i", F.round("x", 6).alias("x"))
     )
     return out
-
-
-def _patch_spmv_delta_oracle() -> None:
-    from ..registry import _REGISTRY, QuerySpec
-    from .iterative import _SPMV_MATRIX_SQL
-
-    spec = _REGISTRY["incr_spmv_delta1"]
-    _REGISTRY["incr_spmv_delta1"] = QuerySpec(
-        name=spec.name,
-        fn=spec.fn,
-        oracle=spec.oracle.replace("{spmv_sql}", _SPMV_MATRIX_SQL),
-        doc=spec.doc,
-    )
-
-
-_patch_spmv_delta_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -606,7 +598,7 @@ def _pagerank_updated_edges_fused(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "incr_pagerank_delta5",
-    oracle=None,  # oracle injected below (circular-import-free)
+    oracle=_incr_pagerank_oracle(5),
     doc="IncrPageRank one-pass shape (IncrPageRank.java:176-212): apply a "
     "(+/-) edge delta, then 5 bounded iterations on the updated graph; "
     "oracle = unrolled CTE chain over the delta-applied edges. The edge "
@@ -621,23 +613,6 @@ def incr_pagerank_delta5(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated = _pagerank_updated_edges_fused(spark, sf_dir)
     res = pagerank(updated, max_iterations=5)
     return res.state.select("node", F.round("rank", 6).alias("rank"))
-
-
-# inject the oracle after definition: _pagerank_sql lives in iterative.py
-# which imports nothing from here, so this stays cycle-free at import time
-def _patch_incr_pagerank_oracle() -> None:
-    from ..registry import _REGISTRY, QuerySpec
-
-    spec = _REGISTRY["incr_pagerank_delta5"]
-    _REGISTRY["incr_pagerank_delta5"] = QuerySpec(
-        name=spec.name,
-        fn=spec.fn,
-        oracle=_incr_pagerank_oracle(5),
-        doc=spec.doc,
-    )
-
-
-_patch_incr_pagerank_oracle()
 
 
 @register(
@@ -834,7 +809,7 @@ _EDGES_BASE_SQL = f"""
 
 @register(
     "incr_pagerank_pruned4",
-    oracle=None,  # injected below: needs _EDGES_BASE_SQL defined first
+    oracle=_pagerank_pruned_sql(_PRUNED_WARM_ITERS, _PRUNED_ITERS, _PRUNED_THETA),
     doc="I9 change-propagation-pruned incremental PageRank: warm-start from "
     "6 bounded base iterations, apply the (+/-) edge delta, one full refresh "
     "step, then 4 iterations that propagate only deltas >= theta=0.01 "
@@ -854,23 +829,6 @@ def incr_pagerank_pruned4(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_iterations=_PRUNED_ITERS + 1,
     )
     return res.state.select("node", F.round("rank", 6).alias("rank"))
-
-
-def _patch_pruned_oracle() -> None:
-    from ..registry import _REGISTRY, QuerySpec
-
-    spec = _REGISTRY["incr_pagerank_pruned4"]
-    _REGISTRY["incr_pagerank_pruned4"] = QuerySpec(
-        name=spec.name,
-        fn=spec.fn,
-        oracle=_pagerank_pruned_sql(
-            _PRUNED_WARM_ITERS, _PRUNED_ITERS, _PRUNED_THETA
-        ),
-        doc=spec.doc,
-    )
-
-
-_patch_pruned_oracle()
 
 
 def _dataset_fingerprint(sf_dir: str, table: str) -> str:

@@ -911,23 +911,27 @@ def spmv(matrix: DataFrame, vector: DataFrame, iterations: int) -> IterationResu
     """yᵢ₊₁ = A·yᵢ over a coordinate-form sparse matrix (r, c, v). The
     reference blocks the matrix (ONE2MUL, MatrixVector.java:93-147); in Spark
     coordinate form + hash shuffle on the join key is the same data movement
-    without bespoke block codecs."""
-    matrix, matrix_cache = _cache(matrix)
-    static = None
+    without bespoke block codecs. One job per round on iterate()."""
+    matrix_cache = static = None
     try:
-        n = negotiate_partitions(matrix)
-        static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
+        # planned without AQE, like the loop: the caches are then filled
+        # inside the jobs that first read them (see pagerank)
+        with scoped_conf(matrix.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
+            matrix, matrix_cache = _cache(matrix)
+            n = negotiate_partitions(matrix)
+            static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
 
         def step(state: DataFrame, i: int) -> DataFrame:
+            # static is hash(c, n) and the state hash(i, n); the hint keeps
+            # a small vector from being broadcast (a job of its own)
             return (
-                static.join(state, static.c == state.i)
+                static.join(state.hint("shuffle_hash"), F.col("c") == F.col("i"))
                 .select("r", (F.col("v") * F.col("x")).alias("px"))
-                .groupBy("r")
+                .groupBy(F.col("r").alias("i"))
                 .agg(F.sum("px").alias("x"))
-                .select(F.col("r").alias("i"), "x")
             )
 
-        return iterate(vector, step, max_iterations=iterations)
+        return iterate(vector.repartition(n, "i"), step, max_iterations=iterations)
     finally:
         _release(static, matrix_cache)
 
@@ -1609,112 +1613,120 @@ def connected_components_star(
       small-star(v): every neighbor u ≤ v attaches to m
     Edges only move toward smaller ids (monotone) and never disconnect
     components; at the fixpoint the edge set is a star forest child →
-    component-min, read out directly as the labeling. Convergence = a
-    round reproduced the same edge set — checked exactly (count equality
-    + one-sided ``exceptAll`` emptiness on distinct sets), affordable
-    because total rounds are logarithmic.
+    component-min, read out directly as the labeling.
+
+    One job per round on iterate(). The state is the oriented edge set
+    (u, v, live, was): the round's final dedup groups the new edges with
+    the old ones, so each row says whether the new set holds it (``live``)
+    and whether the old one did (``was``), and the next round reads the
+    live rows. The observed distance is the exact size of the symmetric
+    difference of the two sets, count_if(live ≠ was): the loop stops on
+    the first round that reproduces its input edge set.
 
     Scale notes: per round the edge set shrinks-or-holds (never grows);
     every shuffle keys on a node id (max-cardinality, no inherent skew —
     the min-id attractor node of each component is the hot key in the
     LAST rounds, by which point the edge set is already collapsed to one
-    row per non-root node); lineage is cut every round with a
-    localCheckpoint materialized by the convergence count."""
-    n = negotiate_partitions(edges)
-    # the caller's edge plan can be expensive (e.g. a verified near-dup
-    # pair join) and is referenced by BOTH the oriented edge set and the
-    # node universe — persist it so each downstream evaluation reads cache
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # orient (u > v), drop self-loops; distinct because the rewrite rules
-    # are set-semantics (the convergence probe relies on it)
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+    row per non-root node). The labeling is materialized before the
+    function returns, so the caller's edge plan is evaluated once."""
+    spark = edges.sparkSession
+    edge_cache = None
+    try:
+        # planned without AQE, like the loop: the edge cache is then filled
+        # inside the count that sizes the loop (see pagerank)
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            # the caller's edge plan can be expensive (e.g. a verified
+            # near-dup pair join) and is referenced by BOTH the oriented
+            # edge set and the node universe
+            edges, edge_cache = _cache(edges)
+            n = negotiate_partitions(edges)
+        # orient (u > v), drop self-loops; distinct because the rewrite
+        # rules are set-semantics (the convergence probe relies on it)
+        state0 = (
+            edges.select(
+                F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+            )
+            .where(F.col("u") != F.col("v"))
+            .distinct()
+            .repartition(n, "u")
+            .select("u", "v", F.lit(True).alias("live"), F.lit(True).alias("was"))
         )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(n, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # endpoint universe from the RAW edges (before the self-loop filter):
-    # a node appearing only in self-loops is still a singleton component
-    # and must be labeled — same contract as connected_components. One
-    # explode pass, materialized so the raw edges can be released.
-    endpoint_nodes = edges.select(
-        F.explode(F.array("src", "dst")).alias("node")
-    )
-    all_nodes = (
-        (
+        new_rows = (F.lit(True).alias("live"), F.lit(False).alias("was"))
+        old_rows = (F.lit(False).alias("live"), F.lit(True).alias("was"))
+        flags = (F.bool_or("live").alias("live"), F.bool_or("was").alias("was"))
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            e = state.where("live").select("u", "v")
+            # large-star: group the SYMMETRIZED neighborhood by center
+            sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = (
+                sym.groupBy("u")
+                .agg(F.min("v").alias("mn"))
+                .select("u", F.least("mn", F.col("u")).alias("m"))
+            )
+            # shuffle joins: a broadcast would cost a job of its own
+            large = (
+                sym.join(mins.hint("shuffle_hash"), "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+                .where(F.col("a") != F.col("b"))
+                .select(
+                    F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+                )
+                .distinct()
+            )
+            # small-star: centers see only their ≤ neighbors (u > v holds)
+            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
+            small = (
+                large.join(mins2.hint("shuffle_hash"), "u")
+                .where(F.col("v") != F.col("m"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .union(mins2.select("u", F.col("m").alias("v")))
+            )
+            # dedup the new edges together with the old ones: one shuffle
+            # yields the new set and its difference from the old
+            return (
+                small.select("u", "v", *new_rows)
+                .union(e.select("u", "v", *old_rows))
+                .groupBy("u", "v")
+                .agg(*flags)
+            )
+
+        res = iterate(
+            state0,
+            step,
+            max_iterations=max_iterations,
+            observed_distance=F.count_if(F.col("live") != F.col("was")),
+            threshold=0.0,
+        )
+        # endpoint universe from the RAW edges (before the self-loop
+        # filter): a node appearing only in self-loops is still a singleton
+        # component and must be labeled — same contract as
+        # connected_components
+        endpoint_nodes = edges.select(F.explode(F.array("src", "dst")).alias("node"))
+        all_nodes = (
             endpoint_nodes.union(nodes.select("node")) if nodes is not None
             else endpoint_nodes
+        ).distinct()
+        # fixpoint edge set is a star forest: u (non-root) → v (component
+        # min). The min-agg guards the not-converged exit (max_iterations
+        # hit before the fixpoint): a node may then still carry several
+        # parent edges, and the readout must stay one row per node.
+        parents = (
+            res.state.where("live")
+            .select(F.col("u").alias("node"), F.col("v").alias("comp"))
+            .groupBy("node")
+            .agg(F.min("comp").alias("comp"))
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    all_nodes.count()
-    prev_cnt = e.count()
-    edges.unpersist()
-    edge_counts: list[float] = []
-    converged = False
-    i = 0
-    for i in range(1, max_iterations + 1):
-        # large-star: group the SYMMETRIZED neighborhood by center
-        sym = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            res.state = (
+                all_nodes.join(parents, "node", "left")
+                .select("node", F.coalesce("comp", F.col("node")).alias("comp"))
+                .localCheckpoint(eager=True)
             )
-            .distinct()
-        )
-        # small-star: centers see only their ≤ neighbors (u > v holds)
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(mins2, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        cnt = small.count()  # materializes the checkpoint
-        edge_counts.append(float(cnt))
-        if cnt == prev_cnt and small.exceptAll(e).isEmpty():
-            e.unpersist()
-            e = small
-            converged = True
-            break
-        e.unpersist()
-        e = small
-        prev_cnt = cnt
-    # fixpoint edge set is a star forest: u (non-root) → v (component min).
-    # The min-agg guards the not-converged exit (max_iterations hit before
-    # the fixpoint): a node may then still carry several parent edges, and
-    # the readout must stay one row per node.
-    parents = (
-        e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-        .groupBy("node")
-        .agg(F.min("comp").alias("comp"))
-    )
-    labels = all_nodes.join(parents, "node", "left").select(
-        "node", F.coalesce("comp", F.col("node")).alias("comp")
-    )
-    return IterationResult(
-        state=labels,
-        iterations=i,
-        converged=converged,
-        distances=edge_counts,
-    )
+    finally:
+        _release(edge_cache)
+    return res
 
 
 # ---------------------------------------------------------------------------
@@ -1827,187 +1839,124 @@ def nmf(
     updates — the reference's ``nmf`` generator workload
     (genGraphReduce.java:52-64) run on its iterative contract.
 
-    Spark-first shape (r5 plan pass, bench/PLANS.md): factors are held
-    RANK-WIDE — W:(r, w0..w{k-1}), H:(c, h0..h{k-1}) — because rank is a
-    plan-time constant, which collapses each update to exactly ONE shuffle:
-
-    - WᵀV: V ⋈ W on r (V's cached r-partitioned copy ⋈ the r-keyed factor —
-      no exchange on V) → groupBy(c) with k partial-aggregated sum columns.
-      The old long format shuffled this as (f, c) keys, k× the rows.
-    - WᵀW: a SINGLE-ROW aggregate (k² sum columns) over the factor,
-      broadcast into the elementwise update — the old shape was a factor
-      self-join + two more (f,c)-keyed shuffles (wtwh + double join).
-    - H ∘ num/den: numerators arrive partitioned by c, H is already
-      partitioned by c from its own previous update — exchange reuse, and
-      den_f = Σ_j G_fj·h_j folds into a scalar expression per row.
-    - V ⋈ H on c uses a SECOND cached copy of V partitioned by c: the old
-      plan re-exchanged all of V every iteration to meet H's key. Paying
-      the exchange once and caching both layouts is the loop-invariant
-      hoisting the reference's co-location scheduler existed for (I10).
-
-    Per iteration: 2 shuffles (the two groupBys) + 2 one-row broadcasts,
-    down from ~8 exchanges. 100 TB note: nothing here assumes small
-    factors — W/H stay distributed, only the k×k Grams are broadcast; the
-    dual V cache doubles storage, the standard trade for iterating both
-    orientations (spill-safe: MEMORY_AND_DISK).
-
     ``ratings``: coordinate (r, c, v), v ≥ 0. Deterministic positive init so
     a fixed-iteration run is reproducible cross-engine. Returns (W, H) in
     the long formats (r, f, w) / (f, c, h).
 
-    Each update references the previous factor, so factors are
-    ``localCheckpoint(eager=True)`` every iteration (SURVEY §7 hard-part 1 —
-    persist alone caches data but not the analyzed plan)."""
+    One loop on iterate(), two rounds per iteration and one job per round.
+    The state is both factors as one tagged relation ``(side, k,
+    x0..x{rank-1})``: W's rows (side ``w``, k = r) and H's (side ``h``,
+    k = c), held RANK-WIDE because rank is a plan-time constant, and
+    hash-partitioned on k. An odd round updates H ← H ∘ (WᵀV) / (WᵀW·H),
+    an even round W ← W ∘ (V·Hᵀ) / (W·H·Hᵀ); the other factor passes
+    through unchanged. A round:
+
+    - the numerators: V ⋈ the fixed factor on its key, then ONE shuffle,
+      the groupBy on the updated factor's key with rank sum columns. V is
+      cached twice, partitioned by r and by c, so neither orientation
+      re-exchanges V: paying the exchange once and caching both layouts is
+      the loop-invariant hoisting the reference's co-location scheduler
+      existed for (I10).
+    - the fixed factor's Gram: a single-row aggregate of rank² sum columns
+      that a replicated cross join brings to every numerator row, so
+      den_f = Σ_j G_fj·x_j is a scalar expression per row and no broadcast
+      job runs.
+    - the update meets the old factor on its own partitioning.
+
+    100 TB note: nothing here assumes small factors — W/H stay distributed,
+    only the rank×rank Gram is replicated; the dual V cache doubles
+    storage, the standard trade for iterating both orientations
+    (spill-safe: MEMORY_AND_DISK)."""
     import operator
     from functools import reduce
 
-    ratings, ratings_cache = _cache(ratings)
-    n = negotiate_partitions(ratings)
-    # lazy persists: the init-factor / first-iteration jobs materialize each
-    # layout on first use — no dedicated warm-up pass per copy.
-    v_r = ratings.repartition(n, "r").persist(StorageLevel.MEMORY_AND_DISK)
-    v_c = v_r.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
+    spark = ratings.sparkSession
     ks = list(range(rank))
-    # ``init_w`` (r, f, w) / ``init_h`` (f, c, h) warm-start the loop — the
-    # incremental iterative mode (SURVEY §3.3): after a ratings delta,
-    # re-running a couple of rounds from the preserved factors replaces a
-    # cold re-factorization. Keys NEW in this matrix (rows/cols the delta
-    # introduced) fall back to the deterministic cold-init formula.
-    w_cold = {
-        f: (1.0 + ((F.col("r") * 7 + F.lit(f) * 3) % 5) * 0.1) for f in ks
-    }
-    w = v_r.select("r").distinct()
-    if init_w is not None:
-        wide = init_w.groupBy("r").pivot("f", ks).agg(F.first("w"))
-        wide = wide.select(
-            "r", *[F.col(str(f)).alias(f"_iw{f}") for f in ks]
-        )
-        w = w.join(wide, "r", "left").select(
-            "r",
-            *[F.coalesce(F.col(f"_iw{f}"), w_cold[f]).alias(f"w{f}") for f in ks],
-        )
-    else:
-        w = w.select("r", *[w_cold[f].alias(f"w{f}") for f in ks])
-    w = w.repartition(n, "r").localCheckpoint(eager=True)
-    h_cold = {
-        f: (1.0 + ((F.col("c") * 11 + F.lit(f) * 5) % 7) * 0.1) for f in ks
-    }
-    h = v_c.select("c").distinct()
-    if init_h is not None:
-        wide = init_h.groupBy("c").pivot("f", ks).agg(F.first("h"))
-        wide = wide.select(
-            "c", *[F.col(str(f)).alias(f"_ih{f}") for f in ks]
-        )
-        h = h.join(wide, "c", "left").select(
-            "c",
-            *[F.coalesce(F.col(f"_ih{f}"), h_cold[f]).alias(f"h{f}") for f in ks],
-        )
-    else:
-        h = h.select("c", *[h_cold[f].alias(f"h{f}") for f in ks])
-    h = h.repartition(n, "c").localCheckpoint(eager=True)
+    xs = [f"x{f}" for f in ks]
+    ratings_cache = v_r = v_c = None
+    try:
+        # planned without AQE, like the loop: the caches are then filled
+        # inside the jobs that first read them (see pagerank)
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            ratings, ratings_cache = _cache(ratings)
+            n = negotiate_partitions(ratings)
+            v_r = ratings.repartition(n, "r").persist(StorageLevel.MEMORY_AND_DISK)
+            v_c = v_r.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
 
-    def _gram(fac: DataFrame, p: str):
-        return fac.agg(
-            *[
-                F.sum(F.col(f"{p}{a}") * F.col(f"{p}{b}")).alias(f"g{a}_{b}")
-                for a in ks
-                for b in ks
-            ]
-        )
-
-    def _den(p: str):
-        # den_f = Σ_j G_fj · fac_j as one scalar expression per output col
-        return {
-            f: reduce(
-                operator.add,
-                [F.col(f"g{f}_{j}") * F.col(f"{p}{j}") for j in ks],
+        def start(side, v, key, init, mul, add, mod):
+            # ``init`` (long format) warm-starts the factor — the
+            # incremental iterative mode (SURVEY §3.3): after a ratings
+            # delta, re-running a couple of rounds from the preserved
+            # factors replaces a cold re-factorization. Keys NEW in this
+            # matrix (rows/cols the delta introduced) fall back to the
+            # deterministic cold-init formula.
+            x = [1.0 + ((F.col(key) * mul + F.lit(f) * add) % mod) * 0.1 for f in ks]
+            fac = v.select(key).distinct()
+            if init is not None:
+                wide = init.groupBy(key).pivot("f", ks).agg(F.first(side))
+                fac = fac.join(wide, key, "left")
+                x = [F.coalesce(F.col(str(f)), x[f]) for f in ks]
+            return fac.select(
+                F.lit(side).alias("side"),
+                F.col(key).alias("k"),
+                *[x[f].alias(xs[f]) for f in ks],
             )
-            for f in ks
+
+        state0 = (
+            start("w", v_r, "r", init_w, 7, 3, 5)
+            .unionByName(start("h", v_c, "c", init_h, 11, 5, 7))
+            .repartition(n, "k")
+        )
+        # the round-invariant pieces, built once. A round updates one side
+        # from the other over V oriented as (a, b, v): a the fixed
+        # factor's key, b the updated one's. Odd rounds update H, even W.
+        halves = {
+            1: ("h", "w", v_r.select(F.col("r").alias("a"), F.col("c").alias("b"), "v")),
+            0: ("w", "h", v_c.select(F.col("c").alias("a"), F.col("r").alias("b"), "v")),
         }
+        nums = [F.sum(F.col(x) * F.col("v")).alias(f"num{f}") for f, x in enumerate(xs)]
+        gram = [
+            F.sum(F.col(xs[a]) * F.col(xs[b])).alias(f"g{a}_{b}") for a in ks for b in ks
+        ]
+        # x_f ∘ num_f / den_f with den_f = Σ_j G_fj · x_j
+        update = [
+            (
+                F.col(xs[f])
+                * F.col(f"num{f}")
+                / reduce(operator.add, [F.col(f"g{f}_{j}") * F.col(xs[j]) for j in ks])
+            ).alias(xs[f])
+            for f in ks
+        ]
 
-    for _it in range(1, iterations + 1):
-        # H ← H ∘ (WᵀV) / (WᵀW·H)
-        num_h = (
-            v_r.join(w, "r")
-            .groupBy("c")
-            .agg(
-                *[
-                    F.sum(F.col(f"w{f}") * F.col("v")).alias(f"num{f}")
-                    for f in ks
-                ]
+        def step(state: DataFrame, i: int) -> DataFrame:
+            side, fixed_side, v = halves[i % 2]
+            fixed = state.where(F.col("side") == fixed_side)
+            # the factors are small: the hints keep them from being
+            # broadcast, which would cost a job of its own every round
+            num = (
+                v.join(fixed.select(F.col("k").alias("a"), *xs).hint("shuffle_hash"), "a")
+                .groupBy(F.col("b").alias("k"))
+                .agg(*nums)
+                .crossJoin(fixed.agg(*gram).hint("shuffle_replicate_nl"))
+                .hint("shuffle_hash")
             )
+            new = state.where(F.col("side") == side).join(num, "k")
+            return fixed.unionByName(new.select(F.lit(side).alias("side"), "k", *update))
+
+        res = iterate(state0, step, max_iterations=2 * iterations)
+    finally:
+        _release(ratings_cache, v_r, v_c)
+
+    def long(side: str, key: str) -> DataFrame:
+        cells = F.array(
+            *[F.struct(F.lit(f).alias("f"), F.col(xs[f]).alias(side)) for f in ks]
         )
-        den_h = _den("h")
-        h_new = (
-            h.join(num_h, "c")
-            .crossJoin(F.broadcast(_gram(w, "w")))
-            .select(
-                "c",
-                *[
-                    (F.col(f"h{f}") * F.col(f"num{f}") / den_h[f]).alias(
-                        f"h{f}"
-                    )
-                    for f in ks
-                ],
-            )
-        ).localCheckpoint(eager=True)
-        h.unpersist()
-        h = h_new
-        # W ← W ∘ (V·Hᵀ) / (W·H·Hᵀ)
-        num_w = (
-            v_c.join(h, "c")
-            .groupBy("r")
-            .agg(
-                *[
-                    F.sum(F.col("v") * F.col(f"h{f}")).alias(f"num{f}")
-                    for f in ks
-                ]
-            )
+        return res.state.where(F.col("side") == side).select(
+            F.col("k").cast(ratings.schema[key].dataType).alias(key),
+            F.explode(cells).alias("s"),
         )
-        den_w = _den("w")
-        w_new = (
-            w.join(num_w, "r")
-            .crossJoin(F.broadcast(_gram(h, "h")))
-            .select(
-                "r",
-                *[
-                    (F.col(f"w{f}") * F.col(f"num{f}") / den_w[f]).alias(
-                        f"w{f}"
-                    )
-                    for f in ks
-                ],
-            )
-        ).localCheckpoint(eager=True)
-        w.unpersist()
-        w = w_new
-    _release(ratings_cache, v_r, v_c)
-    w_long = w.select(
-        "r",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f).alias("f"), F.col(f"w{f}").alias("w")
-                    )
-                    for f in ks
-                ]
-            )
-        ).alias("s"),
-    ).select("r", "s.f", "s.w")
-    h_long = h.select(
-        "c",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f).alias("f"), F.col(f"h{f}").alias("h")
-                    )
-                    for f in ks
-                ]
-            )
-        ).alias("s"),
-    ).select("s.f", "c", "s.h")
-    return w_long, h_long
+
+    return long("w", "r").select("r", "s.f", "s.w"), long("h", "c").select("s.f", "c", "s.h")
 
 
 def nmf_loss(ratings: DataFrame, w: DataFrame, h: DataFrame) -> float:
@@ -2183,9 +2132,8 @@ uh0 AS (
 )
 def incr_nmf_delta2(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _spmv_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    # the preserved factors: projections of the base loop's stored state
     warm_w, warm_h = nmf(m, rank=2, iterations=2)
-    warm_w = warm_w.localCheckpoint(eager=True)
-    warm_h = warm_h.localCheckpoint(eager=True)
     removals = m.where((F.col("r") + F.col("c")) % 11 == 0).withColumn(
         "op", F.lit("-")
     )
@@ -2213,7 +2161,8 @@ def incr_nmf_delta2(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_nmf_sql(2),
     doc="rank-2 NMF, two Lee-Seung multiplicative update rounds on the "
     "coordinate matrix (generator type `nmf`, genGraphReduce.java:52-64); "
-    "Gram matrices broadcast, V⋈W / V⋈H are the per-iteration shuffles.",
+    "one iterate() round per half-update, the Gram matrices replicated by "
+    "a one-row cross join, V⋈W / V⋈H the per-round shuffles.",
 )
 def nmf_bounded2(spark: SparkSession, sf_dir: str) -> DataFrame:
     w, _h = nmf(_spmv_matrix(spark, sf_dir), rank=2, iterations=2)
@@ -2300,7 +2249,6 @@ def loop_iteration_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "2-round chain oracle).",
 )
 def iteration_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import tempfile
 
     from ..sources.readers import write_iteration_snapshot
@@ -2312,19 +2260,14 @@ def iteration_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = tempfile.mkdtemp(prefix="iter_snapshots_")
     _cleanup_at_exit(base, "")
-    static = m.repartition(8, "c").persist(StorageLevel.MEMORY_AND_DISK)
-    for it in range(1, 3):
-        x = (
-            static.join(x, static.c == x.i)
-            .select("r", (F.col("v") * F.col("x")).alias("px"))
-            .groupBy("r")
-            .agg(F.sum("px").alias("x"))
-            .select(F.col("r").alias("i"), "x")
-            .localCheckpoint(eager=True)
-        )
-        write_iteration_snapshot(x, base, it)
-    m.unpersist()
-    static.unpersist()
+    try:
+        # one spmv() round per snapshot: iteration=<it> holds the state
+        # after round it
+        for it in (1, 2):
+            x = spmv(m, x, iterations=1).state
+            write_iteration_snapshot(x, base, it)
+    finally:
+        m.unpersist()
     back = spark.read.parquet(base).where(F.col("iteration") == 2)
     return back.select("i", F.round("x", 6).alias("x"))
 
@@ -2361,9 +2304,9 @@ _KCORE_EDGES_SQL = """
     "count, drop nodes below k, keep only edges between survivors — the "
     "standard iterative peel; at sf0.001 the fixture genuinely peels for "
     "all three rounds before converging. Per round one agg shuffle + two "
-    "semi-joins; edges localCheckpoint each round so the bounded loop's "
-    "lineage stays flat (same discipline as the other loops). Oracle = the "
-    "3-round CTE chain unrolled.",
+    "semi-joins, one peel per iterate() round, so each round is one job "
+    "and its lineage stays flat (same loop as the other operators). "
+    "Oracle = the 3-round CTE chain unrolled.",
 )
 def graph_kcore_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -2378,20 +2321,24 @@ def graph_kcore_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = base.select(F.col("p").alias("a"), F.col("s").alias("b")).unionByName(
         base.select(F.col("s").alias("a"), F.col("p").alias("b"))
     )
-    und = und.repartition(32, "a").localCheckpoint(eager=True)
-    for _ in range(3):
+
+    def peel(state: DataFrame, i: int) -> DataFrame:
+        # shuffle semi-joins: a broadcast of the survivors would cost a job
+        # of its own every round. The a side goes last, so the peeled edges
+        # keep hash(a) and the next round's degree count reads them in place.
         surv = (
-            und.groupBy("a")
+            state.groupBy("a")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= 3)
             .select("a")
+            .hint("shuffle_hash")
         )
-        und = (
-            und.join(surv, "a", "left_semi")
-            .join(surv.withColumnRenamed("a", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
+        return state.join(surv.withColumnRenamed("a", "b"), "b", "left_semi").join(
+            surv, "a", "left_semi"
         )
-    return und.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
+
+    res = iterate(und.repartition(clamp_partitions(spark, 32), "a"), peel, max_iterations=3)
+    return res.state.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("a").alias("node"), F.col("deg").cast("bigint").alias("deg")
     )
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import _read_parquet, load_table
 from ..functions.stable import dsum, dsum_sql
 from ..registry import register
 
@@ -482,9 +482,10 @@ def _events_stream(spark: SparkSession, sf_dir: str, normalize_ts: bool = True):
     events query shares (review finding r4: five drifting copies)."""
     import os
 
-    # batch read first: sets the nanosAsLong conf and yields the raw schema
+    # batch read first: sets the nanosAsLong conf and keeps the file's
+    # inferred schema, so the raw read below starts no schema-inference job
     load_table(spark, sf_dir, "events")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     stream = (
         spark.readStream.schema(raw.schema)
         .option("pathGlobFilter", "events.parquet")

@@ -129,6 +129,10 @@ def iterate(
     runs exactly ``max_iterations`` rounds (the fixed-iteration case,
     JobConf.java:494-500) and returns ``converged=False`` and no distances.
 
+    A step may carry two relations as one tagged state: ``nmf`` holds its
+    factors W and H in one relation with a side column, and each round
+    updates one side and passes the other through.
+
     Each round is one action, and one Spark job unless the step's plan
     broadcasts: the metrics are attached with ``df.observe`` and filled by
     the eager ``localCheckpoint`` that materializes the round's state, so

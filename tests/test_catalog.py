@@ -2,7 +2,8 @@
 
 ``load_table`` infers a table file's schema once: a repeat load of an
 unchanged file runs no Spark job, a rewritten file is inferred again, and
-the ``events`` table keeps both of its ``ts`` encodings on a cache hit.
+the ``events`` table keeps both of its ``ts`` encodings on a cache hit,
+and so does its file stream, which a second build plans with no job.
 ``spread_scan`` spreads a one-partition scan to one task wave.
 """
 
@@ -69,6 +70,30 @@ def test_events_ts_is_timestamp_ntz_in_both_encodings_on_a_cache_hit(spark, tmp_
         for df in (first, hit):
             assert df.schema["ts"].dataType.simpleString() == "timestamp_ntz", unit
             assert [r["ts"] for r in df.orderBy("event_id").collect()] == when, unit
+
+
+def test_building_the_events_stream_again_runs_no_job(spark, tmp_path):
+    # the stream takes the file's raw schema from the kept one, so only the
+    # first build of a table's stream infers it
+    from incr_iter_hadoop_spark.operators.windows import _events_stream
+
+    when = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901), dt.datetime(1999, 12, 31, 23, 59, 59)]
+    for unit in ("ns", "us"):
+        d = tmp_path / unit
+        d.mkdir()
+        ts = pa.array(when, type=pa.timestamp(unit))
+        pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}), d / "events.parquet")
+        _events_stream(spark, str(d))
+        for normalize_ts in (True, False):
+            stream, jobs = _jobs(
+                spark, lambda: _events_stream(spark, str(d), normalize_ts=normalize_ts)
+            )
+            assert jobs == 0, (unit, normalize_ts)
+            assert stream.isStreaming
+        raw = spark.read.parquet(str(d / "events.parquet")).schema
+        assert stream.schema == raw, unit
+        normalized = _events_stream(spark, str(d)).schema["ts"].dataType
+        assert normalized.simpleString() == "timestamp_ntz", unit
 
 
 def test_spread_scan_spreads_one_partition_to_one_task_wave(spark):

@@ -6,9 +6,10 @@ prev⋈curr distance job. A regression doubles the per-iteration job count
 (and re-introduces a full-outer join over the state) on the most expensive
 headline query. Its setup is budgeted too: a warm start counts nothing and
 builds its invariants inside the loop's first checkpoint. k-means,
-connected components and the power method run on the same observed loop,
-with their own job budgets and stop rules checked against Python loops.
-A loop with no stop test is the same loop, and is budgeted the same way.
+connected components (min-label and star) and the power method run on the
+same observed loop, with their own job budgets and stop rules checked
+against Python loops. A loop with no stop test is the same loop, and is
+budgeted the same way (nmf's half-rounds among them).
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 from incr_iter_hadoop_spark.operators.incremental import apply_edge_delta
 from incr_iter_hadoop_spark.operators.iterative import (
     connected_components,
+    connected_components_star,
     kmeans,
     label_propagation,
     label_propagation_converged,
@@ -267,6 +269,8 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
         ("spmv", lambda: spmv(matrix, x0, 3)),
         ("label_propagation", lambda: label_propagation(edges)),
         ("label_propagation_converged", lambda: label_propagation_converged(edges)),
+        ("nmf", lambda: nmf(matrix, iterations=1)),
+        ("connected_components_star", lambda: connected_components_star(edges)),
     ):
         before = cached_ids()
         with pytest.raises(RuntimeError, match="loop failed"):
@@ -490,6 +494,7 @@ def test_operators_keep_a_cache_the_caller_owns(spark):
         ("label_propagation_converged", _edges,
          lambda e: label_propagation_converged(e, max_iterations=2)),
         ("connected_components", _edges, lambda e: connected_components(e)),
+        ("connected_components_star", _edges, lambda e: connected_components_star(e)),
         ("nmf", lambda s: matrix, lambda m: nmf(m, iterations=1)),
         ("lloyd", _km_points, lambda p: lloyd(p, centers, max_iterations=2)),
     ):
@@ -768,3 +773,92 @@ def test_connected_components_job_budget(spark):
     assert res.distances == [float(c) for c in changed]
     assert res.iterations <= jobs <= res.iterations + 2, f"{jobs} jobs"
     assert {r.node: r.comp for r in res.state.collect()} == comp
+
+
+def _star_rounds(pairs):
+    """Per-round |new Δ old| edge-set differences of the large-star /
+    small-star rewrite, and its final edge set."""
+    e, diffs = {(max(a, b), min(a, b)) for a, b in pairs if a != b}, []
+    while True:
+        nbrs = {}
+        for u, v in e:
+            nbrs.setdefault(u, set()).add(v)
+            nbrs.setdefault(v, set()).add(u)
+        m = {u: min(min(ns), u) for u, ns in nbrs.items()}
+        large = {
+            (max(v, m[u]), min(v, m[u]))
+            for u, ns in nbrs.items()
+            for v in ns
+            if v > u and v != m[u]
+        }
+        m2 = {}
+        for u, v in large:
+            m2[u] = min(m2.get(u, v), v)
+        small = {(v, m2[u]) for u, v in large if v != m2[u]} | set(m2.items())
+        diffs.append(len(small ^ e))
+        e = small
+        if diffs[-1] == 0:
+            return diffs, e
+
+
+def test_connected_components_star_job_budget(spark):
+    # one job per round plus the edge count, the state0 checkpoint and the
+    # labeling's; the distance is the size of the symmetric difference of
+    # a round's edge set and the one before, and the loop stops at the
+    # first round that reproduces its input
+    pairs = [(i, i + 1) for i in range(40)] + [(60, 61), (62, 61), (62, 62)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    res, jobs = _jobs_of(spark, "star_jobcount", lambda: connected_components_star(edges))
+    diffs, final = _star_rounds(pairs)
+    assert res.converged and res.iterations == len(diffs) >= 4
+    assert res.distances == [float(d) for d in diffs]
+    assert res.iterations <= jobs <= res.iterations + 3, f"{jobs} jobs"
+    want = {v: 0 for v in range(41)} | {60: 60, 61: 60, 62: 60}
+    assert {r.node: r.comp for r in res.state.collect()} == want
+    assert dict(final) == {u: c for u, c in want.items() if u != c}
+
+
+def _nmf_rounds(cells, rank, iterations):
+    """Lee-Seung updates from nmf's deterministic init: per iteration H
+    from W, then W from the new H."""
+    ks = range(rank)
+    w = {r: [1.0 + ((r * 7 + f * 3) % 5) * 0.1 for f in ks] for r, _c, _v in cells}
+    h = {c: [1.0 + ((c * 11 + f * 5) % 7) * 0.1 for f in ks] for _r, c, _v in cells}
+
+    def half(fixed, upd, key):
+        gram = [[sum(x[a] * x[b] for x in fixed.values()) for b in ks] for a in ks]
+        num = {}
+        for cell in cells:
+            a, b = (cell[0], cell[1]) if key == 1 else (cell[1], cell[0])
+            acc = num.setdefault(b, [0.0] * rank)
+            for f in ks:
+                acc[f] += fixed[a][f] * cell[2]
+        return {
+            k: [x[f] * num[k][f] / sum(gram[f][j] * x[j] for j in ks) for f in ks]
+            for k, x in upd.items()
+        }
+
+    for _ in range(iterations):
+        h = half(w, h, 1)
+        w = half(h, w, 0)
+    return w, h
+
+
+def test_nmf_job_budget_and_factors(spark):
+    # two rounds per iteration, one job each, plus the ratings count and
+    # the state0 checkpoint; the factors are the Lee-Seung updates'
+    _x0, matrix = _power_inputs(spark)
+    cells = [(r.r, r.c, r.v) for r in matrix.collect()]
+    for iterations in (1, 3):
+        (w, h), jobs = _jobs_of(
+            spark, f"nmf_jobcount_{iterations}",
+            lambda iterations=iterations: nmf(matrix, iterations=iterations),
+        )
+        assert 2 * iterations <= jobs <= 2 * iterations + 2, f"{iterations}: {jobs} jobs"
+        want_w, want_h = _nmf_rounds(cells, 2, iterations)
+        for got, want, key, val in ((w, want_w, "r", "w"), (h, want_h, "c", "h")):
+            rows = got.collect()
+            assert len(rows) == 2 * len(want), key
+            for row in rows:
+                x = want[row[key]][row.f]
+                assert abs(row[val] - x) <= 1e-9 * abs(x), (key, row)

@@ -444,13 +444,11 @@ def _spmv_delta_oracle() -> str:
 def incr_spmv_delta1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .iterative import _spmv_matrix
 
-    m = _spmv_matrix(spark, sf_dir).persist()
-    x0 = (
-        m.select(F.col("c").alias("i"))
-        .distinct()
-        .select("i", F.lit(1.0).alias("x"))
-        .persist()
-    )
+    # no caches: the result is returned lazily, so a cache could be
+    # released only after the caller collects; the repeated subplans share
+    # their exchanges instead
+    m = _spmv_matrix(spark, sf_dir)
+    x0 = m.select(F.col("c").alias("i")).distinct().select("i", F.lit(1.0).alias("x"))
     # preserve run: y = A·x plus per-row cell count (the vanish detector)
     y1 = (
         m.join(x0, m.c == x0.i)
@@ -668,14 +666,12 @@ def streaming_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_dir = os.path.join(tmp, "delta")
     # two delta files -> two micro-batches (one refresh each); the '+' and
     # '-' sets touch disjoint source keys, so batch order doesn't matter
-    (
+    plus = (
         o.where(F.col("o_orderdate").cast("date") >= cutoff)
         .select("o_custkey", "o_orderkey", "o_totalprice")
         .withColumn("op", F.lit("+"))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(delta_dir)
     )
+    plus.coalesce(1).write.mode("append").parquet(delta_dir)
     (
         base.where(F.col("o_orderkey") % 97 == 0)
         .select("o_custkey", "o_orderkey", "o_totalprice")
@@ -684,9 +680,9 @@ def streaming_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("append")
         .parquet(delta_dir)
     )
-    schema = spark.read.parquet(delta_dir).schema
+    # the written rows' own schema: no schema-inference job
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(plus.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(delta_dir)
     )
@@ -712,7 +708,13 @@ def streaming_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "streaming_refresh_orders: stream did not drain within 300s"
         )
-    return holder["state"].results
+    # the last refresh's state stays cached by streaming_refresh: keep its
+    # results as a checkpoint and release both caches
+    final = holder["state"]
+    results = final.results.localCheckpoint(eager=True)
+    final.contribs.unpersist()
+    final.results.unpersist()
+    return results
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,8 @@ replicated to every task, mirroring GlobalUniqValueWritable.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -49,22 +50,62 @@ from ..registry import register
 from ..session import scoped_conf
 
 
-def _cache(df: DataFrame) -> tuple[DataFrame, DataFrame | None]:
-    """``df`` persisted, and the cache this call owns: None when the caller
-    had already persisted it. persist/unpersist are not refcounted, so
-    releasing a cache the caller owns would silently drop theirs and every
-    later use would recompute it."""
-    level = df.storageLevel
-    if level.useMemory or level.useDisk:
-        return df, None
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df, df
+@contextlib.contextmanager
+def _loop_setup(spark: SparkSession) -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """The setup scope of a loop operator: ``with _loop_setup(spark) as
+    keep:`` yields ``keep(df)``, which persists ``df`` unless the caller
+    already has and returns it. The scope releases every cache ``keep``
+    made on exit, also when the loop raises, and never one the caller owns:
+    persist/unpersist are not refcounted, so releasing the caller's cache
+    would silently drop it and every later use would recompute it.
 
+    The scope plans without AQE, like the loop (see ``iterate``): a
+    non-adaptive cached plan is filled inside the state0 checkpoint and
+    reports its hash partitioning, so the loop's first job computes the
+    static side and round 1 reads it in place. An adaptive one would run
+    jobs of its own and hide its layout from the loop's joins."""
+    owned: list[DataFrame] = []
 
-def _release(*cached: DataFrame | None) -> None:
-    for df in cached:
-        if df is not None:
+    def keep(df: DataFrame) -> DataFrame:
+        level = df.storageLevel
+        if level.useMemory or level.useDisk:
+            return df
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        owned.append(df)
+        return df
+
+    try:
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            yield keep
+    finally:
+        for df in owned:
             df.unpersist()
+
+
+def _symmetrize(edges: DataFrame, n: int) -> DataFrame:
+    """(src, dst) plus the flipped edges, deduplicated in ONE exchange:
+    repartition by src, then dedup within the src-hash partitions, which
+    co-locate equal rows. A union+distinct+repartition pays two |2E|
+    shuffles."""
+    flipped = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return (
+        edges.select("src", "dst")
+        .union(flipped)
+        .repartition(n, "src")
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def _matvec(static: DataFrame, x: DataFrame) -> DataFrame:
+    """A·x as (i, x): ``static`` (r, c, v) is hash(c, n) and ``x`` (i, x)
+    hash(i, n), so the join reads both in place; the hint keeps a small
+    vector from being broadcast, which would be a job of its own."""
+    return (
+        static.join(x.hint("shuffle_hash"), F.col("c") == F.col("i"))
+        .select("r", (F.col("v") * F.col("x")).alias("px"))
+        .groupBy(F.col("r").alias("i"))
+        .agg(F.sum("px").alias("x"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -127,63 +168,55 @@ def pagerank(
     if threshold is not None and prune_below is not None:
         raise ValueError("pass threshold OR prune_below, not both")
     spark = edges.sparkSession
-    edge_cache = static = nodes = None
-    try:
-        # the loop plans without AQE (see iterate()), and so does its
-        # setup: non-adaptive cached plans report their hash(src, n) /
-        # hash(node, n) layout before they are materialized, so the state0
-        # checkpoint computes the edge pipeline and both invariants in one
-        # job and round 1 reads them in place
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-            if num_partitions is not None:
-                n = num_partitions
-            elif init_state is not None:
-                # a planning call, no job
-                n = clamp_partitions(spark, init_state.rdd.getNumPartitions())
-            else:
-                # the edges are cached only when they are counted, so that
-                # static is built from the cache instead of recomputing the
-                # caller's pipeline
-                edges, edge_cache = _cache(edges)
-                n = negotiate_partitions(edges)
-            # static side: adjacency + out-degree in ONE exchange — the
-            # repartition provides the hash distribution the degree window
-            # needs, so deg comes from a within-partition sort instead of a
-            # groupBy shuffle + join. Skew: a hot src key costs one task
-            # O(f) — linear, and the same row placement the co-partitioned
-            # loop join needs anyway; see bench/PLANS.md "pagerank degree
-            # computation" for the salted-fallback criterion before trading
-            # away the shared exchange.
-            static = (
-                edges.repartition(n, "src")
-                .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-                .persist(StorageLevel.MEMORY_AND_DISK)
+    with _loop_setup(spark) as keep:
+        if num_partitions is not None:
+            n = num_partitions
+        elif init_state is not None:
+            # a planning call, no job
+            n = clamp_partitions(spark, init_state.rdd.getNumPartitions())
+        else:
+            # the edges are cached only when they are counted, so that
+            # static is built from the cache instead of recomputing the
+            # caller's pipeline
+            edges = keep(edges)
+            n = negotiate_partitions(edges)
+        # static side: adjacency + out-degree in ONE exchange — the
+        # repartition provides the hash distribution the degree window
+        # needs, so deg comes from a within-partition sort instead of a
+        # groupBy shuffle + join. Skew: a hot src key costs one task
+        # O(f) — linear, and the same row placement the co-partitioned
+        # loop join needs anyway; see bench/PLANS.md "pagerank degree
+        # computation" for the salted-fallback criterion before trading
+        # away the shared exchange.
+        static = keep(
+            edges.repartition(n, "src").withColumn(
+                "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
             )
-            # node set in ONE exchange — explode both endpoints of static,
-            # repartition by node, dedup WITHIN the node-hash partitions
-            # (hash(node) already co-locates equal nodes, so the
-            # dropDuplicates adds no second exchange)
-            nodes = (
-                static.select(
-                    F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-                )
-                .repartition(n, "node")
-                .dropDuplicates(["node"])
-                .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # node set in ONE exchange — explode both endpoints of static,
+        # repartition by node, dedup WITHIN the node-hash partitions
+        # (hash(node) already co-locates equal nodes, so the
+        # dropDuplicates adds no second exchange)
+        nodes = keep(
+            static.select(
+                F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
             )
-            if init_state is not None:
-                # the loop runs at state0's partitioning: bring the prior
-                # ranks to nodes' hash(node, n), which plans to nothing when
-                # a previous loop's state already has it; the hint keeps a
-                # small prior state from being broadcast (a job of its own)
-                init_state = init_state.repartition(n, "node").hint("shuffle_hash")
-                # warm start: keep prior ranks for surviving nodes, 1.0 for
-                # new ones
-                state0 = nodes.join(init_state, "node", "left").select(
-                    "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
-                )
-            else:
-                state0 = nodes.select("node", F.lit(1.0).alias("rank"))
+            .repartition(n, "node")
+            .dropDuplicates(["node"])
+        )
+        if init_state is not None:
+            # the loop runs at state0's partitioning: bring the prior
+            # ranks to nodes' hash(node, n), which plans to nothing when
+            # a previous loop's state already has it; the hint keeps a
+            # small prior state from being broadcast (a job of its own)
+            init_state = init_state.repartition(n, "node").hint("shuffle_hash")
+            # warm start: keep prior ranks for surviving nodes, 1.0 for
+            # new ones
+            state0 = nodes.join(init_state, "node", "left").select(
+                "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
+            )
+        else:
+            state0 = nodes.select("node", F.lit(1.0).alias("rank"))
 
         # the round-invariant pieces of both steps, built once per call:
         # each Column or DataFrame built costs the driver a Py4J round trip
@@ -262,9 +295,6 @@ def pagerank(
             threshold=threshold or 0.0,
             observe_counts=observe_counts,
         )
-    finally:
-        # the final state is already materialized by iterate()
-        _release(static, nodes, edge_cache)
     if distance is None:
         result.state = result.state.select("node", "rank")
     return result
@@ -439,17 +469,12 @@ def sssp(
     ``run_to_fixpoint=False`` drops the stop test: exactly
     ``max_iterations`` rounds."""
     spark = edges.sparkSession
-    edge_cache = static = None
-    try:
-        # planned without AQE, like the loop: the caches are then filled
-        # inside the jobs that first read them (see pagerank)
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-            edges, edge_cache = _cache(edges)
-            n = negotiate_partitions(edges)
-            static = edges.repartition(n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    with _loop_setup(spark) as keep:
+        edges = keep(edges)
+        n = negotiate_partitions(edges)
         # static is hash(src, n): a shuffle join reads it in place, where a
         # broadcast would cost a job of its own every round
-        static_hinted = static.hint("shuffle_hash")
+        static = keep(edges.repartition(n, "src")).hint("shuffle_hash")
         state0 = (
             init_state
             if init_state is not None
@@ -459,7 +484,7 @@ def sssp(
         def step(state: DataFrame, i: int) -> DataFrame:
             prev = state.select("node", F.col("dist").alias("_prev"))
             relaxed = (
-                static_hinted.join(state, F.col("src") == F.col("node"))
+                static.join(state, F.col("src") == F.col("node"))
                 .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
                 .groupBy("dst")
                 .agg(F.min("cand").alias("cand"))
@@ -491,8 +516,6 @@ def sssp(
             ),
             threshold=0.0,
         )
-    finally:
-        _release(static, edge_cache)
     result.state = result.state.drop("changed")
     return result
 
@@ -727,13 +750,6 @@ def sssp_invalidate_affected(
     u = state.select(F.col("node").alias("src"), F.col("dist").alias("_du"))
     v = state.select(F.col("node").alias("dst"), F.col("dist").alias("_dv"))
     supports = (F.col("_du") + F.col("w")) <= F.col("_dv")
-    support = (
-        kept_edges.join(u, "src")
-        .join(v, "dst")
-        .where(supports)
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
     seeds = (
         deleted_edges.join(u, "src")
         .join(v, "dst")
@@ -741,20 +757,23 @@ def sssp_invalidate_affected(
         .select(F.col("dst").alias("node"), F.lit(True).alias("new"))
         .distinct()
     )
-
-    def step(affected: DataFrame, i: int) -> DataFrame:
-        frontier = affected.where("new")
-        heads = (
-            support.join(frontier, support.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(affected, "node", "left_anti")
-        )
-        return affected.select("node", F.lit(False).alias("new")).unionByName(
-            heads.select("node", F.lit(True).alias("new"))
+    with _loop_setup(state.sparkSession) as keep:
+        support = keep(
+            kept_edges.join(u, "src").join(v, "dst").where(supports).select("src", "dst")
         )
 
-    try:
+        def step(affected: DataFrame, i: int) -> DataFrame:
+            frontier = affected.where("new")
+            heads = (
+                support.join(frontier, support.src == frontier.node)
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(affected, "node", "left_anti")
+            )
+            return affected.select("node", F.lit(False).alias("new")).unionByName(
+                heads.select("node", F.lit(True).alias("new"))
+            )
+
         res = iterate(
             seeds,
             step,
@@ -762,8 +781,6 @@ def sssp_invalidate_affected(
             observed_distance=F.count_if("new"),
             threshold=0.0,
         )
-    finally:
-        support.unpersist()
     if not res.converged:
         # A silently truncated closure would leave stale lower-bound
         # distances — exactly what this pass exists to prevent. Fail loudly;
@@ -879,27 +896,24 @@ def incr_sssp_delete3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.min("l_quantity").alias("w"))
         return fwd.unionByName(rev)
 
-    base_e = _bip(pre).persist(StorageLevel.MEMORY_AND_DISK)
-    warm = sssp(
-        base_e, source=0, max_iterations=_SSSP_DEL_BASE_ROUNDS,
-        run_to_fixpoint=False,
-    )
-    # preserved-state snapshot boundary (see incr_sssp_warm3)
-    d = warm.state.localCheckpoint(eager=True)
-    deleted = base_e.where((F.col("src") + F.col("dst")) % 7 == 0)
-    kept = base_e.where((F.col("src") + F.col("dst")) % 7 != 0).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    adds = _bip(post).join(kept, ["src", "dst"], "left_anti")
-    new_edges = kept.unionByName(adds)
-    affected = sssp_invalidate_affected(kept, deleted, d)
-    state0 = d.join(affected, "node", "left_anti").localCheckpoint(eager=True)
-    res = sssp(
-        new_edges, source=0, max_iterations=_SSSP_DEL_WARM_ROUNDS,
-        run_to_fixpoint=False, init_state=state0,
-    )
-    base_e.unpersist()
-    kept.unpersist()
+    with _loop_setup(spark) as keep:
+        base_e = keep(_bip(pre))
+        warm = sssp(
+            base_e, source=0, max_iterations=_SSSP_DEL_BASE_ROUNDS,
+            run_to_fixpoint=False,
+        )
+        # preserved-state snapshot boundary (see incr_sssp_warm3)
+        d = warm.state.localCheckpoint(eager=True)
+        deleted = base_e.where((F.col("src") + F.col("dst")) % 7 == 0)
+        kept = keep(base_e.where((F.col("src") + F.col("dst")) % 7 != 0))
+        adds = _bip(post).join(kept, ["src", "dst"], "left_anti")
+        new_edges = kept.unionByName(adds)
+        affected = sssp_invalidate_affected(kept, deleted, d)
+        state0 = d.join(affected, "node", "left_anti").localCheckpoint(eager=True)
+        res = sssp(
+            new_edges, source=0, max_iterations=_SSSP_DEL_WARM_ROUNDS,
+            run_to_fixpoint=False, init_state=state0,
+        )
     return res.state.select("node", F.round("dist", 6).alias("dist"))
 
 
@@ -912,28 +926,15 @@ def spmv(matrix: DataFrame, vector: DataFrame, iterations: int) -> IterationResu
     reference blocks the matrix (ONE2MUL, MatrixVector.java:93-147); in Spark
     coordinate form + hash shuffle on the join key is the same data movement
     without bespoke block codecs. One job per round on iterate()."""
-    matrix_cache = static = None
-    try:
-        # planned without AQE, like the loop: the caches are then filled
-        # inside the jobs that first read them (see pagerank)
-        with scoped_conf(matrix.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-            matrix, matrix_cache = _cache(matrix)
-            n = negotiate_partitions(matrix)
-            static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
-
-        def step(state: DataFrame, i: int) -> DataFrame:
-            # static is hash(c, n) and the state hash(i, n); the hint keeps
-            # a small vector from being broadcast (a job of its own)
-            return (
-                static.join(state.hint("shuffle_hash"), F.col("c") == F.col("i"))
-                .select("r", (F.col("v") * F.col("x")).alias("px"))
-                .groupBy(F.col("r").alias("i"))
-                .agg(F.sum("px").alias("x"))
-            )
-
-        return iterate(vector.repartition(n, "i"), step, max_iterations=iterations)
-    finally:
-        _release(static, matrix_cache)
+    with _loop_setup(matrix.sparkSession) as keep:
+        matrix = keep(matrix)
+        n = negotiate_partitions(matrix)
+        static = keep(matrix.repartition(n, "c"))
+        return iterate(
+            vector.repartition(n, "i"),
+            lambda state, i: _matvec(static, state),
+            max_iterations=iterations,
+        )
 
 
 _SPMV_MATRIX_SQL = """
@@ -1033,10 +1034,6 @@ def lloyd(
     recomputes each center as the per-dimension mean (:413-458) and its
     movement ``mov`` against the old center, whose maximum is the observed
     distance. Empty clusters drop out, like a SQL mean over an empty group."""
-    # a cache planned without AQE is filled inside the first job that
-    # reads it, the state0 checkpoint; an adaptive one runs jobs of its own
-    with scoped_conf(points.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-        points, points_cache = _cache(points)
     # the round-invariant Columns, built once: a higher-order expression
     # costs the driver tens of Py4J round trips
     assign = _assigner()
@@ -1063,7 +1060,8 @@ def lloyd(
         prev = old.withColumnRenamed("cvec", "old").hint("shuffle_hash")
         return new.join(prev, "cid").select("cid", "cvec", moved)
 
-    try:
+    with _loop_setup(points.sparkSession) as keep:
+        points = keep(points)
         return iterate(
             centers,
             step,
@@ -1071,8 +1069,6 @@ def lloyd(
             observed_distance=F.max("mov"),
             threshold=tol,
         )
-    finally:
-        _release(points_cache)
 
 
 def _assigner() -> Callable[[DataFrame, DataFrame], DataFrame]:
@@ -1515,27 +1511,13 @@ def connected_components(
     rounds instead of O(diameter). Nodes absent from ``init_labels`` start
     at their own id. Edge deletions would need a recompute (a component
     can split)."""
-    spark = edges.sparkSession
-    edge_cache = sym = None
-    try:
-        # the setup plans without AQE, like the loop: its caches are then
-        # filled inside the jobs that first read them (see pagerank)
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-            # the symmetrize-union references edges twice: an expensive
-            # upstream (e.g. a near-dup pair pipeline) evaluates once
-            edges, edge_cache = _cache(edges)
-            n = negotiate_partitions(edges)
-            # symmetrize in ONE exchange: repartition by src, then dedup
-            # within the src-hash partitions, which co-locate equal rows.
-            # The node set below does the same by node.
-            flipped = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            sym = (
-                edges.select("src", "dst")
-                .union(flipped)
-                .repartition(n, "src")
-                .dropDuplicates(["src", "dst"])
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
+    with _loop_setup(edges.sparkSession) as keep:
+        # the symmetrize-union references edges twice: an expensive
+        # upstream (e.g. a near-dup pair pipeline) evaluates once
+        edges = keep(edges)
+        n = negotiate_partitions(edges)
+        sym = keep(_symmetrize(edges, n))
+        # the node set dedups within the node-hash partitions the same way
         endpoint_nodes = sym.select(F.col("src").alias("node"))
         all_nodes = (
             (
@@ -1582,8 +1564,6 @@ def connected_components(
             observed_distance=F.count_if("chg"),
             threshold=0.0,
         )
-    finally:
-        _release(sym, edge_cache)
     res.state = res.state.select("node", "comp")
     return res
 
@@ -1629,17 +1609,12 @@ def connected_components_star(
     LAST rounds, by which point the edge set is already collapsed to one
     row per non-root node). The labeling is materialized before the
     function returns, so the caller's edge plan is evaluated once."""
-    spark = edges.sparkSession
-    edge_cache = None
-    try:
-        # planned without AQE, like the loop: the edge cache is then filled
-        # inside the count that sizes the loop (see pagerank)
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-            # the caller's edge plan can be expensive (e.g. a verified
-            # near-dup pair join) and is referenced by BOTH the oriented
-            # edge set and the node universe
-            edges, edge_cache = _cache(edges)
-            n = negotiate_partitions(edges)
+    with _loop_setup(edges.sparkSession) as keep:
+        # the caller's edge plan can be expensive (e.g. a verified
+        # near-dup pair join) and is referenced by BOTH the oriented
+        # edge set and the node universe
+        edges = keep(edges)
+        n = negotiate_partitions(edges)
         # orient (u > v), drop self-loops; distinct because the rewrite
         # rules are set-semantics (the convergence probe relies on it)
         state0 = (
@@ -1718,14 +1693,11 @@ def connected_components_star(
             .groupBy("node")
             .agg(F.min("comp").alias("comp"))
         )
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-            res.state = (
-                all_nodes.join(parents, "node", "left")
-                .select("node", F.coalesce("comp", F.col("node")).alias("comp"))
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        _release(edge_cache)
+        res.state = (
+            all_nodes.join(parents, "node", "left")
+            .select("node", F.coalesce("comp", F.col("node")).alias("comp"))
+            .localCheckpoint(eager=True)
+        )
     return res
 
 
@@ -1749,14 +1721,10 @@ def power_iteration(
     One job per round on iterate(), whose observed metric is the ∞-norm of
     the round's product A·x. The state is that product: the next round, and
     the returned x, divide it by that norm inside the plan."""
-    matrix_cache = static = None
-    try:
-        # planned without AQE, like the loop: the caches are then filled
-        # inside the jobs that first read them (see pagerank)
-        with scoped_conf(matrix.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-            matrix, matrix_cache = _cache(matrix)
-            n = negotiate_partitions(matrix)
-            static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
+    with _loop_setup(matrix.sparkSession) as keep:
+        matrix = keep(matrix)
+        n = negotiate_partitions(matrix)
+        static = keep(matrix.repartition(n, "c"))
         inf_norm = F.max(F.abs(F.col("x")))
         # iterate() reports the norms after the loop; a round needs the one
         # before it now, so the step observes it as well
@@ -1767,15 +1735,7 @@ def power_iteration(
             if seen:
                 x = state.select("i", (F.col("x") / F.lit(seen[-1].get["m"])).alias("x"))
             seen.append(Observation())
-            # static is hash(c, n) and the state hash(i, n); the hint keeps
-            # a small vector from being broadcast (a job of its own)
-            return (
-                static.join(x.hint("shuffle_hash"), F.col("c") == F.col("i"))
-                .select("r", (F.col("v") * F.col("x")).alias("px"))
-                .groupBy(F.col("r").alias("i"))
-                .agg(F.sum("px").alias("x"))
-                .observe(seen[-1], inf_norm.alias("m"))
-            )
+            return _matvec(static, x).observe(seen[-1], inf_norm.alias("m"))
 
         res = iterate(
             x0.repartition(n, "i"),
@@ -1784,8 +1744,6 @@ def power_iteration(
             observed_distance=inf_norm,
             threshold=float("-inf"),
         )
-    finally:
-        _release(static, matrix_cache)
     x = res.state.select("i", (F.col("x") / F.lit(res.distances[-1])).alias("x"))
     return x, res.distances
 
@@ -1870,18 +1828,13 @@ def nmf(
     import operator
     from functools import reduce
 
-    spark = ratings.sparkSession
     ks = list(range(rank))
     xs = [f"x{f}" for f in ks]
-    ratings_cache = v_r = v_c = None
-    try:
-        # planned without AQE, like the loop: the caches are then filled
-        # inside the jobs that first read them (see pagerank)
-        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-            ratings, ratings_cache = _cache(ratings)
-            n = negotiate_partitions(ratings)
-            v_r = ratings.repartition(n, "r").persist(StorageLevel.MEMORY_AND_DISK)
-            v_c = v_r.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
+    with _loop_setup(ratings.sparkSession) as keep:
+        ratings = keep(ratings)
+        n = negotiate_partitions(ratings)
+        v_r = keep(ratings.repartition(n, "r"))
+        v_c = keep(v_r.repartition(n, "c"))
 
         def start(side, v, key, init, mul, add, mod):
             # ``init`` (long format) warm-starts the factor — the
@@ -1944,8 +1897,6 @@ def nmf(
             return fixed.unionByName(new.select(F.lit(side).alias("side"), "k", *update))
 
         res = iterate(state0, step, max_iterations=2 * iterations)
-    finally:
-        _release(ratings_cache, v_r, v_c)
 
     def long(side: str, key: str) -> DataFrame:
         cells = F.array(
@@ -2131,27 +2082,27 @@ uh0 AS (
     "Output = final W (r, f, w).",
 )
 def incr_nmf_delta2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _spmv_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    # the preserved factors: projections of the base loop's stored state
-    warm_w, warm_h = nmf(m, rank=2, iterations=2)
-    removals = m.where((F.col("r") + F.col("c")) % 11 == 0).withColumn(
-        "op", F.lit("-")
-    )
-    additions = (
-        m.where((F.col("r") + F.col("c")) % 13 == 0)
-        .select(
-            ((F.col("r") * 7 + 3) % 500).alias("r"),
-            ((F.col("c") * 3 + 1) % 500).alias("c"),
-            F.lit(1.5).alias("v"),
+    with _loop_setup(spark) as keep:
+        m = keep(_spmv_matrix(spark, sf_dir))
+        # the preserved factors: projections of the base loop's stored state
+        warm_w, warm_h = nmf(m, rank=2, iterations=2)
+        removals = m.where((F.col("r") + F.col("c")) % 11 == 0).withColumn(
+            "op", F.lit("-")
         )
-        .withColumn("op", F.lit("+"))
-    )
-    delta = removals.unionByName(additions)
-    minus = delta.where(F.col("op") == "-").select("r", "c")
-    plus = delta.where(F.col("op") == "+").drop("op")
-    updated = m.join(minus, ["r", "c"], "left_anti").unionByName(plus)
-    w, _h = nmf(updated, rank=2, iterations=2, init_w=warm_w, init_h=warm_h)
-    m.unpersist()
+        additions = (
+            m.where((F.col("r") + F.col("c")) % 13 == 0)
+            .select(
+                ((F.col("r") * 7 + 3) % 500).alias("r"),
+                ((F.col("c") * 3 + 1) % 500).alias("c"),
+                F.lit(1.5).alias("v"),
+            )
+            .withColumn("op", F.lit("+"))
+        )
+        delta = removals.unionByName(additions)
+        minus = delta.where(F.col("op") == "-").select("r", "c")
+        plus = delta.where(F.col("op") == "+").drop("op")
+        updated = m.join(minus, ["r", "c"], "left_anti").unionByName(plus)
+        w, _h = nmf(updated, rank=2, iterations=2, init_w=warm_w, init_h=warm_h)
     return w.select("r", F.col("f").cast("int").alias("f"),
                     F.round("w", 6).alias("w"))
 
@@ -2198,8 +2149,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # no cache: the result is returned lazily, so a cache could be released
+    # only after the caller collects; the three uses of und share its
+    # exchange instead
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     wedges = e1.join(e2, e1.y == e2.y2).select("x", "y", "z")
@@ -2254,21 +2207,25 @@ def iteration_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import write_iteration_snapshot
     from .incremental import _cleanup_at_exit
 
-    m = _spmv_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    x = m.select(F.col("c").alias("i")).distinct().select(
-        "i", F.lit(1.0).alias("x")
-    )
     base = tempfile.mkdtemp(prefix="iter_snapshots_")
     _cleanup_at_exit(base, "")
-    try:
+    with _loop_setup(spark) as keep:
+        m = keep(_spmv_matrix(spark, sf_dir))
+        x = m.select(F.col("c").alias("i")).distinct().select(
+            "i", F.lit(1.0).alias("x")
+        )
         # one spmv() round per snapshot: iteration=<it> holds the state
         # after round it
         for it in (1, 2):
             x = spmv(m, x, iterations=1).state
             write_iteration_snapshot(x, base, it)
-    finally:
-        m.unpersist()
-    back = spark.read.parquet(base).where(F.col("iteration") == 2)
+    # the written state's schema plus the partition column: no
+    # schema-inference job on the read-back
+    back = (
+        spark.read.schema(x.schema.add("iteration", "integer"))
+        .parquet(base)
+        .where(F.col("iteration") == 2)
+    )
     return back.select("i", F.round("x", 6).alias("x"))
 
 
@@ -2462,28 +2419,16 @@ def _lpa(
     Plan per round: the sym⋈state join, ONE aggregation exchange for the
     neighbor-label counts and the argmax, and the state left-join — argmax
     via max(struct(cnt, -label)), never a per-node window sort."""
-    edges, edge_cache = _cache(edges)
-    sym = None
-    try:
-        # pin the loop-invariant symmetrized edge list to a src-hash
-        # partitioning ONCE — without it every round's sym⋈state join
-        # re-exchanged all |2E| edge rows (measured: the edge re-shuffle was
-        # most of lpa_converged's 144 MB of shuffle writes at sf0.1); with
-        # it only the small per-round state/label relations move.
+    with _loop_setup(edges.sparkSession) as keep:
+        # the symmetrized edge list is pinned to hash(src, n) ONCE: without
+        # it every round's sym⋈state join re-exchanged all |2E| edge rows
+        # (measured: the edge re-shuffle was most of lpa_converged's 144 MB
+        # of shuffle writes at sf0.1); with it only the small per-round
+        # state/label relations move. The node set dedups within the same
+        # partitioning for free.
+        edges = keep(edges)
         n = negotiate_partitions(edges)
-        # symmetrize in ONE exchange — repartition by src first, then dedup
-        # within the src-hash partitions (hash(src) co-locates equal
-        # (src, dst) rows, so dropDuplicates adds no second exchange); a
-        # union+distinct+repartition pays two |2E| shuffles. The node set
-        # dedups within the same partitioning for free.
-        sym = (
-            edges.union(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(n, "src")
-            .dropDuplicates(["src", "dst"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        sym = keep(_symmetrize(edges, n))
         nodes = sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
         state0 = nodes.select(
             "node",
@@ -2515,11 +2460,13 @@ def _lpa(
             # partitions, so (dst,label) pairs stay mostly distinct
             # map-side even once labels converge; session-width n=32 lost
             # to the negotiated n (+3.6 MB, wall 25.6 vs 13.0 s median).
-            # Numbers in OPTIMIZATION_r14.md §3. The balance is
-            # scale-dependent: re-check the shuffle bytes if the converged
-            # workload moves to a larger SF or more max_iterations.
+            # The balance is scale-dependent: re-check the shuffle bytes
+            # if the converged workload moves to a larger SF or more
+            # max_iterations. Both joins are shuffle joins on the shared
+            # partitioning: a broadcast would cost a job of its own every
+            # round.
             nbr = (
-                sym.join(state, sym.src == state.node)
+                sym.join(state.hint("shuffle_hash"), F.col("src") == F.col("node"))
                 .select("dst", "label")
                 .repartition(n, "dst")
             )
@@ -2530,9 +2477,10 @@ def _lpa(
                 counts.groupBy("dst")
                 .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
                 .select("dst", (-F.col("w.nl")).alias("win"))
+                .hint("shuffle_hash")
             )
             return state.join(
-                winners, state.node == winners.dst, "left"
+                winners, F.col("node") == F.col("dst"), "left"
             ).select(
                 "node",
                 F.coalesce("win", "label").alias("label"),
@@ -2547,8 +2495,6 @@ def _lpa(
             observed_distance=observed_distance,
             threshold=0.0,
         )
-    finally:
-        _release(sym, edge_cache)
 
 
 # strictly-disjoint union: the natural part→supplier graph PLUS a planted

@@ -62,6 +62,8 @@ class IterationResult:
 # a loop's partition count is at least this, but never more than one task
 # wave of the session's cores or its shuffle partitions (clamp_partitions)
 PARTITION_FLOOR = 8
+# negotiate_partitions asks for one partition per this many rows
+ROWS_PER_PARTITION = 100_000
 # the loop's states: spill to disk rather than recompute a round
 _STORAGE = StorageLevel.MEMORY_AND_DISK
 
@@ -78,16 +80,16 @@ def clamp_partitions(spark: SparkSession, n: int) -> int:
     return max(floor, min(ceiling, n))
 
 
-def negotiate_partitions(df: DataFrame, *, rows_per_partition: int = 100_000) -> int:
+def negotiate_partitions(df: DataFrame) -> int:
     """Partition-count negotiation for loop relations — the reference does
     this at submit time (JobClient.java:913-957: block-size-driven counts,
     ONE2ONE forcing #maps==#reduces). One partition per
-    ``rows_per_partition`` rows, clamped by ``clamp_partitions``: small
+    ``ROWS_PER_PARTITION`` rows, clamped by ``clamp_partitions``: small
     loops run one task wave of the session's cores instead of paying
     per-task overhead every iteration, and the session default stays the
     ceiling for cluster-scale inputs. ``df`` should already be persisted —
     the count doubles as its materialization."""
-    return clamp_partitions(df.sparkSession, df.count() // rows_per_partition + 1)
+    return clamp_partitions(df.sparkSession, df.count() // ROWS_PER_PARTITION + 1)
 
 
 def l1_state_distance(

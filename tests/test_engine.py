@@ -483,3 +483,17 @@ def test_fused_updated_edges_match_delta_path(spark, sf_dir):
     fused = _pagerank_updated_edges_fused(spark, sf_dir)
     assert fused.exceptAll(general).count() == 0
     assert general.exceptAll(fused).count() == 0
+
+
+@pytest.mark.parametrize(
+    "name", ["graph_triangle_count", "incr_spmv_delta1", "streaming_refresh_orders"]
+)
+def test_registered_query_leaves_no_cache(spark, sf_dir, name):
+    # a cache left in the session after the result is collected holds
+    # memory for the rest of the session, and the query's next call finds
+    # its plan already cached
+    from incr_iter_hadoop_spark.registry import all_queries
+
+    spark.catalog.clearCache()
+    all_queries()[name].fn(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name

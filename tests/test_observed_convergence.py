@@ -6,10 +6,10 @@ prev⋈curr distance job. A regression doubles the per-iteration job count
 (and re-introduces a full-outer join over the state) on the most expensive
 headline query. Its setup is budgeted too: a warm start counts nothing and
 builds its invariants inside the loop's first checkpoint. k-means,
-connected components (min-label and star) and the power method run on the
-same observed loop, with their own job budgets and stop rules checked
-against Python loops. A loop with no stop test is the same loop, and is
-budgeted the same way (nmf's half-rounds among them).
+connected components (min-label and star), label propagation and the power
+method run on the same observed loop, with their own job budgets and stop
+rules checked against Python loops. A loop with no stop test is the same
+loop, and is budgeted the same way (nmf's half-rounds among them).
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from incr_iter_hadoop_spark.operators.iterative import (
     power_iteration,
     spmv,
     sssp,
+    sssp_invalidate_affected,
 )
 from incr_iter_hadoop_spark.plans.loopdriver import iterate, l1_state_distance
 from incr_iter_hadoop_spark.session import scoped_conf
@@ -233,6 +234,7 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
 
     edges = _delta_edges(spark)
     prior = _prior_ranks(spark)
+    dists = sssp(_weighted_edges(spark), 0).state
     before = cached_ids()
     with pytest.raises(ValueError, match="max_iterations"):
         pagerank(edges, max_iterations=0, threshold=1e-4)
@@ -266,6 +268,11 @@ def test_pagerank_releases_its_caches_when_the_loop_raises(spark, monkeypatch):
         ("power_iteration", lambda: power_iteration(matrix, x0, 3)),
         ("sssp", lambda: sssp(_weighted_edges(spark), 0)),
         ("sssp_bounded", lambda: sssp(_weighted_edges(spark), 0, run_to_fixpoint=False)),
+        ("sssp_invalidate_affected", lambda: sssp_invalidate_affected(
+            _weighted_edges(spark).where("src % 5 <> 0"),
+            _weighted_edges(spark).where("src % 5 = 0"),
+            dists,
+        )),
         ("spmv", lambda: spmv(matrix, x0, 3)),
         ("label_propagation", lambda: label_propagation(edges)),
         ("label_propagation_converged", lambda: label_propagation_converged(edges)),
@@ -603,6 +610,22 @@ def test_lpa_converged_stops_at_the_reference_round(spark):
     assert res.distances == [float(c) for c in rounds]
     got = {r.node: r.label for r in res.state.select("node", "label").collect()}
     assert got == labels
+
+
+def test_label_propagation_job_budget(spark):
+    # one job per round plus the setup: the edge count and the state0
+    # checkpoint, which fills the symmetrized edge cache. Neither of the
+    # step's joins may broadcast, which would be a job of its own every
+    # round.
+    for label, run in (
+        ("bounded", lambda: label_propagation(_edges(spark), max_iterations=3)),
+        ("converged", lambda: label_propagation_converged(_edges(spark))),
+    ):
+        res, jobs = _jobs_of(spark, f"lpa_jobcount_{label}", run)
+        assert res.iterations >= 3, label
+        assert res.iterations <= jobs <= res.iterations + 2, (
+            f"{label}: {jobs} jobs, {res.iterations} rounds"
+        )
 
 
 def _jobs_of(spark, group, run):

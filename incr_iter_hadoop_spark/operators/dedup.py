@@ -254,20 +254,22 @@ def _band_structs(bands: int, rows: int):
 def _banded_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int, bands: int
 ) -> tuple[DataFrame, DataFrame]:
-    """(shingle sets, banded LSH keys) — both persisted.
+    """(shingle sets, banded LSH keys) — both lazily checkpointed.
 
     The banded join references the signatures on BOTH sides, and without a
     materialization barrier Catalyst inlines the 128-expression agg subtree
     into every branch of the downstream joins — the optimizer then spends
     minutes on the exploded plan (measured 464s → ~12s at sf0.1 with the
-    persists)."""
+    barriers). The barriers are local checkpoints, not caches: the result
+    is returned lazily, so no one could release a cache after it is read,
+    and a checkpoint's blocks are freed when its DataFrame is dropped."""
     rows = num_hashes // bands
-    sets = shingle_sets(df, id_col, text_col).persist()
-    sigs = minhash_signatures(sets, num_hashes).persist()
+    sets = shingle_sets(df, id_col, text_col).localCheckpoint(eager=False)
     banded = (
-        sigs.select("id", F.explode(_band_structs(bands, rows)).alias("bb"))
+        minhash_signatures(sets, num_hashes)
+        .select("id", F.explode(_band_structs(bands, rows)).alias("bb"))
         .select("id", "bb.band", "bb.bucket")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     return sets, banded
 
@@ -292,11 +294,12 @@ def minhash_lsh_pairs(
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    # eager materialization: the verify join then plans against the cached
-    # candidate/shingle leaves instead of re-optimizing the full signature
-    # tree (measured 67s → 18s at sf0.1 for the SimHash variant)
+    # eager materialization: the verify join then plans against the
+    # checkpointed candidate/shingle leaves instead of re-optimizing the
+    # full signature tree (measured 67s → 18s at sf0.1 for the SimHash
+    # variant)
     n_cands = cands.count()
     return _verify_pairs(cands, sets, threshold, n_cands=n_cands)
 
@@ -333,7 +336,7 @@ def minhash_lsh_pairs_incr(
             F.greatest("a.id", "b.id").alias("j"),
         )
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     n_cands = cands.count()  # eager: see minhash_lsh_pairs
     return _verify_pairs(cands, sets, threshold, n_cands=n_cands)
@@ -380,7 +383,7 @@ def simhash_pairs(
     ``n_blocks`` 8-bit blocks (pigeonhole: catches hamming ≤ n_blocks−1),
     then exact-Jaccard verified."""
     bits_per_block = 64 // n_blocks
-    sets = shingle_sets(df, id_col, text_col).persist()
+    sets = shingle_sets(df, id_col, text_col).localCheckpoint(eager=False)
     exploded = sets.select("id", F.explode("shingles").alias("sh")).select(
         "id", F.xxhash64("sh").alias("h")
     )
@@ -403,7 +406,7 @@ def simhash_pairs(
                 for b in range(n_blocks)
             ],
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     stacked = blocks.select(
         "id",
@@ -422,7 +425,7 @@ def simhash_pairs(
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     n_cands = cands.count()  # eager: see minhash_lsh_pairs
     return _verify_pairs(cands, sets, threshold, n_cands=n_cands)

@@ -2211,14 +2211,21 @@ def iteration_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cleanup_at_exit(base, "")
     with _loop_setup(spark) as keep:
         m = keep(_spmv_matrix(spark, sf_dir))
-        x = m.select(F.col("c").alias("i")).distinct().select(
+        n = negotiate_partitions(m)
+        static = keep(m.repartition(n, "c"))
+        x0 = m.select(F.col("c").alias("i")).distinct().select(
             "i", F.lit(1.0).alias("x")
         )
-        # one spmv() round per snapshot: iteration=<it> holds the state
-        # after round it
-        for it in (1, 2):
-            x = spmv(m, x, iterations=1).state
-            write_iteration_snapshot(x, base, it)
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            # iteration=<it> holds the state after round it: round i reads
+            # round i-1's checkpoint, so it writes that snapshot first
+            if i > 1:
+                write_iteration_snapshot(state, base, i - 1)
+            return _matvec(static, state)
+
+        x = iterate(x0.repartition(n, "i"), step, max_iterations=2).state
+        write_iteration_snapshot(x, base, 2)
     # the written state's schema plus the partition column: no
     # schema-inference job on the read-back
     back = (

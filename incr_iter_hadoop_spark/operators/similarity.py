@@ -702,11 +702,15 @@ def semantic_dedup(
     Returns (id, cell, c_sim, kept). Catalyst shape: centroids broadcast
     (tiny dim table), assignment one hash-agg, candidate pairs equi-join
     on cell, never a non-broadcast cartesian."""
-    # persist: the quantizer pass (scan + broadcast-centroid cross +
+    # checkpointed: the quantizer pass (scan + broadcast-centroid cross +
     # per-row argmax agg) feeds BOTH sides of the pair join AND the final
     # apply — without it Catalyst re-executes that subtree three times
-    # (seen in explain('formatted'); the incremental twin would pay 7x)
-    asgn = _semantic_assign(vectors, n_cells, id_col, vec_col).persist()
+    # (seen in explain('formatted'); the incremental twin would pay 7x).
+    # A lazy local checkpoint, not a cache: the result is returned lazily,
+    # so no one could release a cache after it is read.
+    asgn = _semantic_assign(vectors, n_cells, id_col, vec_col).localCheckpoint(
+        eager=False
+    )
     dropped = _semantic_drops(asgn, asgn, tau)
     return _semantic_apply(asgn, dropped, id_col)
 
@@ -930,9 +934,10 @@ _SEMDEDUP_NEW_MOD = 10  # delta = every 10th vector (held out of the base)
 )
 def incr_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread_scan(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    # checkpointed, not cached: see semantic_dedup
     asgn = _semantic_assign(
         emb, _SEMDEDUP_CELLS, "vec_id", "embedding"
-    ).persist()
+    ).localCheckpoint(eager=False)
     is_new = F.col("nid") % _SEMDEDUP_NEW_MOD == 0
     base, new = asgn.where(~is_new), asgn.where(is_new)
     tau = _SEMDEDUP_TAU
@@ -969,14 +974,14 @@ def cluster_balanced_sample(
     no product."""
     from .sampling import stratified_rank
 
-    # persist: the quantizer pass feeds the quota aggregate, the ranked
-    # side, AND stratified_rank's per-bucket counts — without it the
+    # checkpointed: the quantizer pass feeds the quota aggregate, the
+    # ranked side, AND stratified_rank's per-bucket counts — without it the
     # scan + broadcast-centroid map is planned three times (the same
-    # measured fix as semantic_dedup's assignment reuse)
+    # measured fix, and the same checkpoint, as semantic_dedup's)
     asgn = (
         _semantic_assign(vectors, n_cells, id_col, vec_col)
         .select("nid", "cell")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     quotas = (
         asgn.groupBy("cell")

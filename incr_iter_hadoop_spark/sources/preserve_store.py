@@ -58,20 +58,17 @@ schema-inference job.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..session import scoped_conf
 from . import occ
 
-_META = "meta.json"
 # max #affected group keys collected to the driver for isin() pushdown; above
 # this the store falls back to a co-bucketed semi-join (still exchange-free
 # on the store side). The reference does one point lookup per delta key, so a
@@ -81,51 +78,26 @@ DEFAULT_INLINE_KEYS = 5000
 # min/max range pushdown only (parquet-mr evaluates the or() chain
 # recursively — ~1500 values overflows the executor stack)
 _PUSHDOWN_IN_MAX = 200
-# idempotence tokens retained for this many trailing versions (replays only
-# ever target the most recent uncommitted batch; see refresh)
-_TOKEN_KEEP = 8
 _NULL_KEYS = (
     "PreserveStore.refresh: delta contains NULL group keys; "
     "NULL groups cannot be tracked by the layered store"
 )
 
 
-def _schema_ddl(df: DataFrame) -> str:
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-
-class PreserveStore:
+class PreserveStore(occ.StoreCore):
     """A named, versioned preserve store rooted at ``path``.
 
     ``agg_sql`` maps output column name -> SQL aggregate expression over the
     contribution columns (stored in the metadata so a fresh session can
     re-derive results without Python state).
 
-    CONCURRENCY CONTRACT: single writer, many readers —
-    enforced optimistically at every mutation's atomic meta commit
-    (flock-guarded compare + staged-data publish + meta replace,
-    ``occ.commit_meta``); of two concurrent writers exactly one wins and
-    the loser raises ``ConcurrentWriteError`` with the store unharmed —
-    its staged data can never land on a committed version name. Readers
-    never block and never observe partial commits. Token-carrying
-    mutations are safely retried via ``occ.retrying`` (the streaming
-    sinks do this), idempotent under replay.
+    Single writer, many readers; commits, idempotence tokens and vacuum
+    follow ``occ.StoreCore``'s contract.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        stage_retention_sec: float | None = None,
-    ):
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        self._meta: dict | None = None
-        # vacuum/sweep retention for in-flight staged artifacts:
-        # None → occ.STAGE_RETENTION_SEC; see Scd2Store.__init__
-        self.stage_retention_sec = stage_retention_sec
+    _TABLE_PREFIX = "preserve"
+    _KEYS = "group_keys"
+    _TOKENS = "refresh_tokens"
 
     # Spark's planner silently falls back to a plain file scan when it judges
     # bucketing "not useful" — which also drops BUCKET PRUNING, the store's
@@ -133,57 +105,6 @@ class PreserveStore:
     # everything else is never touched). refresh()/compact() pin bucketed
     # scans on for their own internal reads via ``scoped_conf``.
     _BUCKETED_SCAN_CONF = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-
-    # -- metadata ----------------------------------------------------------
-
-    def exists(self) -> bool:
-        return os.path.isfile(os.path.join(self.path, _META))
-
-    @property
-    def meta(self) -> dict:
-        if self._meta is None:
-            with open(os.path.join(self.path, _META)) as f:
-                self._meta = json.load(f)
-        return self._meta
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, _META)
-
-    def _occ_begin(self) -> int | None:
-        """Begin a mutation (single-writer OCC): drop the cached
-        meta so the operation reads the CURRENT committed state, and
-        capture the on-disk commit sequence the commit will be validated
-        against (``_write_meta(..., expect=...)``). Same contract as
-        ``Scd2Store`` — see ``sources/occ.py``."""
-        self._meta = None
-        return occ.disk_seq(self._meta_path())
-
-    def _write_meta(
-        self,
-        meta: dict,
-        *,
-        expect: int | None,
-        op: str = "PreserveStore",
-        publish=None,
-    ) -> int:
-        """Atomic commit point with the OCC compare step: of two
-        concurrent writers exactly one wins; the loser raises
-        ``ConcurrentWriteError`` instead of silently clobbering the
-        winner's version bump. Returns the new commit sequence. The whole
-        compare+stamp+replace runs under the store's ``flock`` with a
-        unique per-writer tmp file (``occ.commit_meta``); ``publish``
-        renames this mutation's STAGED data directories onto their final
-        version names inside the same critical section."""
-        seq = occ.commit_meta(
-            meta,
-            self._meta_path(),
-            expect,
-            op,
-            publish,
-            retention_sec=self.stage_retention_sec,
-        )
-        self._meta = meta
-        return seq
 
     @property
     def group_keys(self) -> list[str]:
@@ -205,34 +126,30 @@ class PreserveStore:
     # -- base tables (bucketed external parquet) ---------------------------
 
     def _table_name(self, which: str, era: int | None = None) -> str:
-        # catalog-safe, stable per store path so re-registration is
-        # idempotent; the slug alone is not injective across paths
-        # (/tmp/a-b vs /tmp/a_b), so a short hash of the raw path keeps
-        # distinct stores from clobbering each other's catalog entries
         era = int(self.meta["base_version"]) if era is None else era
-        slug = re.sub(r"[^0-9a-zA-Z]+", "_", self.path).strip("_").lower()
-        tag = hashlib.md5(self.path.encode()).hexdigest()[:8]
-        return f"preserve_{slug}_{tag}_{which}_v{era}"
+        return self._catalog_name(f"{which}_v{era}")
 
     def _base_path(self, which: str, era: int | None = None) -> str:
         era = int(self.meta["base_version"]) if era is None else era
         return os.path.join(self.path, f"base_v{era}", which)
 
     def _base(self, which: str, era: int | None = None) -> DataFrame:
-        """Base table as a *bucketed* scan, re-registering the external table
-        DDL when this session has never seen it (cross-session reload — the
-        bucketing spec lives in the catalog, not the files)."""
-        name = self._table_name(which, era)
-        if not self.spark.catalog.tableExists(name):
-            m = self.meta
-            keys = ", ".join(f"`{k}`" for k in m["group_keys"])
-            self.spark.sql(
-                f"CREATE TABLE {name} ({m['schema_ddl'][which]}) USING PARQUET"
-                f" CLUSTERED BY ({keys}) SORTED BY ({keys})"
-                f" INTO {m['num_buckets']} BUCKETS"
-                f" LOCATION '{self._base_path(which, era)}'"
+        return self._bucketed_table(
+            self._table_name(which, era),
+            self.meta["schema_ddl"][which],
+            self._base_path(which, era),
+        )
+
+    def _stage_base(self, era: int, stage_root: str, meta: dict, **sides) -> None:
+        """Stage the bucketed base sides of ``era`` under ``stage_root``,
+        and drop any catalog entries left at their final names (they may
+        carry the wrong schema or bucketing; reads re-register from
+        committed meta)."""
+        for which, df in sides.items():
+            self._stage_bucketed(
+                df, os.path.join(stage_root, which), self._table_name(which, era), meta
             )
-        return self.spark.table(name)
+            self._drop_tables(self._table_name(which, era))
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -249,14 +166,10 @@ class PreserveStore:
         results as the version-0 base. One full shuffle — paid exactly
         once.
 
-        Same staged single-commit discipline as every other mutation (a
-        meta committed before unstaged base writes would let a crash
-        between them leave a committed store whose lazy table
-        registration silently serves an empty base): both bases write
-        into one unique staging directory and the rename onto
-        ``base_v0`` happens inside the meta commit's critical section. A crash mid-write leaves ``exists() == False``
-        with only a ``.stage-*`` orphan; a concurrent initialize loser
-        cannot clobber the winner's published base."""
+        Both bases write into one staging directory renamed onto
+        ``base_v0`` by the commit (a meta committed before unstaged base
+        writes would let a crash between them leave a committed store
+        whose lazy table registration silently serves an empty base)."""
         v0 = self._occ_begin()
         results = contribs.groupBy(*group_keys).agg(
             *[F.expr(sql).alias(name) for name, sql in agg_sql.items()]
@@ -269,26 +182,16 @@ class PreserveStore:
             "version": 0,
             "base_version": 0,
             "schema_ddl": {
-                "contribs": _schema_ddl(contribs),
-                "results": _schema_ddl(results),
-                "affected": _schema_ddl(contribs.select(*group_keys)),
+                "contribs": self._schema_ddl(contribs),
+                "results": self._schema_ddl(results),
+                "affected": self._schema_ddl(contribs.select(*group_keys)),
             },
             # era -> layer count of RETIRED (compacted-away) eras still on
             # disk; readers pinned to an old era keep working until vacuum()
             "retired": {},
         }
-        stage_root = os.path.join(self.path, occ.stage_name("base_v0"))
-        self._meta = meta  # _stage_base/_table_name read this meta
-        try:
-            self._stage_base("contribs", contribs, stage_root)
-            self._stage_base("results", results, stage_root)
-            # stale catalog entries from a previous store at this path
-            # must not survive the publish (they may carry the wrong
-            # schema/bucketing); reads re-register from committed meta
-            for which in ("contribs", "results"):
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._table_name(which)}"
-                )
+        with self._staged("base_v0") as stage_root:
+            self._stage_base(0, stage_root, meta, contribs=contribs, results=results)
             self._write_meta(
                 meta,
                 expect=v0,
@@ -297,10 +200,6 @@ class PreserveStore:
                     stage_root, os.path.join(self.path, "base_v0")
                 ),
             )
-        except BaseException:
-            self._meta = None
-            shutil.rmtree(stage_root, ignore_errors=True)
-            raise
         return self
 
     # -- layered reads -----------------------------------------------------
@@ -488,15 +387,11 @@ class PreserveStore:
         (ReduceTask.java:3324-3500).
 
         ``token``: idempotence handle for at-least-once callers (a retried
-        orchestrator task, a replayed ``foreachBatch`` micro-batch; the
-        ``Scd2Store.apply_era`` analogue). Recorded in the SAME meta
-        write as the version bump — one atomic commit — so a replayed
-        refresh with a seen token is a no-op returning the version it
-        committed, never a double-application of the delta. Tokens survive
-        ``compact()`` (the application is folded into the new base; the
-        recorded version then refers to the retired era) and are pruned
-        past a ``_TOKEN_KEEP``-version retention window so the meta commit
-        stays O(1) over an unbounded refresh stream.
+        orchestrator task, a replayed ``foreachBatch`` micro-batch): a
+        replayed refresh with a seen token is a no-op returning the version
+        it committed (``occ.StoreCore``). Tokens survive ``compact()`` (the
+        application is folded into the new base; the recorded version then
+        refers to the retired era).
 
         ``max_layers``: LSM-style cadence — when the layer count reaches it
         after this refresh, ``compact()`` folds everything into a fresh base
@@ -508,10 +403,9 @@ class PreserveStore:
         # here at its current value so the exit restores BOTH to the
         # session's prior settings (no session-global leaks).
         v0 = self._occ_begin()
-        if token is not None:
-            seen = self.meta.get("refresh_tokens", {})
-            if token in seen:
-                return int(seen[token])
+        seen = self._seen_token(token)
+        if seen is not None:
+            return seen
         with scoped_conf(
             self.spark,
             {
@@ -554,19 +448,9 @@ class PreserveStore:
         final_parent = os.path.join(self.path, f"layers/b{bv}/v{v}")
         meta = dict(self.meta)
         meta["version"] = v
-        if token is not None:
-            # bounded retention (see Scd2Store._TOKEN_KEEP rationale):
-            # replays only target the most recent uncommitted batch, and an
-            # unpruned map would make every commit rewrite O(total-refreshes)
-            # of meta.json. Version numbers reset at compact, which can only
-            # over-retain (never drop a within-window token).
-            tokens = {
-                t: ver
-                for t, ver in meta.get("refresh_tokens", {}).items()
-                if int(ver) > v - _TOKEN_KEEP
-            }
-            tokens[token] = v
-            meta["refresh_tokens"] = tokens
+        # version numbers reset at compact, which can only over-retain
+        # tokens (never drop a within-window one)
+        self._record_token(meta, token, v)
         delta = delta.persist()
         cached = [delta]
         # one try/finally for staging and caching: a refresh that raises
@@ -687,84 +571,29 @@ class PreserveStore:
         retired = dict(meta.get("retired", {}))
         retired[str(old_base_version)] = old_version
         meta["retired"] = retired
-        # stage the NEW base under a unique directory before flipping meta:
-        # a crash leaves the old base intact and only a .stage
-        # orphan; the rename onto base_v<n+1> happens inside the commit's
-        # critical section, so a losing compact can never clobber a
-        # committed base of the same number
-        stage_root = os.path.join(
-            self.path, occ.stage_name(f"base_v{new_base_version}")
-        )
-        self._meta = meta  # _stage_base/_table_name read the new version
-        self._stage_base("contribs", contribs, stage_root)
-        self._stage_base("results", results, stage_root)
-        final_root = os.path.join(self.path, f"base_v{new_base_version}")
-        # stale catalog entries for the new version's names (a crashed
-        # pre-staging attempt) must not survive the publish — drop BEFORE
-        # the commit; readers lazily re-register from committed meta
-        for which in ("contribs", "results"):
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self._table_name(which)}"
+        # the new base is staged before the commit: a crash leaves the old
+        # base intact, and a losing compact can never clobber a committed
+        # base of the same number
+        with self._staged(f"base_v{new_base_version}") as stage_root:
+            self._stage_base(
+                new_base_version, stage_root, meta, contribs=contribs, results=results
             )
-        try:
             self._write_meta(
                 meta,
                 expect=occ_expect,
                 op="PreserveStore.compact",
-                publish=lambda: occ.publish_dir(stage_root, final_root),
+                publish=lambda: occ.publish_dir(
+                    stage_root, os.path.join(self.path, f"base_v{new_base_version}")
+                ),
             )
-        except BaseException:
-            # the cached meta above is UNCOMMITTED — if the OCC compare (or
-            # the write itself) fails, drop it so subsequent reads on this
-            # object re-read the committed state instead of silently
-            # serving the orphan base (which lacks the winner's commit)
-            self._meta = None
-            shutil.rmtree(stage_root, ignore_errors=True)
-            raise
-
-    def _stage_base(
-        self, which: str, df: DataFrame, stage_root: str
-    ) -> str:
-        """Bucketed base write into a staging subdirectory:
-        ``bucketBy`` requires ``saveAsTable``, so the write goes through a
-        throwaway catalog name pointed at the staging path (dropped
-        immediately — the final location is lazily re-registered from
-        meta by ``_base`` after the commit renames it into place)."""
-        m = self.meta
-        staging = os.path.join(stage_root, which)
-        stage_tbl = (
-            f"{self._table_name(which)}_stg"
-            f"{hashlib.md5(staging.encode()).hexdigest()[:8]}"
-        )
-        return occ.stage_bucketed(
-            self.spark,
-            df,
-            int(m["num_buckets"]),
-            m["group_keys"],
-            staging,
-            stage_tbl,
-        )
 
     def vacuum(self, retain_sec: float = 0.0) -> None:
         """Delete every retired era's base + layers and drop their catalog
         registrations. Call once no reader still needs pre-compaction
         versions — retired eras are a full state snapshot each, so leaving
-        them forever leaks O(|state|) disk per compaction.
-
-        COMMIT FIRST, DELETE AFTER: the OCC compare must precede the
-        irreversible deletes — a vacuum losing the race to a concurrent
-        refresh/compact fails with NOTHING deleted. The delete phase is a
-        disk-scan sweep of every era directory the committed meta no
-        longer references (``_sweep_orphans``), so a crash between
-        the commit and the deletes is healed by the next ``vacuum()``
-        instead of leaking disk forever. Same ordering and sweep contract
-        as ``Scd2Store.vacuum``; ``retain_sec`` is the Delta
-        ``VACUUM ... RETAIN`` discipline — unreferenced era artifacts
-        stay on disk until ``retain_sec`` has elapsed since a retaining
-        sweep FIRST saw them unreferenced (``occ.retention_clock``; age
-        runs from retirement, not dir mtime), so a vacuum loop can run
-        while readers still hold plans over just-retired eras (0 =
-        reclaim immediately, the quiesced-caller contract)."""
+        them forever leaks O(|state|) disk per compaction. Commits first
+        and deletes after (``occ.StoreCore``); ``retain_sec`` keeps
+        just-retired eras for readers still holding plans over them."""
         v0 = self._occ_begin()
         if self.meta.get("retired", {}):
             meta = dict(self.meta)
@@ -772,85 +601,24 @@ class PreserveStore:
             self._write_meta(meta, expect=v0, op="PreserveStore.vacuum")
         self._sweep_orphans(retain_sec)
 
-    def _sweep_orphans(self, retain_sec: float = 0.0) -> None:
-        """Reclaim every era directory the COMMITTED meta does not
-        reference: ``base_v<e>`` / ``layers/b<e>`` where ``e`` is
-        neither the live base version nor a retired-but-still-readable
-        era. Covers both the crashed-vacuum residue (retired cleared in
-        meta, directories still on disk) and a crashed ``compact()``'s
-        half-written next base (a retry rewrites it). Orphans are
-        invisible to readers — deleting them needs no commit.
-
-        Runs UNDER the store's commit lock with a fresh meta read (a
-        concurrent commit's just-published directories can never be
-        mistaken for orphans); ``.stage-*`` directories are reclaimed
-        only past the stage retention window (``stage_retention_sec`` /
-        ``occ.STAGE_RETENTION_SEC``) — inside the window they may be an
-        in-flight mutation's live staging. Where ``flock`` is
-        unavailable the same window gates FINAL-POSITIONED unreferenced
-        era directories too (``occ.final_is_sweepable``): lock-free, an
-        unreferenced ``base_v<e>`` / ``layers/b<e>`` may be a concurrent
-        refresh/compact's just-published data whose meta replace hasn't
-        landed, and sweeping it would make that writer's commit land on
-        deleted files."""
-        ret = self.stage_retention_sec
-
-        def _sweep_stage(p: str) -> None:
-            if not occ.stage_is_young(p, ret):
-                shutil.rmtree(p, ignore_errors=True)
-
-        with occ.store_lock(self.path):
-            self._meta = None  # the committed meta as of THIS lock hold
-            keep = {int(self.meta["base_version"])} | {
-                int(e) for e in self.meta.get("retired", {})
-            }
-            for d in os.listdir(self.path):
-                if d.startswith(".stage-"):
-                    _sweep_stage(os.path.join(self.path, d))
-                    continue
-                m = re.fullmatch(r"base_v(\d+)", d)
-                if not m or int(m.group(1)) in keep:
-                    continue
-                if not occ.final_is_sweepable(
-                    os.path.join(self.path, d), ret
-                ):
-                    continue
-                if not occ.retention_clock(
-                    os.path.join(self.path, d), retain_sec
-                ):
-                    continue  # VACUUM RETAIN: in-flight readers (clock
-                    # runs from first-sight-as-unreferenced)
-                era = int(m.group(1))
-                for which in ("contribs", "results"):
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS "
-                        f"{self._table_name(which, era)}"
-                    )
-                shutil.rmtree(
-                    os.path.join(self.path, d), ignore_errors=True
-                )
-            lroot = os.path.join(self.path, "layers")
-            if os.path.isdir(lroot):
-                for d in os.listdir(lroot):
-                    m = re.fullmatch(r"b(\d+)", d)
-                    if d.startswith(".stage-"):
-                        _sweep_stage(os.path.join(lroot, d))
-                    elif (
-                        m
-                        and int(m.group(1)) not in keep
-                        and occ.final_is_sweepable(
-                            os.path.join(lroot, d), ret
-                        )
-                        and occ.retention_clock(
-                            os.path.join(lroot, d), retain_sec
-                        )
-                    ):
-                        shutil.rmtree(
-                            os.path.join(lroot, d), ignore_errors=True
-                        )
-                    elif m:
-                        # refresh staging lives INSIDE the live era's dir
-                        bdir = os.path.join(lroot, d)
-                        for sub in os.listdir(bdir):
-                            if sub.startswith(".stage-"):
-                                _sweep_stage(os.path.join(bdir, sub))
+    def _orphan_tables(self, rel: str) -> list[str] | None:
+        """``base_v<e>`` and ``layers/b<e>`` are referenced while ``e`` is
+        the live era or a retired, still-readable one. Lock-free, an
+        unreferenced one may be a concurrent writer's just-published data
+        (``occ.final_is_sweepable``). Refresh staging lives inside the
+        live era's ``layers/b<e>``."""
+        m = re.fullmatch(r"(base_v|layers/b)(\d+)", rel)
+        if not m:
+            return None
+        era = int(m.group(2))
+        if (
+            era == int(self.meta["base_version"])
+            or str(era) in self.meta.get("retired", {})
+            or not occ.final_is_sweepable(
+                os.path.join(self.path, rel), self.stage_retention_sec
+            )
+        ):
+            return None
+        if m.group(1) == "layers/b":
+            return []
+        return [self._table_name(which, era) for which in ("contribs", "results")]

@@ -1,6 +1,5 @@
 """SCD Type-2 dimension store: the preserve-store layer mechanism applied
-to versioned dimensions (round-6 unification of I6 with the r5 SCD2
-operator).
+to versioned dimensions (I6 applied to the SCD2 operator).
 
 ``operators/incremental.py:scd2_apply`` is a pure transformation — it
 versions a dimension inside one plan but persists nothing, so history was
@@ -24,12 +23,11 @@ mapred/IFile.java:478-1100 — re-expressed as immutable layers):
   close with a semi-join; deriving it keeps layers strictly append-only,
   which is what makes the commit trivial.)
 - **The meta era bump is the atomic commit point** (the preserve store's
-  version-bump discipline), and since r9 the layer write itself targets a
-  UNIQUE STAGING directory renamed onto ``layers/e<N>`` inside the same
-  commit critical section (``occ.commit_meta``): a crash before the
-  commit leaves only an invisible ``.stage-*`` orphan (reclaimed by
-  ``vacuum()``), and a concurrent loser's data files physically cannot
-  land on a committed era name.
+  version-bump discipline): the layer write targets a UNIQUE STAGING
+  directory renamed onto ``layers/e<N>`` inside the commit
+  (``occ.StoreCore``), so a crash before the commit leaves only an
+  invisible ``.stage-*`` orphan and a concurrent loser's data files
+  cannot land on a committed era name.
 - **Time travel for free**: ``history_as_of(era)`` folds base + layers
   1..era; every committed era stays readable forever (layers are
   immutable and never compacted away — an SCD2 history IS its layers).
@@ -44,110 +42,28 @@ filter (see ``scd2_point_in_time_join``), hash-joinable at any scale.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import re
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import occ
 
-_META = "meta.json"
-# idempotence tokens retained for this many trailing eras/versions (replays
-# only ever target the most recent uncommitted batch; see apply_era)
-_TOKEN_KEEP = 8
 
-
-def _schema_ddl(df: DataFrame) -> str:
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-
-
-class Scd2Store:
+class Scd2Store(occ.StoreCore):
     """On-disk SCD Type-2 history: era-layered, crash-consistent,
     time-traveling. One instance per store path; safe to re-open across
     sessions (meta.json carries the schema and bucketing spec).
 
-    CONCURRENCY CONTRACT (r8, hardened r9): single writer, many readers.
-    The contract is ENFORCED optimistically — every mutation validates at
-    its atomic meta commit (flock-guarded compare + staged-data publish +
-    meta replace, ``occ.commit_meta``) that no other writer advanced the
-    store since the mutation began, and the loser raises
-    ``ConcurrentWriteError`` with the store unharmed: its staged data can
-    never land on a committed era name. Readers never block and never
-    observe partial commits. A loser can always re-run against fresh
-    state — wrap token-carrying mutations in ``occ.retrying`` (the
+    Single writer, many readers; commits, idempotence tokens and vacuum
+    follow ``occ.StoreCore``'s contract. A loser can always re-run against
+    fresh state — wrap token-carrying mutations in ``occ.retrying`` (the
     streaming sinks do) and the retry is idempotent under replay."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        stage_retention_sec: float | None = None,
-    ):
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        self._meta: dict | None = None
-        # vacuum/sweep retention for in-flight staged artifacts (r10):
-        # None → occ.STAGE_RETENTION_SEC. Widen for stores whose
-        # mutations stage for longer than the default window (a sweep
-        # must never reclaim a LIVE writer's staging); narrow in
-        # tests/ops that need fast residue reclamation.
-        self.stage_retention_sec = stage_retention_sec
-
-    # -- metadata (same atomic-replace discipline as PreserveStore) --------
-
-    def exists(self) -> bool:
-        return os.path.isfile(os.path.join(self.path, _META))
-
-    @property
-    def meta(self) -> dict:
-        if self._meta is None:
-            with open(os.path.join(self.path, _META)) as f:
-                self._meta = json.load(f)
-        return self._meta
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, _META)
-
-    def _occ_begin(self) -> int | None:
-        """Begin a mutation (single-writer OCC, round 8): drop the cached
-        meta so the operation reads the CURRENT committed state, and
-        capture the on-disk commit sequence the commit will be validated
-        against (``_write_meta(..., expect=...)``)."""
-        self._meta = None
-        return occ.disk_seq(self._meta_path())
-
-    def _write_meta(
-        self,
-        meta: dict,
-        *,
-        expect: int | None,
-        op: str = "Scd2Store",
-        publish=None,
-    ) -> None:
-        """Atomic commit point with the OCC compare step: if another
-        writer committed since ``expect`` was captured at ``_occ_begin``,
-        raise ``ConcurrentWriteError`` instead of silently clobbering the
-        winner's era (exactly-one-of-two-writers-wins contract; pinned by
-        tests/test_store_adversarial.py). The whole compare+stamp+replace
-        runs under the store's ``flock`` with a unique per-writer tmp
-        file (``occ.commit_meta``, r9), so the round-8 microsecond
-        compare-vs-replace window is closed on POSIX filesystems.
-        ``publish`` renames this mutation's STAGED data directories onto
-        their final era names inside the same critical section — see
-        ``occ.commit_meta``."""
-        occ.commit_meta(
-            meta,
-            self._meta_path(),
-            expect,
-            op,
-            publish,
-            retention_sec=self.stage_retention_sec,
-        )
-        self._meta = meta
+    _TABLE_PREFIX = "scd2"
+    _KEYS = "key_cols"
+    _TOKENS = "era_tokens"
 
     @property
     def key_cols(self) -> list[str]:
@@ -177,14 +93,7 @@ class Scd2Store:
     # -- storage -----------------------------------------------------------
 
     def _table_name(self, gen: int = 0) -> str:
-        # the slug alone is NOT injective (/tmp/a-b and /tmp/a_b collide,
-        # as do case-differing paths) and initialize() DROPs the name —
-        # a short hash of the raw path makes distinct stores distinct
-        # catalog entries (ADVICE r6)
-        slug = re.sub(r"[^0-9a-zA-Z]+", "_", self.path).strip("_").lower()
-        tag = hashlib.md5(self.path.encode()).hexdigest()[:8]
-        suffix = "base" if gen == 0 else f"snap{gen}"
-        return f"scd2_{slug}_{tag}_{suffix}"
+        return self._catalog_name("base" if gen == 0 else f"snap{gen}")
 
     def _base_path(self, gen: int = 0) -> str:
         return os.path.join(
@@ -207,17 +116,9 @@ class Scd2Store:
         )
 
     def _base(self, gen: int = 0) -> DataFrame:
-        name = self._table_name(gen)
-        if not self.spark.catalog.tableExists(name):
-            m = self.meta
-            keys = ", ".join(f"`{k}`" for k in m["key_cols"])
-            self.spark.sql(
-                f"CREATE TABLE {name} ({self._gen_ddl(gen)}) USING PARQUET"
-                f" CLUSTERED BY ({keys}) SORTED BY ({keys})"
-                f" INTO {m['num_buckets']} BUCKETS"
-                f" LOCATION '{self._base_path(gen)}'"
-            )
-        return self.spark.table(name)
+        return self._bucketed_table(
+            self._table_name(gen), self._gen_ddl(gen), self._base_path(gen)
+        )
 
     def _gen_for(self, era: int) -> int:
         """The newest committed snapshot generation ≤ ``era`` whose
@@ -232,7 +133,7 @@ class Scd2Store:
     def _layers_df(self, lo: int, hi: int) -> DataFrame | None:
         """Layers lo..hi as ONE multi-path scan with ``valid_from`` parsed
         from the layer directory name — constant plan size in era count
-        (r6; same contract as PreserveStore._layers)."""
+        (see ``PreserveStore._layers``)."""
         if hi < lo:
             return None
         paths = [self._layer_path(e) for e in range(lo, hi + 1)]
@@ -240,7 +141,7 @@ class Scd2Store:
         # unanchored leftmost match would pick up a "/layers/eN/"
         # segment from the STORE ROOT's own path (e.g. a store created
         # inside another store's layer dir) and stamp the wrong
-        # valid_from on every row with no error (ADVICE r6)
+        # valid_from on every row with no error
         # explicit schema (the CURRENT one): no inference listing, and
         # layers written before an additive evolution (or before delete
         # support) read their missing columns as NULL instead of whatever
@@ -298,16 +199,9 @@ class Scd2Store:
         """Era-0 snapshot: every dimension row becomes the open version
         ``[0, open_end)``. One bucketed shuffle — paid exactly once.
 
-        Same commit discipline as ``apply_era``: the base snapshot is
-        STAGED first (unique directory, throwaway catalog entry) and
-        renamed onto ``base`` inside the meta commit's critical section
-        (r9), so a crash mid-write leaves ``exists() == False`` with only
-        an invisible ``.stage-*`` orphan, and a concurrent initialize
-        loser can never clobber the winner's published base.
-
-        NULL key values are rejected (same contract as ``apply_era`` and
-        ``PreserveStore``): a NULL-keyed version can never be closed by the
-        key window nor matched by a point-in-time equi-join."""
+        NULL key values are rejected, as in ``apply_era`` and
+        ``PreserveStore.refresh``: a NULL-keyed version can never be closed
+        by the key window nor matched by a point-in-time equi-join."""
         v0 = self._occ_begin()
         null_pred = None
         for k in key_cols:
@@ -324,67 +218,22 @@ class Scd2Store:
             "num_buckets": num_buckets,
             "open_end": open_end,
             "era": 0,
-            "schema_ddl": _schema_ddl(dim),
+            "schema_ddl": self._schema_ddl(dim),
         }
-        staging = self._stage_bucketed(
-            dim, num_buckets, key_cols, tag="base"
-        )
-        # a stale catalog entry from a previous store at this path may
-        # carry the wrong schema/bucketing — drop it BEFORE the commit so
-        # no window exists where it could serve the new files with the
-        # old DDL; the first read re-registers from the committed meta
-        # (_base), whichever meta that turns out to be
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._table_name()}")
-        try:
+        with self._staged("base") as staging:
+            self._stage_bucketed(dim, staging, self._table_name(), meta)
+            # a stale catalog entry from a previous store at this path may
+            # carry the wrong schema/bucketing — drop it BEFORE the commit
+            # so no window exists where it could serve the new files with
+            # the old DDL; the first read re-registers from committed meta
+            self._drop_tables(self._table_name())
             self._write_meta(
                 meta,
                 expect=v0,
                 op="Scd2Store.initialize",
                 publish=lambda: occ.publish_dir(staging, self._base_path()),
             )
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
         return self
-
-    def _stage_bucketed(
-        self, df: DataFrame, n: int, keys: list[str], *, tag: str
-    ) -> str:
-        """Bucketed write into a UNIQUE STAGING directory (r9):
-        ``bucketBy`` requires ``saveAsTable``, so the write goes through a
-        throwaway catalog name pointed at the staging path and the entry
-        is dropped immediately (the bucketing spec survives in meta — the
-        final location is lazily re-registered by ``_base``). The O(data)
-        Spark work happens here, outside the commit lock; the O(1) rename
-        onto the final generation name happens inside the commit
-        (``occ.commit_meta``'s publish step), so these files can never
-        land on a committed name unless THIS mutation wins."""
-        staging = os.path.join(self.path, occ.stage_name(tag))
-        stage_tbl = (
-            f"{self._table_name()}_stg"
-            f"{hashlib.md5(staging.encode()).hexdigest()[:8]}"
-        )
-        return occ.stage_bucketed(
-            self.spark, df, n, keys, staging, stage_tbl
-        )
-
-    def _stage_layer(
-        self, changes: DataFrame, cols: list[str] | None = None
-    ) -> str:
-        """Layer write into a UNIQUE STAGING directory (r9) — the Spark
-        work runs outside the commit lock; the O(1) rename onto
-        ``layers/e<N>`` happens inside the commit (``occ.commit_meta``'s
-        publish step). Pre-r9 the write targeted the final era path
-        directly, so a loser whose write landed after the winner's commit
-        could clobber the winner's same-numbered layer; staged files can
-        never land on a committed name unless this mutation wins."""
-        staging = os.path.join(
-            self.path, "layers", occ.stage_name("layer")
-        )
-        changes.select(*(cols or self.meta["columns"])).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        return staging
 
     def apply_era(
         self,
@@ -440,10 +289,9 @@ class Scd2Store:
         bump — one atomic commit — so a replayed apply with a seen token
         returns the already-committed era instead of double-applying the
         changes as a phantom era. Pass the micro-batch id (see
-        ``streaming/incremental_stream.streaming_scd2_eras``). Retention is
-        bounded: tokens older than ``_TOKEN_KEEP`` eras are pruned at each
-        commit (replays only ever target the most recent uncommitted
-        batch), so the meta commit stays O(1) over an unbounded stream.
+        ``streaming/incremental_stream.streaming_scd2_eras``). Only the
+        tokens of the last ``_TOKEN_KEEP`` eras are kept
+        (``occ.StoreCore``).
 
         ``snapshot_every``: LSM-style cadence (the PreserveStore
         ``max_layers`` analogue) — when the layer count since the newest
@@ -457,16 +305,15 @@ class Scd2Store:
         atomic commit point — a crash before it leaves the history exactly
         at the previous era."""
         v0 = self._occ_begin()
-        if token is not None:
-            seen = self.meta.get("era_tokens", {})
-            if token in seen:
-                # the first attempt may have committed the era and then
-                # lost/crashed inside its cadence snapshot — re-check the
-                # cadence condition on this dedupe path too, so a replayed
-                # apply heals the skipped fold instead of returning with
-                # read depth above the requested cadence (ADVICE r9)
-                self._cadence_snapshot(snapshot_every)
-                return int(seen[token])
+        seen = self._seen_token(token)
+        if seen is not None:
+            # the first attempt may have committed the era and then
+            # lost/crashed inside its cadence snapshot — re-check the
+            # cadence condition on this dedupe path too, so a replayed
+            # apply heals the skipped fold instead of returning with read
+            # depth above the requested cadence
+            self._cadence_snapshot(snapshot_every)
+            return seen
         keys = self.key_cols
         cols = list(self.meta["columns"])
         missing = [c for c in cols if c not in changes.columns]
@@ -480,7 +327,7 @@ class Scd2Store:
         # tombstone marker — a changes batch smuggling '_tombstone' in
         # would otherwise be treated as a schema-evolution column, have
         # its values clobbered by the lit(False) below, and then crash
-        # the layer write with an opaque duplicate-column error (ADVICE r7)
+        # the layer write with an opaque duplicate-column error
         clash = {
             "valid_from", "valid_to", "is_current", "_tombstone"
         } & set(new_cols)
@@ -560,7 +407,6 @@ class Scd2Store:
                 ).withColumn("_tombstone", F.lit(True))
                 layer = layer.unionByName(tombs)
         e = self.era + 1
-        staging = self._stage_layer(layer, cols + new_cols + ["_tombstone"])
         meta = dict(self.meta)
         meta["era"] = e
         if new_cols:
@@ -568,43 +414,25 @@ class Scd2Store:
             meta["schema_ddl"] = (
                 meta["schema_ddl"]
                 + ", "
-                + _schema_ddl(changes.select(*new_cols))
+                + self._schema_ddl(changes.select(*new_cols))
             )
             # invalidate the session's catalog entries BEFORE the commit:
             # the next read re-creates them from the (then-committed)
             # evolved DDL; a crash in between re-creates from the old meta
-            # — consistent either way (the single-writer contract is now
-            # ENFORCED at the commit below: _write_meta's OCC compare
-            # fails any writer whose begin-state was superseded, r8)
-            for g in self.snaps:
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._table_name(g)}"
-                )
-        if token is not None:
-            # retain a bounded window of tokens: at-least-once callers only
-            # ever replay their MOST RECENT uncommitted batch, so tokens
-            # more than _TOKEN_KEEP eras old are dead weight that would
-            # otherwise make every atomic commit rewrite an O(total-eras)
-            # meta.json — the one artifact snapshot() can't bound
-            tokens = {
-                t: ver
-                for t, ver in meta.get("era_tokens", {}).items()
-                if int(ver) > e - _TOKEN_KEEP
-            }
-            tokens[token] = e
-            meta["era_tokens"] = tokens
-        try:
+            # — consistent either way (a writer whose begin-state was
+            # superseded fails at the commit's OCC compare)
+            self._drop_tables(*(self._table_name(g) for g in self.snaps))
+        self._record_token(meta, token, e)
+        with self._staged("layer", os.path.join(self.path, "layers")) as staging:
+            layer.select(*cols, *new_cols, "_tombstone").write.mode(
+                "overwrite"
+            ).parquet(staging)
             self._write_meta(
                 meta,
                 expect=v0,
                 op="Scd2Store.apply_era",
-                publish=lambda: occ.publish_dir(
-                    staging, self._layer_path(e)
-                ),
+                publish=lambda: occ.publish_dir(staging, self._layer_path(e)),
             )
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
         self._cadence_snapshot(snapshot_every)
         return e
 
@@ -612,7 +440,7 @@ class Scd2Store:
         """Fold when the layer count since the newest generation reaches
         the requested cadence. Runs AFTER the era commit (the fold is
         maintenance, not part of the era's atomicity) and is wrapped in
-        ``occ.retrying`` against FRESH state per attempt (ADVICE r9): a
+        ``occ.retrying`` against FRESH state per attempt: a
         snapshot losing an OCC race to a concurrent writer re-reads the
         committed meta, re-checks the cadence — a racing writer may have
         folded already, making this a no-op instead of the
@@ -654,7 +482,7 @@ class Scd2Store:
         committed): attribute columns + valid_from / valid_to / is_current.
 
         Reconstruction = generation base ∪ layers after it up to ``era``
-        (ONE multi-path scan — constant plan size in era count, r6), then
+        (ONE multi-path scan — constant plan size in era count), then
         one key-window derives ``valid_to`` as the next version's open era
         (``open_end`` if none) — identical semantics to chaining
         ``scd2_apply`` once per era (pinned by tests/test_scd2_store.py),
@@ -695,12 +523,11 @@ class Scd2Store:
         refreshes/year. Older eras keep reading from the previous
         generation (time travel survives a snapshot) until ``vacuum()``.
 
-        Same commit discipline as every other mutation: the new generation
-        is STAGED first and renamed onto ``base_s<era>`` inside the meta
-        commit's critical section (r9); a crashed snapshot leaves only an
-        invisible ``.stage-*`` (or, if it died between publish and the
-        meta replace, an uncommitted ``base_s<era>``) orphan that a retry
-        republishes over and ``vacuum()`` reclaims."""
+        The new generation is staged and renamed onto ``base_s<era>`` by
+        the commit; a crashed snapshot leaves only an invisible
+        ``.stage-*`` (or, if it died between publish and the meta replace,
+        an uncommitted ``base_s<era>``) orphan that a retry republishes
+        over and ``vacuum()`` reclaims."""
         v0 = self._occ_begin()
         era = self._check_era(era)
         if era in self.snaps:
@@ -713,35 +540,27 @@ class Scd2Store:
         h, layers = self._gen_pieces(era)
         if layers is not None:
             h = h.unionByName(layers)
-        m = self.meta
-        n = int(m["num_buckets"])
-        keys = self.key_cols
-        # tombstones fold into the generation unfiltered — they keep
-        # closing the versions they terminated
-        staging = self._stage_bucketed(
-            h.select(*m["columns"], "valid_from", "_tombstone"),
-            n,
-            keys,
-            tag=f"base_s{era}",
-        )
         meta = dict(self.meta)
         meta["snaps"] = sorted(set(self.snaps) | {era})
-        # drop a stale catalog entry for this generation name (e.g. from a
-        # pre-crash attempt) BEFORE the commit — no window may exist where
-        # an old entry serves the new files; reads re-register from meta
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._table_name(era)}")
-        try:
+        with self._staged(f"base_s{era}") as staging:
+            # tombstones fold into the generation unfiltered — they keep
+            # closing the versions they terminated
+            self._stage_bucketed(
+                h.select(*meta["columns"], "valid_from", "_tombstone"),
+                staging,
+                self._table_name(),
+                meta,
+            )
+            # drop a stale catalog entry for this generation name (e.g. from
+            # a pre-crash attempt) BEFORE the commit — no window may exist
+            # where an old entry serves the new files; reads re-register
+            self._drop_tables(self._table_name(era))
             self._write_meta(
                 meta,
                 expect=v0,
                 op="Scd2Store.snapshot",
-                publish=lambda: occ.publish_dir(
-                    staging, self._base_path(era)
-                ),
+                publish=lambda: occ.publish_dir(staging, self._base_path(era)),
             )
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
         return era
 
     def vacuum(self, retain_sec: float = 0.0) -> None:
@@ -750,33 +569,13 @@ class Scd2Store:
         folded into the newest generation, so no VERSION is lost — only
         the ability to read ``history_as_of(e)`` for e below the snapshot).
         Eras below the newest snapshot become unreadable and are rejected
-        loudly. Same rewrite-then-vacuum split as ``PreserveStore`` and
-        lakehouse table formats: ``snapshot()`` never deletes, so a reader
-        holding a plan over the old generation keeps its files until the
-        caller explicitly vacuums.
-
-        COMMIT FIRST, DELETE AFTER (r8): vacuum is the one mutation whose
-        side effects are irreversible, so the OCC compare must happen
-        before any file is touched — a vacuum losing the race to a
-        concurrent apply_era would otherwise destroy generations the
-        winner's committed meta still references. Committing first makes
-        the loser fail with NOTHING deleted. The delete phase is a
-        DISK-SCAN SWEEP of everything the committed meta does not
-        reference (``_sweep_orphans``, r9), not a precomputed list — so a
-        crash between the commit and the deletes is no longer a permanent
-        disk leak (the r8 residue): the next ``vacuum()`` re-derives the
-        same orphan set from disk and reclaims it.
-
-        ``retain_sec`` (r10 — the Delta ``VACUUM ... RETAIN`` discipline):
-        retired artifacts are left on disk until ``retain_sec`` has
-        elapsed since a retaining sweep FIRST saw them unreferenced
-        (``occ.retention_clock`` — age runs from retirement, not the
-        directory mtime: a generation written hours ago but retired one
-        second ago must still be protected), so a vacuum loop can run
-        CONCURRENTLY with readers/writers whose in-flight scans still
-        hold plans over a just-retired generation (a writer's own
-        cadence ``snapshot()`` read is such a scan). Default 0 keeps the
-        quiesced-caller contract: reclaim immediately."""
+        loudly. ``snapshot()`` never deletes, so a reader holding a plan
+        over the old generation keeps its files until the caller
+        explicitly vacuums. Commits first and deletes after
+        (``occ.StoreCore``); ``retain_sec`` keeps just-retired artifacts
+        for readers and writers whose in-flight scans still hold plans
+        over them (a writer's own cadence ``snapshot()`` read is such a
+        scan)."""
         v0 = self._occ_begin()
         newest = max(self.snaps)
         if self.snaps != [newest] or self.vacuumed_below < newest:
@@ -786,71 +585,25 @@ class Scd2Store:
             self._write_meta(meta, expect=v0, op="Scd2Store.vacuum")
         self._sweep_orphans(retain_sec)
 
-    def _sweep_orphans(self, retain_sec: float = 0.0) -> None:
-        """Reclaim every directory the COMMITTED meta no longer references
-        (r9): generation bases not in ``snaps`` (retired by a vacuum that
-        died between its commit and its deletes, or left by a crashed
-        ``snapshot()`` — a retry rewrites them from scratch) and layer
-        directories at or below ``vacuumed_below``. Orphans are invisible
-        to every reader — readers only follow meta — so deleting them
-        needs no commit and cannot race a reader onto missing files.
-
-        Runs UNDER the store's commit lock with a fresh meta read, so a
-        commit landing concurrently (e.g. a retrying writer between this
-        vacuum's own commit and its sweep) can never have its
-        just-published directories mistaken for orphans. ``.stage-*``
-        directories are reclaimed only past the stage retention window
-        (``stage_retention_sec`` / ``occ.STAGE_RETENTION_SEC``) — inside
-        the window they may be the LIVE staging of an in-flight mutation
-        whose commit is about to rename them into place. Where ``flock``
-        is unavailable the same retention window gates FINAL-POSITIONED
-        unreferenced directories too (``occ.final_is_sweepable``): with
-        the lock a no-op, an unreferenced ``base_s<g>`` may be a
-        concurrent snapshot's just-published generation whose meta
-        replace hasn't landed yet, and sweeping it would turn that
-        writer's commit into committed data loss (ADVICE r9)."""
-        ret = self.stage_retention_sec
-        with occ.store_lock(self.path):
-            self._meta = None  # the committed meta as of THIS lock hold
-            snaps = set(self.snaps)
-            vb = self.vacuumed_below
-            for d in os.listdir(self.path):
-                p = os.path.join(self.path, d)
-                if d.startswith(".stage-"):
-                    if not occ.stage_is_young(p, ret):
-                        shutil.rmtree(p, ignore_errors=True)
-                    continue
-                m = re.fullmatch(r"base_s(\d+)", d)
-                g = int(m.group(1)) if m else (0 if d == "base" else None)
-                if g is None or g in snaps:
-                    continue
-                if not occ.final_is_sweepable(p, ret):
-                    continue
-                if not occ.retention_clock(p, retain_sec):
-                    continue  # VACUUM RETAIN: in-flight readers may
-                    # still hold plans over this just-retired generation
-                    # (clock runs from first-sight-as-unreferenced, not
-                    # the dir mtime — r10 review)
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._table_name(g)}"
-                )
-                shutil.rmtree(p, ignore_errors=True)
-            lroot = os.path.join(self.path, "layers")
-            if os.path.isdir(lroot):
-                for d in os.listdir(lroot):
-                    p = os.path.join(lroot, d)
-                    m = re.fullmatch(r"e(\d+)", d)
-                    if d.startswith(".stage-"):
-                        if not occ.stage_is_young(p, ret):
-                            shutil.rmtree(p, ignore_errors=True)
-                    elif m and int(m.group(1)) <= vb:
-                        if not occ.retention_clock(p, retain_sec):
-                            continue  # VACUUM RETAIN (see above)
-                        # committed-and-vacuumed layers: safe without the
-                        # final_is_sweepable gate even lock-free — a
-                        # concurrent apply_era publishes era committed+1
-                        # > vacuumed_below, never a name at or below it
-                        shutil.rmtree(p, ignore_errors=True)
+    def _orphan_tables(self, rel: str) -> list[str] | None:
+        """Generation bases (``base``, ``base_s<g>``) are referenced while
+        ``g`` is in ``snaps``; lock-free, an unreferenced one may be a
+        concurrent snapshot's just-published generation
+        (``occ.final_is_sweepable``). Layers ``layers/e<N>`` at or below
+        ``vacuumed_below`` are orphans with no such gate: a concurrent
+        ``apply_era`` publishes era committed+1 > ``vacuumed_below``,
+        never a name at or below it."""
+        m = re.fullmatch(r"base(?:_s(\d+))?|layers/e(\d+)", rel)
+        if not m:
+            return None
+        if m.group(2) is not None:
+            return [] if int(m.group(2)) <= self.vacuumed_below else None
+        gen = int(m.group(1) or 0)
+        if gen in self.snaps or not occ.final_is_sweepable(
+            os.path.join(self.path, rel), self.stage_retention_sec
+        ):
+            return None
+        return [self._table_name(gen)]
 
     # -- point-in-time join ------------------------------------------------
 
@@ -889,9 +642,9 @@ class Scd2Store:
         no version, or whose era falls outside every version's range
         (e.g. negative), are dropped — inner PIT semantics.
 
-        ``era_cache`` (r14, VERDICT r13 ask #8 — for callers that join MANY
-        fact batches against the same committed era, e.g. each micro-batch
-        of ``streaming_pit_enrich``): a caller-owned dict this method uses
+        ``era_cache`` (for callers that join MANY fact batches against the
+        same committed era, e.g. each micro-batch of
+        ``streaming_pit_enrich``): a caller-owned dict this method uses
         to memoize the prepared history pieces (touched keys + cold/hot
         history as lazy ``localCheckpoint``s) keyed on the resolved era.
         Batch 0 materializes them through its own join; later batches at

@@ -153,7 +153,7 @@ def _stream_token(checkpoint_dir: str, batch_id: int) -> str:
     batch ids restart at 0 for every new checkpoint, so a fresh
     checkpoint/stream pointed at an EXISTING store would otherwise collide
     with retained tokens from the previous stream and silently skip its
-    first batches as replays (ADVICE r7). The checkpoint path is the one
+    first batches as replays. The checkpoint path is the one
     identifier that is (a) stable across restarts of the SAME logical
     stream — which is exactly when a replayed batch id must dedupe — and
     (b) necessarily different for a different stream."""
@@ -169,28 +169,29 @@ def _stream_token(checkpoint_dir: str, batch_id: int) -> str:
 def _legacy_collision(
     store, batch_id: int, *, legacy_token_compat: bool
 ) -> bool:
-    """Upgrade compat, made LOUD (ADVICE r8): a store written by a pre-r8
-    stream may hold this batch id under the LEGACY un-namespaced token
-    (``stream-batch-<id>``). Two streams are indistinguishable here: the
-    UPGRADED continuation of that pre-r8 stream replaying its in-flight
+    """Upgrade compat, made LOUD: a store written by a legacy stream
+    (from before tokens were namespaced) may hold this batch id under the
+    LEGACY un-namespaced token (``stream-batch-<id>``). Two streams are
+    indistinguishable here: the UPGRADED continuation of that legacy
+    stream replaying its in-flight
     batch (which must be skipped — it already committed), and a genuinely
     NEW stream whose fresh checkpoint restarts batch ids at 0 (which must
     NOT be skipped — that would silently drop its first batches, the
     exact data-loss bug namespaced tokens were built to fix). Only the
     operator knows which, so the default is to fail the query loudly;
     ``legacy_token_compat=True`` is the explicit attestation that this
-    stream resumes the pre-r8 checkpoint, making the skip safe. Legacy
+    stream resumes the legacy checkpoint, making the skip safe. Legacy
     tokens age out of the bounded retention window, after which this
     check is always False and the flag is inert."""
     if f"stream-batch-{batch_id}" not in store.meta.get("era_tokens", {}):
         return False
     if legacy_token_compat:
-        return True  # committed by the pre-r8 stream — skip the replay
+        return True  # committed by the legacy stream — skip the replay
     raise RuntimeError(
         f"micro-batch {batch_id} collides with a retained legacy "
-        f"(pre-r8, un-namespaced) idempotence token "
+        f"(un-namespaced) idempotence token "
         f"'stream-batch-{batch_id}' in store {store.path!r}. If this "
-        f"stream is the upgraded continuation of the pre-r8 stream that "
+        f"stream is the upgraded continuation of the legacy stream that "
         f"wrote the store (resuming its checkpoint), pass "
         f"legacy_token_compat=True to skip the already-committed batch; "
         f"if it is a NEW stream, let the legacy era_tokens age out of "
@@ -209,7 +210,7 @@ def streaming_scd2_eras(
     snapshot_every: int | None = None,
 ) -> StreamingQuery:
     """Maintain an on-disk ``Scd2Store`` from a stream of dimension-change
-    batches: each micro-batch commits as ONE era (round 7 — the streaming
+    batches: each micro-batch commits as ONE era (the streaming
     twin of ``Scd2Store.apply_era``, pairing SURVEY §2.9's micro-batch mode
     with the I6 store the way ``streaming_refresh`` pairs it with the
     preserve store).
@@ -222,18 +223,18 @@ def streaming_scd2_eras(
     double-applying the same changes as a phantom era. Tokens are
     namespaced by checkpoint location (``_stream_token``) so a NEW stream
     (fresh checkpoint, batch ids restarting at 0) against an existing
-    store never mistakes its first batches for replays (ADVICE r7); a
-    collision with a retained LEGACY pre-r8 token fails the query loudly
-    unless ``legacy_token_compat=True`` attests this stream resumes the
-    pre-r8 checkpoint (ADVICE r8 — see ``_legacy_collision``).
+    store never mistakes its first batches for replays; a collision with
+    a retained LEGACY un-namespaced token fails the query loudly unless
+    ``legacy_token_compat=True`` attests this stream resumes the legacy
+    checkpoint (see ``_legacy_collision``).
     ``tests/test_streaming_restart.py`` pins the restart behavior.
 
     A store commit that loses an OCC race to another writer (e.g. a
     manual backfill racing this sink) is retried against fresh state via
     ``occ.retrying`` — safe because the token makes a replayed commit a
-    no-op (r9, VERDICT ask #4).
+    no-op.
 
-    ``snapshot_every`` (r9): the store's LSM-style generation cadence,
+    ``snapshot_every``: the store's LSM-style generation cadence,
     threaded through to ``apply_era`` — an UNBOUNDED change stream is
     exactly the caller that must not let read depth grow with total era
     count, so every N layers past the newest generation fold into a new
@@ -250,10 +251,10 @@ def streaming_scd2_eras(
         if _legacy_collision(
             store, batch_id, legacy_token_compat=legacy_token_compat
         ):
-            return  # committed by a pre-r8 stream under the legacy token
+            return  # committed by a legacy stream under the legacy token
         # generous attempt budget + linear backoff: the sink must not die
         # on transient contention with a manual backfill — an immediate
-        # re-stage tends to re-collide with a fast writer (r9 review)
+        # re-stage tends to re-collide with a fast writer
         occ.retrying(
             lambda: store.apply_era(
                 batch_df,
@@ -282,14 +283,14 @@ def streaming_scd2_cdc(
     legacy_token_compat: bool = False,
     snapshot_every: int | None = None,
 ) -> StreamingQuery:
-    """Maintain an ``Scd2Store`` from a CDC stream (round 7): each row
+    """Maintain an ``Scd2Store`` from a CDC stream: each row
     carries a Debezium/DMS-style op marker and each micro-batch commits as
     ONE era holding BOTH sides atomically (``apply_era(changes,
     deletes=...)``): the era bump that opens the batch's new versions is
     the same meta write that terminates its deleted keys, so a reader can
     never observe a half-applied batch.
 
-    Op mapping (round 8 widens to the full Debezium alphabet): ``'c'``
+    Op mapping (the full Debezium alphabet): ``'c'``
     (create), ``'u'`` (update) and ``'r'`` (snapshot read) all route to
     the upsert side — for an SCD2 sink every one of them means "this is
     the key's current version as of this batch", and ``apply_era`` derives
@@ -298,16 +299,16 @@ def streaming_scd2_cdc(
 
     Exactly-once under foreachBatch's at-least-once contract by the same
     token mechanism as ``streaming_scd2_eras`` (checkpoint-namespaced
-    micro-batch token recorded in the atomic commit; legacy pre-r8 token
-    collisions fail loudly unless ``legacy_token_compat=True``, and an
-    OCC race lost to another writer is retried via ``occ.retrying`` —
-    token-idempotent, r9). Unknown AND NULL op
+    micro-batch token recorded in the atomic commit; legacy
+    un-namespaced token collisions fail loudly unless
+    ``legacy_token_compat=True``, and an OCC race lost to another writer
+    is retried via ``occ.retrying`` — token-idempotent). Unknown AND NULL op
     values fail the batch loudly — a CDC feed emitting ops this sink
     doesn't understand (e.g. a truncate, or a malformed row with a NULL
     op) must not be silently narrowed to the ones it does: note
     ``~isin(...)`` alone is NULL for NULL ops under three-valued logic,
-    which would drop the row from BOTH sides without tripping the guard
-    (ADVICE r7), hence the explicit ``isNull()`` arm."""
+    which would drop the row from BOTH sides without tripping the guard,
+    hence the explicit ``isNull()`` arm."""
 
     _UPSERT_OPS = ("c", "u", "r")
 
@@ -317,7 +318,7 @@ def streaming_scd2_cdc(
         if _legacy_collision(
             store, batch_id, legacy_token_compat=legacy_token_compat
         ):
-            return  # committed by a pre-r8 stream under the legacy token
+            return  # committed by a legacy stream under the legacy token
         bad = (
             batch_df.where(
                 F.col(op_col).isNull()
@@ -363,7 +364,7 @@ def streaming_pit_enrich(
     as_of: int | None = None,
 ) -> StreamingQuery:
     """Enrich a STREAM of fact micro-batches against the ``Scd2Store``'s
-    point-in-time history (round 8) — the Kappa-architecture pattern that
+    point-in-time history — the Kappa-architecture pattern that
     completes the store's streaming surface: ``streaming_scd2_cdc`` keeps
     the dimension current from a change feed, and this query joins
     arriving facts to the version valid at each fact's own era.
@@ -379,15 +380,15 @@ def streaming_pit_enrich(
     ``as_of`` pins one dimension era for the whole stream (audit
     semantics: every batch sees the same history). The default ``None``
     resolves at each micro-batch to the store's latest COMMITTED era —
-    the cached meta is invalidated at the top of every batch (ADVICE r8:
-    the cache only refreshes when THIS object mutates, so a dimension
+    the cached meta is invalidated at the top of every batch (the cache
+    only refreshes when THIS object mutates, so a dimension
     maintained by a different ``Scd2Store`` instance/process would
     otherwise be served at the era cached on the first batch for the
     whole stream), so a dimension concurrently maintained by a CDC
     stream enriches facts with the versions current at their arrival."""
     import os
 
-    # r14 (VERDICT r13 ask #8): per-stream history cache — every batch at
+    # per-stream history cache — every batch at
     # the same committed era reuses the prepared cold/hot history pieces
     # (lazy localCheckpoints materialized through batch 0's own join)
     # instead of re-running the touched-keys job + the full-base window and
@@ -427,7 +428,7 @@ def streaming_decontaminate(
     sink_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """Decontaminate-at-INGEST (round 10 — the Kappa pattern applied to
+    """Decontaminate-at-INGEST (the Kappa pattern applied to
     the train-test overlap check): documents arrive as micro-batches and
     each batch's contaminated spans are computed against the PREPARED
     benchmark gram set (``dedup.benchmark_gram_set`` — materialized once;

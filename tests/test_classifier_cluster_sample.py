@@ -155,10 +155,11 @@ def test_cluster_balanced_plan_no_product_no_global_window(spark, sf_dir):
     # quotas enter as a broadcast
     assert "BroadcastHashJoin" in plan
     # the quantizer pass (the only nested loop — the 1-row broadcast
-    # centroid table) is persisted: every consumer reads the cache, so
-    # the scan+assign executes ONCE no matter how often the plan string
-    # re-prints the cached subtree
-    assert "InMemoryTableScan" in plan
+    # centroid table) is checkpointed: every consumer reads the
+    # checkpoint, so the scan+assign executes ONCE and no consumer plans
+    # a file scan of its own
+    assert "Scan ExistingRDD" in plan
+    assert "FileScan" not in plan
     # the rank windows are present but none is partitioned by cell alone
     # (stratified_rank always sub-buckets: cell+bkt, or cell ordered by
     # bkt on the TINY per-bucket-count side) — no whole-cell data window

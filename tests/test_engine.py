@@ -486,7 +486,26 @@ def test_fused_updated_edges_match_delta_path(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name", ["graph_triangle_count", "incr_spmv_delta1", "streaming_refresh_orders"]
+    "name",
+    [
+        "graph_triangle_count",
+        "incr_spmv_delta1",
+        "streaming_refresh_orders",
+        "dedup_cc_clusters",
+        "dedup_cc_star",
+        "incr_dedup_clusters",
+        "dedup_minhash_pairs",
+        "incr_dedup_minhash_pairs",
+        "incr_dedup_minhash_delete",
+        "dedup_simhash_pairs",
+        "dedup_keep_best",
+        "semantic_dedup_prune",
+        "incr_semantic_dedup",
+        "sample_cluster_balanced",
+        "pipeline_clean_corpus",
+        "pipeline_build_training_set",
+        "pipeline_curated_split",
+    ],
 )
 def test_registered_query_leaves_no_cache(spark, sf_dir, name):
     # a cache left in the session after the result is collected holds

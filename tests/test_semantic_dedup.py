@@ -85,11 +85,22 @@ def test_partition_is_exhaustive_and_deterministic(spark, sf_dir):
 def test_plan_broadcast_centroids_no_product(spark, sf_dir):
     # centroids enter as a broadcast; the pair stream is an equi-join on
     # cell — the only nested-loop is the broadcast centroid cross (a
-    # 16-row dim table), never a non-broadcast cartesian
+    # 16-row dim table), never a non-broadcast cartesian. The cross runs
+    # in the quantizer pass, which the query reads from a checkpoint, so
+    # its plan is checked on its own.
+    from incr_iter_hadoop_spark.catalog import load_table
+    from incr_iter_hadoop_spark.operators.similarity import _semantic_assign
+
     df = semantic_dedup_query(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the broadcast 16-row cross
+    assert "NestedLoopJoin" not in plan
+    quantizer = _semantic_assign(
+        load_table(spark, sf_dir, "embeddings"), 16, "vec_id", "embedding"
+    )
+    qplan = quantizer._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in qplan
+    assert "BroadcastNestedLoopJoin" in qplan  # the broadcast 16-row cross
 
 
 def test_incremental_equals_full_recompute(spark, sf_dir):

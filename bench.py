@@ -472,8 +472,8 @@ def main() -> None:
     # held-out tenth, probe the index, merge spans — is on the clock.
     from incr_iter_hadoop_spark.operators.dedup import (
         _doc_split,
+        duplicate_substring_spans,
         substring_gram_index,
-        substring_spans_against_index,
     )
 
     full_runs_s: list[float] = []
@@ -493,8 +493,8 @@ def main() -> None:
     incr_runs_s: list[float] = []
     for _rep in range(REPS):
         t0 = time.perf_counter()
-        substring_spans_against_index(
-            sub_new, base_idx, "doc_id", "text"
+        duplicate_substring_spans(
+            sub_new, "doc_id", "text", base_index=base_idx
         ).write.format("noop").mode("overwrite").save()
         incr_runs_s.append(round(time.perf_counter() - t0, 3))
     incr_substring_sec = _median(incr_runs_s)
@@ -567,16 +567,16 @@ def main() -> None:
             xs.append(round(time.perf_counter() - t0, 3))
         r6_extras[key] = _median(xs)
 
-    # r10 (late): the incremental paragraph-dedup twin, timed STEADY-
-    # STATE like the substring pair — the preserved distinct-paragraph
-    # seen set is materialized once on disk, and only the delta pass
-    # (batch-local first-occurrence agg + seen-set anti-join +
-    # reassembly) is on the clock.
+    # the incremental paragraph-dedup pass (dedup_paragraphs with a seen
+    # set), timed STEADY-STATE like the substring pair — the preserved
+    # distinct-paragraph seen set is materialized once on disk, and only
+    # the delta pass (batch-local first-occurrence agg + seen-set
+    # anti-join + reassembly) is on the clock.
     from incr_iter_hadoop_spark.operators.dedup import (
         _NEW_DOC_MOD,
         _para_explode,
         _synth_para_docs,
-        incr_dedup_paragraphs,
+        dedup_paragraphs,
     )
 
     # the SAME base/delta split as the registered query it trends
@@ -593,8 +593,8 @@ def main() -> None:
     para_runs_s: list[float] = []
     for _rep in range(REPS):
         t0 = time.perf_counter()
-        incr_dedup_paragraphs(
-            para_seen, para_delta, "doc_id", "text"
+        dedup_paragraphs(
+            para_delta, "doc_id", "text", seen=para_seen
         ).write.format("noop").mode("overwrite").save()
         para_runs_s.append(round(time.perf_counter() - t0, 3))
     r6_extras["incr_dedup_paragraphs_sec"] = _median(para_runs_s)

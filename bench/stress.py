@@ -186,7 +186,11 @@ def main() -> None:
     # s/kdoc must stay ~flat at 50x, and the flag COUNT must scale
     # exactly linearly (recall invariance — a run this long cannot miss
     # the content gate).
-    from incr_iter_hadoop_spark.operators.dedup import decontaminate_spans
+    from incr_iter_hadoop_spark.operators.dedup import (
+        benchmark_gram_set,
+        decontaminate_spans,
+        fingerprint_grams,
+    )
 
     def time_decontam(n_docs: int):
         docs = synth_docs(n_docs).persist()
@@ -194,7 +198,10 @@ def main() -> None:
         corpus = docs.where(F.col("doc_id") % 100 != 0)
         bench = docs.where(F.col("doc_id") % 100 == 0)
         t0 = time.perf_counter()
-        flagged = decontaminate_spans(corpus, bench, "doc_id", "text").count()
+        flagged = decontaminate_spans(
+            fingerprint_grams(corpus, "doc_id", "text"),
+            benchmark_gram_set(bench, "doc_id", "text"),
+        ).count()
         wall = time.perf_counter() - t0
         docs.unpersist()
         return flagged, round(wall, 2), round(wall / (n_docs / 1e3), 3)
@@ -225,14 +232,13 @@ def main() -> None:
     # (accidental 4-hashed-token chunk collisions ~ 0). s/kdoc must stay
     # ~flat at 50x (content-keyed hash agg + id-keyed reassembly, both
     # linear); the drop invariant is recall/exactness at scale. The
-    # incremental twin is timed steady-state on the big corpus: the
+    # incremental pass (a seen set) is timed steady-state on the big corpus: the
     # id%100==1 near-copies are the arriving batch, everything else is
     # the committed base (its seen set materialized off the clock) —
     # delta work must be a small fraction of the at-rest wall.
     from incr_iter_hadoop_spark.operators.dedup import (
         _para_explode,
         dedup_paragraphs,
-        incr_dedup_paragraphs,
     )
 
     def para_docs(n_docs: int):
@@ -269,7 +275,7 @@ def main() -> None:
             f"paragraphs: dropped {pd1}/{pd2}, expected {exp1}/{exp2} "
             "(9 shared paragraphs per planted pair)"
         )
-    # incremental twin, steady-state at the big scale: the id%100==1
+    # incremental pass, steady-state at the big scale: the id%100==1
     # near-copies arrive as the batch; everything else is committed base.
     # FRAMING (measured, r10): the delta pass is bounded by the seen-set
     # SCAN — on a RAM-resident 2.5M-paragraph corpus that is the same
@@ -295,7 +301,7 @@ def main() -> None:
     p_seen = spark.read.parquet(os.path.join(seen_dir, "seen"))
     t0 = time.perf_counter()
     incr_dropped = (
-        incr_dedup_paragraphs(p_seen, p_delta, "doc_id", "text")
+        dedup_paragraphs(p_delta, "doc_id", "text", seen=p_seen)
         .agg(F.sum("n_dropped").alias("d"))
         .collect()[0]["d"]
     )

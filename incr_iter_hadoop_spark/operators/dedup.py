@@ -52,8 +52,7 @@ def _tokens(text: Column) -> Column:
 def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N) -> DataFrame:
     """(id, shingles array<string>) — distinct n-word shingles per doc;
     docs with fewer than n tokens are dropped (both sides of the oracle).
-    Built on the ONE guarded n-gram builder (functions/text.token_ngrams,
-    r9 consolidation)."""
+    Built on the one guarded n-gram builder (functions/text.token_ngrams)."""
     df = spread_scan(df, id_col)  # single-row-group scans tokenize one wave wide
     return (
         df.select(F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("toks"))
@@ -93,7 +92,7 @@ def _verify_pairs(
     """Join candidate (i, j) pairs back to shingle sets and keep pairs with
     exact Jaccard ≥ threshold. Output (i, j, jac).
 
-    Shape (r13, guide §2.5/§3.1): the Jaccard compute is the expensive part
+    Shape: the Jaccard compute is the expensive part
     — O(|candidates| · shingles-per-doc) set intersections — so for large
     candidate streams it must run at candidate parallelism. Left to itself
     the planner broadcasts the CANDIDATE side (its size estimate is the
@@ -143,7 +142,7 @@ def ngram_jaccard_pairs(
     it one viral sentence makes the candidate stream quadratic in corpus
     size.
 
-    Blind-spot mitigation (ADVICE r03): a cluster of MORE than max_df
+    Blind-spot mitigation: a cluster of MORE than max_df
     mutually-similar docs makes every shared shingle hot, so the capped
     index alone would emit zero pairs for exactly the template/boilerplate
     clusters dedup exists for. Each doc therefore also retains ONE anchor
@@ -390,7 +389,7 @@ def simhash_pairs(
     # per-bit signed vote: +1 if bit set else -1; sign of the sum is the
     # bit. The votes were a 64-lambda interpreted higher-order expression
     # (Catalyst never codegens lambda bodies — 64·|shingles| interpreted
-    # steps per doc, measured 5.4s at sf0.1); r13 moves them into ONE
+    # steps per doc, measured 5.4s at sf0.1); they now run in ONE
     # Arrow-vectorized pandas UDF doing the same integer arithmetic as a
     # numpy bit-matrix (guide §4.2) — measured 2.0s-to-sub-second for the
     # same stage, bit-exact (pinned by test_simhash_blocks_match_expr).
@@ -752,25 +751,34 @@ def duplicate_substring_spans(
     text_col: str,
     k: int = SPAN_K,
     keep_hex: str = SPAN_KEEP_HEX,
+    *,
+    base_index: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document merged spans of text duplicated verbatim in ANOTHER
     document: (id, n_dup_spans, dup_chars).
 
     Pipeline (all DataFrame ops, no Python row path):
       1. fingerprint: per doc, keep the char-k-gram start positions whose
-         gram content passes the md5 gate — computed INSIDE an array
-         ``filter`` over ``sequence(1, len-k+1)``, so unkept grams are
-         never exploded into rows (no k× row amplification at the scan);
-      2.+3. a single window over the gram key (``min(id) != max(id)``)
+         gram content passes the md5 gate (``fingerprint_grams``);
+      2. a single window over the gram key (``min(id) != max(id)``)
          marks each position whose gram appears in ≥2 distinct docs — one
-         scan of the fingerprints, no groupBy + semi-join back (see the
-         inline note), and LINEAR in hits (never a doc-pair join: a
-         boilerplate gram in f docs costs f rows here, not f², so hot
-         grams can't blow up the plan — the failure mode the
-         pair-generating schemes above need df-caps for);
-      4. per-doc interval merge of [pos, pos+k-1] via the classic
+         scan of the fingerprints, and LINEAR in hits (never a doc-pair
+         join: a boilerplate gram in f docs costs f rows here, not f², so
+         hot grams can't blow up the plan — the failure mode the
+         pair-generating schemes above need df-caps for). The window
+         replaces a groupBy + self-semi-join, whose two branches each
+         re-ran the md5 gram pass (measured 5.7s → 3.3s at sf0.1);
+      3. per-doc interval merge of [pos, pos+k-1] via the classic
          gaps-and-islands windows — partitioned by doc id (max-cardinality
          key: no skew, no global sort).
+
+    ``base_index``: the preserved (gram, n_base) index of a corpus
+    disjoint from ``docs`` (``substring_gram_index``). With it, a position
+    is also a hit when its gram occurs in the indexed corpus — a left
+    probe of the index at the docs' gram keys (in a deployed store, the
+    bucket-pruned point read of sources/preserve_store.py). The output is
+    then the spans of ``docs`` against (docs ∪ indexed corpus): the
+    steady-state delta pass, O(|docs|), never re-reading the base corpus.
 
     Detection contract: a shared run of length L ≥ k contains L-k+1 grams,
     each fingerprinted w.p. ~keep_hex/256 by content — deterministic given
@@ -781,30 +789,31 @@ def duplicate_substring_spans(
     for short-span recall."""
     from pyspark.sql.window import Window
 
-    g = _fingerprint_grams(docs, id_col, text_col, k, keep_hex)
-    # "gram in ≥2 distinct docs" ⟺ min(id) ≠ max(id) over the gram
-    # partition — a WINDOW on the gram key instead of groupBy + self-semi-
-    # join, so the fingerprint scan runs ONCE (the two-branch formulation
-    # re-executes the whole md5 gram pass per branch: measured 5.7s → 3.3s
-    # at sf0.1). Skew profile is identical to the groupBy (a hot gram's f
-    # rows land on one task either way — linear, never f²).
+    g = fingerprint_grams(docs, id_col, text_col, k, keep_hex)
     wg = Window.partitionBy("gram")
-    hits = (
-        g.withColumn(
-            "dup", F.min("id").over(wg) != F.max("id").over(wg)
+    dup = F.min("id").over(wg) != F.max("id").over(wg)
+    if base_index is None:
+        hits = g.withColumn("dup", dup).where("dup")
+    else:
+        hits = (
+            g.withColumn("dup_new", dup)
+            .join(base_index, "gram", "left")
+            .where(F.col("dup_new") | F.col("n_base").isNotNull())
         )
-        .where("dup")
-        .select("id", "pos")
-    )
-    return _merge_spans(hits, k)
+    return _merge_spans(hits.select("id", "pos"), k)
 
 
-def _fingerprint_grams(
-    docs: DataFrame, id_col: str, text_col: str, k: int, keep_hex: str
+def fingerprint_grams(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = SPAN_K,
+    keep_hex: str = SPAN_KEEP_HEX,
 ) -> DataFrame:
     """(id, pos, gram): the content-gated k-gram fingerprints of each doc.
-    The gate runs inside the position-array ``filter`` so unkept grams are
-    never exploded into rows."""
+    The gate runs inside an array ``filter`` over ``sequence(1,
+    len-k+1)``, so unkept grams are never exploded into rows (no k× row
+    amplification at the scan)."""
     text = F.col(text_col)
     kept_pos = F.filter(
         F.sequence(F.lit(1), F.length(text) - (k - 1)),
@@ -851,8 +860,6 @@ def _merge_spans(hits: DataFrame, k: int) -> DataFrame:
     )
 
 
-
-
 _SUBSTRING_SPANS_ORACLE = f"""
     WITH g AS MATERIALIZED (
       SELECT doc_id, pos, substr(text, CAST(pos AS INTEGER), {SPAN_K}) AS gram
@@ -892,6 +899,16 @@ _SUBSTRING_SPANS_ORACLE = f"""
 """
 
 
+def _spans_out(spans: DataFrame) -> DataFrame:
+    """The registered substring-span schema: (doc_id, n_dup_spans,
+    dup_chars bigint)."""
+    return spans.select(
+        F.col("id").alias("doc_id"),
+        "n_dup_spans",
+        F.col("dup_chars").cast("bigint").alias("dup_chars"),
+    )
+
+
 @register(
     "dedup_substring_spans",
     oracle=_SUBSTRING_SPANS_ORACLE,
@@ -906,12 +923,7 @@ _SUBSTRING_SPANS_ORACLE = f"""
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    spans = duplicate_substring_spans(d, "doc_id", "text")
-    return spans.select(
-        F.col("id").alias("doc_id"),
-        "n_dup_spans",
-        F.col("dup_chars").cast("bigint").alias("dup_chars"),
-    )
+    return _spans_out(duplicate_substring_spans(d, "doc_id", "text"))
 
 
 @register(
@@ -958,12 +970,9 @@ def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def incr_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, base, new = _doc_split(spark, sf_dir)
-    return substring_spans_against_index(
-        new, substring_gram_index(base, "doc_id", "text"), "doc_id", "text"
-    ).select(
-        F.col("id").alias("doc_id"),
-        "n_dup_spans",
-        F.col("dup_chars").cast("bigint").alias("dup_chars"),
+    base_index = substring_gram_index(base, "doc_id", "text")
+    return _spans_out(
+        duplicate_substring_spans(new, "doc_id", "text", base_index=base_index)
     )
 
 
@@ -978,86 +987,9 @@ def substring_gram_index(
     state a deployed pipeline materializes once and refreshes linearly
     (disjoint corpus batches sum)."""
     return (
-        _fingerprint_grams(docs, id_col, text_col, k, keep_hex)
+        fingerprint_grams(docs, id_col, text_col, k, keep_hex)
         .groupBy("gram")
         .agg(F.count_distinct("id").alias("n_base"))
-    )
-
-
-def substring_spans_against_index(
-    new_docs: DataFrame,
-    base_idx: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = SPAN_K,
-    keep_hex: str = SPAN_KEEP_HEX,
-) -> DataFrame:
-    """Duplicate spans of ``new_docs`` against (new_docs ∪ the corpus the
-    index summarizes): the steady-state delta pass — O(|delta|) fingerprint
-    + probe + merge, never re-reading the base corpus."""
-    from pyspark.sql.window import Window
-
-    new_g = _fingerprint_grams(new_docs, id_col, text_col, k, keep_hex)
-    # duplicated ⟺ ≥2 distinct docs among (delta ∪ base) hold the gram:
-    # within-delta via the gram-partition window (single delta scan — see
-    # duplicate_substring_spans), or any preserved base occurrence via the
-    # left probe of the base index at delta gram keys
-    wg = Window.partitionBy("gram")
-    marked = new_g.withColumn(
-        "dup_new", F.min("id").over(wg) != F.max("id").over(wg)
-    )
-    hits = (
-        marked.join(base_idx, "gram", "left")
-        .where(F.col("dup_new") | F.col("n_base").isNotNull())
-        .select("id", "pos")
-    )
-    return _merge_spans(hits, k)
-
-
-def decontaminate_spans(
-    corpus: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = SPAN_K,
-    keep_hex: str = SPAN_KEEP_HEX,
-) -> DataFrame:
-    """Benchmark-contamination spans: per CORPUS document, the merged
-    character spans whose content appears verbatim in ANY document of
-    ``bench`` — the Lee et al. / GPT-3 train-test overlap
-    (decontamination) step every pretraining pipeline runs before
-    training, as substring containment rather than the token-shingle
-    variant (``decontaminate_overlap``). Output: (id, n_dup_spans,
-    dup_chars) for contaminated corpus docs only.
-
-    Same content-defined char-k-gram fingerprinting as
-    ``duplicate_substring_spans`` (the winnowing gate — both relations
-    sample the SAME grams inside a shared run, so matches never need
-    positional alignment), pointed at a second relation: the benchmark's
-    distinct gated grams are the probe set, corpus fingerprints LEFT-SEMI
-    join against it (each corpus gram either is or isn't a benchmark
-    gram — never a pair product), hits merge into maximal per-doc spans.
-
-    100 TB shape: the benchmark side is tiny by construction (eval
-    suites are MBs; the corpus is the 100 TB side), so the distinct
-    benchmark gram set is hash-broadcast — the corpus fingerprint scan
-    is map-side gated with ZERO shuffle of corpus data; only the
-    surviving hit positions (rare) reach the per-doc span-merge window.
-    The ``F.broadcast`` hint is DELIBERATE and unconditional (Spark
-    honors explicit hints regardless of size estimates; AQE never
-    demotes them) — a caller probing a pathological multi-GB
-    "benchmark" should drop the hint (plain equi-join lets the planner
-    pick shuffle) rather than rely on a fallback that does not exist.
-    Detection floor: overlaps shorter than ``k`` chars are invisible,
-    and a span whose every gram misses the content gate is missed
-    (P ≈ (1-1/8)^(L-k+1)); raise ``keep_hex`` for shorter-span recall."""
-    return decontaminate_spans_against(
-        corpus,
-        benchmark_gram_set(bench, id_col, text_col, k, keep_hex),
-        id_col,
-        text_col,
-        k,
-        keep_hex,
     )
 
 
@@ -1073,30 +1005,76 @@ def benchmark_gram_set(
     (benchmarks change rarely; the corpus streams) and probes on every
     ingest batch (``streaming/incremental_stream.streaming_decontaminate``)."""
     return (
-        _fingerprint_grams(bench, id_col, text_col, k, keep_hex)
+        fingerprint_grams(bench, id_col, text_col, k, keep_hex)
         .select("gram")
         .distinct()
     )
 
 
-def decontaminate_spans_against(
-    corpus: DataFrame,
-    bench_grams: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = SPAN_K,
-    keep_hex: str = SPAN_KEEP_HEX,
-) -> DataFrame:
-    """The probe half of ``decontaminate_spans``: corpus fingerprints
-    LEFT-SEMI against an already-prepared benchmark gram set (broadcast —
-    see the scale note there). Per-doc output, no cross-doc state, so a
-    corpus partitioned into ingest batches probes batch-by-batch and the
-    union equals the at-rest result exactly."""
-    hits = (
-        _fingerprint_grams(corpus, id_col, text_col, k, keep_hex)
-        .join(F.broadcast(bench_grams), "gram", "left_semi")
+def _contam_hits(corpus_fp: DataFrame, bench_grams: DataFrame) -> DataFrame:
+    """(id, pos) of every corpus fingerprint whose gram is a benchmark
+    gram: the one decontamination probe (see ``decontaminate_spans``)."""
+    return (
+        corpus_fp.join(F.broadcast(bench_grams), "gram", "left_semi")
         .select("id", "pos")
     )
+
+
+def decontaminate_spans(
+    corpus_fp: DataFrame,
+    bench_grams: DataFrame,
+    k: int = SPAN_K,
+    *,
+    preserved_hits: DataFrame | None = None,
+) -> DataFrame:
+    """Benchmark-contamination spans: per CORPUS document, the merged
+    character spans whose content appears verbatim in ANY benchmark
+    document — the Lee et al. / GPT-3 train-test overlap
+    (decontamination) step every pretraining pipeline runs before
+    training, as substring containment rather than the token-shingle
+    variant (``decontaminate_overlap``). Output: (id, n_dup_spans,
+    dup_chars) for contaminated corpus docs only.
+
+    Inputs: ``corpus_fp``, the corpus's ``fingerprint_grams`` — the same
+    content-defined winnowing gate as ``duplicate_substring_spans``, so
+    both relations sample the SAME grams inside a shared run and matches
+    never need positional alignment; ``bench_grams``, a prepared gram set
+    (``benchmark_gram_set`` or a store's ``store_gram_set``). Corpus
+    fingerprints LEFT-SEMI join against the gram set (each corpus gram
+    either is or isn't a benchmark gram — never a pair product), and hits
+    merge into maximal per-doc spans. Per-doc output, no cross-doc state,
+    so a corpus split into ingest batches probes batch by batch and the
+    union equals the at-rest result exactly.
+
+    ``preserved_hits``: the (id, pos) hits of benchmark grams already
+    probed — the state a deployed pipeline keeps when the benchmark GROWS
+    (I7/I8): only the newly shipped suite's grams are then passed as
+    ``bench_grams``, and its hits union with the preserved ones (distinct
+    on (id, pos) — a gram can be in both suites) before the span merge,
+    which re-runs over hit positions only, O(|hits|), never O(corpus).
+    Exact: the semi-join distributes over the gram-set union, fp ⋉
+    (grams_old ∪ grams_new) = (fp ⋉ grams_old) ∪ (fp ⋉ grams_new).
+
+    Normalized matching (Lee et al. / GPT-3 appendix C) is a projection
+    the caller applies to both relations with ``normalize_for_matching``
+    before fingerprinting; spans are then in normalized-text space.
+
+    100 TB shape: the benchmark side is tiny by construction (eval
+    suites are MBs; the corpus is the 100 TB side), so the gram set is
+    hash-broadcast — the corpus fingerprint scan is map-side gated with
+    ZERO shuffle of corpus data; only the surviving hit positions (rare)
+    reach the per-doc span-merge window. The ``F.broadcast`` hint is
+    DELIBERATE and unconditional (Spark honors explicit hints regardless
+    of size estimates; AQE never demotes them) — a caller probing a
+    pathological multi-GB "benchmark" should drop the hint (plain
+    equi-join lets the planner pick shuffle) rather than rely on a
+    fallback that does not exist. Detection floor: overlaps shorter than
+    ``k`` chars are invisible, and a span whose every gram misses the
+    content gate is missed (P ≈ (1-1/8)^(L-k+1)); raise ``keep_hex`` in
+    ``fingerprint_grams`` for shorter-span recall."""
+    hits = _contam_hits(corpus_fp, bench_grams)
+    if preserved_hits is not None:
+        hits = preserved_hits.unionByName(hits).distinct()
     return _merge_spans(hits, k)
 
 
@@ -1144,11 +1122,30 @@ _DECONTAM_ORACLE = f"""
     """
 
 
+def _contam_out(spans: DataFrame) -> DataFrame:
+    """The registered decontamination schema: (doc_id, n_contam_spans,
+    contam_chars), both counts bigint."""
+    return spans.select(
+        F.col("id").alias("doc_id"),
+        F.col("n_dup_spans").cast("bigint").alias("n_contam_spans"),
+        F.col("dup_chars").cast("bigint").alias("contam_chars"),
+    )
+
+
+def _decontaminate_query(
+    corpus: DataFrame, bench_grams: DataFrame
+) -> DataFrame:
+    """The at-rest decontamination query body: fingerprint ``corpus``
+    (doc_id, text), probe ``bench_grams``, project the output schema."""
+    corpus_fp = fingerprint_grams(corpus, "doc_id", "text")
+    return _contam_out(decontaminate_spans(corpus_fp, bench_grams))
+
+
 @register(
     "decontaminate_substring",
     oracle=_DECONTAM_ORACLE,
-    doc="train-test DECONTAMINATION by substring containment (round 10 — "
-    "the Lee et al./GPT-3 overlap step): corpus docs (doc_id % "
+    doc="train-test DECONTAMINATION by substring containment (the Lee "
+    "et al./GPT-3 overlap step): corpus docs (doc_id % "
     f"{_NEW_DOC_MOD} != 0) containing any >= {SPAN_K}-char run that "
     f"appears verbatim in the planted benchmark split (doc_id % "
     f"{_NEW_DOC_MOD} == 0) are flagged with their merged contaminated "
@@ -1161,10 +1158,8 @@ _DECONTAM_ORACLE = f"""
 )
 def decontaminate_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, corpus, bench = _doc_split(spark, sf_dir)
-    return decontaminate_spans(corpus, bench, "doc_id", "text").select(
-        F.col("id").alias("doc_id"),
-        F.col("n_dup_spans").cast("bigint").alias("n_contam_spans"),
-        F.col("dup_chars").cast("bigint").alias("contam_chars"),
+    return _decontaminate_query(
+        corpus, benchmark_gram_set(bench, "doc_id", "text")
     )
 
 
@@ -1176,7 +1171,7 @@ def decontaminate_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on pure ASCII, where every engine agrees — lowering first would route
 # Unicode one-to-many / combining-mark case maps through the class and
 # the engines DIVERGE exactly where a fold crosses the ASCII boundary
-# (r11 review, confirmed live: Java lower('İ') = 'i'+U+0307 → the
+# (confirmed live: Java lower('İ') = 'i'+U+0307 → the
 # combining mark strips to a spurious space, DuckDB's utf8proc gives
 # plain 'i'; Java upper('ß')='SS' vs DuckDB 'ẞ' is the same class of
 # hazard). Cost: non-ASCII content (including folds that would land in
@@ -1193,39 +1188,6 @@ def normalize_for_matching(col: Column) -> Column:
     return F.trim(F.lower(F.regexp_replace(col, "[^a-zA-Z0-9]+", " ")))
 
 
-def decontaminate_spans_normalized(
-    corpus: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = SPAN_K,
-    keep_hex: str = SPAN_KEEP_HEX,
-) -> DataFrame:
-    """NORMALIZED decontamination — how Lee et al. / GPT-3 appendix C
-    actually match: both relations are lowercased, punctuation-stripped,
-    and whitespace-collapsed (``normalize_for_matching``) BEFORE gram
-    fingerprinting, so a benchmark answer differing from its corpus copy
-    only in case, spacing, or punctuation still hits. The raw-verbatim
-    flavor (``decontaminate_spans``) misses exactly those variants.
-
-    Span coordinates (pos, dup_chars) are reported in NORMALIZED-text
-    space — the match is defined there, and a normalized span has no
-    unique raw preimage (many raw strings normalize to one form). A
-    caller needing raw offsets re-scans the flagged docs only (rare by
-    construction). Same 100 TB shape as the raw flavor: the normalized
-    benchmark gram set broadcasts, corpus normalization + fingerprinting
-    is map-side, zero corpus shuffle before the span merge."""
-    norm = normalize_for_matching(F.col(text_col)).alias(text_col)
-    return decontaminate_spans(
-        corpus.select(F.col(id_col), norm),
-        bench.select(F.col(id_col), norm),
-        id_col,
-        text_col,
-        k,
-        keep_hex,
-    )
-
-
 # benchmark-side perturbation for the registered query: ASCII uppercase +
 # comma noise after every space — washes out under normalization, so
 # normalized matching must find every overlap raw matching finds on the
@@ -1239,6 +1201,20 @@ _PERTURB_SQL = (
     "replace(translate({src}, 'abcdefghijklmnopqrstuvwxyz', "
     "'ABCDEFGHIJKLMNOPQRSTUVWXYZ'), ' ', ' , ')"
 )
+
+def _normalized_split(spark: SparkSession, sf_dir: str):
+    """(corpus, benchmark) of the normalized decontamination queries: the
+    benchmark split perturbed by ``_PERTURB_SQL``, then both relations
+    projected through ``normalize_for_matching`` — so spans are in
+    normalized-text space, where the match is defined (a normalized span
+    has no unique raw preimage)."""
+    _, corpus, bench = _doc_split(spark, sf_dir)
+    norm = normalize_for_matching(F.col("text")).alias("text")
+    bench_n = bench.select(
+        "doc_id", F.expr(_PERTURB_SQL.format(src="text")).alias("text")
+    ).select("doc_id", norm)
+    return corpus.select("doc_id", norm), bench_n
+
 
 _NORM_CORPUS = _NORM_SQL.format(src="text")
 _NORM_BENCH = _NORM_SQL.format(src=_PERTURB_SQL.format(src="text"))
@@ -1292,8 +1268,8 @@ _DECONTAM_NORM_ORACLE = f"""
 @register(
     "decontaminate_normalized",
     oracle=_DECONTAM_NORM_ORACLE,
-    doc="NORMALIZED train-test decontamination (round 11 — VERDICT r10 "
-    "ask #1, the Lee et al./GPT-3 appendix-C matching discipline): both "
+    doc="NORMALIZED train-test decontamination (the Lee et al./GPT-3 "
+    "appendix-C matching discipline): both "
     "relations are lowercased, punctuation-stripped, and whitespace-"
     "collapsed before gram fingerprinting, so benchmark text differing "
     "from its corpus copy only in case/spacing/punctuation still hits — "
@@ -1309,23 +1285,16 @@ _DECONTAM_NORM_ORACLE = f"""
     "corpus shuffle before the per-doc span merge, never a product.",
 )
 def decontaminate_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, corpus, bench = _doc_split(spark, sf_dir)
-    bench_pert = bench.select(
-        "doc_id", F.expr(_PERTURB_SQL.format(src="text")).alias("text")
-    )
-    return decontaminate_spans_normalized(
-        corpus, bench_pert, "doc_id", "text"
-    ).select(
-        F.col("id").alias("doc_id"),
-        F.col("n_dup_spans").cast("bigint").alias("n_contam_spans"),
-        F.col("dup_chars").cast("bigint").alias("contam_chars"),
+    corpus, bench = _normalized_split(spark, sf_dir)
+    return _decontaminate_query(
+        corpus, benchmark_gram_set(bench, "doc_id", "text")
     )
 
 
 @register(
     "incr_decontaminate_normalized",
     oracle=_DECONTAM_NORM_ORACLE,
-    doc="incremental NORMALIZED decontamination (round 11): the "
+    doc="incremental NORMALIZED decontamination: the "
     "production composition — benchmarks grow (I7/I8) AND matching is "
     "case/punct/whitespace-insensitive. Same perturbed benchmark split "
     "as decontaminate_normalized (ASCII-translate uppercase + comma "
@@ -1344,18 +1313,13 @@ def decontaminate_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incr_decontaminate_normalized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _, corpus, bench = _doc_split(spark, sf_dir)
-    norm = normalize_for_matching(F.col("text")).alias("text")
-    bench_n = bench.select(
-        "doc_id", F.expr(_PERTURB_SQL.format(src="text")).alias("text")
-    ).select("doc_id", norm)
-    return _incr_decontaminate_query(corpus.select("doc_id", norm), bench_n)
+    return _incr_decontaminate_query(*_normalized_split(spark, sf_dir))
 
 
 @register(
     "decontaminate_streamed",
     oracle=_DECONTAM_ORACLE,
-    doc="decontamination AT INGEST (round 10 — §2.9 × the "
+    doc="decontamination AT INGEST (§2.9 × the "
     "decontaminate_substring family, the Kappa pattern a real pipeline "
     "runs so contaminated documents never land in the corpus): the same "
     "corpus split arrives as two file-source micro-batches; the "
@@ -1386,10 +1350,10 @@ def _drain_decontaminate_stream(
     spark: SparkSession, docs: DataFrame, bench_grams: DataFrame, prefix: str
 ) -> DataFrame:
     """The shared driver harness of the streamed decontamination
-    registered queries (r11 review: one copy, so a harness fix — the
-    finally q.stop(), the pre-cleanup localCheckpoint, the utime batch
-    ordering — cannot silently diverge between the raw and normalized
-    flavors): land ``docs`` as two parity-split micro-batch files, drain
+    registered queries (one copy, so a harness fix — the finally
+    q.stop(), the pre-cleanup localCheckpoint, the utime batch ordering —
+    cannot silently diverge between the raw and normalized flavors):
+    land ``docs`` as two parity-split micro-batch files, drain
     ``streaming_decontaminate`` against the prepared ``bench_grams``,
     and return the flagged spans materialized before the temp dir goes
     away."""
@@ -1434,11 +1398,7 @@ def _drain_decontaminate_stream(
             raise RuntimeError("streamed decontamination did not drain")
         parts = sorted(glob.glob(os.path.join(sink, "batch=*")))
         flagged = spark.read.parquet(*parts)
-        out = flagged.select(
-            F.col("id").alias("doc_id"),
-            F.col("n_dup_spans").cast("bigint").alias("n_contam_spans"),
-            F.col("dup_chars").cast("bigint").alias("contam_chars"),
-        ).localCheckpoint(eager=True)
+        out = _contam_out(flagged).localCheckpoint(eager=True)
     finally:
         if q is not None:
             q.stop()
@@ -1449,8 +1409,8 @@ def _drain_decontaminate_stream(
 @register(
     "decontaminate_normalized_streamed",
     oracle=_DECONTAM_NORM_ORACLE,
-    doc="NORMALIZED decontamination AT INGEST (round 11 — completing the "
-    "normalized family three-deep, mirroring the raw family's "
+    doc="NORMALIZED decontamination AT INGEST (the normalized family's "
+    "streamed member, mirroring the raw family's "
     "at-rest/incremental/streamed trio): the same corpus split arrives "
     "as two file-source micro-batches, each probing the PREPARED "
     "normalized benchmark gram set (materialized once) via foreachBatch "
@@ -1465,18 +1425,13 @@ def _drain_decontaminate_stream(
 def decontaminate_normalized_streamed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    _, corpus, bench = _doc_split(spark, sf_dir)
-    norm = normalize_for_matching(F.col("text")).alias("text")
-    bench_n = bench.select(
-        "doc_id", F.expr(_PERTURB_SQL.format(src="text")).alias("text")
-    ).select("doc_id", norm)
+    corpus, bench = _normalized_split(spark, sf_dir)
     # the prepared normalized index: materialized once, probed per batch
     bench_grams = benchmark_gram_set(
-        bench_n, "doc_id", "text"
+        bench, "doc_id", "text"
     ).localCheckpoint(eager=True)
     return _drain_decontaminate_stream(
-        spark, corpus.select("doc_id", norm), bench_grams,
-        "decontam_norm_stream_",
+        spark, corpus, bench_grams, "decontam_norm_stream_"
     )
 
 
@@ -1515,53 +1470,11 @@ def incr_dedup_minhash_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def incr_decontaminate_spans(
-    corpus_fp: DataFrame,
-    old_hits: DataFrame,
-    new_bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = SPAN_K,
-    keep_hex: str = SPAN_KEEP_HEX,
-) -> DataFrame:
-    """Decontamination under a GROWING benchmark (I7/I8 applied to the
-    decontaminate_substring family): a new eval suite ships, and only its
-    grams are probed — the corpus text is never re-read.
-
-    Preserved state (what a deployed pipeline materializes):
-      * ``corpus_fp`` — the corpus fingerprint relation (id, pos, gram)
-        from ``_fingerprint_grams``: a narrow ~keep_hex/256-sampled
-        projection that refreshes additively as corpus batches land
-        (disjoint batches union; no cross-doc state);
-      * ``old_hits`` — the (id, pos) hit positions of every previously
-        probed benchmark gram (narrow, rare by construction).
-
-    Delta pass: the NEW benchmark split's distinct content-gated grams
-    (tiny — eval suites are MBs) broadcast into a LEFT-SEMI over the
-    preserved fingerprints, exactly the at-rest probe; new hits union
-    with the preserved hits (distinct on (id, pos) — a gram can be in
-    both splits) and the per-doc span merge re-runs over hit positions
-    only, O(|hits|), never O(corpus).
-
-    Exactness: the semi-join distributes over the gram-set union —
-    fp ⋉ (grams_old ∪ grams_new) = (fp ⋉ grams_old) ∪ (fp ⋉ grams_new)
-    — so the incremental result equals the full recompute EXACTLY
-    (pytest-pinned in tests/test_incr_decontaminate.py; the registered
-    query's oracle is the verbatim full-benchmark oracle)."""
-    new_grams = benchmark_gram_set(new_bench, id_col, text_col, k, keep_hex)
-    new_hits = (
-        corpus_fp.join(F.broadcast(new_grams), "gram", "left_semi")
-        .select("id", "pos")
-    )
-    all_hits = old_hits.unionByName(new_hits).distinct()
-    return _merge_spans(all_hits, k)
-
-
 @register(
     "incr_decontaminate",
     oracle=_DECONTAM_ORACLE,
-    doc="incremental DECONTAMINATION under a growing benchmark (round 10 "
-    "— the I7/I8 refresh discipline applied to the train-test overlap "
+    doc="incremental DECONTAMINATION under a growing benchmark (the "
+    "I7/I8 refresh discipline applied to the train-test overlap "
     f"step): benchmark docs (doc_id % {_NEW_DOC_MOD} == 0) split into an "
     "already-probed OLD half (doc_id % 20 == 0) and a newly-shipped NEW "
     "half; the preserved state is the corpus fingerprint relation plus "
@@ -1577,39 +1490,41 @@ def incr_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incr_decontaminate_query(corpus, bench)
 
 
+def _bench_eras(bench: DataFrame):
+    """(old, new) halves of the benchmark split: the already-probed suite
+    (doc_id % 20 == 0) and the newly shipped one."""
+    return (
+        bench.where(F.col("doc_id") % 20 == 0),
+        bench.where(F.col("doc_id") % 20 != 0),
+    )
+
+
 def _incr_decontaminate_query(
     corpus: DataFrame, bench: DataFrame
 ) -> DataFrame:
     """Shared body of the incremental decontamination registered queries
-    (raw + normalized inputs — r11 review: one copy, so the %20 split
-    convention and the preserved-state discipline cannot silently
-    diverge between the flavors): preserved state built inline at query
-    granularity (same convention as incr_dedup_substring's base index) —
-    fingerprints + old hits. The fingerprints are MATERIALIZED once
-    (localCheckpoint, the decontaminate_streamed prepared-index pattern):
-    the old-hit rebuild and the delta probe both consume them, and
-    without this the lazy subtree re-runs the full corpus md5
-    fingerprint scan twice (r10 review) in the query whose point is that
-    the corpus is read once."""
-    old_b = bench.where(F.col("doc_id") % 20 == 0)
-    new_b = bench.where(F.col("doc_id") % 20 != 0)
-    corpus_fp = _fingerprint_grams(
-        corpus, "doc_id", "text", SPAN_K, SPAN_KEEP_HEX
-    ).localCheckpoint(eager=True)
-    old_hits = (
-        corpus_fp.join(
-            F.broadcast(benchmark_gram_set(old_b, "doc_id", "text")),
-            "gram",
-            "left_semi",
-        )
-        .select("id", "pos")
+    (raw and normalized inputs, one copy so the split convention and the
+    preserved-state discipline cannot diverge between the flavors). The
+    preserved state — corpus fingerprints plus the old suite's hits — is
+    built inline at query granularity, as incr_dedup_substring's base
+    index is. The fingerprints are MATERIALIZED once (localCheckpoint,
+    the decontaminate_streamed prepared-index pattern): the old-hit
+    rebuild and the delta probe both consume them, and lazily the full
+    corpus md5 fingerprint scan would run twice in the query whose point
+    is that the corpus is read once."""
+    old_b, new_b = _bench_eras(bench)
+    corpus_fp = fingerprint_grams(corpus, "doc_id", "text").localCheckpoint(
+        eager=True
     )
-    return incr_decontaminate_spans(
-        corpus_fp, old_hits, new_b, "doc_id", "text"
-    ).select(
-        F.col("id").alias("doc_id"),
-        F.col("n_dup_spans").cast("bigint").alias("n_contam_spans"),
-        F.col("dup_chars").cast("bigint").alias("contam_chars"),
+    old_hits = _contam_hits(
+        corpus_fp, benchmark_gram_set(old_b, "doc_id", "text")
+    )
+    return _contam_out(
+        decontaminate_spans(
+            corpus_fp,
+            benchmark_gram_set(new_b, "doc_id", "text"),
+            preserved_hits=old_hits,
+        )
     )
 
 
@@ -1622,11 +1537,11 @@ def bench_gram_pairs(
 ) -> DataFrame:
     """Distinct (gram, bench_id) contribution rows of a benchmark
     relation — THE canonical store contribution builder, shared by
-    initialize, era append, and retirement (r11 review: retraction only
-    shrinks the probe set if '-' rows reproduce EXACTLY the pairs the
-    append inserted, so all three paths must build from one helper)."""
+    initialize, era append, and retirement (retraction only shrinks the
+    probe set if '-' rows reproduce EXACTLY the pairs the append
+    inserted, so all three paths must build from one helper)."""
     return (
-        _fingerprint_grams(bench, id_col, text_col, k, keep_hex)
+        fingerprint_grams(bench, id_col, text_col, k, keep_hex)
         .select("gram", F.col("id").alias("bench_id"))
         .distinct()
     )
@@ -1642,10 +1557,9 @@ def decontamination_index_store(
     keep_hex: str = SPAN_KEEP_HEX,
     num_buckets: int = 16,
 ):
-    """Materialize the benchmark gram index as a durable ``PreserveStore``
-    (round 11 — VERDICT r10 ask #4): the prepared decontamination index
-    the earlier registered queries rebuilt inline per query now lives in
-    the I6 store layer, so a benchmark update is an era/layer APPEND
+    """Materialize the benchmark gram index as a durable ``PreserveStore``:
+    the prepared decontamination index lives in the I6 store layer
+    instead of being rebuilt per query, so a benchmark update is an era/layer APPEND
     (``append_benchmark_era``) and the streamed/at-rest probes read the
     COMMITTED index across process restarts instead of re-fingerprinting
     the benchmark every run.
@@ -1704,9 +1618,9 @@ _DECONTAM_STORE_SEQ = itertools.count()
 @register(
     "decontaminate_store",
     oracle=_DECONTAM_ORACLE,
-    doc="decontamination through the DURABLE index store (round 11 — "
-    "VERDICT r10 ask #4, closing the loop between the decontamination "
-    "family and the I6 preserve-store substrate): the benchmark gram "
+    doc="decontamination through the DURABLE index store (closing the "
+    "loop between the decontamination family and the I6 preserve-store "
+    "substrate): the benchmark gram "
     "index is materialized as an on-disk PreserveStore (distinct "
     "(gram, bench_id) contributions grouped by gram, bucketed, staged "
     "OCC commits), the OLD benchmark half (doc_id % 20 == 0) as the "
@@ -1728,8 +1642,7 @@ def decontaminate_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .incremental import _cleanup_at_exit
 
     _, corpus, bench = _doc_split(spark, sf_dir)
-    old_b = bench.where(F.col("doc_id") % 20 == 0)
-    new_b = bench.where(F.col("doc_id") % 20 != 0)
+    old_b, new_b = _bench_eras(bench)
     # per-invocation unique store root: bench reps / repeated driver calls
     # must each build a fresh store (re-initializing + re-refreshing an
     # existing store would double-apply the new-half contributions)
@@ -1743,20 +1656,19 @@ def decontaminate_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(root, "bench_grams"), old_b, "doc_id", "text"
     )
     append_benchmark_era(store, new_b, "doc_id", "text")
-    # the probe IS the shared helper — the store only changes where the
-    # gram set comes from (r11 review: an inline copy would let a future
-    # probe fix silently skip the store-backed flavor)
-    return decontaminate_spans_against(
-        corpus, store_gram_set(store), "doc_id", "text"
-    ).select(
-        F.col("id").alias("doc_id"),
-        F.col("n_dup_spans").cast("bigint").alias("n_contam_spans"),
-        F.col("dup_chars").cast("bigint").alias("contam_chars"),
-    )
+    # the probe IS the shared one — the store only changes where the gram
+    # set comes from (an inline copy would let a future probe fix silently
+    # skip the store-backed flavor)
+    return _decontaminate_query(corpus, store_gram_set(store))
 
 
 def dedup_paragraphs(
-    df: DataFrame, id_col: str, text_col: str, sep: str = "\n\n"
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    sep: str = "\n\n",
+    *,
+    seen: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-document PARAGRAPH-level exact dedup (the CCNet / RefinedWeb
     / Dolma corpus-dedupe step): every repeated paragraph keeps its FIRST
@@ -1778,6 +1690,17 @@ def dedup_paragraphs(
     used both as the split pattern and the reassembly joiner), segments
     with no Unicode non-whitespace dropped.
 
+    ``seen``: the preserved distinct paragraph values (column ``para``)
+    of an already-committed corpus — corpus GROWTH (I7), how a
+    CCNet-style dedupe runs batch by ingest batch. Keep-first means an
+    insertion can only drop NEW copies, never revise committed docs, so
+    ``df`` is then the arriving batch and a paragraph survives iff it is
+    the batch's first occurrence AND its value is absent from ``seen``
+    (one equi anti-join of the winners). Processing order (committed
+    corpus, then batch) is a total order on occurrences, so the
+    committed output ∪ this output equals the full keep-first recompute
+    under that arrival order exactly.
+
     100 TB shape: dedup-by-content NEEDS one shuffle keyed by paragraph
     content — that is the canonical CCNet plan, and grouping by the VALUE
     (not a 64-bit hash) keeps the operator exact / oracle-checkable while
@@ -1792,15 +1715,19 @@ def dedup_paragraphs(
     a boilerplate paragraph in f docs costs f rows, never f². (The
     probabilistic alternative — a Bloom/exact-hash filter map-side —
     trades exactness for zero shuffle and is what Dolma's dedupe tool
-    does; this engine keeps the exact formulation.)"""
+    does; this engine keeps the exact formulation.)
+
+    The batch pass's win is an I/O property: it never re-reads the
+    corpus text, only the seen set and the batch. On a RAM-resident
+    corpus (bench/stress.py §2c) the seen-set scan costs about what
+    re-running the at-rest agg does, so the ratio sits near 1; with the
+    corpus on disk (bench.py extras at sf0.1) the batch pass is ~3x
+    faster. Bucketing the seen set by ``para`` removes the probe's
+    index-side Exchange but not its sort when buckets span multiple
+    files, and bought nothing at that scale."""
     ex, totals = _para_explode(df, id_col, text_col, sep)
-    # first occurrence per distinct paragraph value: the kept set IS the
-    # groupBy output (non-duplicated paragraphs are their own winners)
-    kept = (
-        ex.groupBy("para")
-        .agg(F.min(F.struct("id", "pos")).alias("w"))
-        .select(F.col("w.id").alias("id"), F.col("w.pos").alias("pos"), "para")
-    )
+    # non-duplicated paragraphs are their own winners
+    kept = _first_occurrence(ex, "para", seen)
     return _para_reassemble(kept, totals, sep)
 
 
@@ -1810,7 +1737,7 @@ def _para_segs(text_col: str, sep: str) -> Column:
     ``sep`` is a LITERAL separator (the reassembly joiner), so the split
     pattern is Pattern.quote'd — a sep containing regex metacharacters
     (e.g. '. ') would otherwise split on match-any-char while rejoining
-    with the literal, silently corrupting text_clean (r10 review)."""
+    with the literal, silently corrupting text_clean."""
     # java.util.regex.Pattern.quote: \Q...\E with embedded \E broken out
     quoted = "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
     return F.filter(
@@ -1828,6 +1755,20 @@ def _para_explode(df: DataFrame, id_col: str, text_col: str, sep: str):
         F.col(id_col).alias("id"), F.size(segs).alias("n_paras")
     ).where(F.col("n_paras") > 0)
     return ex, totals
+
+
+def _first_occurrence(
+    rows: DataFrame, key: str, seen: DataFrame | None
+) -> DataFrame:
+    """(id, pos, ``key``): the first occurrence by (id, pos) of each
+    distinct ``key`` among ``rows`` — min struct(id, pos), one hash agg —
+    less every key already in the preserved ``seen`` set."""
+    winners = rows.groupBy(key).agg(F.min(F.struct("id", "pos")).alias("w"))
+    if seen is not None:
+        winners = winners.join(seen.select(key), key, "left_anti")
+    return winners.select(
+        F.col("w.id").alias("id"), F.col("w.pos").alias("pos"), key
+    )
 
 
 def _para_reassemble(
@@ -1863,22 +1804,21 @@ WS_RE2_CLASS = r"[\t\n\v\f\r\x{0085}\x{2028}\x{2029}\p{Zs}]"
 
 
 def _para_oracle(order_by: str) -> str:
-    """The full keep-first recompute oracle, shared by both paragraph
-    registrations (only the winner ORDER BY differs — plain (doc_id,
-    pos) for the at-rest query, arrival order (is_delta, doc_id, pos)
-    for the incremental twin). One template so a synthesis edit cannot
-    silently desynchronize the two (r10 review). ALL Unicode whitespace
-    — not just newlines — is normalized to spaces before tokenizing,
-    mirroring ``_synth_para_docs`` exactly (r11, ADVICE r10): the
-    synthesis round-trips chunks through a '\\n\\n' join the Spark side
-    re-splits and then drops blank segments with rlike('(?U)\\S'), so a
-    token made of non-space whitespace (a tab, an NBSP, U+2028) would
-    survive the oracle's single-space split as a "token" while the
-    engine side drops the blank chunk it lands in. The RE2 class here
-    is char-for-char the set Java's (?U)\\s matches (Unicode
-    White_Space = [\\t\\n\\v\\f\\r] ∪ U+0085 ∪ U+2028/29 ∪ Zs) —
-    equivalence pinned across both engines in
-    tests/test_paragraph_properties.py."""
+    """The full keep-first recompute oracle, shared by every paragraph
+    registration (only the winner ORDER BY differs — plain (doc_id, pos)
+    for the at-rest queries, arrival order (is_delta, doc_id, pos) for
+    the incremental ones). One template so a synthesis edit cannot
+    silently desynchronize them. ALL Unicode whitespace — not just
+    newlines — is normalized to spaces before tokenizing, mirroring
+    ``_synth_para_docs`` exactly: the synthesis round-trips chunks
+    through a '\\n\\n' join the Spark side re-splits and then drops
+    blank segments with rlike('(?U)\\S'), so a token made of non-space
+    whitespace (a tab, an NBSP, U+2028) would survive the oracle's
+    single-space split as a "token" while the engine side drops the
+    blank chunk it lands in. The RE2 class here is char-for-char the set
+    Java's (?U)\\s matches (Unicode White_Space = [\\t\\n\\v\\f\\r] ∪
+    U+0085 ∪ U+2028/29 ∪ Zs) — equivalence pinned across both engines
+    in tests/test_paragraph_properties.py."""
     return f"""
     WITH t AS (
       SELECT doc_id,
@@ -1914,10 +1854,17 @@ def _para_oracle(order_by: str) -> str:
     """
 
 
+def _para_out(cleaned: DataFrame) -> DataFrame:
+    """The registered paragraph-dedup schema: ``id`` renamed ``doc_id``."""
+    return cleaned.select(
+        F.col("id").alias("doc_id"), "n_paras", "n_dropped", "text_clean"
+    )
+
+
 @register(
     "dedup_paragraphs_global",
     oracle=_para_oracle("doc_id, pos"),
-    doc="cross-document paragraph-level exact dedup (round 10 — the "
+    doc="cross-document paragraph-level exact dedup (the "
     "CCNet/RefinedWeb corpus-dedupe step: repeated paragraphs keep their "
     "first occurrence by (doc_id, position) corpus-wide, documents are "
     "reassembled without the dropped copies). The sf corpora carry no "
@@ -1938,60 +1885,63 @@ def _para_oracle(order_by: str) -> str:
 )
 def dedup_paragraphs_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth = _synth_para_docs(spark, sf_dir)
-    return dedup_paragraphs(synth, "doc_id", "text").select(
-        F.col("id").alias("doc_id"),
-        "n_paras",
-        "n_dropped",
-        "text_clean",
-    )
+    return _para_out(dedup_paragraphs(synth, "doc_id", "text"))
 
 
 def dedup_paragraphs_fp(
-    df: DataFrame, id_col: str, text_col: str, sep: str = "\n\n"
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    sep: str = "\n\n",
+    *,
+    seen: DataFrame | None = None,
 ) -> DataFrame:
-    """FINGERPRINT-KEYED paragraph dedup — the 100 TB shuffle-bytes twin
-    of ``dedup_paragraphs`` (VERDICT r10 ask #3). Identical contract
-    (keep first occurrence by (id, pos) corpus-wide, reassemble cleaned
-    docs), different physical plan: the first-occurrence agg keys on a
-    128-bit md5 of the paragraph instead of its value, so the
-    content-keyed exchange carries (fp BINARY(16), id, pos) — ~30
+    """FINGERPRINT-KEYED paragraph dedup — the 100 TB shuffle-bytes
+    variant of ``dedup_paragraphs``. Identical contract (keep first
+    occurrence by (id, pos) corpus-wide, reassemble cleaned docs, the
+    same ``seen`` rule), different physical plan: the first-occurrence
+    agg keys on a 128-bit md5 of the paragraph instead of its value, so
+    the content-keyed exchange carries (fp BINARY(16), id, pos) — ~30
     bytes/row — instead of full paragraph text (hundreds of bytes for
     real prose; the dominant shuffle cost of the value-keyed plan at
-    corpus scale). MEASURED crossover (bench/stress.py section 2e, r12):
-    at realistic ~1 KB paragraphs the fp plan shuffles 0.51x the bytes
-    AND runs 0.5-0.6x the wall-time of the value-keyed twin (both at 5k
-    and 50x docs); at sf0.1's ~40-char synthetic paragraphs the md5 +
+    corpus scale). MEASURED crossover (bench/stress.py section 2e): at
+    realistic ~1 KB paragraphs the fp plan shuffles 0.51x the bytes AND
+    runs 0.5-0.6x the wall-time of the value-keyed plan (both at 5k and
+    50x docs); at sf0.1's ~40-char synthetic paragraphs the md5 +
     rebuild overhead makes it ~1.5x SLOWER in wall — so the value-keyed
-    twin stays primary for short-paragraph corpora and this twin is the
+    plan stays primary for short-paragraph corpora and this one is the
     plan for prose-sized paragraphs. Winners come back as a per-doc
-    kept-position ARRAY
-    (narrow), joined to the original doc rows on id, and the cleaned
-    text is rebuilt MAP-SIDE by indexing the re-split segment array at
-    the kept positions — paragraph text crosses the wire exactly once
-    (the id-keyed join of doc rows), vs twice in the value-keyed plan
-    (content exchange + reassembly exchange), and the reassembly
-    needs no collect_list at all.
+    kept-position ARRAY (narrow), joined to the original doc rows on id,
+    and the cleaned text is rebuilt MAP-SIDE by indexing the re-split
+    segment array at the kept positions — paragraph text crosses the
+    wire exactly once (the id-keyed join of doc rows), vs twice in the
+    value-keyed plan (content exchange + reassembly exchange), and the
+    reassembly needs no collect_list at all.
+
+    ``seen``: column ``fp`` (BINARY(16) md5) — the committed corpus's
+    distinct paragraph fingerprints. At 100 TB the preserved seen set is
+    the large relation a deployed dedupe carries between batches, and
+    keying it by 16-byte fingerprints cuts its storage AND the batch
+    probe's shuffle bytes by the same paragraph-size/16 factor as the
+    at-rest content exchange.
 
     Exactness caveat (why the value-keyed variant stays registered as
-    the exact twin): two DISTINCT paragraphs colliding on md5 would
-    dedup as one. P(collision) ≈ n²/2¹²⁹ — at 10¹² corpus paragraphs
-    that is ~10⁻¹⁵, negligible but nonzero, so this variant is
-    "exact up to 128-bit hashing" while the value-keyed one is exact
-    unconditionally. Both registered queries share the same full
-    keep-first recompute oracle (a collision would fail the driver
-    hash-check loudly, not silently).
+    the exact one): two DISTINCT paragraphs colliding on md5 would dedup
+    as one. P(collision) ≈ n²/2¹²⁹ — at 10¹² corpus paragraphs that is
+    ~10⁻¹⁵, negligible but nonzero, so this variant is "exact up to
+    128-bit hashing" while the value-keyed one is exact unconditionally.
+    Both registered queries share the same full keep-first recompute
+    oracle (a collision would fail the driver hash-check loudly, not
+    silently).
 
     Plan shape (pinned in tests/test_plan_shapes.py): three hash
     exchanges — narrow (fp,id,pos) by fp, narrow winners by id, doc
     rows by id for the join — no window, no product, no global sort;
     the final per-doc projection is map-side on the join output."""
     docs, fp = _para_fp_explode(df, id_col, text_col, sep)
-    winners = (
-        fp.groupBy("fp")
-        .agg(F.min(F.struct("id", "pos")).alias("w"))
-        .select(F.col("w.id").alias("id"), F.col("w.pos").alias("pos"))
+    return _para_rebuild_from_positions(
+        docs, _first_occurrence(fp, "fp", seen), sep
     )
-    return _para_rebuild_from_positions(docs, winners, sep)
 
 
 def _para_fp_explode(df: DataFrame, id_col: str, text_col: str, sep: str):
@@ -2038,45 +1988,14 @@ def _para_rebuild_from_positions(
     )
 
 
-def incr_dedup_paragraphs_fp(
-    seen_fps: DataFrame,
-    delta: DataFrame,
-    id_col: str,
-    text_col: str,
-    sep: str = "\n\n",
-) -> DataFrame:
-    """Incremental fp-keyed paragraph dedup — the scale completion of
-    the fp family (round 11): at 100 TB the PRESERVED SEEN SET is the
-    large relation a deployed dedupe carries between batches, and
-    keying it by 16-byte fingerprints instead of paragraph values cuts
-    its storage AND the per-batch probe's shuffle bytes by the same
-    paragraph-size/16 factor as the at-rest content exchange.
-
-    ``seen_fps``: column ``fp`` (BINARY(16) md5) — the committed
-    corpus's distinct paragraph fingerprints. Delta pass: batch-local
-    first-occurrence agg on fp, ONE equi anti-join against the seen
-    set (both sides 16-byte keys), map-side reassembly. Same
-    exactness-up-to-hashing caveat as ``dedup_paragraphs_fp``; same
-    arrival-order contract as ``incr_dedup_paragraphs`` (base before
-    delta), so base-fp output ∪ this equals the fp full recompute."""
-    docs, fp = _para_fp_explode(delta, id_col, text_col, sep)
-    winners = (
-        fp.groupBy("fp")
-        .agg(F.min(F.struct("id", "pos")).alias("w"))
-        .join(seen_fps.select("fp"), "fp", "left_anti")
-        .select(F.col("w.id").alias("id"), F.col("w.pos").alias("pos"))
-    )
-    return _para_rebuild_from_positions(docs, winners, sep)
-
-
 @register(
     "incr_dedup_paragraphs_fp",
     oracle=_para_oracle(
         f"CASE WHEN doc_id % {_NEW_DOC_MOD} = 0 THEN 1 ELSE 0 END, "
         "doc_id, pos"
     ),
-    doc="incremental FP-KEYED paragraph dedup (round 11 — the scale "
-    "completion of the fingerprint family): identical arrival-order "
+    doc="incremental FP-KEYED paragraph dedup (the scale completion of "
+    "the fingerprint family): identical arrival-order "
     "contract and verbatim oracle as incr_dedup_paragraphs, but the "
     "preserved seen set holds 16-byte md5 fingerprints instead of "
     "paragraph text — at 100 TB the seen set is the big preserved "
@@ -2090,27 +2009,22 @@ def incr_dedup_paragraphs_fp(
 def incr_dedup_paragraphs_fp_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    synth = _synth_para_docs(spark, sf_dir).localCheckpoint(eager=True)
-    base = synth.where(F.col("doc_id") % _NEW_DOC_MOD != 0)
-    delta = synth.where(F.col("doc_id") % _NEW_DOC_MOD == 0)
     # preserved state: the committed corpus's distinct paragraph
     # FINGERPRINTS (16 bytes/paragraph vs full text)
-    seen_fps = _para_fp_explode(base, "doc_id", "text", "\n\n")[1].select(
-        "fp"
-    ).distinct()
-    out = dedup_paragraphs_fp(base, "doc_id", "text").unionByName(
-        incr_dedup_paragraphs_fp(seen_fps, delta, "doc_id", "text")
-    )
-    return out.select(
-        F.col("id").alias("doc_id"), "n_paras", "n_dropped", "text_clean"
+    return _incr_para_query(
+        spark,
+        sf_dir,
+        dedup_paragraphs_fp,
+        lambda base: _para_fp_explode(base, "doc_id", "text", "\n\n")[1],
+        "fp",
     )
 
 
 @register(
     "dedup_paragraphs_fp",
     oracle=_para_oracle("doc_id, pos"),
-    doc="fingerprint-keyed paragraph dedup (round 11 — VERDICT r10 ask "
-    "#3): same keep-first contract and same full-recompute oracle as "
+    doc="fingerprint-keyed paragraph dedup: same keep-first contract and "
+    "same full-recompute oracle as "
     "dedup_paragraphs_global, but the content-keyed exchange carries a "
     "16-byte md5 + (id, pos) instead of full paragraph text — an order "
     "of magnitude fewer shuffle bytes on real prose, the dominant cost "
@@ -2119,72 +2033,14 @@ def incr_dedup_paragraphs_fp_query(
     "rebuilt map-side by indexing each doc's re-split segment array at "
     "its kept positions — paragraph text crosses the wire once (the "
     "id-keyed doc join), never through the content exchange. Exact up "
-    "to 128-bit hashing (collision ~n²/2¹²⁹; the value-keyed twin "
+    "to 128-bit hashing (collision ~n²/2¹²⁹; the value-keyed variant "
     "stays the unconditional-exact registration; a collision would "
     "fail this query's own full-recompute oracle loudly).",
 )
 def dedup_paragraphs_fp_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    synth = _synth_para_docs(spark, sf_dir)
-    return dedup_paragraphs_fp(synth, "doc_id", "text").select(
-        F.col("id").alias("doc_id"),
-        "n_paras",
-        "n_dropped",
-        "text_clean",
+    return _para_out(
+        dedup_paragraphs_fp(_synth_para_docs(spark, sf_dir), "doc_id", "text")
     )
-
-
-def incr_dedup_paragraphs(
-    seen_paras: DataFrame,
-    delta: DataFrame,
-    id_col: str,
-    text_col: str,
-    sep: str = "\n\n",
-) -> DataFrame:
-    """Paragraph dedup under CORPUS GROWTH (I7 on the paragraph domain —
-    how a CCNet-style dedupe actually runs in production, batch by
-    ingest batch): the already-committed corpus is IMMUTABLE (keep-first
-    means insertion can only drop NEW copies, never revise old docs), so
-    the delta pass cleans only the arriving documents — a delta
-    paragraph survives iff its value is absent from the preserved seen
-    set AND it is the first occurrence within the delta by (id, pos).
-
-    ``seen_paras``: the preserved distinct paragraph values of the
-    committed corpus (column ``para``) — the state a deployed pipeline
-    materializes once and extends additively with each batch's kept
-    values. Returns cleaned DELTA docs only; base output is unchanged
-    by construction.
-
-    Exactness: processing order (base batch, then delta) is a total
-    order on occurrences, so base ∪ incremental-delta equals the full
-    keep-first recompute under that arrival order exactly (the
-    registered query's oracle is that full recompute; the hostile-doc
-    equivalence is pytest-pinned).
-
-    100 TB shape: the delta's within-batch dedup is the same
-    content-keyed hash agg as the at-rest operator but over the BATCH
-    only; the seen-set probe is an equi anti-join on the paragraph
-    value. The incremental WIN is an I/O property: the delta pass never
-    re-reads the corpus text — at rest the full recompute must re-scan
-    and re-shuffle the whole corpus, the delta pass scans only the seen
-    set (a distinct-paragraph relation, far smaller than the corpus) and
-    the batch. Measured honestly at stress scale (bench/stress.py §2c):
-    on a RAM-resident corpus the seen-set scan is the same order as just
-    re-running the at-rest agg, so the ratio sits near 1 there and the
-    advantage appears exactly when the corpus lives on disk (bench.py
-    extras at sf0.1: ~3x) — bucketing the seen set by ``para`` removes
-    the probe's index-side Exchange but not its sort when buckets span
-    multiple files, and bought nothing at that scale. Dolma's
-    Bloom-filter dedupe is the probabilistic map-side variant of this
-    probe and is the right call when even the seen-set scan is too
-    expensive per batch."""
-    ex, totals = _para_explode(delta, id_col, text_col, sep)
-    kept = (
-        ex.groupBy("para")
-        .agg(F.min(F.struct("id", "pos")).alias("w"))
-        .join(seen_paras.select("para"), "para", "left_anti")
-        .select(F.col("w.id").alias("id"), F.col("w.pos").alias("pos"), "para")
-    )
-    return _para_reassemble(kept, totals, sep)
 
 
 def _synth_para_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2192,29 +2048,28 @@ def _synth_para_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph-dedup queries: the sf corpora carry no newlines, so docs
     are rebuilt as 3-token chunks joined by '\\n\\n' — deterministically
     and identically on both engines. ALL Unicode whitespace is
-    normalized to spaces FIRST (mirrored in ``_para_oracle``; widened
-    from newline-only in r11 per ADVICE r10): the synthesis round-trips
-    chunks through a '\\n\\n' join the operator re-splits and then
-    drops blank segments with rlike('(?U)\\S'), so a hostile token made
-    of NON-SPACE whitespace (tab, NBSP, U+2028 — ``ws_tokens`` splits
-    on ' ' only, so such a token survives splitting) would otherwise
-    produce a chunk the oracle counts but the engine silently drops —
-    and an all-tab doc an oracle row with no engine counterpart. (?U)
-    makes Java's \\s exactly Unicode White_Space, the set the oracle's
-    RE2 class reproduces char-for-char (equivalence pinned in
-    tests/test_paragraph_properties.py).
+    normalized to spaces FIRST (mirrored in ``_para_oracle``): the
+    synthesis round-trips chunks through a '\\n\\n' join the operator
+    re-splits and then drops blank segments with rlike('(?U)\\S'), so a
+    hostile token made of NON-SPACE whitespace (tab, NBSP, U+2028 —
+    ``ws_tokens`` splits on ' ' only, so such a token survives
+    splitting) would otherwise produce a chunk the oracle counts but the
+    engine silently drops — and an all-tab doc an oracle row with no
+    engine counterpart. (?U) makes Java's \\s exactly Unicode
+    White_Space, the set the oracle's RE2 class reproduces char-for-char
+    (equivalence pinned in tests/test_paragraph_properties.py).
 
-    NOT spread (r14, VERDICT r13 ask #2): the r13 ``spread_scan`` here
-    inserted a full-document-text exchange into every consumer's lineage —
-    including the delta-restricted pass the bench times steady-state —
-    and the driver measured ``incr_dedup_paragraphs`` regressing on BOTH
-    core counts (0.733 → 2.537 s c32 / 1.542 s c8) while paragraph-family
+    NOT spread: a ``spread_scan`` here inserted a full-document-text
+    exchange into every consumer's lineage — including the
+    delta-restricted pass the bench times steady-state — and
+    ``incr_dedup_paragraphs`` regressed on both core counts measured
+    (0.733 → 2.537 s at 32 cores, 1.542 s at 8) while paragraph-family
     shuffle bytes grew deterministically 1.409 → 5.052 MB. The synthesis
     map work (one regexp_replace + split per doc) is far cheaper than
-    moving the text, unlike the shingle/gram paths that keep their spread;
-    at cluster scale the scan arrives already split, so the spread was a
-    designed no-op there anyway — the exchange only ever existed at the
-    scale where it hurt."""
+    moving the text, unlike the shingle/gram paths that keep their
+    spread; at cluster scale the scan arrives already split, so the
+    spread was a designed no-op there anyway — the exchange only ever
+    existed at the scale where it hurt."""
     d = load_table(spark, sf_dir, "documents")
     w = ws_tokens(F.regexp_replace(F.col("text"), r"(?U)\s", " "))
     return (
@@ -2233,14 +2088,37 @@ def _synth_para_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _incr_para_query(
+    spark: SparkSession, sf_dir: str, dedup, rows_of, key: str
+) -> DataFrame:
+    """Shared body of the incremental paragraph registrations: the base
+    split (doc_id % _NEW_DOC_MOD != 0) is cleaned at rest and the held-out
+    tenth arrives as the batch, cleaned by ``dedup`` against the base's
+    distinct ``key`` column of ``rows_of(base)`` — the preserved seen set,
+    built inline at query granularity. The synthesized corpus is
+    MATERIALIZED once (localCheckpoint): the base split feeds both the
+    seen-set build and the base cleaning pass, and lazily the synthesis
+    would re-run per consumer, doubling the dominant scan in the query
+    registered to demonstrate O(|delta|) incremental work."""
+    synth = _synth_para_docs(spark, sf_dir).localCheckpoint(eager=True)
+    base = synth.where(F.col("doc_id") % _NEW_DOC_MOD != 0)
+    delta = synth.where(F.col("doc_id") % _NEW_DOC_MOD == 0)
+    seen = rows_of(base).select(key).distinct()
+    return _para_out(
+        dedup(base, "doc_id", "text").unionByName(
+            dedup(delta, "doc_id", "text", seen=seen)
+        )
+    )
+
+
 @register(
     "incr_dedup_paragraphs",
     oracle=_para_oracle(
         f"CASE WHEN doc_id % {_NEW_DOC_MOD} = 0 THEN 1 ELSE 0 END, "
         "doc_id, pos"
     ),
-    doc="incremental paragraph dedup under corpus growth (round 10 — I7 "
-    f"on the paragraph domain): base corpus = doc_id % {_NEW_DOC_MOD} != "
+    doc="incremental paragraph dedup under corpus growth (I7 on the "
+    f"paragraph domain): base corpus = doc_id % {_NEW_DOC_MOD} != "
     "0 (committed, immutable under keep-first insertion), delta = the "
     "held-out tenth arriving as an ingest batch; the preserved state is "
     "the base's distinct paragraph-value set and the delta pass is a "
@@ -2255,22 +2133,11 @@ def _synth_para_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incr_dedup_paragraphs_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # synthesized corpus MATERIALIZED once (localCheckpoint): the base
-    # split feeds BOTH the seen-set build and the base cleaning pass —
-    # lazy, the synth projection + split would re-run per consumer
-    # (r10 review), doubling the dominant scan in the query registered
-    # to demonstrate O(|delta|) incremental work
-    synth = _synth_para_docs(spark, sf_dir).localCheckpoint(eager=True)
-    base = synth.where(F.col("doc_id") % _NEW_DOC_MOD != 0)
-    delta = synth.where(F.col("doc_id") % _NEW_DOC_MOD == 0)
-    # preserved state, built inline at query granularity: the committed
-    # corpus's distinct paragraph values
-    seen = _para_explode(base, "doc_id", "text", "\n\n")[0].select(
-        "para"
-    ).distinct()
-    out = dedup_paragraphs(base, "doc_id", "text").unionByName(
-        incr_dedup_paragraphs(seen, delta, "doc_id", "text")
-    )
-    return out.select(
-        F.col("id").alias("doc_id"), "n_paras", "n_dropped", "text_clean"
+    # preserved state: the committed corpus's distinct paragraph values
+    return _incr_para_query(
+        spark,
+        sf_dir,
+        dedup_paragraphs,
+        lambda base: _para_explode(base, "doc_id", "text", "\n\n")[0],
+        "para",
     )

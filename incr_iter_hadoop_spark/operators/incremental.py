@@ -22,7 +22,6 @@ Spark-first redesign (no point-lookup store, no retraction sentinel):
   (the reference's removeLable() sentinel, OutputCollectorwSource
   MapTask.java:1855-1911, is replaced by a proper anti-join retraction —
   SURVEY §7 hard-part 5).
-- ``changed_groups`` applies the propagation filter (I9).
 
 Scale: every step is a key-partitioned join/aggregate — refresh cost is
 O(|delta| + |affected groups' contribs|), not O(|state|); with the state
@@ -192,25 +191,6 @@ def refresh_linear(
     if count_col is not None:
         refreshed = refreshed.where(F.col(count_col) > 0)
     return refreshed
-
-
-def changed_groups(
-    old: PreservedState, new: PreservedState, distance: Column, threshold: float
-) -> DataFrame:
-    """I9 change-propagation filter: groups whose result moved ≥ threshold.
-    ``distance`` is an expression over ``old.<col>``/``new.<col>`` aliases.
-
-    Groups present on only one side (appeared/disappeared — the most-changed
-    groups of all) are always reported: their ``distance`` would evaluate to
-    NULL and silently fail the ``>= threshold`` predicate otherwise."""
-    o = old.results.withColumn("_present_old", F.lit(True)).alias("old")
-    n = new.results.withColumn("_present_new", F.lit(True)).alias("new")
-    joined = o.join(n, on=old.group_keys, how="full_outer")
-    return joined.where(
-        (distance >= threshold)
-        | F.col("old._present_old").isNull()
-        | F.col("new._present_new").isNull()
-    ).select(*old.group_keys)
 
 
 # ---------------------------------------------------------------------------
@@ -1180,98 +1160,102 @@ def streaming_incr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base = _pairs(ship < c1).persist()
-    base.count()
-    ranks0 = (
-        pagerank(base, max_iterations=_SPR_BASE_ITERS)
-        .state.select("node", "rank")
-        .localCheckpoint(eager=True)
-    )
-    w1 = _pairs((ship >= c1) & (ship < c2))
-    w2 = _pairs(ship >= c2)
-    adds1 = w1.join(base, ["src", "dst"], "left_anti").select(
-        "src", "dst", F.lit("+").alias("op"), F.lit(1).alias("seq")
-    )
-    rm1 = base.where((F.col("src") + F.col("dst")) % 17 == 0).select(
-        "src", "dst", F.lit("-").alias("op"), F.lit(1).alias("seq")
-    )
-    e1 = apply_edge_delta(
-        base, adds1.unionByName(rm1).drop("seq")
-    ).localCheckpoint(eager=True)
-    adds2 = w2.join(e1, ["src", "dst"], "left_anti").select(
-        "src", "dst", F.lit("+").alias("op"), F.lit(2).alias("seq")
-    )
-    rm2 = e1.where((F.col("src") + F.col("dst")) % 19 == 0).select(
-        "src", "dst", F.lit("-").alias("op"), F.lit(2).alias("seq")
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stream_incr_pagerank_")
-    _cleanup_at_exit(tmp, "")
-    delta_dir = os.path.join(tmp, "deltas")
-    os.makedirs(delta_dir, exist_ok=True)
-    # write each delta separately and move its single part file into the
-    # watch dir under a controlled name + mtime: the file source
-    # (maxFilesPerTrigger=1, oldest first) then delivers the deltas as two
-    # ordered micro-batches; the seq-order loop below stays correct even if
-    # they coalesce into one batch
-    import shutil
-    import time as _time
-
-    now = _time.time()
-    for k, d in enumerate([adds1.unionByName(rm1), adds2.unionByName(rm2)]):
-        staging = os.path.join(tmp, f"stage_{k}")
-        d.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(
-            f for f in os.listdir(staging) if f.endswith(".parquet")
-        )
-        dest = os.path.join(delta_dir, f"delta-{k:03d}.parquet")
-        shutil.move(os.path.join(staging, part), dest)
-        os.utime(dest, (now + 60 * k, now + 60 * k))
-
-    schema = spark.read.parquet(delta_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(delta_dir)
-    )
-    holder = {"edges": base, "ranks": ranks0}
-
-    def process_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.localCheckpoint(eager=True)
-        seqs = sorted(
-            r["seq"] for r in batch_df.select("seq").distinct().collect()
-        )
-        for s in seqs:
-            delta = batch_df.where(F.col("seq") == s).drop("seq")
-            new_edges = apply_edge_delta(holder["edges"], delta).localCheckpoint(
-                eager=True
-            )
-            new_ranks = (
-                pagerank(
-                    new_edges,
-                    max_iterations=_SPR_BATCH_ITERS,
-                    init_state=holder["ranks"],
-                )
-                .state.select("node", "rank")
-                .localCheckpoint(eager=True)
-            )
-            holder["edges"] = new_edges
-            holder["ranks"] = new_ranks
-
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    # released also when a micro-batch or a pagerank call raises
     try:
-        drained = q.awaitTermination(300)
+        base.count()
+        ranks0 = (
+            pagerank(base, max_iterations=_SPR_BASE_ITERS)
+            .state.select("node", "rank")
+            .localCheckpoint(eager=True)
+        )
+        w1 = _pairs((ship >= c1) & (ship < c2))
+        w2 = _pairs(ship >= c2)
+        adds1 = w1.join(base, ["src", "dst"], "left_anti").select(
+            "src", "dst", F.lit("+").alias("op"), F.lit(1).alias("seq")
+        )
+        rm1 = base.where((F.col("src") + F.col("dst")) % 17 == 0).select(
+            "src", "dst", F.lit("-").alias("op"), F.lit(1).alias("seq")
+        )
+        e1 = apply_edge_delta(
+            base, adds1.unionByName(rm1).drop("seq")
+        ).localCheckpoint(eager=True)
+        adds2 = w2.join(e1, ["src", "dst"], "left_anti").select(
+            "src", "dst", F.lit("+").alias("op"), F.lit(2).alias("seq")
+        )
+        rm2 = e1.where((F.col("src") + F.col("dst")) % 19 == 0).select(
+            "src", "dst", F.lit("-").alias("op"), F.lit(2).alias("seq")
+        )
+
+        tmp = tempfile.mkdtemp(prefix="stream_incr_pagerank_")
+        _cleanup_at_exit(tmp, "")
+        delta_dir = os.path.join(tmp, "deltas")
+        os.makedirs(delta_dir, exist_ok=True)
+        # write each delta separately and move its single part file into the
+        # watch dir under a controlled name + mtime: the file source
+        # (maxFilesPerTrigger=1, oldest first) then delivers the deltas as two
+        # ordered micro-batches; the seq-order loop below stays correct even if
+        # they coalesce into one batch
+        import shutil
+        import time as _time
+
+        now = _time.time()
+        deltas = [adds1.unionByName(rm1), adds2.unionByName(rm2)]
+        for k, d in enumerate(deltas):
+            staging = os.path.join(tmp, f"stage_{k}")
+            d.coalesce(1).write.mode("overwrite").parquet(staging)
+            part = next(
+                f for f in os.listdir(staging) if f.endswith(".parquet")
+            )
+            dest = os.path.join(delta_dir, f"delta-{k:03d}.parquet")
+            shutil.move(os.path.join(staging, part), dest)
+            os.utime(dest, (now + 60 * k, now + 60 * k))
+
+        # the written rows' own schema: no schema-inference job
+        stream = (
+            spark.readStream.schema(deltas[0].schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(delta_dir)
+        )
+        holder = {"edges": base, "ranks": ranks0}
+
+        def process_batch(batch_df: DataFrame, _batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            batch_df = batch_df.localCheckpoint(eager=True)
+            seqs = sorted(
+                r["seq"] for r in batch_df.select("seq").distinct().collect()
+            )
+            for s in seqs:
+                delta = batch_df.where(F.col("seq") == s).drop("seq")
+                new_edges = apply_edge_delta(
+                    holder["edges"], delta
+                ).localCheckpoint(eager=True)
+                new_ranks = (
+                    pagerank(
+                        new_edges,
+                        max_iterations=_SPR_BATCH_ITERS,
+                        init_state=holder["ranks"],
+                    )
+                    .state.select("node", "rank")
+                    .localCheckpoint(eager=True)
+                )
+                holder["edges"] = new_edges
+                holder["ranks"] = new_ranks
+
+        q = (
+            stream.writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            drained = q.awaitTermination(300)
+        finally:
+            if q.isActive:
+                q.stop()
     finally:
-        if q.isActive:
-            q.stop()
-    base.unpersist()
+        base.unpersist()
     if not drained:
         raise TimeoutError(
             "streaming_incr_pagerank: stream did not drain within 300s"

@@ -66,206 +66,44 @@ def _load_all() -> None:
 
 # ---------------------------------------------------------------------------
 # Driver-visible ordering. The correctness driver hash-checks exactly the
-# FIRST 50 entries of ``queries()`` in dict order, so the window below is
-# curated to put one oracle-checked witness of every operator family
-# (SURVEY §2 rows + the LLM-pipeline components) inside positions 0-49.
-# Convergence-driven (no_oracle) variants and redundant family twins are
-# deliberately registered behind the window — they stay covered by pytest.
+# FIRST 50 entries of ``queries()`` in dict order, so those 50 are chosen
+# by policy, not by import order; every other query stays covered by
+# pytest's oracle-parity run.
 #
-# ROTATION (round 4): fourteen redundant twins whose families earned green
-# driver rows in round 3 (join_override, setop_union, gen_random_kv,
-# kmeans_assign, dedup_exact, field_selection, agg_global,
-# total_sort_top100, udf_scalar_pandas, secondary_sort_top3,
-# projection_inverse_map, wordcount, ann_bruteforce_topk,
-# incr_refresh_orders) swapped out for never-driver-checked families —
-# every family keeps >= 1 green witness across rounds 3 ∪ 4, and the
-# driver's hash reach widens each round at zero coverage loss.
-#
-# ROTATION (round 5): full swap to the never-driver-checked backlog.
-# Every family already holds >= 1 green driver witness across rounds 3 ∪ 4
-# (round-4 window was 50/50 green), so all 50 slots rotate to names with no
-# CORRECTNESS row in any round: the S6/S7/S9 scans (multi-path, embedded-
-# Derby JDBC round-trip, per-iteration snapshot dirs), the REAL multimodal
-# decodes (PNG decode + resize, WAV/PCM), substring-span dedup (full +
-# incremental) and star-CC, the training-pipeline tail (BM25, packing,
-# tokenize-to-ids, shard manifests, token-budget sampling, composed
-# training-set build), as-of + null-safe joins, three stateful streaming
-# queries, the q2-q22 TPC-H battery, the remaining incremental variants
-# (spmv/kmeans/dedup-clusters/minhash-delete), triangle count, IVF ANN,
-# lang-ID, unigram logprob, and the two ADVICE-flagged relational queries
-# (er_fuzzy_name_pairs, udf_cogrouped_stats). Three slots are reserved for
-# round-5 conversions per VERDICT asks #2/#3 — pagerank_converged and
-# kmeans_converged (newly EXACT-oracled via the unrolled-with-termination
-# CTE pattern) and multimodal_jpeg_decode (new real baseline-JPEG decode).
-#
-# ROTATION (round 6): the ledger-closing window. Every family already
-# holds >= 1 green driver witness across rounds 3 ∪ 4 ∪ 5 (r04 and r05
-# were both 50/50 green), so the window rotates to the complete
-# never-driver-checked set — 45 names, computed programmatically from the
-# registry minus the union of CORRECTNESS_r01..r05 rows: the r4-late
-# text/events/sampling tails, the r5 media/dedup/SCD2/streaming/
-# quality additions, and the new r6 scd2_store_two_eras. That includes
-# embedding_top_pairs (the labeled all-pairs exactness baseline — kept out
-# of earlier windows by design, but the ledger-closing goal is every
-# registered query driver-verified at least once). The remaining 5 slots:
-# the four multimodal plumbing queries REBASED onto real codecs this round
-# (multimodal_meta/features/resize/frames — their r03 green rows verified
-# the old byte-stat oracles, so the new real-decode semantics need fresh
-# driver rows) and incr_refresh_orders_disk as the refreshed I6 witness
-# (the disk-refresh ratio is under active observation, VERDICT r5 ask #7).
-# After a green round 6: driver-checked union = 179/179 — zero
-# verification debt; subsequent rotations only need to re-witness
-# families touched by new work.
-#
-# ROTATION (round 7): STALENESS-BASED, computed programmatically (VERDICT
-# r6 ask #3 — `compute_first_window` below parses the CORRECTNESS files
-# instead of a hand-curated list; `tests/test_registry_window.py` pins
-# FIRST_WINDOW == the computation so the policy can't silently rot).
-# Priority slots: the six NEW round-7 store queries
-# (scd2_store_snapshot_reads, scd2_store_pit_join,
-# scd2_store_streamed_eras, scd2_store_schema_evolution,
-# scd2_store_deletes, scd2_store_cdc_streamed) plus fresh
-# re-witnesses of the four queries sitting on round-7-touched store/SCD2
-# code paths (scd2_store_two_eras, incr_refresh_orders_disk,
-# scd2_point_in_time_join, scd2_customer_history). The remaining 40 slots
-# fill with the OLDEST-witness oracle-checked names: all 15 whose latest
-# row is r2 — including incr_pagerank_reconverge, whose r5 exact
-# termination-rule oracle has never been driver-checked (its only rows
-# predate it; VERDICT r6 ask #2) — all 15 r3 names, and the 12
-# alphabetically-first r4 names (10 after the late store slots landed).
-# agg_approx_distinct (no oracle — HLL, rows-only by design) is excluded:
-# a weaker rows-only row adds no evidence, and the window invariant is
-# that every slot gets the full three-way check. After a green round 7,
-# max witness age across the oracle-checked ledger = 3 rounds (the r4
-# tail), with every name still locally re-verified per pytest run.
-
-# ROTATION (round 8): retire the witness-staleness tail (VERDICT r7 ask
-# #1). Priority: the three NEW r8 queries (agg_approx_distinct_bounded —
-# the bounded-error HLL twin closing the last rows-only entry;
-# scd2_store_cdc_full_ops — the full Debezium op alphabet through the CDC
-# sink, which also exercises this round's NULL-op guard and
-# checkpoint-namespaced tokens by proxy; scd2_store_pit_streamed — the
-# Kappa-pattern streamed PIT enrichment) plus the nine JPEG-consuming
-# queries whose r5/r6 witnesses predate the round-7 codec rewrite
-# (decode: multimodal_jpeg_decode, media_dedup_exact/phash,
-# incr_media_dedup_phash, video_frames; encode-side fixtures:
-# multimodal_resize/frames, scan_webdataset_shards,
-# pipeline_build_multimodal_set). The staleness fill then takes EXACTLY
-# the 38-query r4 cohort — after a green round 8, no registered query's
-# latest witness is older than r5. The seven r7-witnessed scd2_store_* queries sit on the
-# round-8 OCC commit path but stay out of the window: they are
-# re-verified against DuckDB on every pytest run, the OCC race/crash
-# contracts are pinned by tests/test_store_adversarial.py, and
-# scd2_store_cdc_full_ops drives the same store + sink code end-to-end
-# inside the window.
-
-# ROTATION (round 9): re-witness the OCC/staged-commit store surface
-# (VERDICT r8 ask #1) plus everything round 9 touched. Priority: the
-# seven r7-witnessed scd2_store_* queries whose every mutation now flows
-# through the r9 commit protocol (flock-guarded compare + staged-data
-# publish, sources/occ.py) — scd2_store_two_eras, _snapshot_reads,
-# _pit_join, _streamed_eras, _schema_evolution, _deletes, _cdc_streamed —
-# plus the four r8-witnessed queries whose code paths changed again in r9
-# (scd2_store_cdc_full_ops: CDC sink retry wrapper + loud legacy-token
-# guard; scd2_store_pit_streamed: per-batch meta invalidation;
-# agg_approx_distinct_bounded: NULL-safe population, oracle text changed;
-# incr_refresh_orders_disk: PreserveStore staged refresh/compact) and the
-# four NEW r9 queries (text_repetition_stats — the Gopher-style
-# duplicate-n-gram repetition filter, entering via the witness-less
-# fill; scd2_store_vacuum_reads — vacuum orphan sweep;
-# scd2_store_occ_retry — the deterministic loser-retries race under the
-# driver gate; scd2_store_pit_live — PIT enrichment under concurrent
-# dimension maintenance through a second store instance). The remaining
-# 36 fill slots take the witness-less text_repetition_stats first, then
-# 35 of the 49-query r5 cohort oldest-first; 14 r5 names remain for the
-# r10 window (192 queries / 50 slots — a full cycle takes four rounds),
-# after which the witness floor advances to r6.
-
-# ROTATION (round 10): retire the r5 witness tail (VERDICT r9 ask #1).
-# Priority: the two NEW r10 queries (decontaminate_substring — the
-# substring-containment train/test overlap check on the shared gram
-# machinery, VERDICT r9 ask #2; text_dup_line_stats — the Gopher
-# dup-line/paragraph fractions completing the repetition rule family,
-# ask #3) plus the two queries witnessing the code paths round 10
-# actually changed behaviorally: scd2_store_vacuum_reads (the orphan
-# sweep gained the per-store retention parameter, the no-flock
-# final-dir gate, and the VACUUM RETAIN window) and scd2_store_occ_retry
-# (occ.commit_meta's widened tmp reclamation + the retrying-wrapped
-# cadence snapshot). The other r9-witnessed store queries sit on paths
-# whose r10 diff is parameter threading with identical default behavior
-# — re-verified against DuckDB on every pytest run and covered by the
-# store suites — so they stay out of the window. The 46 fill slots are
-# pure staleness: the witness-less new queries first (the late-round
-# agg_approx_percentile_bounded, decontaminate_streamed,
-# dedup_paragraphs_global, incr_decontaminate, incr_dedup_paragraphs,
-# and text_gopher_filter — every new query enters via the fill), then
-# the complete 14-query r5 cohort, then the r6 cohort alphabetically
-# (26 of 38). After a green round 10 nothing in the ledger is older
-# than r6, with twelve r6 stragglers (named in COVERAGE.md) for the
-# r11 fill.
-# ROTATION (round 11): retire the r6 witness tail (VERDICT r10 ask #2).
-# Priority: the three NEW r11 queries (decontaminate_normalized — the
-# case/punct/whitespace-insensitive Lee-et-al. matching flavor, ask #1;
-# dedup_paragraphs_fp — the fingerprint-keyed paragraph-dedup twin whose
-# content exchange carries 16-byte hashes instead of text, ask #3;
-# decontaminate_store — the benchmark gram index routed through the
-# durable PreserveStore with era appends, ask #4) plus the three queries
-# whose ORACLES round 11 redefined: agg_approx_percentile_bounded (the
-# all-TRUE tautology replaced by independently-recomputed exact
-# quantiles with poison-on-bound-violation, ADVICE r10) and the two
-# paragraph registrations (synthesis + oracle normalization widened from
-# newline-only to all Unicode whitespace, ADVICE r10 — their r10 rows
-# witnessed the old oracle text). The 44 fill slots are pure staleness:
-# the four late-round additions (the normalized-family twins
-# decontaminate_normalized_streamed / incr_decontaminate_normalized,
-# the incremental fp-keyed paragraph twin incr_dedup_paragraphs_fp,
-# and the weighted-mixture sampler sample_mixture_epochs —
-# witness-less, entering via the fill as every new query does), the
-# complete 12-query r6 straggler cohort, then the r7 cohort
-# alphabetically (28 of 42). After a green round 11 nothing in the
-# ledger is older than r7 (14 r7 stragglers remain for the r12 fill).
-# ROTATION (round 12): retire the r7 witness tail (VERDICT r11 ask #2).
-# Priority: the two NEW r12 queries (sort_skewed_validate — the
-# TeraGen-shaped adversarial skewed-key sort with a rank-weighted global
-# order checksum, VERDICT r11 missing #2 / ask #5; and
-# sample_mixture_temperature — the T5-style temperature-scaled mixture
-# weights completing the weighted sampler, ask #6). No oracle was
-# redefined this round (the fp-paragraph work is stress/bench evidence
-# only; bench --concurrent and the shuffle-bytes extension touch no
-# query code), so the 48 fill slots are the witness-less late addition
-# jdbc_count_verify (the DBCountPageView transactional verify demo,
-# missing #3), sample_quality_buckets (the CCNet head/middle/tail
-# sampler), sample_exact_quota (the exact-N stratified split
-# primitive) and lpa_bounded3 (synchronous label propagation through
-# the iterate() driver — every new query enters via the fill) then
-# pure staleness: the complete 14-query r7 straggler cohort, then the
-# r8 cohort alphabetically (30 of 51). After a green round 12 nothing
-# in the ledger is older than r8 (21 r8 stragglers remain for the r13
-# fill).
+# Policy (``compute_first_window``): the WINDOW_PRIORITY names come first —
+# queries new in window round WINDOW_ROUND, and queries on code paths that
+# round changed, which no earlier driver row can have witnessed. The other
+# slots go to the oracle-checked names whose latest driver CORRECTNESS row
+# (the CORRECTNESS_r*.json files at the repo root) is oldest, ties
+# alphabetical, so each rotation re-witnesses the stalest part of the
+# ledger and every family keeps a green witness across windows. Queries
+# without an oracle never take a slot: a rows-only row adds no evidence.
+# FIRST_WINDOW pins the computed list and tests/test_registry_window.py
+# checks it against compute_first_window(); to rotate, bump WINDOW_ROUND
+# and WINDOW_PRIORITY together and re-pin. Earlier windows are in git.
 WINDOW_ROUND = 13
 
-# new queries this round (no CORRECTNESS row can exist yet) + queries on
-# code paths this round touched — these outrank staleness
+# new queries of this window round (no CORRECTNESS row can exist yet) +
+# queries on code paths it touched — these outrank staleness
 WINDOW_PRIORITY: list[str] = [
-    # r13-new: the oscillation-guarded converged LPA (VERDICT r12 ask #3),
-    # the per-language CCNet buckets (ask #4), the parameterized exact
-    # 3-way split (ask #5)
+    # new: the oscillation-guarded converged LPA, the per-language CCNet
+    # buckets, the parameterized exact 3-way split
     "lpa_converged",
     "sample_quality_buckets_by_lang",
     "sample_exact_split_3way",
-    # r13-new: SemDeDup cluster-then-prune over embeddings + its
-    # preserve/delta incremental twin
+    # new: SemDeDup cluster-then-prune over embeddings + its
+    # preserve/delta incremental variant
     "semantic_dedup_prune",
     "incr_semantic_dedup",
-    # r13-new: the composed curation capstone (quality buckets ∩ SemDeDup
+    # new: the composed curation capstone (quality buckets ∩ SemDeDup
     # survivors → exact per-source split)
     "pipeline_curated_split",
-    # refactored this round onto the shared stratified_rank helper (same
-    # plan, new code path) — re-witness
+    # moved onto the shared stratified_rank helper (same plan, new code
+    # path) — re-witness
     "sample_exact_quota",
-    # r13-new (second wave): the fastText-style hashed linear quality
-    # classifier and the sqrt-temperature cluster-balanced sampler over
-    # the SemDeDup/IVF quantizer cells
+    # new: the fastText-style hashed linear quality classifier and the
+    # sqrt-temperature cluster-balanced sampler over the SemDeDup/IVF
+    # quantizer cells
     "text_classifier_filter",
     "sample_cluster_balanced",
 ]
@@ -314,21 +152,8 @@ def compute_first_window(size: int = 50) -> list[str]:
 
 
 FIRST_WINDOW: list[str] = [
-    # ROTATION (round 13): retire the r8 witness tail (VERDICT r12 ask
-    # #2). Priority: the three NEW r13 queries (lpa_converged — the
-    # oscillation-guarded I4 termination, ask #3;
-    # sample_quality_buckets_by_lang — CCNet per-language thresholds,
-    # ask #4; sample_exact_split_3way — the parameterized exact split,
-    # ask #5; semantic_dedup_prune + incr_semantic_dedup — SemDeDup
-    # cluster-then-prune and its preserve/delta twin) plus
-    # sample_exact_quota, refactored this round onto the shared
-    # stratified_rank helper (same plan, new code path). Fill = pure
-    # staleness: the COMPLETE 17-query r8 straggler cohort, then the
-    # r9 cohort alphabetically (24 of 49; the second-wave additions
-    # text_classifier_filter + sample_cluster_balanced take two more
-    # priority slots). After a green round 13
-    # nothing in the ledger is older than r9 (25 r9 stragglers remain
-    # for the r14 fill).
+    # compute_first_window(): the nine WINDOW_PRIORITY names, then the
+    # stalest-witness fill
     "lpa_converged",
     "sample_quality_buckets_by_lang",
     "sample_exact_split_3way",

@@ -447,13 +447,13 @@ def streaming_decontaminate(
     the same idempotent-sink discipline as ``streaming_pit_enrich``."""
     import os
 
-    from ..operators.dedup import decontaminate_spans_against
+    from ..operators.dedup import decontaminate_spans, fingerprint_grams
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        decontaminate_spans_against(
-            batch_df, bench_grams, id_col, text_col
+        decontaminate_spans(
+            fingerprint_grams(batch_df, id_col, text_col), bench_grams
         ).write.mode("overwrite").parquet(
             os.path.join(sink_dir, f"batch={batch_id}")
         )

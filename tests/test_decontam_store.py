@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 
 from incr_iter_hadoop_spark.operators.dedup import (
     append_benchmark_era,
+    benchmark_gram_set,
     decontaminate_spans,
     decontamination_index_store,
+    fingerprint_grams,
     store_gram_set,
 )
 from incr_iter_hadoop_spark.streaming.incremental_stream import (
@@ -116,7 +118,10 @@ def test_store_backed_index_survives_restart_and_era_append(
     run_stream(store_gram_set(store))
     out1 = _flags(spark.read.parquet(*sorted(glob.glob(sink + "/batch=*"))))
     ref1 = _flags(
-        decontaminate_spans(corpus.where("id < 3"), old_b, "id", "body")
+        decontaminate_spans(
+            fingerprint_grams(corpus.where("id < 3"), "id", "body"),
+            benchmark_gram_set(old_b, "id", "body"),
+        )
     )
     assert out1 == ref1
     assert 0 in out1 and 1 not in out1, "passage B must not match at era 0"
@@ -150,7 +155,6 @@ def test_store_backed_index_survives_restart_and_era_append(
     from incr_iter_hadoop_spark.operators.dedup import (
         SPAN_K,
         SPAN_KEEP_HEX,
-        _fingerprint_grams,
         bench_gram_pairs,
     )
 
@@ -164,7 +168,7 @@ def test_store_backed_index_survives_restart_and_era_append(
     from incr_iter_hadoop_spark.operators.dedup import _merge_spans
 
     hits = (
-        _fingerprint_grams(
+        fingerprint_grams(
             corpus.where("id = 3"), "id", "body", SPAN_K, SPAN_KEEP_HEX
         )
         .join(F.broadcast(store_gram_set(store)), "gram", "left_semi")

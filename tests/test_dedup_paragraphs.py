@@ -88,7 +88,7 @@ def test_reassembly_preserves_original_order(spark):
 def _run_incr(spark, base_docs, delta_docs, sep="\n\n"):
     from incr_iter_hadoop_spark.operators.dedup import (
         _para_explode,
-        incr_dedup_paragraphs,
+        dedup_paragraphs,
     )
 
     base = spark.createDataFrame(
@@ -100,7 +100,7 @@ def _run_incr(spark, base_docs, delta_docs, sep="\n\n"):
     seen = _para_explode(base, "doc_id", "body", sep)[0].select(
         "para"
     ).distinct()
-    rows = incr_dedup_paragraphs(seen, delta, "doc_id", "body", sep=sep)
+    rows = dedup_paragraphs(delta, "doc_id", "body", sep=sep, seen=seen)
     return {
         r["id"]: (r["n_paras"], r["n_dropped"], r["text_clean"])
         for r in rows.collect()

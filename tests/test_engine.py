@@ -505,6 +505,8 @@ def test_fused_updated_edges_match_delta_path(spark, sf_dir):
         "pipeline_clean_corpus",
         "pipeline_build_training_set",
         "pipeline_curated_split",
+        "q11_important_parts",
+        "q21_waiting_suppliers",
     ],
 )
 def test_registered_query_leaves_no_cache(spark, sf_dir, name):
@@ -516,3 +518,25 @@ def test_registered_query_leaves_no_cache(spark, sf_dir, name):
     spark.catalog.clearCache()
     all_queries()[name].fn(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+
+
+def test_streaming_incr_pagerank_releases_its_cache_when_a_batch_raises(
+    spark, sf_dir, monkeypatch
+):
+    # a micro-batch whose pagerank call raises fails the stream; the
+    # query's cached base edges must still be released
+    from incr_iter_hadoop_spark.operators import iterative
+    from incr_iter_hadoop_spark.registry import all_queries
+
+    real = iterative.pagerank
+
+    def failing(edges, *args, **kwargs):
+        if kwargs.get("init_state") is not None:
+            raise RuntimeError("injected micro-batch failure")
+        return real(edges, *args, **kwargs)
+
+    monkeypatch.setattr(iterative, "pagerank", failing)
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="injected micro-batch failure"):
+        all_queries()["streaming_incr_pagerank"].fn(spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -19,10 +19,10 @@ from pyspark.sql import functions as F
 from incr_iter_hadoop_spark.operators.dedup import (
     SPAN_K,
     SPAN_KEEP_HEX,
-    _fingerprint_grams,
     benchmark_gram_set,
     decontaminate_spans,
-    incr_decontaminate_spans,
+    fingerprint_grams,
+    normalize_for_matching,
 )
 
 # r14 (VERDICT r13 ask #6): stress/property suite excluded from the
@@ -33,6 +33,23 @@ pytestmark = pytest.mark.slow
 
 def _rand_text(rng, n):
     return "".join(rng.choice(string.ascii_lowercase + " ") for _ in range(n))
+
+
+def _decontaminate(corpus, bench, id_col, text_col):
+    """Contamination spans of ``corpus`` against the whole of ``bench``."""
+    return decontaminate_spans(
+        fingerprint_grams(corpus, id_col, text_col),
+        benchmark_gram_set(bench, id_col, text_col),
+    )
+
+
+def _decontaminate_normalized(corpus, bench, id_col, text_col):
+    """``_decontaminate`` with both relations normalized for matching."""
+    norm = normalize_for_matching(F.col(text_col)).alias(text_col)
+    return _decontaminate(
+        corpus.select(id_col, norm), bench.select(id_col, norm),
+        id_col, text_col,
+    )
 
 
 def _dfs(spark, corpus_texts, old_texts, new_texts):
@@ -55,12 +72,12 @@ def _incr_vs_full(spark, corpus_texts, old_texts, new_texts):
     # the full recompute over the grown benchmark
     full = {
         r["id"]: (r["n_dup_spans"], r["dup_chars"])
-        for r in decontaminate_spans(
+        for r in _decontaminate(
             corpus, old_b.unionByName(new_b), "id", "body"
         ).collect()
     }
     # the incremental path: preserved fingerprints + old hits, new probe
-    corpus_fp = _fingerprint_grams(corpus, "id", "body", SPAN_K, SPAN_KEEP_HEX)
+    corpus_fp = fingerprint_grams(corpus, "id", "body", SPAN_K, SPAN_KEEP_HEX)
     old_hits = (
         corpus_fp.join(
             F.broadcast(benchmark_gram_set(old_b, "id", "body")),
@@ -71,8 +88,10 @@ def _incr_vs_full(spark, corpus_texts, old_texts, new_texts):
     )
     incr = {
         r["id"]: (r["n_dup_spans"], r["dup_chars"])
-        for r in incr_decontaminate_spans(
-            corpus_fp, old_hits, new_b, "id", "body"
+        for r in decontaminate_spans(
+            corpus_fp,
+            benchmark_gram_set(new_b, "id", "body"),
+            preserved_hits=old_hits,
         ).collect()
     }
     return incr, full
@@ -154,10 +173,6 @@ def test_normalized_catches_case_punct_variants_raw_misses(spark):
     corpus doc carries a passage whose benchmark copy differs only in
     case/punctuation/spacing. Raw substring decontamination finds
     NOTHING; normalized matching must flag exactly the carrying doc."""
-    from incr_iter_hadoop_spark.operators.dedup import (
-        decontaminate_spans_normalized,
-    )
-
     rng = random.Random(1234)
     passage = _rand_text(rng, 220)
     corpus = spark.createDataFrame(
@@ -171,11 +186,11 @@ def test_normalized_catches_case_punct_variants_raw_misses(spark):
         [(1000, _perturb_case_punct(_rand_text(rng, 40) + passage))],
         "id long, body string",
     )
-    raw = decontaminate_spans(corpus, bench, "id", "body").collect()
+    raw = _decontaminate(corpus, bench, "id", "body").collect()
     assert raw == [], f"raw matching should miss the perturbed copy: {raw}"
     norm = {
         r["id"]: (r["n_dup_spans"], r["dup_chars"])
-        for r in decontaminate_spans_normalized(
+        for r in _decontaminate_normalized(
             corpus, bench, "id", "body"
         ).collect()
     }
@@ -290,10 +305,6 @@ def test_normalized_matching_invariant_under_perturbation(spark):
     after tokens, whitespace doubling, mixed. A normalizer regression
     (e.g. an order-of-operations change reintroducing engine-specific
     case maps) breaks the invariance before it can reach an oracle."""
-    from incr_iter_hadoop_spark.operators.dedup import (
-        decontaminate_spans_normalized,
-    )
-
     rng = random.Random(1111)
     passage = _rand_text(rng, 240)
     corpus_rows = [
@@ -322,7 +333,7 @@ def test_normalized_matching_invariant_under_perturbation(spark):
         b = spark.createDataFrame(b_rows, "id long, body string")
         return {
             r["id"]: (r["n_dup_spans"], r["dup_chars"])
-            for r in decontaminate_spans_normalized(
+            for r in _decontaminate_normalized(
                 c, b, "id", "body"
             ).collect()
         }

@@ -25,7 +25,6 @@ from hypothesis import strategies as st
 from incr_iter_hadoop_spark.operators.dedup import (
     _para_explode,
     dedup_paragraphs,
-    incr_dedup_paragraphs,
 )
 
 # tiny vocab + blanks: collisions everywhere, every edge reachable
@@ -123,15 +122,14 @@ def test_incremental_equals_arrival_order_full(spark, texts, cut):
     ).distinct()
     got = _collect(dedup_paragraphs(base, "doc_id", "body"))
     got.update(
-        _collect(incr_dedup_paragraphs(seen, delta, "doc_id", "body"))
+        _collect(dedup_paragraphs(delta, "doc_id", "body", seen=seen))
     )
     assert got == full_ref
-    # the fp-keyed incremental twin (r11): 16-byte seen set, same
+    # the fp-keyed incremental pass: 16-byte seen set, same
     # arrival-order contract — must equal the same sequential reference
     from incr_iter_hadoop_spark.operators.dedup import (
         _para_fp_explode,
         dedup_paragraphs_fp,
-        incr_dedup_paragraphs_fp,
     )
 
     seen_fps = _para_fp_explode(base, "doc_id", "body", "\n\n")[1].select(
@@ -140,7 +138,7 @@ def test_incremental_equals_arrival_order_full(spark, texts, cut):
     got_fp = _collect(dedup_paragraphs_fp(base, "doc_id", "body"))
     got_fp.update(
         _collect(
-            incr_dedup_paragraphs_fp(seen_fps, delta, "doc_id", "body")
+            dedup_paragraphs_fp(delta, "doc_id", "body", seen=seen_fps)
         )
     )
     assert got_fp == full_ref

@@ -61,7 +61,11 @@ def test_short_docs_dropped_not_crashed(spark):
 
 
 def _decontam(spark, corpus_texts, bench_texts):
-    from incr_iter_hadoop_spark.operators.dedup import decontaminate_spans
+    from incr_iter_hadoop_spark.operators.dedup import (
+        benchmark_gram_set,
+        decontaminate_spans,
+        fingerprint_grams,
+    )
 
     corpus = spark.createDataFrame(
         [(i, t) for i, t in enumerate(corpus_texts)], "id long, body string"
@@ -70,7 +74,10 @@ def _decontam(spark, corpus_texts, bench_texts):
         [(1000 + i, t) for i, t in enumerate(bench_texts)],
         "id long, body string",
     )
-    rows = decontaminate_spans(corpus, bench, "id", "body").collect()
+    rows = decontaminate_spans(
+        fingerprint_grams(corpus, "id", "body"),
+        benchmark_gram_set(bench, "id", "body"),
+    ).collect()
     return {r["id"]: (r["n_dup_spans"], r["dup_chars"]) for r in rows}
 
 
@@ -116,8 +123,10 @@ def test_contaminated_mass_bounded_by_duplicate_mass(spark, sf_dir):
     from incr_iter_hadoop_spark.catalog import load_table
     from incr_iter_hadoop_spark.operators.dedup import (
         _NEW_DOC_MOD,
+        benchmark_gram_set,
         decontaminate_spans,
         duplicate_substring_spans,
+        fingerprint_grams,
     )
 
     d = load_table(spark, sf_dir, "documents")
@@ -125,7 +134,10 @@ def test_contaminated_mass_bounded_by_duplicate_mass(spark, sf_dir):
     bench = d.where(F.col("doc_id") % _NEW_DOC_MOD == 0)
     contam = {
         r["id"]: r["dup_chars"]
-        for r in decontaminate_spans(corpus, bench, "doc_id", "text").collect()
+        for r in decontaminate_spans(
+            fingerprint_grams(corpus, "doc_id", "text"),
+            benchmark_gram_set(bench, "doc_id", "text"),
+        ).collect()
     }
     dup = {
         r["id"]: r["dup_chars"]
